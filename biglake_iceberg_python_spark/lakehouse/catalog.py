@@ -23,6 +23,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from biglake_iceberg_python_spark.sources.tables import parquet_schema
+
 # "iceberg" when the runtime jar is on the cluster. Overridable without a
 # code change (SPARK_GRAFT_TABLE_FORMAT=iceberg) so the parity claim is one
 # env var away from being exercised the day this runs with the jar present;
@@ -106,8 +108,11 @@ class LakehouseCatalog:
     ) -> None:
         """read parquet → temp view → INSERT INTO (cols) SELECT * — the
         reference's exact ingest shape, including its implicit positional
-        store-assignment casts (SURVEY.md §1.3)."""
-        df = self.spark.read.parquet(parquet_path)
+        store-assignment casts (SURVEY.md §1.3). The source schema comes
+        from the package's schema cache, not a footer inference per call."""
+        df = self.spark.read.schema(
+            parquet_schema(self.spark, parquet_path)
+        ).parquet(parquet_path)
         view = f"temp_view_ingest_{uuid.uuid4().hex[:8]}"
         df.createOrReplaceTempView(view)
         collist = ", ".join(columns)

@@ -11,8 +11,15 @@ Model (mirrors Iceberg's copy-on-write at directory granularity):
   * a snapshot's manifest is the list of data dirs it comprises:
     append  → parent dirs + new dir
     overwrite → [new dir]
+  * every entry records the table schema (Spark's StructType JSON, read
+    at commit from the footer key Spark's own schema inference reads): an
+    overwrite or first commit records what it wrote, an append keeps its
+    parent's schema, and the metadata-only commits (MOR delete, rollback,
+    clone) copy their source entry's
   * reads resolve a snapshot (latest or time-travel by id) to its dir list
-    and hand Spark a multi-path parquet scan — pruning/pushdown intact.
+    and hand Spark a multi-path parquet scan under the recorded schema —
+    pruning/pushdown intact, and the schema is never inferred from footers
+    (inference is a Spark job per read)
 
 Scale notes: commits are O(metadata) on the driver (a JSON append — the
 same "metadata pointer swap" Iceberg does); data I/O is fully distributed.
@@ -27,7 +34,27 @@ import json
 import os
 import uuid
 
-from pyspark.sql import DataFrame, Row, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+# The footer key under which Spark's parquet writer stores the StructType
+# JSON of the rows, and which Spark's schema inference reads back.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Schemas of the metadata tables (every field nullable).
+_LOG_SCHEMA = pa.schema(
+    [
+        ("snapshot_id", pa.int64()),
+        ("operation", pa.string()),
+        ("n_data_dirs", pa.int64()),
+        ("is_current", pa.bool_()),
+    ]
+)
+_REFS_SCHEMA = pa.schema(
+    [("name", pa.string()), ("type", pa.string()), ("snapshot_id", pa.int64())]
+)
 
 
 class CommitConflictError(RuntimeError):
@@ -92,8 +119,7 @@ class SnapshotTable:
             self.root, "data", f"commit-{uuid.uuid4().hex[:8]}"
         )
         df.write.mode("errorifexists").parquet(data_dir)
-        stats = self._collect_stats(data_dir)
-        n_rows = self._count_rows(data_dir)
+        stats, n_rows, schema = self._read_footers(data_dir)
         for _ in range(self._MAX_COMMIT_RETRIES):
             log = self._read_log()
             refs = self._read_refs()
@@ -138,6 +164,9 @@ class SnapshotTable:
                     **self._dir_seq(head),
                     data_dir: snap_id,
                 }
+                # An append never changes the table schema, whatever
+                # column order the appended frame had.
+                entry["schema"] = head.get("schema")
                 # Equality-delete files survive appends: they keep applying
                 # to the data dirs older than them (never to this new dir,
                 # whose seq exceeds every existing delete's).
@@ -145,6 +174,7 @@ class SnapshotTable:
                     entry["deletes"] = head["deletes"]
             else:
                 entry["dir_seq"] = {data_dir: snap_id}
+                entry["schema"] = schema
             if use_branch is not None and refs:
                 entry["branch"] = use_branch
             if stats is not None:
@@ -233,12 +263,13 @@ class SnapshotTable:
     def refs_entries(self) -> DataFrame:
         """The refs table as a DataFrame (the analog of Iceberg's
         ``SELECT * FROM t.refs``)."""
-        refs = self._read_refs()
-        rows = [
-            Row(name=n, type=r["type"], snapshot_id=r["snapshot_id"])
-            for n, r in sorted(refs.items())
-        ]
-        return self.spark.createDataFrame(rows)
+        refs = sorted(self._read_refs().items())
+        return self._local_table(
+            _REFS_SCHEMA,
+            name=[n for n, _ in refs],
+            type=[r["type"] for _, r in refs],
+            snapshot_id=[r["snapshot_id"] for _, r in refs],
+        )
 
     def _read_refs(self) -> dict:
         if not os.path.exists(self.refs_path):
@@ -252,23 +283,35 @@ class SnapshotTable:
             json.dump(refs, f, indent=1)
         os.replace(tmp, self.refs_path)  # atomic pointer swap
 
-    def _count_rows(self, data_dir: str) -> int | None:
-        """Row count of a just-written data dir from parquet FOOTERS —
-        metadata-only, no data pass (the manifest `record_count` role in
-        Iceberg). Best-effort like _collect_stats."""
-        import pyarrow.parquet as _pq
-
+    @staticmethod
+    def _read_footers(data_dir: str) -> tuple[dict | None, int | None, dict | None]:
+        """Column stats, row count and Spark schema of a just-written data
+        dir, from ONE footer read per file — metadata only, no data pass
+        (the manifest role in Iceberg: column bounds, ``record_count``,
+        and the table schema). Best-effort: an unreadable footer leaves
+        all three None, and reads of that entry fall back to inference."""
         try:
-            return sum(
-                _pq.ParquetFile(os.path.join(data_dir, f)).metadata.num_rows
-                for f in os.listdir(data_dir)
+            footers = [
+                pq.read_metadata(os.path.join(data_dir, f))
+                for f in sorted(os.listdir(data_dir))
                 if f.endswith(".parquet")
-            )
-        except Exception:
-            return None
+            ]
+        except (OSError, pa.ArrowException):
+            return None, None, None
+        schema = next(
+            (
+                json.loads(md.metadata[_SPARK_SCHEMA_KEY])
+                for md in footers
+                if md.metadata and _SPARK_SCHEMA_KEY in md.metadata
+            ),
+            None,
+        )
+        n_rows = sum(md.num_rows for md in footers)
+        return SnapshotTable._collect_stats(footers), n_rows, schema
 
-    def _collect_stats(self, data_dir: str) -> dict | None:
-        """Per-commit column min/max harvested from the parquet FOOTERS of
+    @staticmethod
+    def _collect_stats(footers: list) -> dict | None:
+        """Per-commit column min/max harvested from the parquet footers of
         the just-written files — the manifest-file role in Iceberg: stats
         ride the metadata, no data pass happens. Driver cost is O(files in
         this commit) footer reads (Iceberg planners read manifests the
@@ -276,8 +319,6 @@ class SnapshotTable:
         chronological order, so pruning compares stay correct); binary
         columns are skipped."""
         import datetime as _dt
-
-        import pyarrow.parquet as _pq
 
         def _ser(v):
             if isinstance(v, (_dt.datetime, _dt.date)):
@@ -289,13 +330,7 @@ class SnapshotTable:
         mins: dict = {}
         maxs: dict = {}
         try:
-            files = [
-                os.path.join(data_dir, f)
-                for f in os.listdir(data_dir)
-                if f.endswith(".parquet")
-            ]
-            for path in files:
-                md = _pq.ParquetFile(path).metadata
+            for md in footers:
                 for rg in range(md.num_row_groups):
                     g = md.row_group(rg)
                     for ci in range(g.num_columns):
@@ -348,7 +383,7 @@ class SnapshotTable:
                 dirs.append(d)
         if not dirs:
             return self.read().filter(F.lit(False))
-        df = self.spark.read.parquet(*dirs)
+        df = self._scan(head, *dirs)
         dtype = dict(df.dtypes)[column]
         return df.filter(
             (F.col(column) >= F.lit(lower).cast(dtype))
@@ -426,6 +461,7 @@ class SnapshotTable:
             self.root, "deletes", f"commit-{uuid.uuid4().hex[:8]}"
         )
         keys.write.mode("errorifexists").parquet(del_dir)
+        keys_schema = json.loads(keys.schema.json())
         log = self._read_log()
         refs = self._read_refs()
         # Anchor on the MAIN head, not the log tail — a branch commit at
@@ -440,8 +476,16 @@ class SnapshotTable:
             "data_dirs": head["data_dirs"],
             "added_dir": del_dir,
             "dir_seq": self._dir_seq(head),
+            "schema": head.get("schema"),
             "deletes": head.get("deletes", [])
-            + [{"dir": del_dir, "cols": eq_cols, "seq": snap_id}],
+            + [
+                {
+                    "dir": del_dir,
+                    "cols": eq_cols,
+                    "seq": snap_id,
+                    "schema": keys_schema,
+                }
+            ],
         }
         if refs:
             entry["branch"] = "main"
@@ -471,6 +515,7 @@ class SnapshotTable:
             "data_dirs": target["data_dirs"],
             "added_dir": target["added_dir"],
             "dir_seq": self._dir_seq(target),
+            "schema": target.get("schema"),
             "rolled_back_to": snapshot_id,
         }
         if target.get("deletes"):
@@ -561,17 +606,17 @@ class SnapshotTable:
             entry = matches[0]
         dels = entry.get("deletes", [])
         if not dels:
-            return self.spark.read.parquet(*entry["data_dirs"])
+            return self._scan(entry, *entry["data_dirs"])
         # Merge-on-read: apply each equality-delete file to the data dirs
         # committed BEFORE it (Iceberg sequence-number scoping) — rows
         # appended after a delete are untouched even on key match.
         seqs = self._dir_seq(entry)
         out = None
         for d in entry["data_dirs"]:
-            df = self.spark.read.parquet(d)
+            df = self._scan(entry, d)
             for dl in dels:
                 if dl["seq"] > seqs.get(d, 0):
-                    keys = self.spark.read.parquet(dl["dir"])
+                    keys = self._scan(dl, dl["dir"])
                     df = df.join(keys, on=dl["cols"], how="left_anti")
             out = df if out is None else out.unionByName(df)
         return out
@@ -607,6 +652,7 @@ class SnapshotTable:
             "data_dirs": list(head["data_dirs"]),
             "added_dir": None,
             "dir_seq": {d: 1 for d in head["data_dirs"]},
+            "schema": head.get("schema"),
         }
         if head.get("stats"):
             entry["stats"] = head["stats"]
@@ -635,23 +681,35 @@ class SnapshotTable:
                 f"incremental read over non-append snapshots {bad}; "
                 "overwrite breaks append-delta semantics"
             )
-        return self.spark.read.parquet(*[e["added_dir"] for e in sel])
+        return self._scan(sel[-1], *[e["added_dir"] for e in sel])
+
+    def _scan(self, meta: dict, *dirs: str) -> DataFrame:
+        """Parquet scan of ``dirs`` under the schema ``meta`` (a log entry
+        or delete record) recorded at commit, so building the read starts
+        no Spark job. Only entries without a recorded schema (older logs,
+        unreadable footers) fall back to footer inference."""
+        reader = self.spark.read
+        if meta.get("schema") is not None:
+            reader = reader.schema(StructType.fromJson(meta["schema"]))
+        return reader.parquet(*dirs)
 
     def metadata_log_entries(self) -> DataFrame:
         """The metadata log as a DataFrame — the analog of the reference's
         ``SELECT * FROM t.metadata_log_entries`` (notebook cell 11)."""
         log = self._read_log()
         head = self._head_entry(log)
-        rows = [
-            Row(
-                snapshot_id=e["snapshot_id"],
-                operation=e["operation"],
-                n_data_dirs=len(e["data_dirs"]),
-                is_current=(e is head),
-            )
-            for e in log
-        ]
-        return self.spark.createDataFrame(rows)
+        return self._local_table(
+            _LOG_SCHEMA,
+            snapshot_id=[e["snapshot_id"] for e in log],
+            operation=[e["operation"] for e in log],
+            n_data_dirs=[len(e["data_dirs"]) for e in log],
+            is_current=[e is head for e in log],
+        )
+
+    def _local_table(self, schema: pa.Schema, **columns: list) -> DataFrame:
+        """A metadata table as a JVM-local relation: an Arrow table handed
+        to Spark needs no Python worker, and collecting it runs no job."""
+        return self.spark.createDataFrame(pa.table(columns, schema=schema))
 
     # -- maintenance --
 

@@ -31,11 +31,6 @@ TABLES = (
     "embeddings",
 )
 
-# Dimensions small enough to broadcast at any realistic scale factor (TPC-H
-# region=5 rows, nation=25 rows always; supplier/part grow slowly).
-BROADCAST_DIMS = ("region", "nation")
-
-
 # Footer-inferred schema per parquet path (keyed on (path, mtime_ns, size)
 # so a test that rewrites its tmp table gets a fresh inference). Schema
 # inference is a DRIVER-side footer read costing ~0.1 s per spark.read call
@@ -47,7 +42,9 @@ BROADCAST_DIMS = ("region", "nation")
 _SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
 
 
-def _parquet_schema(spark: SparkSession, path: str) -> StructType:
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """Schema of the parquet file or directory at ``path``, inferred once
+    per (path, mtime, size): the package's one schema cache."""
     try:
         st = os.stat(path)
         key = (path, st.st_mtime_ns, st.st_size)
@@ -137,7 +134,7 @@ def load_table(
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
-        df = spark.read.schema(_parquet_schema(spark, path)).parquet(path)
+        df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             # TIMESTAMP_NTZ via pure epoch arithmetic — NOT
             # timestamp_micros(), whose rendering depends on the session
@@ -151,10 +148,4 @@ def load_table(
                 ),
             )
         return df
-    return spark.read.schema(_parquet_schema(spark, path)).parquet(path)
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES
-) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in names}
+    return spark.read.schema(parquet_schema(spark, path)).parquet(path)

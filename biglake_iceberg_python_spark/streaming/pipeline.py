@@ -23,6 +23,8 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from biglake_iceberg_python_spark.sources.tables import parquet_schema
+
 
 # Staged-chunk cache: the replay input is a pure function of
 # (sf_dir, n_chunks, inject_dup_every, flush_sentinel, ordered), so queries
@@ -201,22 +203,15 @@ def stage_event_chunks(
     return input_dir, checkpoint_dir
 
 
-_SCHEMA_CACHE: dict[str, object] = {}
-
-
 def read_event_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream over the staged chunks, one file per trigger.
 
-    The staged schema is cached per input dir — file-source streams require
-    a user-supplied schema, and re-inferring it is a full footer-listing
-    Spark job per query for a schema that never changes within a staging.
+    File-source streams require a user-supplied schema; it comes from the
+    package's schema cache, so it is inferred (a footer-listing Spark job)
+    once per staging, not once per query.
     """
-    schema = _SCHEMA_CACHE.get(input_dir)
-    if schema is None:
-        schema = spark.read.parquet(input_dir).schema
-        _SCHEMA_CACHE[input_dir] = schema
     return (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(parquet_schema(spark, input_dir))
         .option("maxFilesPerTrigger", 1)
         .parquet(input_dir)
     )

@@ -1011,6 +1011,132 @@ def test_metadata_count_guards(spark, sf_dir):
         assert t.metadata_row_count() == t.read().count()
 
 
+def _jobs_started(spark, fn):
+    """(number of Spark jobs ``fn`` started, its result), counted through a
+    job group once the listener bus has delivered every job-start event."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-started-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_snapshot_reads_take_schema_from_commit_metadata(spark, tmp_path):
+    """Every commit path records the table schema, and reads use it: after
+    each operation, read() has exactly the schema Spark infers from the
+    snapshot's data dirs (timestamp_ntz and decimal kept, the non-nullable
+    source column forced nullable as Spark's file reads force it), and
+    building the read starts no Spark job."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
+
+    schema = T.StructType(
+        [
+            T.StructField("id", T.LongType(), nullable=False),
+            T.StructField("ts", T.TimestampNTZType()),
+            T.StructField("amt", T.DecimalType(12, 2)),
+            T.StructField("tag", T.StringType()),
+        ]
+    )
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [
+                (i, datetime.datetime(2024, 1, 1 + i % 28), decimal.Decimal(i) / 4, f"t{i}")
+                for i in range(lo, hi)
+            ],
+            schema,
+        )
+
+    def check(table, step, dirs=None):
+        head = table._head_entry(table._read_log())
+        n_jobs, df = _jobs_started(spark, table.read)
+        assert n_jobs == 0, step
+        inferred = spark.read.parquet(*(dirs or head["data_dirs"])).schema
+        assert df.schema == inferred, step
+        assert df.schema["id"].nullable, step
+
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    v1 = t.write(rows(0, 6))
+    check(t, "first append")
+    t.write(rows(6, 9))
+    check(t, "append")
+    # An append keeps its parent's schema even when the appended frame
+    # orders its columns differently (inference over both dirs would take
+    # whichever file path sorts first).
+    t.write(rows(9, 11).select("tag", "amt", "ts", "id"))
+    check(t, "reordered append", dirs=t._read_log()[0]["data_dirs"])
+    t.write(rows(0, 4).select("tag", "amt", "ts", "id"), mode="overwrite")
+    check(t, "overwrite")
+    t.write(rows(4, 12).select("tag", "amt", "ts", "id"))
+    t.delete_where(F.col("id") == 5)
+    check(t, "delete_where")
+    t.update_where(F.col("id") == 6, {"amt": F.lit(decimal.Decimal("9.99"))})
+    check(t, "update_where")
+    t.merge(rows(10, 14), on=["id"])
+    check(t, "merge")
+    t.rollback(v1)
+    check(t, "rollback")
+    check(t.clone_to(str(tmp_path / "clone")), "clone_to")
+    t.delete_where_mor(F.col("id") == 1, ["id"])
+    check(t, "delete_where_mor")
+    assert sorted(r.id for r in t.read().collect()) == [0, 2, 3, 4, 5]
+
+
+def test_metadata_tables_are_jvm_local_with_fixed_schema(spark, tmp_path):
+    """metadata_log_entries() and refs_entries() keep their column names,
+    types and nullability, also when empty (a table with no snapshots or
+    no refs), and collecting them starts no Spark job (no Python worker
+    round trip)."""
+    from pyspark.sql import types as T
+
+    from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
+
+    log_schema = T.StructType(
+        [
+            T.StructField("snapshot_id", T.LongType(), True),
+            T.StructField("operation", T.StringType(), True),
+            T.StructField("n_data_dirs", T.LongType(), True),
+            T.StructField("is_current", T.BooleanType(), True),
+        ]
+    )
+    refs_schema = T.StructType(
+        [
+            T.StructField("name", T.StringType(), True),
+            T.StructField("type", T.StringType(), True),
+            T.StructField("snapshot_id", T.LongType(), True),
+        ]
+    )
+    t = SnapshotTable(spark, str(tmp_path / "t"))
+    assert t.metadata_log_entries().schema == log_schema
+    assert t.metadata_log_entries().collect() == []
+    t.write(spark.range(3))
+    t.write(spark.range(3), mode="overwrite")
+    n_jobs, refs = _jobs_started(spark, lambda: t.refs_entries().collect())
+    assert n_jobs == 0 and refs == []
+    assert t.refs_entries().schema == refs_schema
+    t.create_tag("pin", 1)
+    n_jobs, log = _jobs_started(spark, lambda: t.metadata_log_entries().collect())
+    assert n_jobs == 0
+    assert [tuple(r) for r in log] == [(1, "append", 1, False), (2, "overwrite", 1, True)]
+    n_jobs, refs = _jobs_started(spark, lambda: t.refs_entries().collect())
+    assert n_jobs == 0
+    assert [tuple(r) for r in refs] == [("main", "branch", 2), ("pin", "tag", 1)]
+    assert t.metadata_log_entries().schema == log_schema
+    assert t.refs_entries().schema == refs_schema
+
+
 def test_compression_ratio_deterministic_and_sane(spark, sf_dir):
     """zlib at a fixed level is deterministic: two runs must be
     bit-identical, partitions must sum, and ratios must be physical
