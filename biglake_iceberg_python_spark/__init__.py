@@ -18,7 +18,7 @@ Design principles (100 TB scale):
     only Arrow-batched (pandas) UDFs.
 """
 
-from biglake_iceberg_python_spark.session import build_session, get_session
+from biglake_iceberg_python_spark.session import build_session
 from biglake_iceberg_python_spark.plans.registry import (
     REGISTRY,
     QuerySpec,
@@ -29,7 +29,6 @@ from biglake_iceberg_python_spark.plans.registry import (
 
 __all__ = [
     "build_session",
-    "get_session",
     "REGISTRY",
     "QuerySpec",
     "all_queries",

@@ -79,9 +79,6 @@ def ts_s(col: str | Column, alias: str | None = None) -> Column:
     return out.alias(alias) if alias else out
 
 
-ORACLE_TS_S = "strftime({}, '%Y-%m-%d %H:%M:%S')"
-
-
 def words(col: str | Column = "text") -> Column:
     """THE whitespace tokenizer — the single source of truth every
     text-reading operator and module-level ``_words`` alias delegates to

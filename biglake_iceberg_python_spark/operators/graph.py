@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
-_DAMP = 0.85
 _ITERS = 3
 _QUANT = 1e12  # contribution quantum: floor(rank/deg * _QUANT) as BIGINT
 _TOP_N = 20

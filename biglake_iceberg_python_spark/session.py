@@ -75,8 +75,3 @@ def build_session(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def get_session() -> SparkSession:
-    """Return the active session, or build a default one."""
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()

@@ -56,7 +56,7 @@ def parquet_schema(spark: SparkSession, path: str) -> StructType:
     return _SCHEMA_CACHE[key]
 
 
-def _size_bytes(conf_value: str) -> int:
+def size_bytes(conf_value: str) -> int:
     """Parse a Spark byte-size conf ('134217728', '128m', '1g', '4MB')."""
     s = conf_value.strip().lower().removesuffix("b")
     units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
@@ -72,7 +72,7 @@ def _scan_split_estimate(spark: SparkSession, path: str) -> int:
     (round-13 verdict #4). At 100 TB this is a handful of os.stat calls
     (or, on a real catalog table, the file-count statistic)."""
     try:
-        mpb = _size_bytes(
+        mpb = size_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
         )
     except (TypeError, ValueError):

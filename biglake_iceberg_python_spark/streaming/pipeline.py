@@ -2,20 +2,25 @@
 ``events`` table (SURVEY.md §2B streaming rows; M3 in the build plan).
 
 The driver testdata is static parquet, so streams are simulated the
-standard way: split events into N files in a temp dir, stream them with
-``maxFilesPerTrigger=1`` → N deterministic micro-batches. Everything
+standard way: split events into 4 time-contiguous files in a temp dir and
+stream them with ``maxFilesPerTrigger=1``. A replay with the flush
+sentinel runs 4 data micro-batches — the sentinel row rides in the
+last-arriving chunk — plus 1 no-data batch, in which the sentinel's
+watermark finalizes and evicts every remaining window. Everything
 downstream (watermarks, windows, stateful dedup, foreachBatch sinks) is
 exactly the code that would run against Kafka/files in production — only
 the source line changes.
 
 Scale notes: a file-source stream partitions each micro-batch like any
 parquet scan; stateful operators shuffle on their keys with state kept in
-the state store (RocksDB on a real cluster). Watermarks bound that state —
-every windowed query here sets one.
+the state store (RocksDB on a real cluster). The state partition count is
+sized from the replay's input bytes (see ``run_stream_to_memory``).
+Watermarks bound that state — every windowed query here sets one.
 """
 
 from __future__ import annotations
 
+import math
 import os
 import tempfile
 import time
@@ -23,14 +28,16 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from biglake_iceberg_python_spark.sources.tables import parquet_schema
+from biglake_iceberg_python_spark.sources.tables import parquet_schema, size_bytes
 
 
-# Staged-chunk cache: the replay input is a pure function of
-# (sf_dir, n_chunks, inject_dup_every, flush_sentinel, ordered), so queries
-# sharing a config reuse one on-disk staging — each call still gets a FRESH
-# checkpoint dir (a checkpoint is per-query state and must never be shared).
-_STAGED: dict[tuple[str, int, int | None, bool, bool], str] = {}
+# Staged-chunk cache: the replay input is a pure function of the events
+# file, keyed on its (path, mtime_ns, size) so a rewritten file is staged
+# again, and of (n_chunks, inject_dup_every, flush_sentinel, ordered).
+# Queries sharing a config reuse one on-disk staging — each call still gets
+# a FRESH checkpoint dir (a checkpoint is per-query state and must never be
+# shared).
+_STAGED: dict[tuple[str, int, int, int, int | None, bool, bool], str] = {}
 
 # Event type of the watermark-flush sentinel row (see stage_event_chunks).
 # Consumers running APPEND output filter it out AFTER withWatermark so it
@@ -55,13 +62,17 @@ def stage_event_chunks(
     config).
 
     ``inject_dup_every=k`` duplicates every k-th event (same event_id) to
-    exercise stateful dedup. ``flush_sentinel=True`` appends one extra
-    chunk holding a single ``SENTINEL_EVENT_TYPE`` row 2 days past the max
-    event time — the standard trick to close out APPEND-mode windows on a
-    finite replay: the sentinel batch advances the watermark beyond every
-    real window's end, so the engine finalizes, emits, and evicts them all
-    before the availableNow trigger terminates. On a live stream new
-    events play this role and no sentinel is needed.
+    exercise stateful dedup. ``flush_sentinel=True`` appends a single
+    ``SENTINEL_EVENT_TYPE`` row 2 days past the max event time to the
+    last-arriving chunk — the standard trick to close out APPEND-mode
+    windows on a finite replay. The replay is then 4 data batches plus 1
+    no-data batch: inside a batch Spark drops late rows and evicts state
+    against the PREVIOUS batch's watermark, so the last chunk is handled
+    exactly as if the sentinel were absent; the sentinel's watermark then
+    moves past every real window's end, and the no-data batch Spark runs
+    for that watermark change finalizes, emits and evicts them all before
+    the availableNow trigger terminates. On a live stream new events play
+    this role and no sentinel is needed.
 
     ``ordered=False`` stages the same time-contiguous chunks but permutes
     their ARRIVAL order (odd-index chunks first, then even) — the
@@ -77,7 +88,12 @@ def stage_event_chunks(
     # window-start rendering are timezone-independent, whatever TZ the host
     # session was built with. Must happen on every call (cached or not).
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    key = (sf_dir, n_chunks, inject_dup_every, flush_sentinel, ordered)
+    events = os.path.join(sf_dir, "events.parquet")
+    st = os.stat(events)
+    key = (
+        events, st.st_mtime_ns, st.st_size,
+        n_chunks, inject_dup_every, flush_sentinel, ordered,
+    )
     cached = _STAGED.get(key)
     if cached is not None and os.path.isdir(cached):
         ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
@@ -95,7 +111,7 @@ def stage_event_chunks(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    t = pq.read_table(events)
     # DEAD-LETTER at ingestion (round-10 events parity sweep, extending
     # the round-9 stateful-sessionization fix to the whole streaming
     # surface): an event with no event-time cannot participate in ANY
@@ -167,13 +183,8 @@ def stage_event_chunks(
         if ordered
         else [i for i in range(n_chunks) if i % 2] + [i for i in range(n_chunks) if not i % 2]
     )
-    for pos, i in enumerate(arrival):
-        path = os.path.join(input_dir, f"chunk_{i:03d}.parquet")
-        pq.write_table(t.slice(bounds[i], bounds[i + 1] - bounds[i]), path)
-        os.utime(path, (now + 10 * pos, now + 10 * pos))
+    chunks = [t.slice(bounds[i], bounds[i + 1] - bounds[i]) for i in range(n_chunks)]
     if flush_sentinel:
-        import pyarrow.compute as pc
-
         # Empty stage (0-row events table, or every row dead-lettered):
         # pc.max is NULL — anchor the sentinel at epoch 0 so the stream
         # still gets its one watermark-advancing row and terminates with
@@ -196,9 +207,11 @@ def stage_event_chunks(
             {f.name: pa.array(row[f.name], f.type) for f in t.schema},
             schema=t.schema,
         )
-        path = os.path.join(input_dir, f"chunk_{n_chunks:03d}_flush.parquet")
-        pq.write_table(sent, path)
-        os.utime(path, (now + 10 * n_chunks, now + 10 * n_chunks))
+        chunks[arrival[-1]] = pa.concat_tables([chunks[arrival[-1]], sent])
+    for pos, i in enumerate(arrival):
+        path = os.path.join(input_dir, f"chunk_{i:03d}.parquet")
+        pq.write_table(chunks[i], path)
+        os.utime(path, (now + 10 * pos, now + 10 * pos))
     _STAGED[key] = input_dir
     return input_dir, checkpoint_dir
 
@@ -217,22 +230,43 @@ def read_event_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
+def _state_partitions(spark: SparkSession, input_dir: str) -> int:
+    """State-store partition count for a replay of ``input_dir``:
+    ``ceil(bytes / advisoryPartitionSizeInBytes)`` clamped to
+    ``[1, defaultParallelism]`` — the rule AQE applies when it coalesces a
+    batch shuffle, which streaming runs without. Each micro-batch pays a
+    fixed state-commit cost per partition, so a small replay gets 1."""
+    n_bytes = sum(e.stat().st_size for e in os.scandir(input_dir))
+    advisory = size_bytes(
+        spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+    )
+    n = math.ceil(n_bytes / advisory)
+    return min(max(n, 1), spark.sparkContext.defaultParallelism)
+
+
 def run_stream_to_memory(
-    sdf: DataFrame, name: str, output_mode: str, checkpoint_dir: str
+    sdf: DataFrame,
+    name: str,
+    output_mode: str,
+    input_dir: str,
+    checkpoint_dir: str,
 ) -> StreamingQuery:
     """Run the streaming query to completion (availableNow) into a memory
     sink table called ``name``; returns the terminated query so callers
     (tests) can inspect ``lastProgress`` state-store metrics — e.g. assert
     that the watermark actually evicted finalized windows.
 
-    State-store partition count is pinned low for the replay: each
-    micro-batch pays a fixed cost per state partition, and the replay's
-    state is tiny. On a real cluster this would be sized to executor count
-    (it is fixed at the first checkpoint for the life of the query).
+    ``spark.sql.shuffle.partitions`` is set from the bytes of the staged
+    ``input_dir`` for the run (see ``_state_partitions``), so the state
+    store gets one partition per advisory-size slice of input; the count
+    is fixed at the first checkpoint for the life of the query. The
+    session value is restored afterwards, also when the query fails.
     """
     spark = sdf.sparkSession
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
+    spark.conf.set(
+        "spark.sql.shuffle.partitions", str(_state_partitions(spark, input_dir))
+    )
     try:
         q = (
             sdf.writeStream.format("memory")

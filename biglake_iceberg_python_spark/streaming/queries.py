@@ -80,7 +80,7 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"tumbling_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_tumbling_window"] = run_stream_to_memory(
-        agg, name, "append", ckpt
+        agg, name, "append", input_dir, ckpt
     )
     return spark.table(name).select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
@@ -136,7 +136,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"sliding_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_sliding_window"] = run_stream_to_memory(
-        agg, name, "append", ckpt
+        agg, name, "append", input_dir, ckpt
     )
     return spark.table(name).select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
@@ -204,7 +204,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"session_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_session_window"] = run_stream_to_memory(
-        agg, name, "append", ckpt
+        agg, name, "append", input_dir, ckpt
     )
     return spark.table(name).select(
         "user_id",
@@ -270,7 +270,7 @@ def stream_tumbling_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"tumbling_upd_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_tumbling_update"] = run_stream_to_memory(
-        agg, name, "update", ckpt
+        agg, name, "update", input_dir, ckpt
     )
     w = Window.partitionBy("window", "event_type").orderBy(
         F.col("n_events").desc()
@@ -327,7 +327,7 @@ def stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         name = f"dedup_rdb_{uuid.uuid4().hex[:8]}"
         LAST_STREAMING_QUERIES["stream_dedup_rocksdb"] = run_stream_to_memory(
-            deduped.select("event_id", "event_type"), name, "append", ckpt
+            deduped.select("event_id", "event_type"), name, "append", input_dir, ckpt
         )
     finally:
         if prev is None:
@@ -367,7 +367,9 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = read_event_stream(spark, input_dir)
     deduped = s.dropDuplicates(["event_id"])
     name = f"dedup_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(deduped.select("event_id", "event_type"), name, "append", ckpt)
+    run_stream_to_memory(
+        deduped.select("event_id", "event_type"), name, "append", input_dir, ckpt
+    )
     return (
         spark.table(name)
         .groupBy("event_type")
@@ -410,7 +412,7 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     name = f"dedup_wm_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_dedup_within_watermark"] = run_stream_to_memory(
-        deduped.select("event_id", "event_type"), name, "append", ckpt
+        deduped.select("event_id", "event_type"), name, "append", input_dir, ckpt
     )
     return (
         spark.table(name)
@@ -430,9 +432,11 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     # (chunk→pos: 1→0, 3→1, 0→2, 2→3), and Spark's watermark entering
     # batch p is max event time over batches q<p (post-type-filter, as the
     # stream filters before withWatermark) minus 10 minutes. A row
-    # survives iff its 10-min window end exceeds that watermark; the
-    # sentinel batch then finalizes every surviving window (its own never
-    # closes). Verified exact vs the engine at sf0.001/0.01/0.1.
+    # survives iff its 10-min window end exceeds that watermark. The
+    # sentinel rides in the last-arriving chunk (chunk 2), so it moves the
+    # watermark only after that batch; the closing no-data batch then
+    # finalizes every surviving window (the sentinel's own never closes).
+    # Verified exact vs the engine at sf0.001/0.01/0.1.
     oracle="""
     WITH allrows AS (
       SELECT ts, event_type,
@@ -497,7 +501,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"late_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_late_data_drop"] = run_stream_to_memory(
-        agg, name, "append", ckpt
+        agg, name, "append", input_dir, ckpt
     )
     # coalesce: zero surviving windows (empty stage) must report 0
     # surviving events, the oracle's COUNT(*) (round-10 empty-table
@@ -727,7 +731,7 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = f"stateful_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(out, name, "update", ckpt)
+    run_stream_to_memory(out, name, "update", input_dir, ckpt)
     # update mode emits one row per (user, batch); the final state per user
     # is the row with the max n_events.
     final = (
@@ -876,7 +880,7 @@ def stream_stateful_timeout_session(
     )
     name = f"timeout_sess_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_stateful_timeout_session"] = (
-        run_stream_to_memory(out, name, "update", ckpt)
+        run_stream_to_memory(out, name, "update", input_dir, ckpt)
     )
     return spark.table(name).filter(
         # null-safe sentinel drop (round-10 events parity sweep):
@@ -923,7 +927,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
     )
     name = f"static_join_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(agg, name, "complete", ckpt)
+    run_stream_to_memory(agg, name, "complete", input_dir, ckpt)
     return spark.table(name).select(
         "c_mktsegment",
         "event_type",
@@ -1003,7 +1007,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # join itself; the per-user rollup is a batch query over the sink.
     name = f"ss_join_{uuid.uuid4().hex[:8]}"
     run_stream_to_memory(
-        joined.select("p_user", "value"), name, "append", ckpt
+        joined.select("p_user", "value"), name, "append", input_dir, ckpt
     )
     return (
         spark.table(name)
@@ -1088,7 +1092,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"ss_left_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_stream_left_join"] = run_stream_to_memory(
-        joined.select("p_user", "value", "e_user"), name, "append", ckpt
+        joined.select("p_user", "value", "e_user"), name, "append", input_dir, ckpt
     )
     return (
         spark.table(name)
@@ -1184,7 +1188,7 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"ss_chain_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_join_then_window"] = run_stream_to_memory(
-        agg, name, "append", ckpt
+        agg, name, "append", input_dir, ckpt
     )
     return spark.table(name).select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
@@ -1313,7 +1317,7 @@ def stream_windowed_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy("win").agg(F.count(F.lit(1)).alias("n_users"))
     name = f"wdau_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_windowed_dau"] = run_stream_to_memory(
-        agg, name, "append", ckpt
+        agg, name, "append", input_dir, ckpt
     )
     return spark.table(name).select(
         F.date_format(F.col("win.start"), _TS_FMT).alias("window_start"),
@@ -1375,7 +1379,7 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     name = f"trending_{uuid.uuid4().hex[:8]}"
     LAST_STREAMING_QUERIES["stream_topk_trending"] = run_stream_to_memory(
-        agg, name, "append", ckpt
+        agg, name, "append", input_dir, ckpt
     )
     from pyspark.sql import Window
 

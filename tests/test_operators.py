@@ -2926,13 +2926,13 @@ def test_scan_split_estimate_matches_degeneracy_semantics(spark, sf_dir):
     file and scale with size/maxPartitionBytes for a large one."""
     from biglake_iceberg_python_spark.sources.tables import (
         _scan_split_estimate,
-        _size_bytes,
+        size_bytes,
     )
 
-    assert _size_bytes("134217728") == 128 << 20
-    assert _size_bytes("128m") == 128 << 20
-    assert _size_bytes("128MB") == 128 << 20
-    assert _size_bytes("1g") == 1 << 30
+    assert size_bytes("134217728") == 128 << 20
+    assert size_bytes("128m") == 128 << 20
+    assert size_bytes("128MB") == 128 << 20
+    assert size_bytes("1g") == 1 << 30
     small = f"{sf_dir}/documents.parquet"
     assert _scan_split_estimate(spark, small) == 1
     # a path that does not exist must not crash the loader (spark.read

@@ -9,8 +9,21 @@ streaming.queries.LAST_STREAMING_QUERIES.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
+
 from biglake_iceberg_python_spark.plans.registry import load_all
 from biglake_iceberg_python_spark.streaming import queries as sq
+from biglake_iceberg_python_spark.streaming.pipeline import (
+    _state_partitions,
+    read_event_stream,
+    run_stream_to_memory,
+    stage_event_chunks,
+)
 
 REGISTRY = load_all()
 
@@ -46,6 +59,66 @@ def test_tumbling_window_evicts_state(spark, sf_dir):
     # never-finalized window may remain in the store.
     assert _final_state_rows(q) <= 1
     assert _total_removed(q) > 0
+
+
+def test_tumbling_window_replay_shape(spark, sf_dir):
+    """The sentinel replay is 4 data batches + 1 no-data flush: the
+    sentinel rides in the last chunk, every state operator runs on the
+    size-derived partition count (1 for the sf0.001 replay), and the
+    session's shuffle-partition conf is restored afterwards."""
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    progress = _run("stream_tumbling_window", spark, sf_dir).recentProgress
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert len(progress) == 5
+    assert progress[-1]["numInputRows"] == 0
+    ts = pq.read_table(f"{sf_dir}/events.parquet", columns=["ts"]).column("ts")
+    n = len(ts) - ts.null_count
+    assert progress[-2]["numInputRows"] == n - n * 3 // 4 + 1
+    parts = {
+        op["numShufflePartitions"] for p in progress for op in p["stateOperators"]
+    }
+    assert parts == {1}
+
+
+def test_state_partitions_grow_with_input_bytes(spark, sf_dir):
+    """ceil(bytes / advisoryPartitionSizeInBytes), clamped to
+    [1, defaultParallelism]."""
+    input_dir, _ = stage_event_chunks(spark, sf_dir)
+    assert _state_partitions(spark, input_dir) == 1
+    n_bytes = sum(e.stat().st_size for e in os.scandir(input_dir))
+    cores = spark.sparkContext.defaultParallelism
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(n_bytes // 2 + 1))
+        assert _state_partitions(spark, input_dir) == min(2, cores)
+        spark.conf.set(key, "1")
+        assert _state_partitions(spark, input_dir) == cores
+    finally:
+        spark.conf.set(key, prev)
+
+
+def test_failed_stream_start_restores_shuffle_partitions(spark, sf_dir):
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    input_dir, ckpt = stage_event_chunks(spark, sf_dir)
+    # COMPLETE output needs an aggregation, so start() raises.
+    with pytest.raises(AnalysisException):
+        run_stream_to_memory(
+            read_event_stream(spark, input_dir), "no_agg", "complete", input_dir, ckpt
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+
+
+def test_stage_is_rebuilt_when_events_file_is_rewritten(spark, sf_dir, tmp_path):
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    events = events.filter(pc.is_valid(events.column("ts")))
+    pq.write_table(events, tmp_path / "events.parquet")
+    first, _ = stage_event_chunks(spark, str(tmp_path))
+    assert stage_event_chunks(spark, str(tmp_path))[0] == first
+    pq.write_table(events.slice(0, 10), tmp_path / "events.parquet")
+    second, _ = stage_event_chunks(spark, str(tmp_path))
+    assert second != first
+    assert pq.read_table(second).num_rows == 10
 
 
 def test_sliding_window_evicts_state(spark, sf_dir):
