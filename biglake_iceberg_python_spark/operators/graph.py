@@ -21,6 +21,7 @@ DuckDB oracle's (which unrolls the same three iterations as chained CTEs).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -36,10 +37,9 @@ _TOP_N = 20
 # while |V| fits an executor, flip to a co-partitioned shuffle join past it.
 # 20M nodes ≈ 320 MB of (long, double) rows — comfortably under the 8 GB
 # broadcast hard cap with headroom for row overhead; a 100 TB web graph
-# (billions of nodes) lands in the shuffle regime, where the edge list is
-# hash-partitioned on src ONCE and every per-round join reuses that
-# exchange. Tests force each regime via the conf
-# (tests/test_plans.py::test_graph_iteratives_*_regime).
+# (billions of nodes) lands in the shuffle regime, where the per-round
+# joins shuffle the node-sized state instead. Tests force each regime via
+# the conf (tests/test_plans.py::test_graph_iteratives_*_regime).
 _BCAST_NODE_LIMIT_CONF = "spark.graft.graph.broadcastNodeLimit"
 _BCAST_NODE_LIMIT_DEFAULT = 20_000_000
 
@@ -604,9 +604,9 @@ _KCORE_ROUNDS = 4
 # degree agg + survivor join, and two stat subqueries), so without it
 # DuckDB's CTE inlining re-expands the chain ~3×-per-round — ~81
 # re-evaluations of the co-purchase self-join by round 4 (measured: >37
-# CPU-minutes at sf0.1 vs 0.94 s materialized). It is the evaluation-
-# strategy mirror of the Spark side's per-round localCheckpoint and
-# changes no semantics.
+# CPU-minutes at sf0.1 vs 0.94 s materialized). It is DuckDB's evaluation
+# strategy only and changes no semantics; the Spark side materializes e0
+# once and each round's degree table, never an e{t} (graph_kcore).
 _KCORE_PEEL = """
     d{t} AS MATERIALIZED (SELECT src, COUNT(*) AS d FROM e{p} GROUP BY src),
     s{t} AS MATERIALIZED (SELECT src FROM d{t} WHERE d >= (SELECT k FROM kk)),
@@ -621,6 +621,38 @@ _KCORE_STAT = """
            (SELECT k FROM kk) AS k,
            (SELECT COUNT(DISTINCT src) FROM e{t}) AS n_nodes,
            (SELECT COUNT(*) FROM e{t}) // 2 AS n_edges"""
+
+
+_KCORE_SCHEMA = pa.schema(
+    [(c, pa.int64()) for c in ("round", "k", "n_nodes", "n_edges")]
+)
+
+
+def _degrees(edges: DataFrame) -> DataFrame:
+    """(src, d): the degree table of a symmetric edge list."""
+    return edges.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
+
+
+def _peel_degrees(e0: DataFrame, surv: DataFrame, broadcast: bool) -> DataFrame:
+    """One k-core round: the degree table of e0 restricted to survivor
+    endpoints, ``deg(e0 ⋉ surv(src) ⋉ surv(dst))``.
+
+    The ONE survivor frame is joined twice under two aliases, so both
+    sides plan the same (canonically equal) exchange: in the broadcast
+    regime the second BroadcastExchange is a ReusedExchange — one
+    broadcast job per round, where a renamed copy plans two."""
+    s = F.broadcast(surv) if broadcast else surv
+    return _degrees(
+        e0.alias("e")
+        .join(s.alias("a"), F.col("e.src") == F.col("a.src"), "left_semi")
+        .join(s.alias("b"), F.col("e.dst") == F.col("b.src"), "left_semi")
+    )
+
+
+def _node_edge_totals(deg: DataFrame) -> tuple[int, int]:
+    """(|V|, Σd) of a degree table in one small aggregate job."""
+    row = deg.agg(F.count(F.lit(1)), F.coalesce(F.sum("d"), F.lit(0))).first()
+    return int(row[0]), int(row[1])
 
 
 @query(
@@ -657,99 +689,63 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeatedly delete nodes of degree < k and report how the graph
     collapses. k adapts to the graph (floor(avg degree) + 1 of the
     INITIAL graph) so the peel is non-trivial at every scale factor; four
-    rounds are unrolled (fixed iteration count, the `graph_pagerank`
+    rounds are reported (fixed iteration count, the `graph_pagerank`
     discipline) and each round's surviving node and edge counts are the
     readout — exact integers, so the row hashes bit-for-bit against the
     oracle's identically-unrolled CTE chain.
 
-    Scale shape per round: one degree aggregation (map-side combined) +
-    two semi-joins of the edge list against the survivor set — all
-    equi-joins partitioned on the node key; nothing but node/edge keys
-    ever shuffles, and each round's edge list is materialized
-    (`localCheckpoint`) so Catalyst doesn't re-derive the whole peel
-    chain per consumer. Peeling strictly shrinks the edge list, so round
-    cost is monotonically decreasing — at 100 TB the first round
-    dominates and is exactly one shuffle of the edge list.
-    """
-    # Partition the symmetric edge list by src ONCE: every round's degree
-    # aggregation then runs partial+final with no further edge exchange,
-    # and the survivor semi-joins broadcast while the survivor set
-    # (node-sized — the same |V|-rows budget as graph_pagerank's rank
-    # vector) fits the broadcast node limit. Past it, the SAME peel runs
-    # as shuffle semi-joins: the src-side join reuses the edge list's
-    # src partitioning, so each round exchanges the node-sized survivor
-    # set (twice) plus the dst-side probe — never an avoidable edge pass.
-    # The regime check rides the k-derivation collect (no extra action).
-    e0 = (
-        _edges(spark, sf_dir)
-        .repartition(F.col("src"))
-        .localCheckpoint(eager=False)
-    )
-    use_bcast = True  # decided at round 1, before any survivor join
+    State between rounds is node-sized. The edge list e0 is materialized
+    once (`localCheckpoint`); round t's degree table is
+    ``deg(e0 ⋉ s_t(src) ⋉ s_t(dst))`` and only that |V|-row table is
+    checkpointed. Exact because peeling only deletes: s_t ⊆ s_{t-1}, so
+    e0 ∩ s_t² = e_{t-1} ∩ s_t² — the oracle's chained e_t. Every readout
+    comes from the degree table: n_nodes is its row count (distinct src by
+    construction), n_edges = Σd/2 (each undirected edge adds one d on each
+    endpoint).
 
-    def _nb(df: DataFrame) -> DataFrame:
-        return F.broadcast(df) if use_bcast else df
-    # Every readout comes from the per-round DEGREE table (|V| rows), not
-    # the edge list: n_nodes = its row count (distinct src by
-    # construction), n_edges = Σd/2 (each undirected edge contributes one
-    # d on each endpoint). The degree agg is already the peel's first
-    # step, so the stats pass costs one |V|-row agg per round instead of
-    # a count_distinct over the full |E|-row state — at 100 TB that is
-    # the difference between re-scanning every surviving edge five times
-    # and aggregating five node-sized tables.
-    cur = e0
-    degs = []
-    for rnd in range(_KCORE_ROUNDS):
-        deg = (
-            cur.groupBy("src")
-            .agg(F.count(F.lit(1)).alias("d"))
-            .localCheckpoint(eager=False)
+    Halting rule (Pregel's vote-to-halt): each computed round collects
+    (count, Σd) in one small aggregate — round 0's is the k derivation.
+    Σd_t = |e_t| and e_t ⊆ e_{t-1}, so Σd_t == Σd_{t-1} means
+    e_t = e_{t-1}; then round t's degree table equals round t-1's, so
+    s_{t+1} = s_t and e_{t+1} = e_t, and by induction every later round
+    repeats round t. Once Σd_t is 0 or equals Σd_{t-1}, the remaining
+    rows are copies of round t's and run no job. The five stat rows are
+    returned as an Arrow-built local relation, so collecting the result
+    runs no job either.
+
+    Scale trade: every round re-reads the checkpointed e0 (one map-side
+    semi-join pass over |E| rows plus a partial-aggregated node-sized
+    exchange) instead of writing and re-reading a shrinking e_t. At
+    100 TB round 1 dominates either way and is one pass over e0; a later
+    round scans all of e0 where a chained peel would scan only e_{t-1},
+    but no round writes an edge-sized checkpoint.
+    """
+    e0 = _edges(spark, sf_dir).localCheckpoint(eager=False)
+    deg = _degrees(e0).localCheckpoint(eager=False)
+    nv, sd = _node_edge_totals(deg)
+    # Empty graph: no nodes → k is undefined (NULL), matching the
+    # oracle's 0 // 0 = NULL; Σd_0 = 0 halts before any peel.
+    k = sd // nv + 1 if nv else None
+    # Past the broadcast node limit the survivor joins shuffle. e0 is not
+    # pre-partitioned on src for them: under AQE a localCheckpoint reports
+    # UnknownPartitioning, so every round would re-shuffle it regardless.
+    broadcast = nv <= _node_broadcast_limit(spark)
+    totals = [(nv, sd)]
+    for _ in range(_KCORE_ROUNDS):
+        # Halt once the graph is empty or the last round deleted nothing.
+        if sd and (len(totals) == 1 or sd != totals[-2][1]):
+            surv = deg.filter(F.col("d") >= k).select("src")
+            deg = _peel_degrees(e0, surv, broadcast).localCheckpoint(eager=False)
+            nv, sd = _node_edge_totals(deg)
+        totals.append((nv, sd))
+    return spark.createDataFrame(
+        pa.table(
+            {
+                "round": list(range(len(totals))),
+                "k": [k] * len(totals),
+                "n_nodes": [n for n, _ in totals],
+                "n_edges": [s // 2 for _, s in totals],
+            },
+            schema=_KCORE_SCHEMA,
         )
-        degs.append(deg)
-        if len(degs) == 1:
-            row = deg.agg(
-                F.count(F.lit(1)).alias("nv"), F.sum("d").alias("ne")
-            ).collect()[0]
-            # Empty graph: no nodes → k is undefined (NULL), matching the
-            # oracle's 0 // 0 = NULL; the NULL-k peel filter keeps every
-            # round's survivor set empty (round-10 empty-table parity).
-            nv = int(row["nv"])
-            k = int(row["ne"]) // nv + 1 if nv else None
-            use_bcast = nv <= _node_broadcast_limit(spark)
-        # No checkpoint on the survivor set: it is a map-side filter over
-        # the ALREADY-checkpointed degree table, so each of its two
-        # consumers (the src/dst semi-join probes) re-runs one |V|-row
-        # filter — recompute is trivial while the dropped localCheckpoint
-        # was an eager driver-side physical planning (~0.15 s) per round
-        # (round 14, guide §5: four of kcore's twelve checkpoints were
-        # pure build overhead).
-        surv = deg.filter(F.col("d") >= k).select("src")
-        cur = (
-            cur.join(_nb(surv), "src", "left_semi")
-            .join(
-                _nb(surv.withColumnRenamed("src", "dst")),
-                "dst",
-                "left_semi",
-            )
-            .select("src", "dst")
-        )
-        # Mid-loop rounds checkpoint (3 consumers each: next deg + two
-        # probe sides); the LAST round's edge list has exactly one
-        # consumer (the final stats agg), so checkpointing it would cost
-        # a materialization for nothing — and leaving it lazy keeps the
-        # survivor-join strategy visible to the regime plan tests.
-        if rnd < _KCORE_ROUNDS - 1:
-            cur = cur.localCheckpoint(eager=False)
-    degs.append(cur.groupBy("src").agg(F.count(F.lit(1)).alias("d")))
-    stats = None
-    for t, deg in enumerate(degs):
-        row = deg.agg(
-            F.lit(t).cast("long").alias("round"),
-            F.lit(k).cast("long").alias("k"),
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            (F.coalesce(F.sum("d"), F.lit(0)) / 2).cast("long").alias(
-                "n_edges"
-            ),
-        )
-        stats = row if stats is None else stats.unionAll(row)
-    return stats.orderBy("round")
+    )

@@ -109,19 +109,34 @@ def _parse_one(path: str, jobs: dict, stages: dict, tasks: dict) -> None:
 def summarize_window(
     jobs: list[dict], t0: float, t1: float
 ) -> dict:
-    """Aggregate the jobs whose submission falls in [t0, t1]: total job
-    wall, gap time, stage count, total tasks, and the single largest
-    stage by task_sum (its n_tasks + task_max are the parallelism/skew
-    readout)."""
-    sel = [j for j in jobs if t0 - 0.05 <= j["t0"] <= t1 + 0.05]
-    jw = sum(j["wall"] for j in sel)
+    """Aggregate the jobs whose submission falls in [t0, t1]: job wall,
+    gap time, stage count, total tasks, and the single largest stage by
+    task_sum (its n_tasks + task_max are the parallelism/skew readout).
+
+    Job wall is the length of the UNION of the jobs' intervals, so
+    concurrent jobs count once and gap is the window time no job covers.
+    ``jobs`` lists the selected jobs by submission time and ``gaps[i]`` is
+    the idle time just before ``jobs[i]`` (0 when it starts while an
+    earlier job still runs)."""
+    sel = sorted(
+        (j for j in jobs if t0 - 0.05 <= j["t0"] <= t1 + 0.05),
+        key=lambda j: (j["t0"], j["id"]),
+    )
+    busy, gaps, frontier = 0.0, [], t0
+    for j in sel:
+        end = j["t0"] + j["wall"]
+        gaps.append(round(max(0.0, j["t0"] - frontier), 3))
+        busy += max(0.0, end - max(j["t0"], frontier))
+        frontier = max(frontier, end)
     all_stages = [s for j in sel for s in j["stages"]]
     top = max(all_stages, key=lambda s: s["task_sum"], default=None)
     return {
         "n_jobs": len(sel),
-        "job_wall": round(jw, 3),
-        "gap": round(max(0.0, (t1 - t0) - jw), 3),
+        "job_wall": round(busy, 3),
+        "gap": round(max(0.0, (t1 - t0) - busy), 3),
         "n_stages": len(all_stages),
         "n_tasks": sum(s["n_tasks"] for s in all_stages),
         "top_stage": top,
+        "jobs": sel,
+        "gaps": gaps,
     }

@@ -2,7 +2,7 @@
 """Per-job/stage attribution for one or more registry queries (guide §1/§7).
 
 Runs each named query with the Spark event log enabled, then parses the log
-into a per-job timeline: job wall, gap since previous job (driver-side work —
+into a per-job timeline: job wall, idle gap before each job (driver-side work —
 planning, checkpoint/commit I/O, broadcast builds), and per-stage task count /
 total task time / max single-task time (parallelism + skew signal at a glance).
 
@@ -24,7 +24,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-from biglake_iceberg_python_spark.plans.eventlog import parse_event_log
+from biglake_iceberg_python_spark.plans.eventlog import (
+    parse_event_log,
+    summarize_window,
+)
 
 
 def main() -> int:
@@ -75,21 +78,17 @@ def main() -> int:
     jobs = parse_event_log(logs[-1])
 
     for name, r, t0, t1 in marks:
-        sel = [j for j in jobs if t0 - 0.05 <= j["t0"] <= t1 + 0.05]
-        jw = sum(j["wall"] for j in sel)
+        s = summarize_window(jobs, t0, t1)
         print(f"\n=== {name} run {r}: wall {t1 - t0:.3f}s, "
-              f"{len(sel)} jobs ({jw:.3f}s in jobs, "
-              f"{t1 - t0 - jw:.3f}s between/around) ===")
-        prev_end = t0
-        for j in sel:
-            gap = j["t0"] - prev_end
-            prev_end = j["t0"] + j["wall"]
+              f"{s['n_jobs']} jobs ({s['job_wall']:.3f}s in jobs, "
+              f"{s['gap']:.3f}s between/around) ===")
+        for j, gap in zip(s["jobs"], s["gaps"]):
             print(f"  job {j['id']:>4} +{gap:6.3f}s gap, wall {j['wall']:6.3f}s  {j['desc'][:60]}")
-            for s in j["stages"]:
+            for st in j["stages"]:
                 print(
-                    f"       stage {s['sid']:>4} wall {s['wall']:6.3f}s "
-                    f"tasks {s['n_tasks']:>3} sum {s['task_sum']:7.3f}s "
-                    f"max {s['task_max']:6.3f}s  {s['name'][:50]}"
+                    f"       stage {st['sid']:>4} wall {st['wall']:6.3f}s "
+                    f"tasks {st['n_tasks']:>3} sum {st['task_sum']:7.3f}s "
+                    f"max {st['task_max']:6.3f}s  {st['name'][:50]}"
                 )
     return 0
 

@@ -1011,24 +1011,9 @@ def test_metadata_count_guards(spark, sf_dir):
         assert t.metadata_row_count() == t.read().count()
 
 
-def _jobs_started(spark, fn):
-    """(number of Spark jobs ``fn`` started, its result), counted through a
-    job group once the listener bus has delivered every job-start event."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"jobs-started-{uuid.uuid4().hex[:8]}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
-def test_snapshot_reads_take_schema_from_commit_metadata(spark, tmp_path):
+def test_snapshot_reads_take_schema_from_commit_metadata(
+    spark, tmp_path, jobs_started
+):
     """Every commit path records the table schema, and reads use it: after
     each operation, read() has exactly the schema Spark infers from the
     snapshot's data dirs (timestamp_ntz and decimal kept, the non-nullable
@@ -1061,7 +1046,7 @@ def test_snapshot_reads_take_schema_from_commit_metadata(spark, tmp_path):
 
     def check(table, step, dirs=None):
         head = table._head_entry(table._read_log())
-        n_jobs, df = _jobs_started(spark, table.read)
+        n_jobs, df = jobs_started(table.read)
         assert n_jobs == 0, step
         inferred = spark.read.parquet(*(dirs or head["data_dirs"])).schema
         assert df.schema == inferred, step
@@ -1094,7 +1079,9 @@ def test_snapshot_reads_take_schema_from_commit_metadata(spark, tmp_path):
     assert sorted(r.id for r in t.read().collect()) == [0, 2, 3, 4, 5]
 
 
-def test_metadata_tables_are_jvm_local_with_fixed_schema(spark, tmp_path):
+def test_metadata_tables_are_jvm_local_with_fixed_schema(
+    spark, tmp_path, jobs_started
+):
     """metadata_log_entries() and refs_entries() keep their column names,
     types and nullability, also when empty (a table with no snapshots or
     no refs), and collecting them starts no Spark job (no Python worker
@@ -1123,14 +1110,14 @@ def test_metadata_tables_are_jvm_local_with_fixed_schema(spark, tmp_path):
     assert t.metadata_log_entries().collect() == []
     t.write(spark.range(3))
     t.write(spark.range(3), mode="overwrite")
-    n_jobs, refs = _jobs_started(spark, lambda: t.refs_entries().collect())
+    n_jobs, refs = jobs_started(lambda: t.refs_entries().collect())
     assert n_jobs == 0 and refs == []
     assert t.refs_entries().schema == refs_schema
     t.create_tag("pin", 1)
-    n_jobs, log = _jobs_started(spark, lambda: t.metadata_log_entries().collect())
+    n_jobs, log = jobs_started(lambda: t.metadata_log_entries().collect())
     assert n_jobs == 0
     assert [tuple(r) for r in log] == [(1, "append", 1, False), (2, "overwrite", 1, True)]
-    n_jobs, refs = _jobs_started(spark, lambda: t.refs_entries().collect())
+    n_jobs, refs = jobs_started(lambda: t.refs_entries().collect())
     assert n_jobs == 0
     assert [tuple(r) for r in refs] == [("main", "branch", 2), ("pin", "tag", 1)]
     assert t.metadata_log_entries().schema == log_schema

@@ -9,6 +9,7 @@ per-group top-k, partial aggregation before the shuffle.
 
 from __future__ import annotations
 
+import pytest
 
 from biglake_iceberg_python_spark.plans.registry import load_all
 
@@ -1050,13 +1051,117 @@ def test_heaps_law_windows_run_on_decile_rows(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_kcore_rounds_reuse_checkpointed_edges(spark, sf_dir):
-    """Each peel round must consume the previous round's materialized edge
-    list (localCheckpoint → Scan ExistingRDD), not re-derive the lineitem
-    self-join per round."""
-    plan = plan_of(spark, sf_dir, "graph_kcore")
+def _kcore_peel_rounds(spark, sf_dir, monkeypatch):
+    """(graph_kcore's rows, the per-round degree frames its peel built):
+    ``_peel_degrees`` is wrapped so the test sees exactly what the
+    operator planned — its result is a local relation with no plan."""
+    from biglake_iceberg_python_spark.operators import graph
+
+    built = []
+    peel = graph._peel_degrees
+
+    def spy(*args):
+        built.append(peel(*args))
+        return built[-1]
+
+    with monkeypatch.context() as m:
+        m.setattr(graph, "_peel_degrees", spy)
+        rows = [tuple(r) for r in REGISTRY["graph_kcore"].fn(spark, sf_dir).collect()]
+    return rows, built
+
+
+def _round_plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_kcore_rounds_reuse_checkpointed_edges(spark, sf_dir, monkeypatch):
+    """Each peel round must read the edge list materialized once
+    (localCheckpoint → Scan ExistingRDD), never re-derive the lineitem
+    self-join, and broadcast its survivor set once: the dst-side probe
+    reuses the src-side BroadcastExchange."""
+    _, built = _kcore_peel_rounds(spark, sf_dir, monkeypatch)
+    plan = _round_plan(built[0])  # round 1: the survivor set is non-empty
     assert "Scan ExistingRDD" in plan
     assert plan.count("FileScan parquet") == 0  # all inputs checkpointed
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("BroadcastExchange") == 2  # the exchange + its reuse
+    assert final.count("ReusedExchange") == 1
+
+
+def test_kcore_job_count(spark, sf_dir, jobs_started):
+    """graph_kcore's Spark jobs at sf0.001 are pinned exactly: k derived
+    from round 0's (count, Σd) collect, one broadcast per round, a halt
+    once the graph is empty at round 2, and a result that is a local
+    relation (collecting it runs no job). A new driver round-trip fails
+    here."""
+    spec = REGISTRY["graph_kcore"]
+    n_build, df = jobs_started(lambda: spec.fn(spark, sf_dir))
+    n_collect, _ = jobs_started(df.collect)
+    assert (n_build, n_collect) == (11, 0)
+
+
+def _lineitem_corpus(path, orders) -> str:
+    """A lineitem table holding only the order/part keys: each order (a
+    list of parts) becomes a clique of the co-purchase graph."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir()
+    pairs = [(ok, pk) for ok, parts in enumerate(orders, 1) for pk in parts]
+    pq.write_table(
+        pa.table(
+            {
+                "l_orderkey": pa.array([ok for ok, _ in pairs], pa.int64()),
+                "l_partkey": pa.array([pk for _, pk in pairs], pa.int64()),
+            }
+        ),
+        path / "lineitem.parquet",
+    )
+    return str(path)
+
+
+# (a) K3 + K10: k = 8 peels the triangle in round 1 and the 10-clique is a
+# fixed core from then on. (b) a K5 core with a six-node tail along which
+# k = 3 peels one node per round (three isolated edges hold the average
+# degree below 3). (c) three triangles: 2-regular, so k = 3 empties it.
+_KCORE_HALT_CORPORA = {
+    "fixed_core": ([[1, 2, 3], list(range(11, 21))], 2),
+    "still_shrinking": (
+        [list(range(101, 106))]
+        + [[i, i + 1] for i in range(1, 6)]
+        + [[i, 101] for i in range(2, 7)]
+        + [[6, 102], [201, 202], [203, 204], [205, 206]],
+        4,
+    ),
+    "empty_at_round_1": ([[1, 2, 3], [4, 5, 6], [7, 8, 9]], 1),
+}
+
+
+@pytest.mark.parametrize("corpus", sorted(_KCORE_HALT_CORPORA))
+def test_kcore_halts_at_the_fixpoint(spark, tmp_path, monkeypatch, corpus):
+    """The peel stops computing once a round's edge count is 0 or equals
+    the previous round's (nested edge sets: equal counts mean equal sets),
+    reports every later round as a copy, and still matches the oracle's
+    four unrolled rounds — on a graph that converges to a non-empty core,
+    one still shrinking at round 4 (no halt may fire), and one that
+    empties at round 1."""
+    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
+    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+
+    orders, rounds_run = _KCORE_HALT_CORPORA[corpus]
+    d = _lineitem_corpus(tmp_path / corpus, orders)
+    rows, built = _kcore_peel_rounds(spark, d, monkeypatch)
+    assert len(built) == rounds_run
+    spec = REGISTRY["graph_kcore"]
+    result = compare(spec.fn(spark, d), duckdb_connect(d), resolve_oracle(spec, d))
+    assert result["ok"], result
+    n_edges = [r[3] for r in rows]
+    if corpus == "fixed_core":
+        assert rows[4][2:] == (10, 45) and n_edges[1:] == [45] * 4
+    elif corpus == "still_shrinking":
+        assert all(a > b for a, b in zip(n_edges, n_edges[1:])), n_edges
+    else:
+        assert n_edges[0] == 9 and n_edges[1:] == [0] * 4
 
 
 def test_sql_temp_function_inlines_into_codegen(spark, sf_dir):
@@ -1112,22 +1217,29 @@ def test_calibration_totals_broadcast_into_bins(spark, sf_dir):
     assert "BatchEvalPython" not in plan
 
 
-def test_graph_iteratives_broadcast_regime(spark, sf_dir):
+def test_graph_iteratives_broadcast_regime(spark, sf_dir, monkeypatch):
     """Below the broadcast node limit (the default regime at every test
     SF), the per-iteration node-state joins — pagerank's rank vector,
-    k-core's survivor set — must be broadcast-hash joins: the edge list
-    never shuffles inside the loop."""
-    for name in ("graph_pagerank", "graph_kcore"):
-        plan = plan_of(spark, sf_dir, name)
+    k-core's survivor set (planned in the round the peel built, since the
+    k-core result is a local relation) — must be broadcast-hash joins: the
+    edge list never shuffles inside the loop."""
+    plans = {
+        "graph_pagerank": plan_of(spark, sf_dir, "graph_pagerank"),
+        "graph_kcore": _round_plan(
+            _kcore_peel_rounds(spark, sf_dir, monkeypatch)[1][0]
+        ),
+    }
+    for name, plan in plans.items():
         assert "BroadcastHashJoin" in plan, name
 
 
-def test_graph_iteratives_shuffle_regime(spark, sf_dir):
+def test_graph_iteratives_shuffle_regime(spark, sf_dir, monkeypatch):
     """Past the broadcast node limit (forced via the conf — the
     billions-of-nodes regime where a |V|-row broadcast OOMs executors),
     the SAME queries must plan shuffle joins instead of explicit
-    broadcasts AND still produce bit-identical results: the flip is a
-    physical strategy change, never a semantic one."""
+    broadcasts (k-core: in the round the peel built) AND still produce
+    bit-identical results: the flip is a physical strategy change, never a
+    semantic one."""
     from biglake_iceberg_python_spark.operators.graph import (
         _BCAST_NODE_LIMIT_CONF,
     )
@@ -1143,13 +1255,18 @@ def test_graph_iteratives_shuffle_regime(spark, sf_dir):
     spark.conf.set(_BCAST_NODE_LIMIT_CONF, "1")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        for name in ("graph_pagerank", "graph_kcore"):
-            plan = plan_of(spark, sf_dir, name)
+        kcore_rows, built = _kcore_peel_rounds(spark, sf_dir, monkeypatch)
+        plans = {
+            "graph_pagerank": plan_of(spark, sf_dir, "graph_pagerank"),
+            "graph_kcore": _round_plan(built[0]),
+        }
+        for name, plan in plans.items():
             assert "BroadcastHashJoin" not in plan, name
             assert (
                 "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             ), name
-            assert rows(name) == base[name], name
+        assert rows("graph_pagerank") == base["graph_pagerank"]
+        assert sorted(kcore_rows) == base["graph_kcore"]
     finally:
         spark.conf.unset(_BCAST_NODE_LIMIT_CONF)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
