@@ -53,16 +53,10 @@ def main() -> int:
     if os.environ.get("SPARK_GRAFT_BENCH_EVENTLOG"):
         import tempfile
 
+        from biglake_iceberg_python_spark.plans.eventlog import event_log_conf
+
         log_dir = tempfile.mkdtemp(prefix="bench_eventlog_")
-        spark = build_session(
-            "bench",
-            extra_conf={
-                "spark.eventLog.enabled": "true",
-                "spark.eventLog.dir": log_dir,
-                "spark.eventLog.compress": "false",
-                "spark.eventLog.rolling.enabled": "false",
-            },
-        )
+        spark = build_session("bench", extra_conf=event_log_conf(log_dir))
     else:
         spark = build_session("bench")
     # Warm-up: JVM + whole-stage-codegen compilation, one pass of every
@@ -181,20 +175,14 @@ def main() -> int:
 def _print_stage_summaries(spark, log_dir: str, windows) -> None:
     """Per-query job/stage attribution to STDERR (opt-in via
     SPARK_GRAFT_BENCH_EVENTLOG; the stdout contract is untouched)."""
-    import glob as _glob
-
     from biglake_iceberg_python_spark.plans.eventlog import (
-        parse_event_log,
+        stop_and_parse,
         summarize_window,
     )
 
-    spark.stop()  # flush the event log
-    logs = sorted(
-        _glob.glob(os.path.join(log_dir, "*")), key=os.path.getmtime
-    )
-    if not logs:
+    jobs = stop_and_parse(spark, log_dir)
+    if not jobs:
         return
-    jobs = parse_event_log(logs[-1])
     print("# --- per-query stage attribution (median sample) ---", file=sys.stderr)
     for name, run, t0, t1 in windows:
         s = summarize_window(jobs, t0, t1)

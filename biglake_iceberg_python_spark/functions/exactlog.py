@@ -28,7 +28,7 @@ from __future__ import annotations
 from collections.abc import Iterable
 from decimal import ROUND_HALF_UP, Decimal, localcontext
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # 40 significant digits: a correctly-rounded ln at this precision sits
@@ -89,8 +89,9 @@ def micro_nat_values_sql(args: Iterable[int]) -> str:
 
 # Above this many distinct keys, a literal create_map would inline 2×N
 # literal expressions into one projection — past Catalyst codegen limits
-# long before the broadcast-join alternative feels any strain. Callers
-# switch to a broadcast-joined literal DataFrame at this size.
+# long before the broadcast-join alternative feels any strain.
+# :func:`with_micro_nat_shift` switches to a broadcast-joined literal
+# DataFrame at this size.
 MAP_LITERAL_MAX = 10_000
 
 
@@ -112,10 +113,9 @@ def micro_nat_shift_pairs(
 
 def micro_nat_shift_lookup(pairs: list[tuple[int, int]], key: Column) -> Column:
     """Literal-map lookup ``map[key]`` over :func:`micro_nat_shift_pairs`
-    output — the small-domain fast path (≤ :data:`MAP_LITERAL_MAX`); the
-    caller owns the broadcast-join fallback past that. A key outside the
-    domain yields NULL, which propagates into the hashed output and fails
-    the correctness gate loudly."""
+    output — the small-domain fast path of :func:`with_micro_nat_shift`.
+    A key outside the domain yields NULL, which propagates into the hashed
+    output and fails the correctness gate loudly."""
     # Explicit BIGINT literals: bare int literals would type the map
     # map<int,int>, and a LONG lookup key would then be DOWN-cast to int —
     # an overflow hazard once counts exceed 2^31 at corpus scale. Built as
@@ -129,6 +129,21 @@ def micro_nat_shift_lookup(pairs: list[tuple[int, int]], key: Column) -> Column:
         + ")"
     )
     return m[key]
+
+
+def with_micro_nat_shift(
+    df: DataFrame, pairs: list[tuple[int, int]], key: str, out: str
+) -> DataFrame:
+    """``df`` plus a BIGINT column ``out`` looked up from ``df[key]`` in
+    :func:`micro_nat_shift_pairs` output. Up to :data:`MAP_LITERAL_MAX`
+    pairs it is a literal-map projection (no join, no job); past that the
+    pairs become a broadcast-joined literal table. Every key must be in
+    the domain: a miss is NULL on the map path but drops the row on the
+    join path."""
+    if len(pairs) <= MAP_LITERAL_MAX:
+        return df.withColumn(out, micro_nat_shift_lookup(pairs, F.col(key)))
+    tab = df.sparkSession.createDataFrame(pairs, f"{key} long, {out} long")
+    return df.join(F.broadcast(tab), key)
 
 
 def micro_nat_shift_values_sql(pairs: list[tuple[int, int]]) -> str:

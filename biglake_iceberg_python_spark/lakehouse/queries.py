@@ -24,6 +24,7 @@ from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
 from biglake_iceberg_python_spark.lakehouse.merge import merge_into
 from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
 from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
 
 
@@ -1728,7 +1729,7 @@ def lakehouse_dynamic_partition_overwrite(
         "o_orderkey", "o_orderstatus", "o_orderpriority"
     )
     tname = _uniq("lh_dpo_orders")
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
+    dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
     with tempfile.TemporaryDirectory(prefix="lh_dpo_") as root:
         try:
             (
@@ -1736,16 +1737,16 @@ def lakehouse_dynamic_partition_overwrite(
                 .option("path", os.path.join(root, "t"))
                 .saveAsTable(tname)
             )
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
             batch = o.filter(F.col("o_orderstatus") == "O").withColumn(
                 "o_orderpriority", F.lit("X-REWRITTEN")
             )
             batch.createOrReplaceTempView("lh_dpo_batch")
-            spark.sql(
-                f"INSERT OVERWRITE TABLE {tname} "
-                "SELECT o_orderkey, o_orderpriority, o_orderstatus "
-                "FROM lh_dpo_batch"
-            )
+            with session_conf(spark, dynamic):
+                spark.sql(
+                    f"INSERT OVERWRITE TABLE {tname} "
+                    "SELECT o_orderkey, o_orderpriority, o_orderstatus "
+                    "FROM lh_dpo_batch"
+                )
             out = (
                 spark.table(tname)
                 .groupBy("o_orderstatus")
@@ -1759,7 +1760,6 @@ def lakehouse_dynamic_partition_overwrite(
             )
             return out.localCheckpoint(eager=True)
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
             spark.sql(f"DROP TABLE IF EXISTS {tname}")
 
 

@@ -2089,43 +2089,23 @@ def curate_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     from biglake_iceberg_python_spark.functions.exactlog import (
-        MAP_LITERAL_MAX,
-        micro_nat_shift_lookup,
         micro_nat_shift_pairs,
+        with_micro_nat_shift,
     )
 
     pairs_ct = micro_nat_shift_pairs(head["cts"], 1)
     pairs_cr = micro_nat_shift_pairs(head["crs"], 1)
-    if max(len(pairs_ct), len(pairs_cr)) <= MAP_LITERAL_MAX:
-        # Small-domain fast path (the expected case: Zipf-collapsed count
-        # domains): literal map lookups inside the projection.
-        model = mb.select(
-            "w1",
-            "w2",
-            (
-                micro_nat_shift_lookup(pairs_ct, F.col("ct"))
-                - micro_nat_shift_lookup(pairs_cr, F.col("cr"))
-                + F.lit(const)
-            )
-            .cast("long")
-            .alias("lr_micro"),
-        )
-    else:
-        # Large-domain path (corpus scale): broadcast-joined literal
-        # tables instead of 10k+ literals in one expression tree.
-        lnct_tab = spark.createDataFrame(pairs_ct, "ct long, lct long")
-        lncr_tab = spark.createDataFrame(pairs_cr, "cr long, lcr long")
-        model = (
-            mb.join(F.broadcast(lnct_tab), "ct")
-            .join(F.broadcast(lncr_tab), "cr")
-            .select(
-                "w1",
-                "w2",
-                (F.col("lct") - F.col("lcr") + F.lit(const))
-                .cast("long")
-                .alias("lr_micro"),
-            )
-        )
+    # Zipf-collapsed count domains: literal map lookups inside the
+    # projection at the expected sizes.
+    model = with_micro_nat_shift(
+        with_micro_nat_shift(mb, pairs_ct, "ct", "lct"), pairs_cr, "cr", "lcr"
+    ).select(
+        "w1",
+        "w2",
+        (F.col("lct") - F.col("lcr") + F.lit(const))
+        .cast("long")
+        .alias("lr_micro"),
+    )
     scored = (
         bigs.join(F.broadcast(model), ["w1", "w2"])
         .groupBy("doc_id", "source")

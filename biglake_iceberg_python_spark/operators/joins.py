@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
 from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
 
 
@@ -317,21 +318,8 @@ def _with_bloom_confs(spark: SparkSession, build):
     """Run ``build()`` with the bloom-join conf regime, materialize its
     result eagerly (plans resolve confs at ACTION time, so the confs must
     still be set when the job runs), then restore every conf."""
-    saved = {}
-    for k, v in _BLOOM_CONFS.items():
-        try:
-            saved[k] = spark.conf.get(k)
-        except Exception:
-            saved[k] = None
-        spark.conf.set(k, v)
-    try:
+    with session_conf(spark, _BLOOM_CONFS):
         return build().localCheckpoint(eager=True)
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 @query(

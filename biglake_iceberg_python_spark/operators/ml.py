@@ -963,34 +963,19 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     lognorm = {r["clang"]: micro_nat(r["tok"] + v) for r in cstats}
     # Smoothed-likelihood table as a literal-map PROJECTION over the
-    # checkpointed type table (round 14): cvals is the Zipf-collapsed
-    # distinct-count domain (~100 values at sf0.1), so the exactlog
-    # small-domain fast path applies — ln(c+1) becomes a codegen map
-    # lookup instead of a broadcast build + join (one job and one plan
-    # join fewer; interleaved A/B 1.77s → 1.56s). Every wc.c is in the
-    # domain by construction (cvals = collect_set(c)), so the projection
-    # is row-identical to the former inner join. Past MAP_LITERAL_MAX
-    # (corpus scale), the broadcast-join fallback keeps the expression
-    # tree bounded — same discipline as text_lm_perplexity.
+    # checkpointed type table: cvals is the Zipf-collapsed distinct-count
+    # domain (~100 values at sf0.1), so ln(c+1) is a codegen map lookup
+    # instead of a broadcast build + join (one job and one plan join
+    # fewer). Every wc.c is in the domain by construction
+    # (cvals = collect_set(c)).
     from biglake_iceberg_python_spark.functions.exactlog import (
-        MAP_LITERAL_MAX,
-        micro_nat_shift_lookup,
+        micro_nat_shift_pairs,
+        with_micro_nat_shift,
     )
 
-    pairs = [(c, micro_nat(c + 1)) for c in sorted(cvals)]
-    if len(pairs) <= MAP_LITERAL_MAX:
-        model = wc.select(
-            "clang",
-            "w",
-            micro_nat_shift_lookup(pairs, F.col("c"))
-            .cast("long")
-            .alias("smooth"),
-        )
-    else:
-        lntab = spark.createDataFrame(pairs, "c long, smooth long")
-        model = wc.join(F.broadcast(lntab), "c").select(
-            "clang", "w", "smooth"
-        )
+    model = with_micro_nat_shift(
+        wc, micro_nat_shift_pairs(cvals, 1), "c", "smooth"
+    ).select("clang", "w", "smooth")
     # Per-(doc, class) smoothed-likelihood sums in ONE groupBy(doc_id):
     # exploded test tokens join the type-level model on the word key (each
     # occurrence contributes its class's smooth term once — multiplicity

@@ -497,9 +497,8 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bg"),
     ).select("doc_id", "bg.w1", "bg.w2")
     from biglake_iceberg_python_spark.functions.exactlog import (
-        MAP_LITERAL_MAX,
-        micro_nat_shift_lookup,
         micro_nat_shift_pairs,
+        with_micro_nat_shift,
     )
 
     c12 = (
@@ -542,33 +541,17 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs12 = micro_nat_shift_pairs(by_g[0]["cs"], 1)
         pairs1 = micro_nat_shift_pairs(by_g[1]["cs"], vsz)
         _LM_STATS_CACHE[sf_dir] = (vsz, pairs12, pairs1)
-    joined = c12.join(c1, "w1")
-    if max(len(pairs12), len(pairs1)) <= MAP_LITERAL_MAX:
-        # Small-domain fast path (the expected case: 108 + 29 values at
-        # sf0.1): literal map lookups stay inside the projection — no
-        # extra joins, no broadcast jobs.
-        scored = joined.select(
-            "w1",
-            "w2",
-            (
-                micro_nat_shift_lookup(pairs1, F.col("c1"))
-                - micro_nat_shift_lookup(pairs12, F.col("c12"))
-            )
-            .cast("long")
-            .alias("smicro"),
-        )
-    else:
-        # Large-domain path (corpus scale): the literal tables broadcast-
-        # join instead of inlining 10k+ literals into one expression tree.
-        ln12_tab = spark.createDataFrame(pairs12, "c12 long, l12 long")
-        ln1_tab = spark.createDataFrame(pairs1, "c1 long, l1 long")
-        scored = (
-            joined.join(F.broadcast(ln12_tab), "c12")
-            .join(F.broadcast(ln1_tab), "c1")
-            .select(
-                "w1", "w2", (F.col("l1") - F.col("l12")).alias("smicro")
-            )
-        )
+    # Literal-map lookups inside the projection at the expected domain
+    # sizes (108 + 29 values at sf0.1): no extra joins, no broadcast jobs.
+    joined = with_micro_nat_shift(
+        with_micro_nat_shift(c12.join(c1, "w1"), pairs1, "c1", "l1"),
+        pairs12,
+        "c12",
+        "l12",
+    )
+    scored = joined.select(
+        "w1", "w2", (F.col("l1") - F.col("l12")).cast("long").alias("smicro")
+    )
     return (
         bigs.join(F.broadcast(scored), ["w1", "w2"])
         .groupBy("doc_id")

@@ -2,9 +2,12 @@
 
 Runs a registered Spark query and its DuckDB oracle over the same parquet
 tables, then compares row count, sorted-by-name schema, and an
-order-insensitive value hash. Used by pytest (tests/test_oracle_parity.py)
-and the `python -m biglake_iceberg_python_spark.plans.check` dev CLI, so
-oracle drift is caught before the driver ever sees it.
+order-insensitive value hash. The one runner (:func:`check_query`,
+:func:`run_checks`, :func:`report`) serves pytest
+(tests/test_oracle_parity.py), the `python -m
+biglake_iceberg_python_spark.plans.check` dev CLI, scripts/driver_sim.py
+and scripts/degenerate_parity_sweep.py, so oracle drift is caught before
+the driver ever sees it.
 
 Normalization is intentionally strict (exact value match after string
 canonicalization, no float tolerance): the engine's aggregations are built
@@ -22,7 +25,11 @@ import time
 import duckdb
 from pyspark.sql import DataFrame, SparkSession
 
-from biglake_iceberg_python_spark.plans.registry import load_all, resolve_oracle
+from biglake_iceberg_python_spark.plans.registry import (
+    QuerySpec,
+    load_all,
+    resolve_oracle,
+)
 from biglake_iceberg_python_spark.sources.tables import TABLES
 
 
@@ -95,24 +102,54 @@ def compare(spark_df: DataFrame, con: duckdb.DuckDBPyConnection, sql: str) -> di
     return result
 
 
+def check_query(
+    spark: SparkSession,
+    con: duckdb.DuckDBPyConnection,
+    spec: QuerySpec,
+    sf_dir: str,
+) -> dict:
+    """Run one registered query and check it; raises on error.
+
+    With an oracle, the result must hash-match it (:func:`compare`).
+    Without one (the rows-only tier), every row is collected: ``count()``
+    would let Catalyst prune the output columns, so a column that raises
+    at runtime would pass unseen."""
+    df = spec.fn(spark, sf_dir)
+    sql = resolve_oracle(spec, sf_dir)
+    if sql is None:
+        n = len(df.collect())
+        return {"ok": True, "rows_spark": n, "oracle": "rows-only"}
+    return compare(df, con, sql)
+
+
+def report(results: dict[str, dict]) -> bool:
+    """Print one ``OK  ``/``FAIL`` line per result and the ``N/M ok``
+    summary; True iff every check passed."""
+    n_ok = sum(1 for r in results.values() if r.get("ok"))
+    for name, r in results.items():
+        status = "OK  " if r.get("ok") else "FAIL"
+        extra = ""
+        if not r.get("ok"):
+            extra = " " + str({k: v for k, v in r.items() if k not in ("ok", "sec")})[:400]
+        print(f"{status} {name} ({r.get('sec', '?')}s){extra}", flush=True)
+    print(f"{n_ok}/{len(results)} ok", flush=True)
+    return n_ok == len(results)
+
+
 def run_checks(
     spark: SparkSession, sf_dir: str, names: list[str] | None = None
 ) -> dict[str, dict]:
+    """:func:`check_query` over ``names`` (default: the whole registry);
+    an error is recorded as a failed result so a sweep keeps going."""
     registry = load_all()
-    names = names or list(registry)
+    if names is None:
+        names = list(registry)
     con = duckdb_connect(sf_dir)
     out: dict[str, dict] = {}
     for name in names:
-        spec = registry[name]
         t0 = time.time()
         try:
-            df = spec.fn(spark, sf_dir)
-            sql = resolve_oracle(spec, sf_dir)
-            if sql is None:
-                n = df.count()
-                out[name] = {"ok": n >= 0, "rows_spark": n, "oracle": "rows-only"}
-            else:
-                out[name] = compare(df, con, sql)
+            out[name] = check_query(spark, con, registry[name], sf_dir)
         except Exception as e:  # keep sweeping; report the failure
             out[name] = {"ok": False, "error": f"{type(e).__name__}: {e}"}
         out[name]["sec"] = round(time.time() - t0, 2)
@@ -126,15 +163,7 @@ def main() -> int:
     names = sys.argv[1:] or None
     spark = build_session("oracle-check")
     results = run_checks(spark, sf_dir, names)
-    n_ok = sum(1 for r in results.values() if r.get("ok"))
-    for name, r in results.items():
-        status = "OK  " if r.get("ok") else "FAIL"
-        extra = ""
-        if not r.get("ok"):
-            extra = " " + str({k: v for k, v in r.items() if k not in ("ok", "sec")})[:400]
-        print(f"{status} {name} ({r.get('sec', '?')}s){extra}")
-    print(f"{n_ok}/{len(results)} ok")
-    return 0 if n_ok == len(results) else 1
+    return 0 if report(results) else 1
 
 
 if __name__ == "__main__":

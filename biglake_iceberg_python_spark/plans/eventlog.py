@@ -1,10 +1,12 @@
-"""Spark event-log parsing for per-job/stage attribution (guide §1/§7).
+"""Spark event-log capture and parsing for per-job/stage attribution.
 
-Shared by ``scripts/profile_query.py`` (interactive profiling) and
-``bench.py``'s optional stage-summary stderr block (round-13 verdict #7:
-at sf0.1 the driver's 8-vs-32-core scaling ratios are swamped by fixed
-per-query costs, so "parallelises at scale" needs per-stage task counts
-and max single-task times to be auditable from the artifact).
+Callers: ``scripts/profile_query.py`` (interactive profiling) and
+``bench.py``'s stage-summary stderr block, opt-in through
+``SPARK_GRAFT_BENCH_EVENTLOG`` (at sf0.1 the 8-vs-32-core scaling ratios
+are swamped by fixed per-query costs, so "parallelises at scale" needs
+per-stage task counts and max single-task times to be auditable from the
+artifact). Both build their session with :func:`event_log_conf` and read
+the log back through :func:`stop_and_parse`.
 """
 
 from __future__ import annotations
@@ -12,6 +14,25 @@ from __future__ import annotations
 import glob
 import json
 import os
+
+
+def event_log_conf(log_dir: str) -> dict[str, str]:
+    """Session confs that write one plain (uncompressed, non-rolling)
+    event log into ``log_dir``."""
+    return {
+        "spark.eventLog.enabled": "true",
+        "spark.eventLog.dir": log_dir,
+        "spark.eventLog.compress": "false",
+        "spark.eventLog.rolling.enabled": "false",
+    }
+
+
+def stop_and_parse(spark, log_dir: str) -> list[dict]:
+    """Stop ``spark``, which flushes its event log, and parse the newest
+    log in ``log_dir`` (:func:`parse_event_log`); [] when there is none."""
+    spark.stop()
+    logs = sorted(glob.glob(os.path.join(log_dir, "*")), key=os.path.getmtime)
+    return parse_event_log(logs[-1]) if logs else []
 
 
 def parse_event_log(path: str) -> list[dict]:

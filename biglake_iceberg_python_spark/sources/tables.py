@@ -13,6 +13,7 @@ partitions from the filters. Nothing here collects to the driver.
 
 from __future__ import annotations
 
+import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,18 +43,48 @@ TABLES = (
 _SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
 
 
+# Whether the footer stores ``ts`` as TIMESTAMP(NANOS), per the same key.
+_TS_NANOS_CACHE: dict[tuple[str, int, int], bool] = {}
+
+
+def _file_key(path: str) -> tuple[str, int, int] | None:
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    return (path, st.st_mtime_ns, st.st_size)
+
+
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """Schema of the parquet file or directory at ``path``, inferred once
     per (path, mtime, size): the package's one schema cache."""
-    try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
+    key = _file_key(path)
+    if key is None:
         # Globs / nonexistent paths: let spark.read raise its own error.
         return spark.read.parquet(path).schema
     if key not in _SCHEMA_CACHE:
         _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
     return _SCHEMA_CACHE[key]
+
+
+def ts_is_nanos(path: str) -> bool:
+    """Whether the parquet footer at ``path`` stores ``ts`` as
+    TIMESTAMP(NANOS), read once per (path, mtime, size); a directory is
+    judged by its first data file."""
+    key = _file_key(path)
+    if key is None:
+        return False
+    if key not in _TS_NANOS_CACHE:
+        import pyarrow.parquet as pq
+
+        files = [path]
+        if os.path.isdir(path):
+            files = sorted(
+                glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
+            )
+        t = pq.read_schema(files[0]).field("ts").type if files else None
+        _TS_NANOS_CACHE[key] = getattr(t, "unit", None) == "ns"
+    return _TS_NANOS_CACHE[key]
 
 
 def size_bytes(conf_value: str) -> int:
@@ -104,9 +135,10 @@ def load_table(
     ``events.ts`` has shipped in two encodings across driver rounds:
     TIMESTAMP(NANOS) (which Spark 4 refuses by default — read as a
     nanosecond long via the legacy conf and converted with exact integer
-    division) and plain TIMESTAMP(MICROS) (read natively). The loader
-    checks the footer-inferred dtype and only converts when the column
-    arrives as a bigint, so both generations of testdata work unchanged.
+    division) and plain TIMESTAMP(MICROS) (read natively). The legacy
+    conf is set on the session only when the footer says NANOS, and the
+    loader only converts when the column arrives as a bigint, so both
+    generations of testdata work unchanged.
 
     ``widen=True``: repartition to full core count when the scan's natural
     split count is degenerate (the testdata ships single-row-group files, so
@@ -131,7 +163,8 @@ def load_table(
             df = df.repartition(cores)
         return df
     if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        if ts_is_nanos(path):
+            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
 
         df = spark.read.schema(parquet_schema(spark, path)).parquet(path)

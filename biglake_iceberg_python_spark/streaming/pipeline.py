@@ -28,6 +28,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import parquet_schema, size_bytes
 
 
@@ -260,14 +261,12 @@ def run_stream_to_memory(
     ``input_dir`` for the run (see ``_state_partitions``), so the state
     store gets one partition per advisory-size slice of input; the count
     is fixed at the first checkpoint for the life of the query. The
-    session value is restored afterwards, also when the query fails.
+    session value is restored (or unset) afterwards, also when the query
+    fails.
     """
     spark = sdf.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(_state_partitions(spark, input_dir))
-    )
-    try:
+    n_parts = str(_state_partitions(spark, input_dir))
+    with session_conf(spark, {"spark.sql.shuffle.partitions": n_parts}):
         q = (
             sdf.writeStream.format("memory")
             .queryName(name)
@@ -278,8 +277,6 @@ def run_stream_to_memory(
         )
         q.awaitTermination()
         return q
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
 def run_stream_foreach_batch(

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import oracle_dsum
 from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
 from biglake_iceberg_python_spark.streaming.pipeline import (
     SENTINEL_EVENT_TYPE,
@@ -313,14 +314,13 @@ def stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     input_dir, ckpt = stage_event_chunks(
         spark, sf_dir, n_chunks=4, inject_dup_every=10, flush_sentinel=True
     )
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
+    rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+        "RocksDBStateStoreProvider"
     )
-    try:
+    with session_conf(
+        spark, {"spark.sql.streaming.stateStore.providerClass": rocksdb}
+    ):
         s = read_event_stream(spark, input_dir)
         deduped = s.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
             ["event_id"]
@@ -329,11 +329,6 @@ def stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         LAST_STREAMING_QUERIES["stream_dedup_rocksdb"] = run_stream_to_memory(
             deduped.select("event_id", "event_type"), name, "append", input_dir, ckpt
         )
-    finally:
-        if prev is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, prev)
     return (
         spark.table(name)
         .filter(~F.col("event_type").eqNullSafe(SENTINEL_EVENT_TYPE))

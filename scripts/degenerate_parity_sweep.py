@@ -884,11 +884,8 @@ def main() -> int:
     if "--table" in sys.argv:
         which = sys.argv[sys.argv.index("--table") + 1]
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import (
-        load_all,
-        resolve_oracle,
-    )
+    from biglake_iceberg_python_spark.plans.check import report, run_checks
+    from biglake_iceberg_python_spark.plans.registry import load_all
     from biglake_iceberg_python_spark.session import build_session
 
     # SPARK_GRAFT_SWEEP_ANSI=1 runs the sweep under ANSI mode — the
@@ -929,28 +926,15 @@ def main() -> int:
         d = f"/tmp/sf_degenerate_{table}"
         shutil.rmtree(d, ignore_errors=True)
         craft(d)
-        con = duckdb_connect(d)
         names = sorted(
             n for n, s in reg.items()
             if s.has_oracle() and reads_table(n, s, table)
         )
         print(f"== {table}: {len(names)} oracle-bearing readers ==", flush=True)
-        for name in names:
-            spec = reg[name]
-            total += 1
-            try:
-                sql = resolve_oracle(spec, d)
-                res = compare(spec.fn(spark, d), con, sql)
-                if res["ok"]:
-                    print(f"OK   {name}", flush=True)
-                else:
-                    fails += 1
-                    detail = {k: v for k, v in res.items() if k != "ok"}
-                    print(f"FAIL {name} {detail}", flush=True)
-            except Exception as exc:  # noqa: BLE001 — sweep must finish
-                fails += 1
-                print(f"ERR  {name} {type(exc).__name__}: {str(exc)[:200]}",
-                      flush=True)
+        results = run_checks(spark, d, names)
+        report(results)
+        total += len(results)
+        fails += sum(1 for r in results.values() if not r["ok"])
     print(f"{total - fails}/{total} ok")
     return 1 if fails else 0
 

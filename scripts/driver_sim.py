@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Exact driver simulation: a PLAIN SparkSession (none of our confs) with a
 hostile non-UTC, non-hour-offset timezone, every registered query run at
-sf0.01 and compared to its DuckDB oracle with the driver's compare logic.
+sf0.01 and checked by plans.check's runner (the driver's compare logic).
 
 This is the pre-snapshot gate the round-3 retro established: plans.check
 uses build_session (our confs), so it can mask conf-dependent breakage —
@@ -20,12 +20,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import SparkSession  # noqa: E402
 
 from biglake_iceberg_python_spark.plans.check import (  # noqa: E402
-    compare,
-    duckdb_connect,
-)
-from biglake_iceberg_python_spark.plans.registry import (  # noqa: E402
-    load_all,
-    resolve_oracle,
+    report,
+    run_checks,
 )
 
 
@@ -56,30 +52,8 @@ def main() -> int:
     if mem:
         builder = builder.config("spark.driver.memory", mem)
     spark = builder.getOrCreate()
-    registry = load_all()
-    names = sys.argv[1:] or list(registry)
-    con = duckdb_connect(sf_dir)
-    n_ok = 0
-    for name in names:
-        spec = registry[name]
-        try:
-            df = spec.fn(spark, sf_dir)
-            sql = resolve_oracle(spec, sf_dir)
-            if sql is None:
-                ok = df.count() >= 0
-                detail = "rows-only"
-            else:
-                r = compare(df, con, sql)
-                ok = r["ok"]
-                detail = "" if ok else str(
-                    {k: v for k, v in r.items() if k != "ok"}
-                )[:300]
-        except Exception as e:  # keep sweeping
-            ok, detail = False, f"{type(e).__name__}: {e}"
-        n_ok += ok
-        print(f"{'OK  ' if ok else 'FAIL'} {name} {detail}")
-    print(f"{n_ok}/{len(names)} ok")
-    return 0 if n_ok == len(names) else 1
+    results = run_checks(spark, sf_dir, sys.argv[1:] or None)
+    return 0 if report(results) else 1
 
 
 if __name__ == "__main__":

@@ -1,12 +1,21 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans for the headline queries
-with the scale-relevant properties called out. Run from the repo root:
+"""Dump formatted physical plans. Run from the repo root:
 
     python scripts/dump_plans.py
+        regenerates PLANS.md: the headline queries' plans with the
+        scale-relevant properties called out;
+    python scripts/dump_plans.py NAME... --out DIR [--suffix before]
+        writes DIR/<NAME>_<suffix>.txt, one ``explain('formatted')`` per
+        query (before/after evidence for an optimization). The name
+        ``graph_edges_builder`` dumps the graph edge builder
+        (``operators.graph._edges``) before any checkpoint truncates it.
+
+Data comes from ``$SPARK_GRAFT_SF_DIR`` (default sf0.001).
 """
 
 from __future__ import annotations
 
+import argparse
 import io
 import os
 import sys
@@ -143,13 +152,52 @@ SHOWCASES = {
 }
 
 
+def _plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def dump_files(spark, registry, sf_dir, names, out_dir, suffix) -> None:
+    """One ``<out_dir>/<name>_<suffix>.txt`` per name: a header line, then
+    the plan as ``df.explain('formatted')`` prints it."""
+    os.makedirs(out_dir, exist_ok=True)
+    for name in names:
+        if name == "graph_edges_builder":
+            from biglake_iceberg_python_spark.operators.graph import _edges
+
+            df = _edges(spark, sf_dir)
+            header = (
+                f"# graph _edges(spark, sf_dir) pre-checkpoint — {sf_dir}"
+                f" ({suffix})\n"
+            )
+        else:
+            df = registry[name].fn(spark, sf_dir)
+            header = (
+                f"# {name} — explain('formatted') at {sf_dir} ({suffix})\n"
+            )
+        path = os.path.join(out_dir, f"{name}_{suffix}.txt")
+        with open(path, "w") as f:
+            f.write(header + _plan(df) + "\n")
+        print("wrote", path)
+
+
 def main() -> int:
+    ap = argparse.ArgumentParser()
+    ap.add_argument("names", nargs="*")
+    ap.add_argument("--out", default=".")
+    ap.add_argument("--suffix", default="before")
+    args = ap.parse_args()
+
     from biglake_iceberg_python_spark.plans.registry import load_all
     from biglake_iceberg_python_spark.session import build_session
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     spark = build_session("dump-plans")
     registry = load_all()
+    if args.names:
+        dump_files(spark, registry, sf_dir, args.names, args.out, args.suffix)
+        return 0
 
     out = io.StringIO()
     out.write(
@@ -166,10 +214,7 @@ def main() -> int:
         "(`test_growing_dims_flip_to_shuffle_when_broadcast_disabled`).\n"
     )
     def dump(name: str, commentary: str, title: str | None = None) -> None:
-        df = registry[name].fn(spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+        plan = _plan(registry[name].fn(spark, sf_dir))
         out.write(
             f"\n## {title or name}\n\n{commentary}\n\n```\n{plan}\n```\n"
         )

@@ -15,7 +15,6 @@ harness, not part of the driver contract.
 from __future__ import annotations
 
 import argparse
-import glob
 import os
 import sys
 import tempfile
@@ -25,7 +24,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 from biglake_iceberg_python_spark.plans.eventlog import (
-    parse_event_log,
+    event_log_conf,
+    stop_and_parse,
     summarize_window,
 )
 
@@ -44,15 +44,7 @@ def main() -> int:
 
     registry = load_all()
     log_dir = tempfile.mkdtemp(prefix="spark_eventlog_")
-    spark = build_session(
-        "profile",
-        extra_conf={
-            "spark.eventLog.enabled": "true",
-            "spark.eventLog.dir": log_dir,
-            "spark.eventLog.compress": "false",
-            "spark.eventLog.rolling.enabled": "false",
-        },
-    )
+    spark = build_session("profile", extra_conf=event_log_conf(log_dir))
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warm_dir = "/root/testdata/sf0.001"
     for name in args.names:
@@ -73,9 +65,7 @@ def main() -> int:
             print(f"## {name} run {r}: {t1 - t0:.3f}s ({n} rows)")
         spark.sparkContext.setJobDescription(None)
 
-    spark.stop()  # flush the event log
-    logs = sorted(glob.glob(os.path.join(log_dir, "*")), key=os.path.getmtime)
-    jobs = parse_event_log(logs[-1])
+    jobs = stop_and_parse(spark, log_dir)
 
     for name, r, t0, t1 in marks:
         s = summarize_window(jobs, t0, t1)

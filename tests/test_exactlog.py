@@ -144,3 +144,23 @@ def test_micro_nat_shift_helpers(spark):
     ).fetchall()
     con.close()
     assert [(int(a), int(b)) for a, b in rows] == pairs
+
+
+@pytest.mark.parametrize(
+    "name", ["ml_naive_bayes_langid", "text_lm_perplexity", "curate_dsir_select"]
+)
+def test_broadcast_lookup_path_matches_oracle(spark, sf_dir, monkeypatch, name):
+    """Past MAP_LITERAL_MAX, with_micro_nat_shift broadcast-joins a literal
+    table instead of a literal map; forcing that path (limit 0, map lookup
+    disabled) keeps every consumer on its oracle."""
+    from biglake_iceberg_python_spark.functions import exactlog
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
+    from biglake_iceberg_python_spark.plans.registry import load_all
+
+    def no_map(*_args):
+        raise AssertionError("literal-map path taken")
+
+    monkeypatch.setattr(exactlog, "MAP_LITERAL_MAX", 0)
+    monkeypatch.setattr(exactlog, "micro_nat_shift_lookup", no_map)
+    result = check_query(spark, duckdb_connect(sf_dir), load_all()[name], sf_dir)
+    assert result["ok"], result

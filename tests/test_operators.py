@@ -1993,10 +1993,10 @@ def test_vector_family_tolerates_degenerate_embeddings(spark, sf_dir, tmp_path):
     # mismatched pairs (silently dropped) while DuckDB's list_dot_product
     # raises on length mismatch. Both engines now exclude wrong-dim rows
     # up front; the parity compare proves it end-to-end on this corpus.
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     spec = REGISTRY["dedup_embedding_cosine"]
-    result = compare(spec.fn(spark, d), duckdb_connect(d), spec.oracle)
+    result = check_query(spark, duckdb_connect(d), spec, d)
     assert result["ok"], {k: v for k, v in result.items() if k != "ok"}
 
 
@@ -2018,8 +2018,7 @@ def test_degenerate_parity_round10_regressions(spark, sf_dir, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     d = str(tmp_path / "sf_degenerate_both")
     os.makedirs(d)
@@ -2114,7 +2113,7 @@ def test_degenerate_parity_round10_regressions(spark, sf_dir, tmp_path):
     ]
     for q in names:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
@@ -2138,8 +2137,7 @@ def test_empty_table_parity_regressions(spark, sf_dir, tmp_path):
 
     import pyarrow.parquet as pq
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     d = str(tmp_path / "sf_empty_tables")
     os.makedirs(d)
@@ -2169,7 +2167,7 @@ def test_empty_table_parity_regressions(spark, sf_dir, tmp_path):
     ]
     for q in names:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
@@ -2306,8 +2304,7 @@ def test_unicode_text_parity_regressions(spark, sf_dir, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     import sys
 
@@ -2338,7 +2335,7 @@ def test_unicode_text_parity_regressions(spark, sf_dir, tmp_path):
         "scalar_binary_encoding", "source_binaryfile_digest",
     ]:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
@@ -2358,8 +2355,7 @@ def test_magnitude_parity_round11_regressions(spark, sf_dir, tmp_path):
     import os
     import sys
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo_root, "scripts"))
@@ -2373,7 +2369,7 @@ def test_magnitude_parity_round11_regressions(spark, sf_dir, tmp_path):
         "events_ab_welch_ttest",
     ]:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
@@ -2406,8 +2402,7 @@ def test_epoch_parity_round12_regressions(spark, sf_dir, tmp_path):
     import os
     import sys
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo_root, "scripts"))
@@ -2421,7 +2416,7 @@ def test_epoch_parity_round12_regressions(spark, sf_dir, tmp_path):
         "events_heatmap_hour_dow", "window_range_frame",
     ]:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
     # The M4 ord-key widening needs a WIDE time range, not a straddle:
@@ -2449,7 +2444,7 @@ def test_epoch_parity_round12_regressions(spark, sf_dir, tmp_path):
     pq.write_table(pa.table(cols), f"{d2}/events.parquet")
     con2 = duckdb_connect(d2)
     spec = REGISTRY["ts_downsample_m4"]
-    result = compare(spec.fn(spark, d2), con2, resolve_oracle(spec, d2))
+    result = check_query(spark, con2, spec, d2)
     assert result["ok"], {k: v for k, v in result.items() if k != "ok"}
 
 
@@ -2482,8 +2477,7 @@ def test_warehouse_parity_round12_regressions(spark, tmp_path):
     import os
     import sys
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo_root, "scripts"))
@@ -2498,7 +2492,7 @@ def test_warehouse_parity_round12_regressions(spark, tmp_path):
         "source_csv_malformed_permissive",
     ]:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
@@ -2518,8 +2512,7 @@ def test_dims_parity_round12_regressions(spark, tmp_path):
     import os
     import sys
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo_root, "scripts"))
@@ -2534,7 +2527,7 @@ def test_dims_parity_round12_regressions(spark, tmp_path):
         "lakehouse_second_engine_read",
     ]:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
@@ -2557,8 +2550,7 @@ def test_all_null_measure_group_round13_advice(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     d = str(tmp_path / "sf_allnull_group")
     os.makedirs(d)
@@ -2600,7 +2592,7 @@ def test_all_null_measure_group_round13_advice(spark, tmp_path):
     con = duckdb_connect(d)
     for q in ["udf_pandas_grouped_agg", "lakehouse_incremental_matview"]:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
     shutil.rmtree(d, ignore_errors=True)
 
@@ -2619,8 +2611,7 @@ def test_singular_parity_round13_regressions(spark, tmp_path):
     import os
     import sys
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo_root, "scripts"))
@@ -2634,7 +2625,7 @@ def test_singular_parity_round13_regressions(spark, tmp_path):
     try:
         for q in ["events_ab_welch_ttest", "events_anova_hour_of_week"]:
             spec = REGISTRY[q]
-            result = compare(spec.fn(spark, d), con, resolve_oracle(spec, d))
+            result = check_query(spark, con, spec, d)
             assert result["ok"], (
                 q, {k: v for k, v in result.items() if k != "ok"},
             )
@@ -2660,8 +2651,7 @@ def test_monodoc_flatline_parity_round13_regressions(spark, tmp_path):
     import os
     import sys
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, os.path.join(repo_root, "scripts"))
@@ -2674,7 +2664,7 @@ def test_monodoc_flatline_parity_round13_regressions(spark, tmp_path):
         craft_monodoc(d1)
         con1 = duckdb_connect(d1)
         spec = REGISTRY["text_zipf_fit"]
-        result = compare(spec.fn(spark, d1), con1, resolve_oracle(spec, d1))
+        result = check_query(spark, con1, spec, d1)
         assert result["ok"], (
             "text_zipf_fit",
             {k: v for k, v in result.items() if k != "ok"},
@@ -2687,7 +2677,7 @@ def test_monodoc_flatline_parity_round13_regressions(spark, tmp_path):
             "agg_corr_covar", "agg_skew_kurtosis", "ml_linreg_normal_eq",
         ]:
             spec = REGISTRY[q]
-            result = compare(spec.fn(spark, d2), con2, resolve_oracle(spec, d2))
+            result = check_query(spark, con2, spec, d2)
             assert result["ok"], (
                 q, {k: v for k, v in result.items() if k != "ok"},
             )
@@ -2804,7 +2794,7 @@ def test_array_to_string_family_null_text_parity(spark, sf_dir, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     d = str(tmp_path / "sf_null_text")
     os.makedirs(d)
@@ -2836,7 +2826,7 @@ def test_array_to_string_family_null_text_parity(spark, sf_dir, tmp_path):
     assert len(family) >= 13  # the round-10 inventory; growth is fine
     for q in family:
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, spec.oracle)
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
@@ -2851,7 +2841,7 @@ def test_bpe_trainer_mid_chain_empty_round_matches_oracle(spark, sf_dir, tmp_pat
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     d = str(tmp_path / "sf_bpe_dry")
     os.makedirs(d)
@@ -2871,7 +2861,7 @@ def test_bpe_trainer_mid_chain_empty_round_matches_oracle(spark, sf_dir, tmp_pat
     con = duckdb_connect(d)
     for q in ("text_bpe_train_merges", "text_bpe_encode"):
         spec = REGISTRY[q]
-        result = compare(spec.fn(spark, d), con, spec.oracle)
+        result = check_query(spark, con, spec, d)
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
     merges = REGISTRY["text_bpe_train_merges"].fn(spark, d).collect()
     assert len(merges) == 1  # exactly the a+b merge, then the chain dries

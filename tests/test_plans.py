@@ -1145,15 +1145,14 @@ def test_kcore_halts_at_the_fixpoint(spark, tmp_path, monkeypatch, corpus):
     four unrolled rounds — on a graph that converges to a non-empty core,
     one still shrinking at round 4 (no halt may fire), and one that
     empties at round 1."""
-    from biglake_iceberg_python_spark.plans.check import compare, duckdb_connect
-    from biglake_iceberg_python_spark.plans.registry import resolve_oracle
+    from biglake_iceberg_python_spark.plans.check import check_query, duckdb_connect
 
     orders, rounds_run = _KCORE_HALT_CORPORA[corpus]
     d = _lineitem_corpus(tmp_path / corpus, orders)
     rows, built = _kcore_peel_rounds(spark, d, monkeypatch)
     assert len(built) == rounds_run
     spec = REGISTRY["graph_kcore"]
-    result = compare(spec.fn(spark, d), duckdb_connect(d), resolve_oracle(spec, d))
+    result = check_query(spark, duckdb_connect(d), spec, d)
     assert result["ok"], result
     n_edges = [r[3] for r in rows]
     if corpus == "fixed_core":

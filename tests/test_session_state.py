@@ -1,0 +1,85 @@
+"""Library code must leave the caller's session conf as it found it: the
+same keys set, to the same values, and the same keys unset."""
+
+from __future__ import annotations
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+
+from biglake_iceberg_python_spark.plans.registry import load_all
+from biglake_iceberg_python_spark.session import session_conf
+from biglake_iceberg_python_spark.sources.tables import TABLES, load_table
+
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+@pytest.fixture
+def plain(spark):
+    """A session with its own conf on the shared SparkContext; the
+    shuffle-partition count is left unset, as in a session nobody tuned."""
+    s = spark.newSession()
+    s.conf.unset("spark.sql.shuffle.partitions")
+    return s
+
+
+def test_session_conf_restores_and_unsets(plain):
+    plain.conf.set("spark.sql.shuffle.partitions", "5")
+    before = plain.conf.getAll
+    with pytest.raises(RuntimeError):
+        with session_conf(
+            plain,
+            {
+                "spark.sql.shuffle.partitions": "3",
+                "spark.sql.sources.partitionOverwriteMode": "dynamic",
+            },
+        ):
+            assert plain.conf.get("spark.sql.shuffle.partitions") == "3"
+            raise RuntimeError("block failed")
+    assert plain.conf.getAll == before
+    assert plain.conf.get("spark.sql.sources.partitionOverwriteMode", None) is None
+
+
+def test_load_table_leaves_nanos_conf_alone(plain, sf_dir):
+    """The testdata stores events.ts as TIMESTAMP(MICROS), so loading every
+    table must not set the legacy nanos conf."""
+    before = plain.conf.getAll
+    for t in TABLES:
+        load_table(plain, sf_dir, t).limit(1).collect()
+    assert plain.conf.get(_NANOS_CONF, None) is None
+    assert plain.conf.getAll == before
+
+
+def test_load_table_reads_nanos_events(plain, sf_dir, tmp_path):
+    """A TIMESTAMP(NANOS) events file still loads to the same NTZ values
+    (the legacy conf is set for it, and only for it)."""
+    tbl = pq.read_table(f"{sf_dir}/events.parquet")
+    i = tbl.schema.get_field_index("ts")
+    nanos = tbl.set_column(i, "ts", tbl["ts"].cast(pa.timestamp("ns")))
+    pq.write_table(nanos, tmp_path / "events.parquet", version="2.6")
+    assert "nanoseconds" in str(
+        pq.read_metadata(tmp_path / "events.parquet").schema.column(i).logical_type
+    )
+
+    got = load_table(plain, str(tmp_path), "events")
+    want = load_table(plain, sf_dir, "events")
+    assert dict(got.dtypes)["ts"] == "timestamp_ntz"
+    assert sorted(got.select("event_id", "ts").collect()) == sorted(
+        want.select("event_id", "ts").collect()
+    )
+    assert plain.conf.get(_NANOS_CONF) == "true"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "stream_dedup_rocksdb",
+        "stream_tumbling_window",
+        "join_runtime_bloom_filter",
+        "lakehouse_dynamic_partition_overwrite",
+    ],
+)
+def test_conf_scoped_queries_leave_session_conf(plain, sf_dir, name):
+    before = plain.conf.getAll
+    load_all()[name].fn(plain, sf_dir).collect()
+    assert plain.conf.getAll == before
