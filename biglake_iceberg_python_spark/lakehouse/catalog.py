@@ -116,10 +116,12 @@ class LakehouseCatalog:
         view = f"temp_view_ingest_{uuid.uuid4().hex[:8]}"
         df.createOrReplaceTempView(view)
         collist = ", ".join(columns)
-        self.spark.sql(
-            f"INSERT INTO {self._fqn(db, table)} ({collist}) SELECT * FROM {view}"
-        )
-        self.spark.catalog.dropTempView(view)
+        try:
+            self.spark.sql(
+                f"INSERT INTO {self._fqn(db, table)} ({collist}) SELECT * FROM {view}"
+            )
+        finally:
+            self.spark.catalog.dropTempView(view)
 
     def insert_overwrite(self, db: str, table: str, select_sql: str) -> None:
         self.spark.sql(

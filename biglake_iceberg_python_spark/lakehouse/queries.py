@@ -43,18 +43,19 @@ def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     INSERT INTO ... SELECT * → read back. Oracle = the source parquet: a
     lossless lifecycle hash-matches it."""
     db = _uniq("lh_rt")
-    df = run_reference_pipeline(
-        spark,
-        source_parquet=f"{sf_dir}/region.parquet",
-        db=db,
-        table="region_managed",
-        schema_ddl="r_regionkey INT, r_name STRING",
-        columns=["r_regionkey", "r_name"],
-    )
-    out = df.select("r_regionkey", "r_name")
-    out = out.localCheckpoint(eager=True)  # materialize before cleanup
-    LakehouseCatalog(spark).drop_namespace(db)
-    return out
+    try:
+        df = run_reference_pipeline(
+            spark,
+            source_parquet=f"{sf_dir}/region.parquet",
+            db=db,
+            table="region_managed",
+            schema_ddl="r_regionkey INT, r_name STRING",
+            columns=["r_regionkey", "r_name"],
+        )
+        out = df.select("r_regionkey", "r_name")
+        return out.localCheckpoint(eager=True)  # materialize before cleanup
+    finally:
+        LakehouseCatalog(spark).drop_namespace(db)
 
 
 @query(
@@ -72,33 +73,35 @@ def lakehouse_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the overwrite set."""
     db = _uniq("lh_ow")
     cat = LakehouseCatalog(spark)
-    cat.create_namespace(db)
-    cat.create_table(
-        db,
-        "orders_managed",
-        "o_orderkey BIGINT, o_orderstatus STRING, o_orderpriority STRING",
-    )
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("lh_ow_src")
-    spark.sql(
-        f"INSERT INTO spark_catalog.{db}.orders_managed "
-        "SELECT o_orderkey, o_orderstatus, o_orderpriority FROM lh_ow_src "
-        "WHERE o_orderstatus = 'F'"
-    )
-    cat.insert_overwrite(
-        db,
-        "orders_managed",
-        "SELECT o_orderkey, o_orderstatus, o_orderpriority FROM lh_ow_src "
-        "WHERE o_orderstatus = 'O'",
-    )
-    out = (
-        cat.table(db, "orders_managed")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    out = out.localCheckpoint(eager=True)
-    cat.drop_namespace(db)
-    return out
+    try:
+        cat.create_namespace(db)
+        cat.create_table(
+            db,
+            "orders_managed",
+            "o_orderkey BIGINT, o_orderstatus STRING, o_orderpriority STRING",
+        )
+        o = load_table(spark, sf_dir, "orders")
+        o.createOrReplaceTempView("lh_ow_src")
+        spark.sql(
+            f"INSERT INTO spark_catalog.{db}.orders_managed "
+            "SELECT o_orderkey, o_orderstatus, o_orderpriority FROM lh_ow_src "
+            "WHERE o_orderstatus = 'F'"
+        )
+        cat.insert_overwrite(
+            db,
+            "orders_managed",
+            "SELECT o_orderkey, o_orderstatus, o_orderpriority FROM lh_ow_src "
+            "WHERE o_orderstatus = 'O'",
+        )
+        out = (
+            cat.table(db, "orders_managed")
+            .groupBy("o_orderpriority")
+            .agg(F.count(F.lit(1)).alias("n"))
+        )
+        return out.localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView("lh_ow_src")
+        cat.drop_namespace(db)
 
 
 @query(
@@ -302,15 +305,18 @@ def lakehouse_tblproperties(spark: SparkSession, sf_dir: str) -> DataFrame:
     TBLPROPERTIES then read back via SHOW TBLPROPERTIES."""
     db = _uniq("lh_props")
     cat = LakehouseCatalog(spark)
-    cat.create_namespace(db)
-    cat.create_table(db, "tagged", "id INT", properties={"has_pii": "false"})
-    cat.set_properties(db, "tagged", {"steward": "data-eng", "retention_days": "90"})
-    props = cat.get_properties(db, "tagged").filter(
-        F.col("key").isin("has_pii", "steward", "retention_days")
-    )
-    out = props.localCheckpoint(eager=True)
-    cat.drop_namespace(db)
-    return out
+    try:
+        cat.create_namespace(db)
+        cat.create_table(db, "tagged", "id INT", properties={"has_pii": "false"})
+        cat.set_properties(
+            db, "tagged", {"steward": "data-eng", "retention_days": "90"}
+        )
+        props = cat.get_properties(db, "tagged").filter(
+            F.col("key").isin("has_pii", "steward", "retention_days")
+        )
+        return props.localCheckpoint(eager=True)
+    finally:
+        cat.drop_namespace(db)
 
 
 @query(
@@ -330,25 +336,28 @@ def lakehouse_catalog_introspection(spark: SparkSession, sf_dir: str) -> DataFra
     result pins to a constant oracle instead of a rows-only check."""
     db = _uniq("lh_intro")
     cat = LakehouseCatalog(spark)
-    cat.create_namespace(db)
-    cat.create_table(db, "t1", "id INT")
-    cat.create_table(db, "t2", "id INT")
-    has_spark_catalog = (
-        cat.list_catalogs().filter(F.col("catalog") == "spark_catalog").count()
-    )
-    n_namespaces = cat.list_namespaces().filter(F.col("namespace") == db).count()
-    # SHOW TABLES also lists the SESSION's temp views (isTemporary,
-    # namespace '') — count only the namespace's real tables, or a shared
-    # session (pytest) breaks determinism.
-    n_tables = cat.list_tables(db).filter(~F.col("isTemporary")).count()
-    out = spark.range(1).select(
-        F.lit(has_spark_catalog).cast("long").alias("has_spark_catalog"),
-        F.lit(n_namespaces).cast("long").alias("n_namespaces_matched"),
-        F.lit(n_tables).cast("long").alias("n_tables"),
-    )
-    out = out.localCheckpoint(eager=True)
-    cat.drop_namespace(db)
-    return out
+    try:
+        cat.create_namespace(db)
+        cat.create_table(db, "t1", "id INT")
+        cat.create_table(db, "t2", "id INT")
+        has_spark_catalog = (
+            cat.list_catalogs().filter(F.col("catalog") == "spark_catalog").count()
+        )
+        n_namespaces = (
+            cat.list_namespaces().filter(F.col("namespace") == db).count()
+        )
+        # SHOW TABLES also lists the SESSION's temp views (isTemporary,
+        # namespace '') — count only the namespace's real tables, or a
+        # shared session (pytest) breaks determinism.
+        n_tables = cat.list_tables(db).filter(~F.col("isTemporary")).count()
+        out = spark.range(1).select(
+            F.lit(has_spark_catalog).cast("long").alias("has_spark_catalog"),
+            F.lit(n_namespaces).cast("long").alias("n_namespaces_matched"),
+            F.lit(n_tables).cast("long").alias("n_tables"),
+        )
+        return out.localCheckpoint(eager=True)
+    finally:
+        cat.drop_namespace(db)
 
 
 @query(
@@ -373,9 +382,8 @@ def lakehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     db = _uniq("lh_bkt")
     cat = LakehouseCatalog(spark)
-    cat.create_namespace(db)
-    spark.sql(f"USE {db}")
     try:
+        cat.create_namespace(db)
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority"
         )
@@ -402,7 +410,6 @@ def lakehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out.localCheckpoint(eager=True)
     finally:
-        spark.sql("USE default")
         cat.drop_namespace(db)
 
 
@@ -480,41 +487,43 @@ def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     db = _uniq("lh_ev")
     cat = LakehouseCatalog(spark)
-    cat.create_namespace(db)
-    cat.create_table(
-        db, "orders_evolving", "o_orderkey BIGINT, o_totalprice DOUBLE"
-    )
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("lh_ev_src")
-    spark.sql(
-        f"INSERT INTO spark_catalog.{db}.orders_evolving "
-        "SELECT o_orderkey, o_totalprice FROM lh_ev_src "
-        "WHERE o_orderstatus = 'F'"
-    )
-    spark.sql(
-        f"ALTER TABLE spark_catalog.{db}.orders_evolving "
-        "ADD COLUMNS (o_channel STRING)"
-    )
-    spark.sql(
-        f"INSERT INTO spark_catalog.{db}.orders_evolving "
-        "SELECT o_orderkey, o_totalprice, 'web' AS o_channel FROM lh_ev_src "
-        "WHERE o_orderstatus = 'O'"
-    )
-    out = (
-        cat.table(db, "orders_evolving")
-        .groupBy(
-            F.coalesce(F.col("o_channel"), F.lit("unknown")).alias("channel")
+    try:
+        cat.create_namespace(db)
+        cat.create_table(
+            db, "orders_evolving", "o_orderkey BIGINT, o_totalprice DOUBLE"
         )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
+        o = load_table(spark, sf_dir, "orders")
+        o.createOrReplaceTempView("lh_ev_src")
+        spark.sql(
+            f"INSERT INTO spark_catalog.{db}.orders_evolving "
+            "SELECT o_orderkey, o_totalprice FROM lh_ev_src "
+            "WHERE o_orderstatus = 'F'"
         )
-    )
-    out = out.localCheckpoint(eager=True)
-    cat.drop_namespace(db)
-    return out
+        spark.sql(
+            f"ALTER TABLE spark_catalog.{db}.orders_evolving "
+            "ADD COLUMNS (o_channel STRING)"
+        )
+        spark.sql(
+            f"INSERT INTO spark_catalog.{db}.orders_evolving "
+            "SELECT o_orderkey, o_totalprice, 'web' AS o_channel FROM lh_ev_src "
+            "WHERE o_orderstatus = 'O'"
+        )
+        out = (
+            cat.table(db, "orders_evolving")
+            .groupBy(
+                F.coalesce(F.col("o_channel"), F.lit("unknown")).alias("channel")
+            )
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+                .cast("double")
+                .alias("sum_price"),
+            )
+        )
+        return out.localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView("lh_ev_src")
+        cat.drop_namespace(db)
 
 
 @query(
@@ -1760,6 +1769,7 @@ def lakehouse_dynamic_partition_overwrite(
             )
             return out.localCheckpoint(eager=True)
         finally:
+            spark.catalog.dropTempView("lh_dpo_batch")
             spark.sql(f"DROP TABLE IF EXISTS {tname}")
 
 

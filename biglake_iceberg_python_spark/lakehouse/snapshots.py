@@ -4,10 +4,16 @@ portable analog of the Iceberg metadata surface the reference exercises
 README.md:539-552 — SURVEY.md A12).
 
 Model (mirrors Iceberg's copy-on-write at directory granularity):
-  * every commit writes data files under ``data/commit-<uuid>/`` and
-    appends an entry to ``_metadata/metadata_log.json`` via compare-and-swap
-    (optimistic concurrency — conflicting appends rebase, conflicting
-    rewrites raise :class:`CommitConflictError`)
+  * every commit writes data files under ``data/commit-<uuid>/``, then
+    goes through ONE routine (:meth:`SnapshotTable._commit`): read the log
+    and refs once, resolve the parent head of the target ref (explicit
+    branch, else ``main`` once refs exist, else the log tail), validate
+    ``expected_version``, build the entry from a per-operation callback,
+    compare-and-swap it onto ``_metadata/metadata_log.json``
+    (:meth:`SnapshotTable._swap_log`, which expiry uses too), then advance
+    the ref. Only a plain append (no ``expected_version``) rebases and
+    retries on conflict — appends commute; every other operation raises
+    :class:`CommitConflictError`
   * a snapshot's manifest is the list of data dirs it comprises:
     append  → parent dirs + new dir
     overwrite → [new dir]
@@ -81,9 +87,102 @@ class SnapshotTable:
         self.refs_path = os.path.join(root, "_metadata", "refs.json")
         os.makedirs(os.path.dirname(self.meta_path), exist_ok=True)
         if not os.path.exists(self.meta_path):
-            self._write_log([])
+            _write_json(self.meta_path, [])
 
     # -- commit protocol --
+
+    def _commit(
+        self,
+        operation: str,
+        build,
+        branch: str | None = None,
+        expected_version: int | None = None,
+        parent_id: int | None = None,
+    ) -> int:
+        """The one commit path; returns the new snapshot id.
+
+        Reads the log and refs once and resolves the parent head of the
+        target ref: the explicit ``branch``, else ``main`` once any ref
+        exists, else the log tail (``parent_id`` names another parent —
+        rollback's target). Validates ``expected_version`` against that
+        head, assigns the next snapshot id, builds the entry as
+        ``{snapshot_id, operation, **build(head, snapshot_id)}``,
+        compare-and-swaps it onto the log (:meth:`_swap_log`) and advances
+        the ref. On conflict only a plain append (no ``expected_version``)
+        rebases against the fresh parent and retries — concurrent appends
+        commute (Iceberg's fast-append path); anything else raises, because
+        its entry was derived from a base another writer has replaced.
+
+        An EXPLICIT branch must exist even before any ref does —
+        ``write(branch='typo')`` on a fresh table is an error, not a silent
+        main-line commit; 'main' is the one implicit ref (Iceberg: main
+        always exists). Tags are immutable, so committing to one raises.
+        """
+        for _ in range(self._MAX_COMMIT_RETRIES):
+            log = self._read_log()
+            refs = self._read_refs()
+            ref = (branch or "main") if refs else None
+            if ref is None and branch not in (None, "main"):
+                raise ValueError(f"unknown ref {branch!r}")
+            if ref is not None:
+                if ref not in refs:
+                    raise ValueError(f"unknown ref {ref!r}")
+                if refs[ref]["type"] != "branch":
+                    raise ValueError(
+                        f"cannot write to tag {ref!r}: tags are immutable"
+                    )
+                head_id = refs[ref]["snapshot_id"]
+            else:
+                head_id = log[-1]["snapshot_id"] if log else 0
+            if expected_version is not None and head_id != expected_version:
+                raise CommitConflictError(
+                    f"table moved past expected snapshot {expected_version}"
+                )
+            head = _entry(log, head_id if parent_id is None else parent_id)
+            snap_id = (log[-1]["snapshot_id"] + 1) if log else 1
+            entry = {
+                "snapshot_id": snap_id,
+                "operation": operation,
+                **build(head, snap_id),
+            }
+            if ref is not None:
+                entry["branch"] = ref
+            try:
+                self._swap_log(log, log + [entry])
+            except CommitConflictError:
+                if operation != "append" or expected_version is not None:
+                    raise
+                continue  # rebase the append against the fresh parent
+            if ref is not None:
+                refs[ref] = {"type": "branch", "snapshot_id": snap_id}
+                _write_json(self.refs_path, refs)
+            return snap_id
+        raise CommitConflictError(
+            f"gave up after {self._MAX_COMMIT_RETRIES} rebase attempts"
+        )
+
+    def _swap_log(self, expected_log: list[dict], log: list[dict]) -> None:
+        """Compare-and-swap: replace the on-disk log with ``log`` only if it
+        still matches ``expected_log``. Single-process emulation of the
+        atomic metadata-pointer swap a real catalog (BLMS in the reference,
+        README.md:543-548) provides; the swap itself is ``os.replace``."""
+        current = self._read_log()
+        if [e["snapshot_id"] for e in current] != [
+            e["snapshot_id"] for e in expected_log
+        ]:
+            raise CommitConflictError(
+                "concurrent commit: log advanced during this operation"
+            )
+        _write_json(self.meta_path, log)
+
+    def _carry(self, src: dict) -> dict:
+        """What a commit inherits from ``src``: per-dir sequence numbers (a
+        copy the caller may extend), the table schema, and any
+        equality-delete files."""
+        out = {"dir_seq": dict(self._dir_seq(src)), "schema": src.get("schema")}
+        if src.get("deletes"):
+            out["deletes"] = src["deletes"]
+        return out
 
     def write(
         self,
@@ -95,12 +194,9 @@ class SnapshotTable:
         """Commit a new snapshot; returns its snapshot id.
 
         The data write is a normal distributed parquet write and happens
-        ONCE; the commit is optimistic: read the log, build the entry
-        against that parent, and compare-and-swap (:meth:`_commit`). On
-        conflict an append rebases against the new parent and retries
-        (concurrent appends commute — Iceberg's fast-append path); an
-        overwrite raises, because its rewritten data was derived from a
-        base another writer has since replaced.
+        ONCE; the commit is optimistic (:meth:`_commit`): on conflict an
+        append rebases against the new parent and retries, an overwrite
+        raises.
 
         ``expected_version`` adds Iceberg-style validation for
         read-modify-write callers (delete/update/merge): the commit fails
@@ -120,83 +216,32 @@ class SnapshotTable:
         )
         df.write.mode("errorifexists").parquet(data_dir)
         stats, n_rows, schema = self._read_footers(data_dir)
-        for _ in range(self._MAX_COMMIT_RETRIES):
-            log = self._read_log()
-            refs = self._read_refs()
-            # An EXPLICIT branch must exist even before any ref does —
-            # write(branch='typo') on a fresh table is an error, not a
-            # silent main-line commit. 'main' is the one implicit ref
-            # (Iceberg: main always exists).
-            if branch is not None and not refs and branch != "main":
-                raise ValueError(f"unknown ref {branch!r}")
-            use_branch = branch or ("main" if refs else None)
-            if use_branch is not None and refs:
-                if use_branch not in refs:
-                    raise ValueError(f"unknown ref {use_branch!r}")
-                if refs[use_branch]["type"] != "branch":
-                    raise ValueError(
-                        f"cannot write to tag {use_branch!r}: tags are "
-                        "immutable"
-                    )
-                head_id = refs[use_branch]["snapshot_id"]
-                head = next(
-                    (e for e in log if e["snapshot_id"] == head_id), None
-                )
-            else:
-                head = log[-1] if log else None
-                head_id = head["snapshot_id"] if head else 0
-            if expected_version is not None and head_id != expected_version:
-                raise CommitConflictError(
-                    f"table moved past expected snapshot {expected_version}"
-                )
-            snap_id = (log[-1]["snapshot_id"] + 1) if log else 1
-            parent_dirs = (
-                head["data_dirs"] if (head and mode == "append") else []
-            )
-            entry = {
-                "snapshot_id": snap_id,
-                "operation": mode,
-                "data_dirs": parent_dirs + [data_dir],
-                "added_dir": data_dir,
-            }
-            if head and mode == "append":
-                entry["dir_seq"] = {
-                    **self._dir_seq(head),
-                    data_dir: snap_id,
+
+        def build(head: dict | None, snap_id: int) -> dict:
+            if head is None or mode == "overwrite":
+                fields = {
+                    "data_dirs": [data_dir],
+                    "dir_seq": {data_dir: snap_id},
+                    "schema": schema,
                 }
-                # An append never changes the table schema, whatever
-                # column order the appended frame had.
-                entry["schema"] = head.get("schema")
-                # Equality-delete files survive appends: they keep applying
-                # to the data dirs older than them (never to this new dir,
-                # whose seq exceeds every existing delete's).
-                if head.get("deletes"):
-                    entry["deletes"] = head["deletes"]
+                parent_rows = {}
             else:
-                entry["dir_seq"] = {data_dir: snap_id}
-                entry["schema"] = schema
-            if use_branch is not None and refs:
-                entry["branch"] = use_branch
+                # An append keeps its parent's schema, whatever column
+                # order the appended frame had, and its equality-delete
+                # files: they keep applying to the older dirs (never to
+                # this new dir, whose seq exceeds every existing delete's).
+                fields = self._carry(head)
+                fields["data_dirs"] = head["data_dirs"] + [data_dir]
+                fields["dir_seq"][data_dir] = snap_id
+                parent_rows = head.get("dir_rows", {})
+            fields["added_dir"] = data_dir
             if stats is not None:
-                entry["stats"] = stats
+                fields["stats"] = stats
             if n_rows is not None:
-                parent_rows = (
-                    head.get("dir_rows", {}) if (head and mode == "append") else {}
-                )
-                entry["dir_rows"] = {**parent_rows, data_dir: n_rows}
-            try:
-                self._commit(log, entry)
-            except CommitConflictError:
-                if mode != "append" or expected_version is not None:
-                    raise
-                continue  # rebase the append against the fresh parent
-            if use_branch is not None and refs:
-                refs[use_branch] = {"type": "branch", "snapshot_id": snap_id}
-                self._write_refs(refs)
-            return snap_id
-        raise CommitConflictError(
-            f"gave up after {self._MAX_COMMIT_RETRIES} rebase attempts"
-        )
+                fields["dir_rows"] = {**parent_rows, data_dir: n_rows}
+            return fields
+
+        return self._commit(mode, build, branch, expected_version)
 
     # -- refs: branches and tags (Iceberg's named-ref surface) --
 
@@ -226,13 +271,13 @@ class SnapshotTable:
         log = self._read_log()
         if snapshot_id is None:
             snapshot_id = log[-1]["snapshot_id"] if log else 0
-        if not any(e["snapshot_id"] == snapshot_id for e in log):
+        if _entry(log, snapshot_id) is None:
             raise ValueError(f"no snapshot {snapshot_id} to reference")
         refs = self._ensure_main(self._read_refs())
         if name in refs:
             raise ValueError(f"ref {name!r} already exists")
         refs[name] = {"type": kind, "snapshot_id": snapshot_id}
-        self._write_refs(refs)
+        _write_json(self.refs_path, refs)
         return snapshot_id
 
     def fast_forward(self, branch: str, to_ref: str) -> int:
@@ -249,7 +294,7 @@ class SnapshotTable:
             raise ValueError(f"cannot fast-forward tag {branch!r}")
         target = refs[to_ref]["snapshot_id"]
         refs[branch] = {"type": "branch", "snapshot_id": target}
-        self._write_refs(refs)
+        _write_json(self.refs_path, refs)
         return target
 
     def read_ref(self, name: str) -> DataFrame:
@@ -276,12 +321,6 @@ class SnapshotTable:
             return {}
         with open(self.refs_path) as f:
             return json.load(f)
-
-    def _write_refs(self, refs: dict) -> None:
-        tmp = self.refs_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(refs, f, indent=1)
-        os.replace(tmp, self.refs_path)  # atomic pointer swap
 
     @staticmethod
     def _read_footers(data_dir: str) -> tuple[dict | None, int | None, dict | None]:
@@ -390,21 +429,6 @@ class SnapshotTable:
             & (F.col(column) < F.lit(upper).cast(dtype))
         )
 
-    def _commit(self, expected_log: list[dict], entry: dict) -> None:
-        """Compare-and-swap: append ``entry`` only if the on-disk log still
-        matches ``expected_log``. Single-process emulation of the atomic
-        metadata-pointer swap a real catalog (BLMS in the reference,
-        README.md:543-548) provides; the swap itself is ``os.replace``."""
-        current = self._read_log()
-        if [e["snapshot_id"] for e in current] != [
-            e["snapshot_id"] for e in expected_log
-        ]:
-            raise CommitConflictError(
-                "concurrent commit: log advanced during this operation"
-            )
-        current.append(entry)
-        self._write_log(current)
-
     def merge(
         self,
         source: DataFrame,
@@ -462,38 +486,22 @@ class SnapshotTable:
         )
         keys.write.mode("errorifexists").parquet(del_dir)
         keys_schema = json.loads(keys.schema.json())
-        log = self._read_log()
-        refs = self._read_refs()
-        # Anchor on the MAIN head, not the log tail — a branch commit at
+
+        # Anchored on the MAIN head, not the log tail — a branch commit at
         # the tail must not become the parent of a main-line delete.
-        head = self._head_entry(log, refs)
-        if (head["snapshot_id"] if head else 0) != base:
-            raise CommitConflictError("table moved during MOR delete")
-        snap_id = log[-1]["snapshot_id"] + 1
-        entry = {
-            "snapshot_id": snap_id,
-            "operation": "mor_delete",
-            "data_dirs": head["data_dirs"],
-            "added_dir": del_dir,
-            "dir_seq": self._dir_seq(head),
-            "schema": head.get("schema"),
-            "deletes": head.get("deletes", [])
-            + [
+        def build(head: dict, snap_id: int) -> dict:
+            fields = self._carry(head)
+            fields["deletes"] = fields.get("deletes", []) + [
                 {
                     "dir": del_dir,
                     "cols": eq_cols,
                     "seq": snap_id,
                     "schema": keys_schema,
                 }
-            ],
-        }
-        if refs:
-            entry["branch"] = "main"
-        self._commit(log, entry)
-        if refs:
-            refs["main"] = {"type": "branch", "snapshot_id": snap_id}
-            self._write_refs(refs)
-        return snap_id
+            ]
+            return {"data_dirs": head["data_dirs"], "added_dir": del_dir, **fields}
+
+        return self._commit("mor_delete", build, expected_version=base)
 
     def rollback(self, snapshot_id: int) -> int:
         """Iceberg's ``rollback_to_snapshot``: make an OLD snapshot the
@@ -502,34 +510,18 @@ class SnapshotTable:
         instantly while preserving the full history (the bad snapshots
         stay readable for forensics until expiry; contrast with expiry,
         which destroys history)."""
-        log = self._read_log()
-        refs = self._read_refs()
-        target = next(
-            (e for e in log if e["snapshot_id"] == snapshot_id), None
-        )
-        if target is None:
-            raise ValueError(f"no snapshot {snapshot_id} to roll back to")
-        entry = {
-            "snapshot_id": (log[-1]["snapshot_id"] + 1),
-            "operation": "rollback",
-            "data_dirs": target["data_dirs"],
-            "added_dir": target["added_dir"],
-            "dir_seq": self._dir_seq(target),
-            "schema": target.get("schema"),
-            "rolled_back_to": snapshot_id,
-        }
-        if target.get("deletes"):
-            entry["deletes"] = target["deletes"]
-        if refs:
-            entry["branch"] = "main"
-        self._commit(log, entry)
-        if refs:
-            refs["main"] = {
-                "type": "branch",
-                "snapshot_id": entry["snapshot_id"],
+
+        def build(target: dict | None, _snap_id: int) -> dict:
+            if target is None:
+                raise ValueError(f"no snapshot {snapshot_id} to roll back to")
+            return {
+                "data_dirs": target["data_dirs"],
+                "added_dir": target["added_dir"],
+                **self._carry(target),
+                "rolled_back_to": snapshot_id,
             }
-            self._write_refs(refs)
-        return entry["snapshot_id"]
+
+        return self._commit("rollback", build, parent_id=snapshot_id)
 
     def rewrite_mor(self) -> int:
         """Compaction for merge-on-read: materialize the delete-applied
@@ -583,10 +575,7 @@ class SnapshotTable:
         if refs is None:
             refs = self._read_refs()
         if refs and "main" in refs:
-            head_id = refs["main"]["snapshot_id"]
-            return next(
-                (e for e in log if e["snapshot_id"] == head_id), None
-            )
+            return _entry(log, refs["main"]["snapshot_id"])
         return log[-1] if log else None
 
     def read(self, snapshot_id: int | None = None) -> DataFrame:
@@ -600,10 +589,9 @@ class SnapshotTable:
             if entry is None:
                 raise ValueError("main ref points at an expired snapshot")
         else:
-            matches = [e for e in log if e["snapshot_id"] == snapshot_id]
-            if not matches:
+            entry = _entry(log, snapshot_id)
+            if entry is None:
                 raise ValueError(f"no snapshot {snapshot_id}; log has {len(log)}")
-            entry = matches[0]
         dels = entry.get("deletes", [])
         if not dels:
             return self._scan(entry, *entry["data_dirs"])
@@ -645,18 +633,17 @@ class SnapshotTable:
                 "table has pending MoR deletes; run rewrite_mor() before "
                 "cloning"
             )
-        clone = SnapshotTable(self.spark, dest_root)
-        entry = {
-            "snapshot_id": 1,
-            "operation": "clone",
+        fields = {
             "data_dirs": list(head["data_dirs"]),
             "added_dir": None,
             "dir_seq": {d: 1 for d in head["data_dirs"]},
             "schema": head.get("schema"),
         }
         if head.get("stats"):
-            entry["stats"] = head["stats"]
-        clone._commit([], entry)
+            fields["stats"] = head["stats"]
+        clone = SnapshotTable(self.spark, dest_root)
+        # expected_version=0: a clone's first snapshot lands on an empty log.
+        clone._commit("clone", lambda _head, _id: fields, expected_version=0)
         return clone
 
     def read_incremental(self, from_snap: int, to_snap: int) -> DataFrame:
@@ -746,20 +733,15 @@ class SnapshotTable:
         live = {d for e in kept for d in e["data_dirs"]} | {
             dl["dir"] for e in kept for dl in e.get("deletes", [])
         }
+        # A clone's first entry adds no dir (added_dir None): its dirs
+        # belong to the source table and are never this table's to remove.
         dead = [
             d
             for e in dropped
             for d in [e["added_dir"]]
-            if d not in live and os.path.isdir(d)
+            if d is not None and d not in live and os.path.isdir(d)
         ]
-        current = self._read_log()
-        if [e["snapshot_id"] for e in current] != [
-            e["snapshot_id"] for e in log
-        ]:
-            raise CommitConflictError(
-                "concurrent commit during snapshot expiry"
-            )
-        self._write_log(kept)
+        self._swap_log(log, kept)
         for d in dead:
             shutil.rmtree(d, ignore_errors=True)
         return {"expired": len(dropped), "dirs_removed": len(dead)}
@@ -777,9 +759,7 @@ class SnapshotTable:
         if snapshot_id is None:
             entry = self._head_entry(log)
         else:
-            entry = next(
-                (e for e in log if e["snapshot_id"] == snapshot_id), None
-            )
+            entry = _entry(log, snapshot_id)
         if entry is None:
             raise ValueError("no such snapshot")
         if entry.get("deletes"):
@@ -805,8 +785,16 @@ class SnapshotTable:
         with open(self.meta_path) as f:
             return json.load(f)
 
-    def _write_log(self, log: list[dict]) -> None:
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(log, f, indent=1)
-        os.replace(tmp, self.meta_path)  # atomic pointer swap
+
+def _entry(log: list[dict], snapshot_id: int) -> dict | None:
+    """The log entry with ``snapshot_id``, or None (expired / never was)."""
+    return next((e for e in log if e["snapshot_id"] == snapshot_id), None)
+
+
+def _write_json(path: str, obj) -> None:
+    """Write a metadata file atomically: a temp file, then ``os.replace``
+    (the pointer swap)."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=1)
+    os.replace(tmp, path)

@@ -13,7 +13,6 @@ partitions from the filters. Nothing here collects to the driver.
 
 from __future__ import annotations
 
-import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -32,59 +31,66 @@ TABLES = (
     "embeddings",
 )
 
-# Footer-inferred schema per parquet path (keyed on (path, mtime_ns, size)
-# so a test that rewrites its tmp table gets a fresh inference). Schema
-# inference is a DRIVER-side footer read costing ~0.1 s per spark.read call
-# (measured, round 14) and repeated for every load of the same immutable
-# testdata file; passing the cached StructType skips it. This caches
-# METADATA only — never rows, never query results — the same immutability
-# argument as plans/registry.py:_BUILDER_CACHE. At 100 TB the analog is the
-# table catalog carrying the schema instead of per-query footer sniffing.
-_SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
+# Metadata per parquet path, keyed on (path, mtime_ns, size) so a test that
+# rewrites its tmp table gets a fresh record: the data files with their
+# sizes (listed once), and, filled on first use, the footer-inferred schema
+# and whether ``ts`` is TIMESTAMP(NANOS). Schema inference is a DRIVER-side
+# footer read costing ~0.1 s per spark.read call and repeated for every
+# load of the same immutable testdata file; passing the cached StructType
+# skips it. This caches METADATA only — never rows, never query results —
+# the same immutability argument as plans/registry.py:_BUILDER_CACHE. At
+# 100 TB the analog is the table catalog carrying the schema and file list
+# instead of per-query footer sniffing and listing.
+_TABLE_META: dict[tuple[str, int, int], dict] = {}
 
 
-# Whether the footer stores ``ts`` as TIMESTAMP(NANOS), per the same key.
-_TS_NANOS_CACHE: dict[tuple[str, int, int], bool] = {}
-
-
-def _file_key(path: str) -> tuple[str, int, int] | None:
+def _table_meta(path: str) -> dict | None:
+    """The cache record of the parquet file or directory at ``path``; None
+    for globs and missing paths."""
     try:
         st = os.stat(path)
     except OSError:
         return None
-    return (path, st.st_mtime_ns, st.st_size)
+    key = (path, st.st_mtime_ns, st.st_size)
+    if key not in _TABLE_META:
+        files = [(path, st.st_size)]
+        if os.path.isdir(path):
+            files = sorted(
+                (p, os.path.getsize(p))
+                for root, _dirs, names in os.walk(path)
+                for p in (os.path.join(root, n) for n in names)
+                if p.endswith(".parquet")
+            )
+        _TABLE_META[key] = {"files": files}
+    return _TABLE_META[key]
 
 
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
     """Schema of the parquet file or directory at ``path``, inferred once
     per (path, mtime, size): the package's one schema cache."""
-    key = _file_key(path)
-    if key is None:
+    meta = _table_meta(path)
+    if meta is None:
         # Globs / nonexistent paths: let spark.read raise its own error.
         return spark.read.parquet(path).schema
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+    if "schema" not in meta:
+        meta["schema"] = spark.read.parquet(path).schema
+    return meta["schema"]
 
 
 def ts_is_nanos(path: str) -> bool:
     """Whether the parquet footer at ``path`` stores ``ts`` as
     TIMESTAMP(NANOS), read once per (path, mtime, size); a directory is
     judged by its first data file."""
-    key = _file_key(path)
-    if key is None:
+    meta = _table_meta(path)
+    if meta is None:
         return False
-    if key not in _TS_NANOS_CACHE:
+    if "ts_nanos" not in meta:
         import pyarrow.parquet as pq
 
-        files = [path]
-        if os.path.isdir(path):
-            files = sorted(
-                glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
-            )
-        t = pq.read_schema(files[0]).field("ts").type if files else None
-        _TS_NANOS_CACHE[key] = getattr(t, "unit", None) == "ns"
-    return _TS_NANOS_CACHE[key]
+        files = meta["files"]
+        t = pq.read_schema(files[0][0]).field("ts").type if files else None
+        meta["ts_nanos"] = getattr(t, "unit", None) == "ns"
+    return meta["ts_nanos"]
 
 
 def size_bytes(conf_value: str) -> int:
@@ -97,30 +103,21 @@ def size_bytes(conf_value: str) -> int:
 
 
 def _scan_split_estimate(spark: SparkSession, path: str) -> int:
-    """Estimated scan split count from file sizes + maxPartitionBytes —
-    the same arithmetic Spark's FilePartition packing uses, without the
-    driver-side RDD conversion that ``df.rdd.getNumPartitions()`` costs
-    (round-13 verdict #4). At 100 TB this is a handful of os.stat calls
-    (or, on a real catalog table, the file-count statistic)."""
+    """Estimated scan split count from the cached file sizes and the
+    session's current maxPartitionBytes — the same arithmetic Spark's
+    FilePartition packing uses, without the driver-side RDD conversion
+    that ``df.rdd.getNumPartitions()`` costs. At 100 TB this is the
+    table's file list (on a real catalog table, the file-count
+    statistic)."""
     try:
         mpb = size_bytes(
             spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
         )
     except (TypeError, ValueError):
         mpb = 128 << 20
-    paths = []
-    if os.path.isdir(path):
-        for root, _dirs, files in os.walk(path):
-            paths += [
-                os.path.join(root, f) for f in files if f.endswith(".parquet")
-            ]
-    elif os.path.exists(path):
-        paths = [path]
-    if not paths:
-        return 1
-    return sum(
-        max(1, -(-os.path.getsize(p) // mpb)) for p in paths
-    )
+    meta = _table_meta(path)
+    files = meta["files"] if meta else []
+    return sum(max(1, -(-size // mpb)) for _, size in files) or 1
 
 
 def load_table(

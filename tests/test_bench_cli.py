@@ -56,22 +56,22 @@ def test_bench_cli_rejects_unknown_query():
     assert "no_such_query" in proc.stderr
 
 
-def test_bench_queries_run_at_smoke_sf(spark):
-    """Every bench-flagged query must run and return a well-formed result
-    at the sf0.001 smoke scale too — tiny inputs expose degeneracy
-    (empty intermediate tables, .first() on nothing, vacuous thresholds)
-    that sf0.01 sweeps never hit. Streaming queries are exercised at this
-    sf by the bench warm-up already; this pins the batch set."""
+def test_bench_queries_run_at_smoke_sf(spark, sf_dir):
+    """Every bench-flagged batch query must match its oracle (or, without
+    one, collect every row) at the sf0.001 smoke scale too — tiny inputs
+    expose degeneracy (empty intermediate tables, .first() on nothing,
+    vacuous thresholds) that sf0.01 sweeps never hit. Streaming queries are
+    exercised at this sf by the bench warm-up already; this pins the batch
+    set. Runs through the one oracle runner, so a wrong row or a raising
+    output column fails here."""
+    from biglake_iceberg_python_spark.plans.check import report, run_checks
     from biglake_iceberg_python_spark.plans.registry import load_all
 
-    sf_dir = "/root/testdata/sf0.001"
-    failures = []
-    for name, spec in load_all().items():
-        if not spec.bench or name.startswith("stream_"):
-            continue
-        try:
-            n = spec.fn(spark, sf_dir).count()
-            assert n >= 0
-        except Exception as exc:  # noqa: BLE001
-            failures.append((name, str(exc)[:120]))
-    assert not failures, failures
+    names = [
+        name
+        for name, spec in load_all().items()
+        if spec.bench and not name.startswith("stream_")
+    ]
+    assert names
+    results = run_checks(spark, sf_dir, names)
+    assert report(results), {n: r for n, r in results.items() if not r["ok"]}

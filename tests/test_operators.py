@@ -619,8 +619,8 @@ def test_optimistic_commit_protocol(spark, sf_dir):
         stale = t2._read_log()
         t1.write(d)
         with _pytest.raises(CommitConflictError):
-            t2._commit(stale, {"snapshot_id": 99, "operation": "append",
-                               "data_dirs": [], "added_dir": "x"})
+            t2._swap_log(stale, stale + [{"snapshot_id": 99, "operation": "append",
+                                          "data_dirs": [], "added_dir": "x"}])
         # (b) append API rebases internally: both writers' rows survive
         v = t2.write(d)
         assert v == 3
@@ -988,6 +988,28 @@ def test_shallow_clone_independence_and_guards(spark, sf_dir):
         empty = SnapshotTable(spark, os.path.join(root, "empty"))
         with pytest.raises(ValueError, match="empty"):
             empty.clone_to(os.path.join(root, "dst3"))
+
+
+def test_clone_expiry_keeps_source_dirs(spark, tmp_path):
+    """Expiring a clone's history drops its snapshots but never removes a
+    data dir: the clone entry adds none of its own (its dirs belong to the
+    source), and the appends' dirs are still live in the kept snapshot."""
+    import os
+
+    from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
+
+    src = SnapshotTable(spark, str(tmp_path / "src"))
+    src.write(spark.range(0, 10).withColumnRenamed("id", "k"))
+    src.write(spark.range(10, 20).withColumnRenamed("id", "k"))
+    clone = src.clone_to(str(tmp_path / "clone"))
+    clone.write(spark.range(100, 103).withColumnRenamed("id", "k"))
+    clone.write(spark.range(200, 203).withColumnRenamed("id", "k"))
+    before = sorted(clone.read().collect())
+
+    assert clone.expire_snapshots(keep_last=1) == {"expired": 2, "dirs_removed": 0}
+    assert all(os.path.isdir(d) for e in src._read_log() for d in e["data_dirs"])
+    assert sorted(clone.read().collect()) == before
+    assert len(before) == 26
 
 
 def test_metadata_count_guards(spark, sf_dir):
@@ -2915,3 +2937,41 @@ def test_scan_split_estimate_matches_degeneracy_semantics(spark, sf_dir):
     # a path that does not exist must not crash the loader (spark.read
     # raises its own error later)
     assert _scan_split_estimate(spark, f"{sf_dir}/nope.parquet") == 1
+
+
+def test_widened_directory_loads_list_it_once(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """One table-metadata record per (path, mtime, size): two widened loads
+    of a directory table (split estimate, nanos check, schema) list the
+    directory once, and read the same rows as the single-file table."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from biglake_iceberg_python_spark.sources.tables import load_table
+
+    events = pq.read_table(f"{sf_dir}/events.parquet")
+    table_dir = tmp_path / "events.parquet"
+    table_dir.mkdir()
+    half = events.num_rows // 2
+    pq.write_table(events.slice(0, half), table_dir / "part-0.parquet")
+    pq.write_table(events.slice(half), table_dir / "part-1.parquet")
+
+    listed = []
+    for mod, name in ((os, "walk"), (glob, "glob")):
+
+        def spy(top, *args, _real=getattr(mod, name), _name=name, **kwargs):
+            if str(top).startswith(str(table_dir)):
+                listed.append(_name)
+            return _real(top, *args, **kwargs)
+
+        monkeypatch.setattr(mod, name, spy)
+    got = [
+        load_table(spark, str(tmp_path), "events", widen=True).collect()
+        for _ in range(2)
+    ]
+    assert len(listed) == 1, listed
+    want = sorted(load_table(spark, sf_dir, "events").collect(), key=str)
+    assert all(sorted(rows, key=str) == want for rows in got)

@@ -1,12 +1,16 @@
-"""Library code must leave the caller's session conf as it found it: the
-same keys set, to the same values, and the same keys unset."""
+"""Library code must leave the caller's session as it found it: the conf
+(the same keys set, to the same values, and the same keys unset), the
+current database, the namespaces and the temp views."""
 
 from __future__ import annotations
+
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from biglake_iceberg_python_spark.lakehouse.catalog import LakehouseCatalog
 from biglake_iceberg_python_spark.plans.registry import load_all
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import TABLES, load_table
@@ -83,3 +87,37 @@ def test_conf_scoped_queries_leave_session_conf(plain, sf_dir, name):
     before = plain.conf.getAll
     load_all()[name].fn(plain, sf_dir).collect()
     assert plain.conf.getAll == before
+
+
+def test_bucketed_join_keeps_current_database(plain, sf_dir):
+    """The bucketed join qualifies every table name, so the caller's
+    current database survives it."""
+    db = f"caller_db_{uuid.uuid4().hex[:8]}"
+    plain.sql(f"CREATE NAMESPACE {db}")
+    try:
+        plain.catalog.setCurrentDatabase(db)
+        load_all()["lakehouse_bucketed_join"].fn(plain, sf_dir).collect()
+        assert plain.catalog.currentDatabase() == db
+    finally:
+        plain.catalog.setCurrentDatabase("default")
+        plain.sql(f"DROP NAMESPACE IF EXISTS {db} CASCADE")
+
+
+def test_failed_lakehouse_query_drops_its_namespace(plain, sf_dir, monkeypatch):
+    """A lakehouse query that fails after creating its namespace and temp
+    views still drops them: the catalog is left as the caller had it."""
+
+    def namespaces():
+        return sorted(r[0] for r in plain.sql("SHOW NAMESPACES").collect())
+
+    def temp_views():
+        return sorted(t.name for t in plain.catalog.listTables() if t.isTemporary)
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("read-back failed")
+
+    before = (namespaces(), temp_views())
+    monkeypatch.setattr(LakehouseCatalog, "table", fail)
+    with pytest.raises(RuntimeError, match="read-back failed"):
+        load_all()["lakehouse_roundtrip"].fn(plain, sf_dir)
+    assert (namespaces(), temp_views()) == before
