@@ -123,11 +123,6 @@ class LakehouseCatalog:
         finally:
             self.spark.catalog.dropTempView(view)
 
-    def insert_overwrite(self, db: str, table: str, select_sql: str) -> None:
-        self.spark.sql(
-            f"INSERT OVERWRITE TABLE {self._fqn(db, table)} {select_sql}"
-        )
-
     # -- reads (reference A10/A11: notebook cells 7, 9) --
 
     def table(self, db: str, table: str) -> DataFrame:

@@ -1,17 +1,15 @@
 """Registered queries exercising the lakehouse lifecycle end-to-end.
 
-Each query is self-contained (unique namespace / temp dir per invocation)
-and returns a DataFrame whose content is independent of the side-effect
-machinery — so the DDL → ingest → read-back loop itself is what the DuckDB
-oracle verifies (the oracle reads the same source parquet directly: if the
-lifecycle loses or mangles rows, the hash mismatches).
+Each query stages its tables in its own ``@scratch`` directory and
+namespace and returns a DataFrame whose content is independent of the
+side-effect machinery — so the DDL → ingest → read-back loop itself is what
+the DuckDB oracle verifies (the oracle reads the same source parquet
+directly: if the lifecycle loses or mangles rows, the hash mismatches).
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,13 +21,9 @@ from biglake_iceberg_python_spark.lakehouse.catalog import (
 from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
 from biglake_iceberg_python_spark.lakehouse.merge import merge_into
 from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
-from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
-
-
-def _uniq(prefix: str) -> str:
-    return f"{prefix}_{uuid.uuid4().hex[:8]}"
 
 
 @query(
@@ -37,25 +31,21 @@ def _uniq(prefix: str) -> str:
     oracle="SELECT r_regionkey, r_name FROM region",
     tags=("lakehouse", "ddl", "ingest"),
 )
-def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """The reference pipeline end-to-end (SURVEY.md A2-A8): CREATE NAMESPACE
     → CREATE TABLE (declared schema + TBLPROPERTIES) → parquet → temp view →
     INSERT INTO ... SELECT * → read back. Oracle = the source parquet: a
     lossless lifecycle hash-matches it."""
-    db = _uniq("lh_rt")
-    try:
-        df = run_reference_pipeline(
-            spark,
-            source_parquet=f"{sf_dir}/region.parquet",
-            db=db,
-            table="region_managed",
-            schema_ddl="r_regionkey INT, r_name STRING",
-            columns=["r_regionkey", "r_name"],
-        )
-        out = df.select("r_regionkey", "r_name")
-        return out.localCheckpoint(eager=True)  # materialize before cleanup
-    finally:
-        LakehouseCatalog(spark).drop_namespace(db)
+    df = run_reference_pipeline(
+        spark,
+        source_parquet=f"{sf_dir}/region.parquet",
+        db=os.path.basename(root),
+        table="region_managed",
+        schema_ddl="r_regionkey INT, r_name STRING",
+        columns=["r_regionkey", "r_name"],
+    )
+    return df.select("r_regionkey", "r_name")
 
 
 @query(
@@ -67,41 +57,34 @@ def lakehouse_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "overwrite"),
 )
-def lakehouse_insert_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_insert_overwrite(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """INSERT OVERWRITE semantics: seed a managed table with 'F' orders,
     overwrite with 'O' orders, read back — surviving rows must be exactly
     the overwrite set."""
-    db = _uniq("lh_ow")
+    db = os.path.basename(root)
     cat = LakehouseCatalog(spark)
-    try:
-        cat.create_namespace(db)
-        cat.create_table(
-            db,
-            "orders_managed",
-            "o_orderkey BIGINT, o_orderstatus STRING, o_orderpriority STRING",
-        )
-        o = load_table(spark, sf_dir, "orders")
-        o.createOrReplaceTempView("lh_ow_src")
+    cat.create_namespace(db)
+    cat.create_table(
+        db,
+        "orders_managed",
+        "o_orderkey BIGINT, o_orderstatus STRING, o_orderpriority STRING",
+    )
+    o = load_table(spark, sf_dir, "orders")
+    for verb, status in (("INSERT INTO", "F"), ("INSERT OVERWRITE TABLE", "O")):
         spark.sql(
-            f"INSERT INTO spark_catalog.{db}.orders_managed "
-            "SELECT o_orderkey, o_orderstatus, o_orderpriority FROM lh_ow_src "
-            "WHERE o_orderstatus = 'F'"
+            f"{verb} spark_catalog.{db}.orders_managed "
+            "SELECT o_orderkey, o_orderstatus, o_orderpriority FROM {src} "
+            f"WHERE o_orderstatus = '{status}'",
+            src=o,
         )
-        cat.insert_overwrite(
-            db,
-            "orders_managed",
-            "SELECT o_orderkey, o_orderstatus, o_orderpriority FROM lh_ow_src "
-            "WHERE o_orderstatus = 'O'",
-        )
-        out = (
-            cat.table(db, "orders_managed")
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView("lh_ow_src")
-        cat.drop_namespace(db)
+    return (
+        cat.table(db, "orders_managed")
+        .groupBy("o_orderpriority")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 @query(
@@ -147,13 +130,14 @@ def lakehouse_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     -- IS NOT TRUE, not NOT(..): DELETE removes only rows where the
     -- predicate is TRUE, so a NULL-price row SURVIVES — NOT(NULL) would
-    -- wrongly exclude it from the oracle scan (round-12 warehouse axis)
+    -- wrongly exclude it from the oracle scan
     WHERE (o_totalprice < 100000) IS NOT TRUE
     GROUP BY o_orderstatus
     """,
     tags=("lakehouse", "delete", "row-level"),
 )
-def lakehouse_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_delete_where(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Row-level DELETE FROM … WHERE (Iceberg v2 copy-on-write delete):
     commit orders, delete every order under 100k, and return the per-status
     rollup of the survivors — which must equal the oracle's NOT-predicate
@@ -163,23 +147,21 @@ def lakehouse_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    with tempfile.TemporaryDirectory(prefix="lh_del_") as root:
-        t = SnapshotTable(spark, root)
-        v1 = t.write(o, mode="append")
-        n_before = t.read(v1).count()
-        t.delete_where(F.col("o_totalprice") < 100000)
-        # Iceberg contract: row-level deletes never mutate history.
-        if t.read(v1).count() != n_before:
-            raise AssertionError("pre-delete snapshot was mutated")
-        out = (
-            t.read()
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                dsum("o_totalprice", "sum_price"),
-            )
+    t = SnapshotTable(spark, root)
+    v1 = t.write(o, mode="append")
+    n_before = t.read(v1).count()
+    t.delete_where(F.col("o_totalprice") < 100000)
+    # Iceberg contract: row-level deletes never mutate history.
+    if t.read(v1).count() != n_before:
+        raise AssertionError("pre-delete snapshot was mutated")
+    return (
+        t.read()
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            dsum("o_totalprice", "sum_price"),
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -196,7 +178,8 @@ def lakehouse_delete_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "update", "row-level"),
 )
-def lakehouse_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_update_where(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Row-level UPDATE … SET … WHERE (Iceberg v2 copy-on-write update):
     commit orders, add 100k to every open order's total, return the
     per-status rollup — open orders must carry the shifted sum, all other
@@ -208,22 +191,20 @@ def lakehouse_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    with tempfile.TemporaryDirectory(prefix="lh_upd_") as root:
-        t = SnapshotTable(spark, root)
-        t.write(o, mode="append")
-        t.update_where(
-            F.col("o_orderstatus") == "O",
-            {"o_totalprice": F.col("o_totalprice") + 100000},
+    t = SnapshotTable(spark, root)
+    t.write(o, mode="append")
+    t.update_where(
+        F.col("o_orderstatus") == "O",
+        {"o_totalprice": F.col("o_totalprice") + 100000},
+    )
+    return (
+        t.read()
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            dsum("o_totalprice", "sum_price"),
         )
-        out = (
-            t.read()
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                dsum("o_totalprice", "sum_price"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -239,23 +220,22 @@ def lakehouse_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "snapshots", "time-travel"),
 )
-def lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_time_travel(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Snapshot commits + time travel (the Iceberg metadata surface the
     reference inspects — SURVEY.md A12): v1 append 'F' orders, v2 append
     'O' orders, v3 overwrite with 'P' orders; read each version by id.
     Row counts per version must equal the source-side filters."""
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_tt_") as root:
-        t = SnapshotTable(spark, root)
-        v1 = t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
-        v2 = t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
-        v3 = t.write(o.filter(F.col("o_orderstatus") == "P"), mode="overwrite")
-        row = spark.range(1).select(
-            F.lit(t.read(v1).count()).cast("long").alias("v1_rows"),
-            F.lit(t.read(v2).count()).cast("long").alias("v2_rows"),
-            F.lit(t.read(v3).count()).cast("long").alias("v3_rows"),
-        )
-        return row.localCheckpoint(eager=True)
+    t = SnapshotTable(spark, root)
+    v1 = t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
+    v2 = t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
+    v3 = t.write(o.filter(F.col("o_orderstatus") == "P"), mode="overwrite")
+    return spark.range(1).select(
+        F.lit(t.read(v1).count()).cast("long").alias("v1_rows"),
+        F.lit(t.read(v2).count()).cast("long").alias("v2_rows"),
+        F.lit(t.read(v3).count()).cast("long").alias("v3_rows"),
+    )
 
 
 @query(
@@ -269,23 +249,22 @@ def lakehouse_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "snapshots", "metadata"),
 )
-def lakehouse_metadata_log(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_metadata_log(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """metadata_log_entries scan (reference notebook cell 11): after
     append/append/overwrite the log must show the lineage — dir counts grow
     under append and reset under overwrite; only the last entry is current."""
     n = load_table(spark, sf_dir, "nation")
-    with tempfile.TemporaryDirectory(prefix="lh_ml_") as root:
-        t = SnapshotTable(spark, root)
-        t.write(n.filter(F.col("n_nationkey") < 10), mode="append")
-        t.write(n.filter(F.col("n_nationkey") >= 10), mode="append")
-        t.write(n.filter(F.col("n_regionkey") == 0), mode="overwrite")
-        out = t.metadata_log_entries().select(
-            "snapshot_id",
-            "operation",
-            "n_data_dirs",
-            F.col("is_current").cast("int").alias("is_current"),
-        )
-        return out.localCheckpoint(eager=True)
+    t = SnapshotTable(spark, root)
+    t.write(n.filter(F.col("n_nationkey") < 10), mode="append")
+    t.write(n.filter(F.col("n_nationkey") >= 10), mode="append")
+    t.write(n.filter(F.col("n_regionkey") == 0), mode="overwrite")
+    return t.metadata_log_entries().select(
+        "snapshot_id",
+        "operation",
+        "n_data_dirs",
+        F.col("is_current").cast("int").alias("is_current"),
+    )
 
 
 @query(
@@ -299,24 +278,19 @@ def lakehouse_metadata_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "ddl", "governance"),
 )
-def lakehouse_tblproperties(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_tblproperties(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Governance tags as table properties (the portable analog of the
     reference's Data Catalog has_pii tag — SURVEY.md A19): ALTER TABLE SET
     TBLPROPERTIES then read back via SHOW TBLPROPERTIES."""
-    db = _uniq("lh_props")
+    db = os.path.basename(root)
     cat = LakehouseCatalog(spark)
-    try:
-        cat.create_namespace(db)
-        cat.create_table(db, "tagged", "id INT", properties={"has_pii": "false"})
-        cat.set_properties(
-            db, "tagged", {"steward": "data-eng", "retention_days": "90"}
-        )
-        props = cat.get_properties(db, "tagged").filter(
-            F.col("key").isin("has_pii", "steward", "retention_days")
-        )
-        return props.localCheckpoint(eager=True)
-    finally:
-        cat.drop_namespace(db)
+    cat.create_namespace(db)
+    cat.create_table(db, "tagged", "id INT", properties={"has_pii": "false"})
+    cat.set_properties(db, "tagged", {"steward": "data-eng", "retention_days": "90"})
+    return cat.get_properties(db, "tagged").filter(
+        F.col("key").isin("has_pii", "steward", "retention_days")
+    )
 
 
 @query(
@@ -328,36 +302,33 @@ def lakehouse_tblproperties(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "introspection"),
 )
-def lakehouse_catalog_introspection(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_catalog_introspection(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """SHOW CATALOGS / NAMESPACES / TABLES (reference notebook cells 4-5,
     A13-A14): create a namespace with two tables, list them, count both
     levels. Every output is deterministic (membership checks, not raw
     listing counts — other sessions may register extra catalogs), so the
     result pins to a constant oracle instead of a rows-only check."""
-    db = _uniq("lh_intro")
+    db = os.path.basename(root)
     cat = LakehouseCatalog(spark)
-    try:
-        cat.create_namespace(db)
-        cat.create_table(db, "t1", "id INT")
-        cat.create_table(db, "t2", "id INT")
-        has_spark_catalog = (
-            cat.list_catalogs().filter(F.col("catalog") == "spark_catalog").count()
-        )
-        n_namespaces = (
-            cat.list_namespaces().filter(F.col("namespace") == db).count()
-        )
-        # SHOW TABLES also lists the SESSION's temp views (isTemporary,
-        # namespace '') — count only the namespace's real tables, or a
-        # shared session (pytest) breaks determinism.
-        n_tables = cat.list_tables(db).filter(~F.col("isTemporary")).count()
-        out = spark.range(1).select(
-            F.lit(has_spark_catalog).cast("long").alias("has_spark_catalog"),
-            F.lit(n_namespaces).cast("long").alias("n_namespaces_matched"),
-            F.lit(n_tables).cast("long").alias("n_tables"),
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        cat.drop_namespace(db)
+    cat.create_namespace(db)
+    cat.create_table(db, "t1", "id INT")
+    cat.create_table(db, "t2", "id INT")
+    has_spark_catalog = (
+        cat.list_catalogs().filter(F.col("catalog") == "spark_catalog").count()
+    )
+    n_namespaces = cat.list_namespaces().filter(F.col("namespace") == db).count()
+    # SHOW TABLES also lists the SESSION's temp views (isTemporary,
+    # namespace '') — count only the namespace's real tables, or a
+    # shared session (pytest) breaks determinism.
+    n_tables = cat.list_tables(db).filter(~F.col("isTemporary")).count()
+    return spark.range(1).select(
+        F.lit(has_spark_catalog).cast("long").alias("has_spark_catalog"),
+        F.lit(n_namespaces).cast("long").alias("n_namespaces_matched"),
+        F.lit(n_tables).cast("long").alias("n_tables"),
+    )
 
 
 @query(
@@ -370,7 +341,8 @@ def lakehouse_catalog_introspection(spark: SparkSession, sf_dir: str) -> DataFra
     """,
     tags=("lakehouse", "bucketing", "join"),
 )
-def lakehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_bucketed_join(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Bucketed co-located join: both fact tables written bucketBy(8,
     orderkey) as managed tables, then joined WITHOUT a shuffle on either
     side — Spark recognizes the matching bucketing and plans a local
@@ -380,37 +352,28 @@ def lakehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning once at write time, amortize over every subsequent join.
     tests/test_plans.py asserts the no-Exchange property of this plan.
     """
-    db = _uniq("lh_bkt")
-    cat = LakehouseCatalog(spark)
-    try:
-        cat.create_namespace(db)
-        o = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority"
+    db = os.path.basename(root)
+    LakehouseCatalog(spark).create_namespace(db)
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
+    o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(
+        f"{db}.orders_bkt"
+    )
+    li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(
+        f"{db}.lineitem_bkt"
+    )
+    ob = spark.table(f"{db}.orders_bkt")
+    lb = spark.table(f"{db}.lineitem_bkt")
+    return (
+        lb.join(ob, lb.l_orderkey == ob.o_orderkey)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_lines"),
+            F.sum(F.col("l_quantity").cast("decimal(30,6)"))
+            .cast("double")
+            .alias("sum_qty"),
         )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_quantity"
-        )
-        o.write.bucketBy(8, "o_orderkey").sortBy("o_orderkey").saveAsTable(
-            f"{db}.orders_bkt"
-        )
-        li.write.bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(
-            f"{db}.lineitem_bkt"
-        )
-        ob = spark.table(f"{db}.orders_bkt")
-        lb = spark.table(f"{db}.lineitem_bkt")
-        out = (
-            lb.join(ob, lb.l_orderkey == ob.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_lines"),
-                F.sum(F.col("l_quantity").cast("decimal(30,6)"))
-                .cast("double")
-                .alias("sum_qty"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        cat.drop_namespace(db)
+    )
 
 
 @query(
@@ -421,7 +384,8 @@ def lakehouse_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "compaction", "maintenance"),
 )
-def lakehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_compaction(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Small-file compaction (the Iceberg rewrite_data_files analog): three
     fragmented append snapshots are rewritten into one coalesced overwrite
     snapshot; row content must be byte-identical to the source.
@@ -432,26 +396,23 @@ def lakehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     →write; only the metadata swap is driver-side.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_cmp_") as root:
-        t = SnapshotTable(spark, root)
-        # Three fragmented appends, split by key hash: hash thirds cover
-        # EVERY row — the previous per-status filters silently dropped
-        # NULL-status rows from the table (round-12 warehouse axis).
-        for i in range(3):
-            t.write(
-                o.filter(F.pmod(F.hash("o_orderkey"), 3) == i).repartition(6),
-                mode="append",
-            )
-        before = t.read()
-        compacted_id = t.write(before.coalesce(2), mode="overwrite")
-        log = {r["snapshot_id"]: r for r in t.metadata_log_entries().collect()}
-        assert log[compacted_id]["n_data_dirs"] == 1
-        out = (
-            t.read(compacted_id)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n"))
+    t = SnapshotTable(spark, root)
+    # Three fragmented appends, split by key hash: hash thirds cover
+    # EVERY row, NULL-status rows included.
+    for i in range(3):
+        t.write(
+            o.filter(F.pmod(F.hash("o_orderkey"), 3) == i).repartition(6),
+            mode="append",
         )
-        return out.localCheckpoint(eager=True)
+    before = t.read()
+    compacted_id = t.write(before.coalesce(2), mode="overwrite")
+    log = {r["snapshot_id"]: r for r in t.metadata_log_entries().collect()}
+    assert log[compacted_id]["n_data_dirs"] == 1
+    return (
+        t.read(compacted_id)
+        .groupBy("o_orderstatus")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
 
 
 @query(
@@ -473,7 +434,10 @@ def lakehouse_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "schema-evolution"),
 )
-def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_schema_evolution(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Schema evolution (Iceberg's flagship DDL: ALTER TABLE ADD COLUMN):
     write generation 1 without the column, ALTER TABLE ADD COLUMNS, append
     generation 2 with it — reads see the union schema with generation-1
@@ -485,45 +449,36 @@ def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema-projected at read time. At 100 TB that property — O(1) DDL, no
     data migration — is the reason to run a table format at all.
     """
-    db = _uniq("lh_ev")
+    db = os.path.basename(root)
     cat = LakehouseCatalog(spark)
-    try:
-        cat.create_namespace(db)
-        cat.create_table(
-            db, "orders_evolving", "o_orderkey BIGINT, o_totalprice DOUBLE"
+    cat.create_namespace(db)
+    cat.create_table(db, "orders_evolving", "o_orderkey BIGINT, o_totalprice DOUBLE")
+    o = load_table(spark, sf_dir, "orders")
+    spark.sql(
+        f"INSERT INTO spark_catalog.{db}.orders_evolving "
+        "SELECT o_orderkey, o_totalprice FROM {src} WHERE o_orderstatus = 'F'",
+        src=o,
+    )
+    spark.sql(
+        f"ALTER TABLE spark_catalog.{db}.orders_evolving "
+        "ADD COLUMNS (o_channel STRING)"
+    )
+    spark.sql(
+        f"INSERT INTO spark_catalog.{db}.orders_evolving "
+        "SELECT o_orderkey, o_totalprice, 'web' AS o_channel FROM {src} "
+        "WHERE o_orderstatus = 'O'",
+        src=o,
+    )
+    return (
+        cat.table(db, "orders_evolving")
+        .groupBy(F.coalesce(F.col("o_channel"), F.lit("unknown")).alias("channel"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            .cast("double")
+            .alias("sum_price"),
         )
-        o = load_table(spark, sf_dir, "orders")
-        o.createOrReplaceTempView("lh_ev_src")
-        spark.sql(
-            f"INSERT INTO spark_catalog.{db}.orders_evolving "
-            "SELECT o_orderkey, o_totalprice FROM lh_ev_src "
-            "WHERE o_orderstatus = 'F'"
-        )
-        spark.sql(
-            f"ALTER TABLE spark_catalog.{db}.orders_evolving "
-            "ADD COLUMNS (o_channel STRING)"
-        )
-        spark.sql(
-            f"INSERT INTO spark_catalog.{db}.orders_evolving "
-            "SELECT o_orderkey, o_totalprice, 'web' AS o_channel FROM lh_ev_src "
-            "WHERE o_orderstatus = 'O'"
-        )
-        out = (
-            cat.table(db, "orders_evolving")
-            .groupBy(
-                F.coalesce(F.col("o_channel"), F.lit("unknown")).alias("channel")
-            )
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        spark.catalog.dropTempView("lh_ev_src")
-        cat.drop_namespace(db)
+    )
 
 
 @query(
@@ -539,7 +494,10 @@ def lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "snapshots", "incremental", "cdc"),
 )
-def lakehouse_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_incremental_read(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Incremental (CDC-style) append scan: after three append commits,
     read ONLY the rows added after the first snapshot — the Iceberg
     ``start-snapshot-id``/``end-snapshot-id`` consumption pattern that
@@ -550,19 +508,17 @@ def lakehouse_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     v2+v3 rows. Overwrites in the range are rejected, as in Iceberg.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_inc_") as root:
-        t = SnapshotTable(spark, root)
-        v1 = t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
-        t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
-        v3 = t.write(o.filter(F.col("o_orderstatus") == "P"), mode="append")
-        delta = t.read_incremental(v1, v3)
-        out = delta.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
-        )
-        return out.localCheckpoint(eager=True)
+    t = SnapshotTable(spark, root)
+    v1 = t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
+    t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
+    v3 = t.write(o.filter(F.col("o_orderstatus") == "P"), mode="append")
+    delta = t.read_incremental(v1, v3)
+    return delta.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+        .cast("double")
+        .alias("sum_price"),
+    )
 
 
 @query(
@@ -594,7 +550,8 @@ def lakehouse_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("lakehouse", "snapshots", "cdc", "diff"),
     bench=True,
 )
-def lakehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_snapshot_diff(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Row-level diff between two table snapshots — the dataset-versioning
     audit: after a deterministic edit script (delete doc_id%17, revise
     doc_id%23, insert a row per doc_id%29), time-travel both versions and
@@ -613,46 +570,44 @@ def lakehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard audit trade.)
     """
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text", "source")
-    with tempfile.TemporaryDirectory(prefix="lh_diff_") as root:
-        t = SnapshotTable(spark, root)
-        v1 = t.write(d, mode="append")
-        t.delete_where(F.col("doc_id") % 17 == 0)
-        t.update_where(
-            F.col("doc_id") % 23 == 0,
-            {"text": F.concat(F.col("text"), F.lit(" [rev2]"))},
+    t = SnapshotTable(spark, root)
+    v1 = t.write(d, mode="append")
+    t.delete_where(F.col("doc_id") % 17 == 0)
+    t.update_where(
+        F.col("doc_id") % 23 == 0,
+        {"text": F.concat(F.col("text"), F.lit(" [rev2]"))},
+    )
+    inserts = d.filter(F.col("doc_id") % 29 == 0).select(
+        (F.col("doc_id") + 1000000).alias("doc_id"),
+        F.concat(F.lit("new in v2 "), F.col("doc_id").cast("string"))
+        .alias("text"),
+        "source",
+    )
+    t.write(inserts, mode="append")
+    old = t.read(v1).select(
+        F.col("doc_id").alias("k1"),
+        F.xxhash64("text").alias("h1"),
+        F.col("source").alias("s1"),
+    )
+    new = t.read().select(
+        F.col("doc_id").alias("k2"),
+        F.xxhash64("text").alias("h2"),
+        F.col("source").alias("s2"),
+    )
+    return (
+        old.join(new, old.k1 == new.k2, "full_outer")
+        .select(
+            F.coalesce("s1", "s2").alias("source"),
+            F.when(F.col("k2").isNull(), "deleted")
+            .when(F.col("k1").isNull(), "inserted")
+            .when(F.col("h1") != F.col("h2"), "updated")
+            .otherwise("unchanged")
+            .alias("change_type"),
         )
-        inserts = d.filter(F.col("doc_id") % 29 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
-            F.concat(F.lit("new in v2 "), F.col("doc_id").cast("string"))
-            .alias("text"),
-            "source",
-        )
-        t.write(inserts, mode="append")
-        old = t.read(v1).select(
-            F.col("doc_id").alias("k1"),
-            F.xxhash64("text").alias("h1"),
-            F.col("source").alias("s1"),
-        )
-        new = t.read().select(
-            F.col("doc_id").alias("k2"),
-            F.xxhash64("text").alias("h2"),
-            F.col("source").alias("s2"),
-        )
-        diff = (
-            old.join(new, old.k1 == new.k2, "full_outer")
-            .select(
-                F.coalesce("s1", "s2").alias("source"),
-                F.when(F.col("k2").isNull(), "deleted")
-                .when(F.col("k1").isNull(), "inserted")
-                .when(F.col("h1") != F.col("h2"), "updated")
-                .otherwise("unchanged")
-                .alias("change_type"),
-            )
-            .filter(F.col("change_type") != "unchanged")
-            .groupBy("change_type", "source")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-        )
-        return diff.localCheckpoint(eager=True)
+        .filter(F.col("change_type") != "unchanged")
+        .groupBy("change_type", "source")
+        .agg(F.count(F.lit(1)).alias("n_rows"))
+    )
 
 
 @query(
@@ -669,7 +624,10 @@ def lakehouse_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "partitioning", "hidden", "prune", "evolution"),
 )
-def lakehouse_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_partition_evolution(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Partition-spec evolution (Iceberg's no-rewrite re-partitioning):
     history is written under a years(o_orderdate) spec, the spec then
     evolves to months(o_orderdate) — a metadata-only change — and new data
@@ -686,29 +644,27 @@ def lakehouse_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     o = load_table(spark, sf_dir, "orders")
     cutoff = "o_orderdate < TIMESTAMP '1996-01-01 00:00:00'"
-    with tempfile.TemporaryDirectory(prefix="lh_specevo_") as root:
-        from biglake_iceberg_python_spark.lakehouse.partitioning import (
-            MonthsTransform,
-            SpecEvolvedTable,
-            YearsTransform,
-        )
+    from biglake_iceberg_python_spark.lakehouse.partitioning import (
+        MonthsTransform,
+        SpecEvolvedTable,
+        YearsTransform,
+    )
 
-        t = SpecEvolvedTable(spark, root)
-        t.evolve(YearsTransform("o_orderdate"))
-        t.write(o.filter(cutoff))
-        t.evolve(MonthsTransform("o_orderdate"))
-        t.write(o.filter(f"NOT ({cutoff})"))
-        out = (
-            t.scan_range("1995-07-01", "1996-07-01")
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
+    t = SpecEvolvedTable(spark, root)
+    t.evolve(YearsTransform("o_orderdate"))
+    t.write(o.filter(cutoff))
+    t.evolve(MonthsTransform("o_orderdate"))
+    t.write(o.filter(f"NOT ({cutoff})"))
+    return (
+        t.scan_range("1995-07-01", "1996-07-01")
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            .cast("double")
+            .alias("sum_price"),
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -725,7 +681,10 @@ def lakehouse_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
     tags=("lakehouse", "partitioning", "hidden", "prune"),
 )
-def lakehouse_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_hidden_partitioning(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Iceberg-style hidden partitioning end-to-end: write orders
     partitioned by the engine-derived months(o_orderdate) transform, then
     answer a date-range query naming ONLY o_orderdate — the engine projects
@@ -740,25 +699,23 @@ def lakehouse_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame
     orders — pruning must be invisible in the result.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_hidpart_") as root:
-        from biglake_iceberg_python_spark.lakehouse.partitioning import (
-            HiddenPartitionedTable,
-            MonthsTransform,
-        )
+    from biglake_iceberg_python_spark.lakehouse.partitioning import (
+        HiddenPartitionedTable,
+        MonthsTransform,
+    )
 
-        t = HiddenPartitionedTable(spark, root, MonthsTransform("o_orderdate"))
-        t.write(o)
-        out = (
-            t.scan_range("1998-03-15", "1998-09-15")
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
+    t = HiddenPartitionedTable(spark, root, MonthsTransform("o_orderdate"))
+    t.write(o)
+    return (
+        t.scan_range("1998-03-15", "1998-09-15")
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            .cast("double")
+            .alias("sum_price"),
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -775,7 +732,10 @@ def lakehouse_hidden_partitioning(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
     tags=("lakehouse", "snapshots", "stats", "prune"),
 )
-def lakehouse_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_manifest_pruning(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Manifest-level min/max pruning: orders land as four year-sliced
     append commits, each commit's parquet-footer min/max riding the
     metadata log (the manifest role); a date-range scan then opens ONLY
@@ -790,24 +750,22 @@ def lakehouse_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     invisible in the result.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_manif_") as root:
-        t = SnapshotTable(spark, root)
-        y = F.year("o_orderdate")
-        for lo, hi in [(0, 1996), (1996, 1997), (1997, 1998), (1998, 9999)]:
-            t.write(o.filter((y >= lo) & (y < hi)), mode="append")
-        out = (
-            t.scan_where(
-                "o_orderdate", "1997-03-01T00:00:00", "1997-09-01T00:00:00"
-            )
-            .groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
+    t = SnapshotTable(spark, root)
+    y = F.year("o_orderdate")
+    for lo, hi in [(0, 1996), (1996, 1997), (1997, 1998), (1998, 9999)]:
+        t.write(o.filter((y >= lo) & (y < hi)), mode="append")
+    return (
+        t.scan_where(
+            "o_orderdate", "1997-03-01T00:00:00", "1997-09-01T00:00:00"
         )
-        return out.localCheckpoint(eager=True)
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            .cast("double")
+            .alias("sum_price"),
+        )
+    )
 
 
 @query(
@@ -823,7 +781,10 @@ def lakehouse_manifest_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "snapshots", "maintenance", "expire"),
 )
-def lakehouse_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_expire_snapshots(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Snapshot expiry (Iceberg ``expireSnapshots``): three appends and a
     COW overwrite leave four snapshots; expiring to the newest one must
     drop all three append entries AND physically remove their three data
@@ -838,26 +799,24 @@ def lakehouse_expire_snapshots(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(dropped dirs) driver-side metadata + deletes, never a data scan.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_expire_") as root:
-        t = SnapshotTable(spark, root)
-        for s in ("O", "P", "F"):
-            t.write(o.filter(F.col("o_orderstatus") == s), mode="append")
-        t.write(o.filter(F.col("o_orderstatus") == "F"), mode="overwrite")
-        acct = t.expire_snapshots(keep_last=1)
-        state = t.read().agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
-        )
-        out = state.select(
-            F.lit(acct["expired"]).cast("bigint").alias("expired"),
-            F.lit(acct["dirs_removed"]).cast("bigint").alias("dirs_removed"),
-            F.lit(len(t._read_log())).cast("bigint").alias("n_snapshots"),
-            "n_rows",
-            "sum_price",
-        )
-        return out.localCheckpoint(eager=True)
+    t = SnapshotTable(spark, root)
+    for s in ("O", "P", "F"):
+        t.write(o.filter(F.col("o_orderstatus") == s), mode="append")
+    t.write(o.filter(F.col("o_orderstatus") == "F"), mode="overwrite")
+    acct = t.expire_snapshots(keep_last=1)
+    state = t.read().agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+        .cast("double")
+        .alias("sum_price"),
+    )
+    return state.select(
+        F.lit(acct["expired"]).cast("bigint").alias("expired"),
+        F.lit(acct["dirs_removed"]).cast("bigint").alias("dirs_removed"),
+        F.lit(len(t._read_log())).cast("bigint").alias("n_snapshots"),
+        "n_rows",
+        "sum_price",
+    )
 
 
 def _zorder_oracle() -> str:
@@ -948,7 +907,8 @@ def zorder_envelope_keep(table: DataFrame, box: DataFrame) -> DataFrame:
     oracle=_zorder_oracle(),
     tags=("lakehouse", "zorder", "layout", "prune", "maintenance"),
 )
-def lakehouse_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_zorder_layout(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Z-order data layout (Iceberg/Delta ``OPTIMIZE ... ZORDER BY``):
     cluster lineitem files on the bit-interleave of (l_partkey, l_suppkey)
     so a 2-D box predicate prunes files on BOTH dimensions at once — a
@@ -1010,66 +970,64 @@ def lakehouse_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     zed = coded.withColumn("file_id", F.shiftright(z, 10))
 
-    with tempfile.TemporaryDirectory(prefix="lh_zorder_") as root:
-        (
-            zed.drop("plo", "phi", "slo", "shi", "p8", "s8")
-            .write.partitionBy("file_id")
-            .parquet(root, mode="overwrite")
-        )
-        # Schema pinned from the written frame — file inference fails on
-        # a 0-row write (round-10 empty-table parity axis).
-        table = spark.read.schema(
-            zed.drop("plo", "phi", "slo", "shi", "p8", "s8").schema
-        ).parquet(root)
+    (
+        zed.drop("plo", "phi", "slo", "shi", "p8", "s8")
+        .write.partitionBy("file_id")
+        .parquet(root, mode="overwrite")
+    )
+    # Schema pinned from the written frame — file inference fails on
+    # a 0-row write.
+    table = spark.read.schema(
+        zed.drop("plo", "phi", "slo", "shi", "p8", "s8").schema
+    ).parquet(root)
 
-        # The query box as a broadcast 1-row table (derived from stats,
-        # never collected per-file).
-        box = stats.select(
-            (F.col("plo") + 0.55 * (F.col("phi") - F.col("plo"))).alias("p1"),
-            (F.col("plo") + 0.80 * (F.col("phi") - F.col("plo"))).alias("p2"),
-            (F.col("slo") + 0.25 * (F.col("shi") - F.col("slo"))).alias("q1"),
-            (F.col("slo") + 0.45 * (F.col("shi") - F.col("slo"))).alias("q2"),
-        )
+    # The query box as a broadcast 1-row table (derived from stats,
+    # never collected per-file).
+    box = stats.select(
+        (F.col("plo") + 0.55 * (F.col("phi") - F.col("plo"))).alias("p1"),
+        (F.col("plo") + 0.80 * (F.col("phi") - F.col("plo"))).alias("p2"),
+        (F.col("slo") + 0.25 * (F.col("shi") - F.col("slo"))).alias("q1"),
+        (F.col("slo") + 0.45 * (F.col("shi") - F.col("slo"))).alias("q2"),
+    )
 
-        # Planning-time metadata, distributed: per-file envelopes stay in a
-        # DataFrame; the intersect decision is a broadcast box join.
-        # (n_files rows; checkpointed because it is read twice below.)
-        env_keep = zorder_envelope_keep(table, box).localCheckpoint(
-            eager=True
-        )
-        acct = env_keep.agg(
-            F.count(F.lit(1)).alias("n_total"),
-            F.sum(F.col("keep").cast("long")).alias("n_keep"),
-        ).collect()[0]
-        # Only the SURVIVING file ids cross to the driver.
-        keep = [r["file_id"] for r in env_keep.filter("keep").collect()]
+    # Planning-time metadata, distributed: per-file envelopes stay in a
+    # DataFrame; the intersect decision is a broadcast box join.
+    # (n_files rows; checkpointed because it is read twice below.)
+    env_keep = zorder_envelope_keep(table, box).localCheckpoint(
+        eager=True
+    )
+    acct = env_keep.agg(
+        F.count(F.lit(1)).alias("n_total"),
+        F.sum(F.col("keep").cast("long")).alias("n_keep"),
+    ).collect()[0]
+    # Only the SURVIVING file ids cross to the driver.
+    keep = [r["file_id"] for r in env_keep.filter("keep").collect()]
 
-        hits = (
-            table.filter(F.col("file_id").isin(keep))  # partition pruning
-            .crossJoin(F.broadcast(box))
-            .filter(
-                F.col("l_partkey").cast("double").between(
-                    F.col("p1"), F.col("p2")
-                )
-                & F.col("l_suppkey").cast("double").between(
-                    F.col("q1"), F.col("q2")
-                )
+    return (
+        table.filter(F.col("file_id").isin(keep))  # partition pruning
+        .crossJoin(F.broadcast(box))
+        .filter(
+            F.col("l_partkey").cast("double").between(
+                F.col("p1"), F.col("p2")
             )
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                dsum(
-                    F.col("l_extendedprice") * (1 - F.col("l_discount")),
-                    "sum_revenue",
-                ),
+            & F.col("l_suppkey").cast("double").between(
+                F.col("q1"), F.col("q2")
             )
-            .select(
-                F.lit(acct["n_total"]).cast("bigint").alias("n_files_total"),
-                F.lit(acct["n_keep"]).cast("bigint").alias("n_files_scanned"),
-                "n_rows",
+        )
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            dsum(
+                F.col("l_extendedprice") * (1 - F.col("l_discount")),
                 "sum_revenue",
-            )
+            ),
         )
-        return hits.localCheckpoint(eager=True)
+        .select(
+            F.lit(acct["n_total"]).cast("bigint").alias("n_files_total"),
+            F.lit(acct["n_keep"]).cast("bigint").alias("n_files_scanned"),
+            "n_rows",
+            "sum_revenue",
+        )
+    )
 
 
 @query(
@@ -1087,7 +1045,8 @@ def lakehouse_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "branch", "tag", "refs"),
 )
-def lakehouse_branch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_branch_tags(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Iceberg-style branches and tags on the snapshot layer (the refs
     surface: ``CREATE TAG`` / ``CREATE BRANCH`` / write-to-ref /
     ``VERSION AS OF 'ref'``): v1 holds 'F' orders and gets tag ``v1`` and
@@ -1104,24 +1063,22 @@ def lakehouse_branch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     files are shared across branches, never copied.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_refs_") as root:
-        t = SnapshotTable(spark, root)
-        t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
-        t.create_tag("v1")
-        t.create_branch("audit")
-        t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
-        t.write(
-            o.filter(F.col("o_orderstatus") == "P"),
-            mode="append",
-            branch="audit",
-        )
-        row = spark.range(1).select(
-            F.lit(t.read_ref("main").count()).cast("long").alias("main_rows"),
-            F.lit(t.read_ref("v1").count()).cast("long").alias("tag_rows"),
-            F.lit(t.read_ref("audit").count()).cast("long").alias("branch_rows"),
-            F.lit(t.refs_entries().count()).cast("long").alias("n_refs"),
-        )
-        return row.localCheckpoint(eager=True)
+    t = SnapshotTable(spark, root)
+    t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
+    t.create_tag("v1")
+    t.create_branch("audit")
+    t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
+    t.write(
+        o.filter(F.col("o_orderstatus") == "P"),
+        mode="append",
+        branch="audit",
+    )
+    return spark.range(1).select(
+        F.lit(t.read_ref("main").count()).cast("long").alias("main_rows"),
+        F.lit(t.read_ref("v1").count()).cast("long").alias("tag_rows"),
+        F.lit(t.read_ref("audit").count()).cast("long").alias("branch_rows"),
+        F.lit(t.refs_entries().count()).cast("long").alias("n_refs"),
+    )
 
 
 @query(
@@ -1129,7 +1086,7 @@ def lakehouse_branch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     WITH cust AS (
       -- keyless rows cannot be SCD-tracked and also sit exactly on the
-      -- NOT-IN-vs-anti-join 3VL divergence (round-12 dims axis): both
+      -- NOT-IN-vs-anti-join 3VL divergence: both
       -- engines dead-letter them before versioning
       SELECT * FROM customer WHERE c_custkey IS NOT NULL
     ), chg AS (
@@ -1156,7 +1113,8 @@ def lakehouse_branch_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "scd2", "dimension"),
 )
-def lakehouse_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_scd2_dimension(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Slowly-changing-dimension Type 2 maintenance: apply a change batch
     to a versioned dimension by CLOSING the old row (is_current=false,
     valid_to set) and INSERTING the new version, preserving full history —
@@ -1170,7 +1128,7 @@ def lakehouse_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: changed keys broadcast into the dimension scan (changes
     ≪ dimension), the union is map-side, one accounting shuffle.
     """
-    # keyless rows dead-lettered — see the oracle CTE note (round-12)
+    # keyless rows dead-lettered — see the oracle CTE note
     c = load_table(spark, sf_dir, "customer").filter(
         F.col("c_custkey").isNotNull()
     )
@@ -1201,18 +1159,16 @@ def lakehouse_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("is_current"),
     )
     dim = unchanged.unionByName(closed).unionByName(opened)
-    with tempfile.TemporaryDirectory(prefix="lh_scd2_") as root:
-        t = SnapshotTable(spark, root)
-        t.write(dim, mode="overwrite")
-        out = (
-            t.read()
-            .groupBy("c_mktsegment")
-            .agg(
-                F.count(F.when(F.col("is_current"), 1)).alias("n_current"),
-                F.count(F.when(~F.col("is_current"), 1)).alias("n_history"),
-            )
+    t = SnapshotTable(spark, root)
+    t.write(dim, mode="overwrite")
+    return (
+        t.read()
+        .groupBy("c_mktsegment")
+        .agg(
+            F.count(F.when(F.col("is_current"), 1)).alias("n_current"),
+            F.count(F.when(~F.col("is_current"), 1)).alias("n_history"),
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -1241,7 +1197,8 @@ def lakehouse_scd2_dimension(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "cdc", "merge"),
 )
-def lakehouse_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_cdc_apply(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """CDC apply: fold a change batch carrying explicit I/U/D operations
     (the Debezium/stream-capture shape) into a snapshot table — deletes
     anti-join out, updates overwrite matched rows, inserts append — as ONE
@@ -1272,18 +1229,16 @@ def lakehouse_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderpriority", F.col("o_totalprice").alias("price")
     )
     final = upd.unionByName(ins)
-    with tempfile.TemporaryDirectory(prefix="lh_cdc_") as root:
-        t = SnapshotTable(spark, root)
-        t.write(final, mode="overwrite")
-        out = (
-            t.read()
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                dsum(F.col("price"), "sum_price"),
-            )
+    t = SnapshotTable(spark, root)
+    t.write(final, mode="overwrite")
+    return (
+        t.read()
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            dsum(F.col("price"), "sum_price"),
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -1306,7 +1261,8 @@ def lakehouse_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "mor", "delete", "maintenance"),
 )
-def lakehouse_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_mor_delete(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Merge-on-read DELETE (Iceberg v2's point-delete path): v1/v2 append
     'F' then 'O' orders; an EQUALITY-DELETE file tombstones every 7th
     order key WITHOUT rewriting data; v4 appends 'P' orders AFTER the
@@ -1321,26 +1277,22 @@ def lakehouse_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     per delete file until compaction folds them away.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_mor_") as root:
-        t = SnapshotTable(spark, root)
-        t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
-        t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
-        t.delete_where_mor(F.col("o_orderkey") % 7 == 0, ["o_orderkey"])
-        t.write(o.filter(F.col("o_orderstatus") == "P"), mode="append")
-        mor = (
-            t.read()
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_rows_mor"))
-            .localCheckpoint(eager=True)
-        )
-        t.rewrite_mor()
-        compacted = (
-            t.read()
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_rows_compacted"))
-            .localCheckpoint(eager=True)
-        )
-        return mor.join(compacted, "o_orderstatus")
+    t = SnapshotTable(spark, root)
+    t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
+    t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
+    t.delete_where_mor(F.col("o_orderkey") % 7 == 0, ["o_orderkey"])
+    t.write(o.filter(F.col("o_orderstatus") == "P"), mode="append")
+    # A read resolves its files when it is built, and the compaction only
+    # adds files, so the merge-on-read frame still reads the pre-compaction
+    # table when it runs.
+    mor = t.read().groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_rows_mor"))
+    t.rewrite_mor()
+    compacted = (
+        t.read()
+        .groupBy("o_orderstatus")
+        .agg(F.count(F.lit(1)).alias("n_rows_compacted"))
+    )
+    return mor.join(compacted, "o_orderstatus")
 
 
 @query(
@@ -1358,7 +1310,8 @@ def lakehouse_mor_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "rollback", "maintenance"),
 )
-def lakehouse_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_rollback(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Snapshot ROLLBACK (Iceberg's rollback_to_snapshot): v1 loads 'F'
     orders, v2 appends 'O' orders — the \"bad write\" — and the rollback
     commits v3 pointing at v1's data: current reads instantly see the
@@ -1370,24 +1323,22 @@ def lakehouse_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     table.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="lh_rb_") as root:
-        t = SnapshotTable(spark, root)
-        v1 = t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
-        v2 = t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
-        t.rollback(v1)
-        row = spark.range(1).select(
-            F.lit(t.read().count()).cast("long").alias("rows_after_rollback"),
-            F.lit(t.read(v2).count()).cast("long").alias(
-                "rows_before_rollback"
-            ),
-            F.lit(t.read_incremental(v1, v2).count()).cast("long").alias(
-                "rows_bad_still_readable"
-            ),
-            F.lit(t.metadata_log_entries().count())
-            .cast("long")
-            .alias("n_snapshots"),
-        )
-        return row.localCheckpoint(eager=True)
+    t = SnapshotTable(spark, root)
+    v1 = t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
+    v2 = t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
+    t.rollback(v1)
+    return spark.range(1).select(
+        F.lit(t.read().count()).cast("long").alias("rows_after_rollback"),
+        F.lit(t.read(v2).count()).cast("long").alias(
+            "rows_before_rollback"
+        ),
+        F.lit(t.read_incremental(v1, v2).count()).cast("long").alias(
+            "rows_bad_still_readable"
+        ),
+        F.lit(t.metadata_log_entries().count())
+        .cast("long")
+        .alias("n_snapshots"),
+    )
 
 
 @query(
@@ -1431,7 +1382,10 @@ def lakehouse_rollback(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "wap", "branch", "audit", "publish"),
 )
-def lakehouse_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_write_audit_publish(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """End-to-end WRITE-AUDIT-PUBLISH — the canonical Iceberg production
     ingestion pattern (stage on a branch, validate, fast-forward main;
     cf. the reference's Iceberg tables, which exist precisely so commits
@@ -1453,65 +1407,61 @@ def lakehouse_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     o = load_table(spark, sf_dir, "orders")
     audit_rule = F.col("o_totalprice") <= 0
-    with tempfile.TemporaryDirectory(prefix="lh_wap_") as root:
-        t = SnapshotTable(spark, root)
-        base_id = t.write(o.filter(F.col("o_orderstatus") == "O"))
-        base_rows = t.read().count()
-        t.create_branch("staging")
+    t = SnapshotTable(spark, root)
+    base_id = t.write(o.filter(F.col("o_orderstatus") == "O"))
+    base_rows = t.read().count()
+    t.create_branch("staging")
 
-        # WRITE: stage batch A on the branch; main is untouched.
-        a_id = t.write(
-            o.filter(F.col("o_orderstatus") == "F"),
-            mode="append",
-            branch="staging",
-        )
-        # AUDIT: scan only what the staged snapshot added.
-        violations_a = (
-            t.read_incremental(base_id, a_id).filter(audit_rule).count()
-        )
-        # PUBLISH: pointer move, no data copied. REJECT must also reset
-        # staging — otherwise a failed batch A stays staged and batch B's
-        # incremental audit re-scans A's rows (round-12 warehouse axis:
-        # the natural corpus never fails batch A, so the missing reset
-        # was latent until degenerate prices exercised this path).
-        if violations_a == 0:
-            t.fast_forward("main", "staging")
-        else:
-            t.fast_forward("staging", "main")
-        main_head = t.current_snapshot_id()
+    # WRITE: stage batch A on the branch; main is untouched.
+    a_id = t.write(
+        o.filter(F.col("o_orderstatus") == "F"),
+        mode="append",
+        branch="staging",
+    )
+    # AUDIT: scan only what the staged snapshot added.
+    violations_a = (
+        t.read_incremental(base_id, a_id).filter(audit_rule).count()
+    )
+    # PUBLISH: pointer move, no data copied. REJECT must also reset
+    # staging — otherwise a failed batch A stays staged and batch B's
+    # incremental audit re-scans A's rows.
+    if violations_a == 0:
+        t.fast_forward("main", "staging")
+    else:
+        t.fast_forward("staging", "main")
+    main_head = t.current_snapshot_id()
 
-        # Batch B arrives through a buggy upstream: odd keys negated.
-        bad_batch = o.filter(F.col("o_orderstatus") == "P").withColumn(
-            "o_totalprice",
-            F.when(
-                F.col("o_orderkey") % 2 == 1, -F.col("o_totalprice")
-            ).otherwise(F.col("o_totalprice")),
-        )
-        b_id = t.write(bad_batch, mode="append", branch="staging")
-        # AUDIT exactly what the staged commit ADDED: anchor at the last
-        # snapshot id before b (a_id), not at main — read_incremental is
-        # an id-interval scan over the linear log, so a REJECTED batch A
-        # still occupies (main, b] and would pollute a main-anchored
-        # audit (round-12 warehouse axis; latent while A always passed).
-        violations_b = (
-            t.read_incremental(a_id, b_id).filter(audit_rule).count()
-        )
-        if violations_b == 0:
-            t.fast_forward("main", "staging")
-            staging_after = t.read_ref("staging").count()
-        else:
-            # REJECT: reset staging to main, abandoning the bad commit.
-            t.fast_forward("staging", "main")
-            staging_after = t.read_ref("staging").count()
+    # Batch B arrives through a buggy upstream: odd keys negated.
+    bad_batch = o.filter(F.col("o_orderstatus") == "P").withColumn(
+        "o_totalprice",
+        F.when(
+            F.col("o_orderkey") % 2 == 1, -F.col("o_totalprice")
+        ).otherwise(F.col("o_totalprice")),
+    )
+    b_id = t.write(bad_batch, mode="append", branch="staging")
+    # AUDIT exactly what the staged commit ADDED: anchor at the last
+    # snapshot id before b (a_id), not at main — read_incremental is
+    # an id-interval scan over the linear log, so a REJECTED batch A
+    # still occupies (main, b] and would pollute a main-anchored
+    # audit.
+    violations_b = (
+        t.read_incremental(a_id, b_id).filter(audit_rule).count()
+    )
+    if violations_b == 0:
+        t.fast_forward("main", "staging")
+        staging_after = t.read_ref("staging").count()
+    else:
+        # REJECT: reset staging to main, abandoning the bad commit.
+        t.fast_forward("staging", "main")
+        staging_after = t.read_ref("staging").count()
 
-        row = spark.range(1).select(
-            F.lit(base_rows).cast("long").alias("base_rows"),
-            F.lit(violations_a).cast("long").alias("violations_a"),
-            F.lit(violations_b).cast("long").alias("violations_b"),
-            F.lit(t.read_ref("main").count()).cast("long").alias("main_rows"),
-            F.lit(staging_after).cast("long").alias("staging_rows_after_reset"),
-        )
-        return row.localCheckpoint(eager=True)
+    return spark.range(1).select(
+        F.lit(base_rows).cast("long").alias("base_rows"),
+        F.lit(violations_a).cast("long").alias("violations_a"),
+        F.lit(violations_b).cast("long").alias("violations_b"),
+        F.lit(t.read_ref("main").count()).cast("long").alias("main_rows"),
+        F.lit(staging_after).cast("long").alias("staging_rows_after_reset"),
+    )
 
 
 @query(
@@ -1526,7 +1476,10 @@ def lakehouse_write_audit_publish(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
     tags=("lakehouse", "matview", "incremental", "ivm"),
 )
-def lakehouse_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_incremental_matview(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Incremental MATERIALIZED-VIEW maintenance over the snapshot layer
     (the continuous-aggregate / incremental-refresh pattern): a monthly
     rollup of orders is built once from the base load, then kept current
@@ -1554,70 +1507,68 @@ def lakehouse_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
 
     # Dateless orders (NULL o_orderdate, a real ingest shape) must not
     # vanish from the view: plain year predicates are all NULL for them,
-    # so they'd be written to NO batch (round-12 warehouse axis). They
-    # ride with the base load, and the view carries a NULL month group.
+    # so they'd be written to NO batch. They ride with the base load,
+    # and the view carries a NULL month group.
     yr = F.coalesce(F.year("o_orderdate"), F.lit(0))
-    with tempfile.TemporaryDirectory(prefix="lh_ivm_") as root:
-        src = SnapshotTable(spark, os.path.join(root, "src"))
-        mv = SnapshotTable(spark, os.path.join(root, "mv"))
-        head = src.write(o.filter(yr < 1996))
-        mv.write(rollup(src.read()))
-        for batch_cond in (yr == 1996, yr >= 1997):
-            head_new = src.write(o.filter(batch_cond), mode="append")
-            delta = rollup(src.read_incremental(head, head_new)).select(
-                F.col("month").alias("month_d"),
-                F.col("n_orders").alias("n_orders_d"),
-                F.col("sum_price").alias("sum_price_d"),
-            )
-            cur = mv.read()
-            # NULL-SAFE merge key: a plain equi-join can never match the
-            # NULL month group, so it would DUPLICATE per refresh instead
-            # of accumulating (round-12 warehouse axis).
-            merged = (
-                cur.join(
-                    delta,
-                    cur["month"].eqNullSafe(delta["month_d"]),
-                    "full_outer",
-                )
-                .select(
-                    F.coalesce(cur["month"], delta["month_d"]).alias("month"),
-                    (
-                        F.coalesce(cur["n_orders"], F.lit(0))
-                        + F.coalesce(delta["n_orders_d"], F.lit(0))
-                    ).alias("n_orders"),
-                    # SUM-combine semantics, not plain +: a partial that is
-                    # NULL (all contributing prices NULL) is SKIPPED, and
-                    # the result is NULL only when BOTH partials are
-                    # NULL/absent — coalescing NULL to 0 unconditionally
-                    # would surface an all-NULL month as 0.0 while the
-                    # oracle's SUM(decimal) is NULL (round-13 ADVICE).
-                    F.when(
-                        cur["sum_price"].isNull()
-                        & delta["sum_price_d"].isNull(),
-                        F.lit(None).cast("decimal(30,6)"),
-                    )
-                    .otherwise(
-                        F.coalesce(
-                            cur["sum_price"],
-                            F.lit(0).cast("decimal(30,6)"),
-                        )
-                        + F.coalesce(
-                            delta["sum_price_d"],
-                            F.lit(0).cast("decimal(30,6)"),
-                        )
-                    )
-                    .cast("decimal(30,6)")
-                    .alias("sum_price"),
-                )
-            )
-            mv.write(merged, mode="overwrite")
-            head = head_new
-        out = mv.read().select(
-            "month",
-            F.col("n_orders").cast("long").alias("n_orders"),
-            F.col("sum_price").cast("double").alias("sum_price"),
+    src = SnapshotTable(spark, os.path.join(root, "src"))
+    mv = SnapshotTable(spark, os.path.join(root, "mv"))
+    head = src.write(o.filter(yr < 1996))
+    mv.write(rollup(src.read()))
+    for batch_cond in (yr == 1996, yr >= 1997):
+        head_new = src.write(o.filter(batch_cond), mode="append")
+        delta = rollup(src.read_incremental(head, head_new)).select(
+            F.col("month").alias("month_d"),
+            F.col("n_orders").alias("n_orders_d"),
+            F.col("sum_price").alias("sum_price_d"),
         )
-        return out.localCheckpoint(eager=True)
+        cur = mv.read()
+        # NULL-SAFE merge key: a plain equi-join can never match the
+        # NULL month group, so it would DUPLICATE per refresh instead
+        # of accumulating.
+        merged = (
+            cur.join(
+                delta,
+                cur["month"].eqNullSafe(delta["month_d"]),
+                "full_outer",
+            )
+            .select(
+                F.coalesce(cur["month"], delta["month_d"]).alias("month"),
+                (
+                    F.coalesce(cur["n_orders"], F.lit(0))
+                    + F.coalesce(delta["n_orders_d"], F.lit(0))
+                ).alias("n_orders"),
+                # SUM-combine semantics, not plain +: a partial that is
+                # NULL (all contributing prices NULL) is SKIPPED, and
+                # the result is NULL only when BOTH partials are
+                # NULL/absent — coalescing NULL to 0 unconditionally
+                # would surface an all-NULL month as 0.0 while the
+                # oracle's SUM(decimal) is NULL.
+                F.when(
+                    cur["sum_price"].isNull()
+                    & delta["sum_price_d"].isNull(),
+                    F.lit(None).cast("decimal(30,6)"),
+                )
+                .otherwise(
+                    F.coalesce(
+                        cur["sum_price"],
+                        F.lit(0).cast("decimal(30,6)"),
+                    )
+                    + F.coalesce(
+                        delta["sum_price_d"],
+                        F.lit(0).cast("decimal(30,6)"),
+                    )
+                )
+                .cast("decimal(30,6)")
+                .alias("sum_price"),
+            )
+        )
+        mv.write(merged, mode="overwrite")
+        head = head_new
+    return mv.read().select(
+        "month",
+        F.col("n_orders").cast("long").alias("n_orders"),
+        F.col("sum_price").cast("double").alias("sum_price"),
+    )
 
 
 @query(
@@ -1639,7 +1590,8 @@ def lakehouse_incremental_matview(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
     tags=("lakehouse", "statistics", "cbo"),
 )
-def lakehouse_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_analyze_stats(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """ANALYZE TABLE → catalog statistics round-trip: ingest orders into a
     catalog table, compute table + column statistics, and read them BACK
     FROM THE CATALOG (`DESCRIBE EXTENDED <table> <col>`), emitting min /
@@ -1658,41 +1610,36 @@ def lakehouse_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-path cost.
     """
     o = load_table(spark, sf_dir, "orders")
-    tname = _uniq("lh_stats_orders")
-    with tempfile.TemporaryDirectory(prefix="lh_stats_") as root:
-        try:
-            o.write.option("path", os.path.join(root, "t")).saveAsTable(tname)
-            spark.sql(
-                f"ANALYZE TABLE {tname} COMPUTE STATISTICS "
-                "FOR COLUMNS o_orderkey, o_custkey"
-            )
-            rows = []
-            n_rows = None
-            for line in spark.sql(f"DESCRIBE TABLE EXTENDED {tname}").collect():
-                if line["col_name"] == "Statistics":
-                    # "<bytes> bytes, <rows> rows"
-                    n_rows = int(line["data_type"].split(",")[1].split()[0])
-            assert n_rows is not None, "ANALYZE did not record a row count"
-            for c in ("o_custkey", "o_orderkey"):
-                d = {
-                    r["info_name"]: r["info_value"]
-                    for r in spark.sql(f"DESCRIBE EXTENDED {tname} {c}").collect()
-                }
-                # ANALYZE on a 0-row table records min/max as the string
-                # 'NULL' — surface them as real NULLs, matching the
-                # oracle's MIN/MAX over zero rows (round-10 parity axis).
-                stat = lambda v: None if v == "NULL" else int(v)  # noqa: E731
-                rows.append(
-                    (c, stat(d["min"]), stat(d["max"]), int(d["num_nulls"]), n_rows)
-                )
-            out = spark.createDataFrame(
-                rows,
-                "col_name string, min_val long, max_val long, "
-                "null_count long, row_count long",
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            spark.sql(f"DROP TABLE IF EXISTS {tname}")
+    db = os.path.basename(root)
+    tname = f"{db}.orders"
+    LakehouseCatalog(spark).create_namespace(db)
+    o.write.option("path", os.path.join(root, "t")).saveAsTable(tname)
+    spark.sql(
+        f"ANALYZE TABLE {tname} COMPUTE STATISTICS "
+        "FOR COLUMNS o_orderkey, o_custkey"
+    )
+    rows = []
+    n_rows = None
+    for line in spark.sql(f"DESCRIBE TABLE EXTENDED {tname}").collect():
+        if line["col_name"] == "Statistics":
+            # "<bytes> bytes, <rows> rows"
+            n_rows = int(line["data_type"].split(",")[1].split()[0])
+    assert n_rows is not None, "ANALYZE did not record a row count"
+    for c in ("o_custkey", "o_orderkey"):
+        d = {
+            r["info_name"]: r["info_value"]
+            for r in spark.sql(f"DESCRIBE EXTENDED {tname} {c}").collect()
+        }
+        # ANALYZE on a 0-row table records min/max as the string 'NULL' —
+        # surface them as real NULLs, matching the oracle's MIN/MAX over
+        # zero rows.
+        stat = lambda v: None if v == "NULL" else int(v)  # noqa: E731
+        rows.append((c, stat(d["min"]), stat(d["max"]), int(d["num_nulls"]), n_rows))
+    return spark.createDataFrame(
+        rows,
+        "col_name string, min_val long, max_val long, "
+        "null_count long, row_count long",
+    )
 
 
 @query(
@@ -1714,8 +1661,9 @@ def lakehouse_analyze_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "sink", "partitioned"),
 )
+@scratch
 def lakehouse_dynamic_partition_overwrite(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, root: str
 ) -> DataFrame:
     """Dynamic partition overwrite — the production incremental-sink
     semantic: INSERT OVERWRITE with
@@ -1737,40 +1685,35 @@ def lakehouse_dynamic_partition_overwrite(
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority"
     )
-    tname = _uniq("lh_dpo_orders")
+    db = os.path.basename(root)
+    tname = f"{db}.orders"
     dynamic = {"spark.sql.sources.partitionOverwriteMode": "dynamic"}
-    with tempfile.TemporaryDirectory(prefix="lh_dpo_") as root:
-        try:
-            (
-                o.write.partitionBy("o_orderstatus")
-                .option("path", os.path.join(root, "t"))
-                .saveAsTable(tname)
-            )
-            batch = o.filter(F.col("o_orderstatus") == "O").withColumn(
-                "o_orderpriority", F.lit("X-REWRITTEN")
-            )
-            batch.createOrReplaceTempView("lh_dpo_batch")
-            with session_conf(spark, dynamic):
-                spark.sql(
-                    f"INSERT OVERWRITE TABLE {tname} "
-                    "SELECT o_orderkey, o_orderpriority, o_orderstatus "
-                    "FROM lh_dpo_batch"
-                )
-            out = (
-                spark.table(tname)
-                .groupBy("o_orderstatus")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count(
-                        F.when(F.col("o_orderpriority") == "X-REWRITTEN", 1)
-                    ).alias("n_rewritten"),
-                    F.sum("o_orderkey").cast("long").alias("key_sum"),
-                )
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            spark.catalog.dropTempView("lh_dpo_batch")
-            spark.sql(f"DROP TABLE IF EXISTS {tname}")
+    LakehouseCatalog(spark).create_namespace(db)
+    (
+        o.write.partitionBy("o_orderstatus")
+        .option("path", os.path.join(root, "t"))
+        .saveAsTable(tname)
+    )
+    batch = o.filter(F.col("o_orderstatus") == "O").withColumn(
+        "o_orderpriority", F.lit("X-REWRITTEN")
+    )
+    with session_conf(spark, dynamic):
+        spark.sql(
+            f"INSERT OVERWRITE TABLE {tname} "
+            "SELECT o_orderkey, o_orderpriority, o_orderstatus FROM {batch}",
+            batch=batch,
+        )
+    return (
+        spark.table(tname)
+        .groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count(F.when(F.col("o_orderpriority") == "X-REWRITTEN", 1)).alias(
+                "n_rewritten"
+            ),
+            F.sum("o_orderkey").cast("long").alias("key_sum"),
+        )
+    )
 
 
 @query(
@@ -1792,7 +1735,8 @@ def lakehouse_dynamic_partition_overwrite(
     """,
     tags=("lakehouse", "clone", "zero-copy"),
 )
-def lakehouse_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_shallow_clone(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Zero-copy SHALLOW CLONE: fork a table for dev/test without moving a
     byte of data — the clone's first snapshot references the source's data
     directories, and the two tables then evolve independently.
@@ -1808,31 +1752,29 @@ def lakehouse_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrupts — tables with pending MoR deletes refuse to clone.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    with tempfile.TemporaryDirectory(prefix="lh_clone_") as root:
-        src = SnapshotTable(spark, os.path.join(root, "src"))
-        src.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
-        src.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
-        clone = src.clone_to(os.path.join(root, "dst"))
-        # metadata-only fork: the clone's root holds no data files
-        clone_data = os.path.join(root, "dst", "data")
-        n_clone_files = sum(
-            len(fs) for _, _, fs in os.walk(clone_data)
-        ) if os.path.exists(clone_data) else 0
-        assert n_clone_files == 0, "shallow clone copied data files"
-        src.write(o.filter(F.col("o_orderstatus") == "P"), mode="append")
-        out = (
-            src.read()
+    src = SnapshotTable(spark, os.path.join(root, "src"))
+    src.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
+    src.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
+    clone = src.clone_to(os.path.join(root, "dst"))
+    # metadata-only fork: the clone's root holds no data files
+    clone_data = os.path.join(root, "dst", "data")
+    n_clone_files = sum(
+        len(fs) for _, _, fs in os.walk(clone_data)
+    ) if os.path.exists(clone_data) else 0
+    assert n_clone_files == 0, "shallow clone copied data files"
+    src.write(o.filter(F.col("o_orderstatus") == "P"), mode="append")
+    return (
+        src.read()
+        .groupBy("o_orderstatus")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .select(F.lit("source").alias("side"), "o_orderstatus", "n")
+        .unionAll(
+            clone.read()
             .groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n"))
-            .select(F.lit("source").alias("side"), "o_orderstatus", "n")
-            .unionAll(
-                clone.read()
-                .groupBy("o_orderstatus")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(F.lit("clone").alias("side"), "o_orderstatus", "n")
-            )
+            .select(F.lit("clone").alias("side"), "o_orderstatus", "n")
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -1846,8 +1788,9 @@ def lakehouse_shallow_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "write-distribution", "small-files"),
 )
+@scratch
 def lakehouse_write_distribution_smallfiles(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, root: str
 ) -> DataFrame:
     """Write-distribution control — the small-files lesson measured, not
     asserted: a partitioned write straight from N shuffle tasks emits up
@@ -1874,33 +1817,30 @@ def lakehouse_write_distribution_smallfiles(
         .select("o_orderkey", "o_orderstatus")
         .repartition(8)  # simulate arbitrary upstream task layout
     )
-    with tempfile.TemporaryDirectory(prefix="lh_wd_") as root:
-        naive = os.path.join(root, "naive")
-        clustered = os.path.join(root, "clustered")
-        o.write.partitionBy("o_orderstatus").parquet(naive)
-        o.repartition("o_orderstatus").write.partitionBy(
-            "o_orderstatus"
-        ).parquet(clustered)
-        n_naive = len(glob.glob(os.path.join(naive, "*", "*.parquet")))
-        n_clustered = len(glob.glob(os.path.join(clustered, "*", "*.parquet")))
-        # Schema from the written frame, not file inference: a 0-row
-        # write leaves no data files to sniff (round-10 empty-table
-        # parity axis), and pinning the schema is what a production
-        # reader does anyway.
-        back = spark.read.schema(o.schema).parquet(clustered)
-        n_parts = back.select("o_orderstatus").distinct().count()
-        assert n_clustered == n_parts, (n_clustered, n_parts)
-        # The small-files phenomenon needs data to exhibit; an empty
-        # write emits zero files under both layouts.
-        assert n_naive > n_clustered or n_parts == 0, (n_naive, n_clustered)
-        out = (
-            back.groupBy("o_orderstatus")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum("o_orderkey").cast("long").alias("key_sum"),
-            )
+    naive = os.path.join(root, "naive")
+    clustered = os.path.join(root, "clustered")
+    o.write.partitionBy("o_orderstatus").parquet(naive)
+    o.repartition("o_orderstatus").write.partitionBy(
+        "o_orderstatus"
+    ).parquet(clustered)
+    n_naive = len(glob.glob(os.path.join(naive, "*", "*.parquet")))
+    n_clustered = len(glob.glob(os.path.join(clustered, "*", "*.parquet")))
+    # Schema from the written frame, not file inference: a 0-row
+    # write leaves no data files to sniff, and pinning the schema is
+    # what a production reader does anyway.
+    back = spark.read.schema(o.schema).parquet(clustered)
+    n_parts = back.select("o_orderstatus").distinct().count()
+    assert n_clustered == n_parts, (n_clustered, n_parts)
+    # The small-files phenomenon needs data to exhibit; an empty
+    # write emits zero files under both layouts.
+    assert n_naive > n_clustered or n_parts == 0, (n_naive, n_clustered)
+    return (
+        back.groupBy("o_orderstatus")
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum("o_orderkey").cast("long").alias("key_sum"),
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 @query(
@@ -1920,7 +1860,8 @@ def lakehouse_write_distribution_smallfiles(
     """,
     tags=("lakehouse", "metadata", "count"),
 )
-def lakehouse_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_metadata_count(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Metadata-only COUNT(*): every snapshot's row count answered from
     per-commit footer counts recorded at WRITE time — no data file is
     opened at query time (Iceberg's manifests-only count; the reason
@@ -1936,21 +1877,19 @@ def lakehouse_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit-tested on the API.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-    with tempfile.TemporaryDirectory(prefix="lh_mc_") as root:
-        t = SnapshotTable(spark, root)
-        t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
-        t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
-        t.write(o.filter(F.col("o_orderstatus") == "P"), mode="overwrite")
-        rows = []
-        for e in t.metadata_log_entries().collect():
-            sid = e["snapshot_id"]
-            meta = t.metadata_row_count(sid)
-            assert meta == t.read(sid).count(), (sid, meta)
-            rows.append((sid, e["operation"], meta))
-        out = spark.createDataFrame(
-            rows, "snapshot_id int, operation string, meta_rows long"
-        )
-        return out.localCheckpoint(eager=True)
+    t = SnapshotTable(spark, root)
+    t.write(o.filter(F.col("o_orderstatus") == "F"), mode="append")
+    t.write(o.filter(F.col("o_orderstatus") == "O"), mode="append")
+    t.write(o.filter(F.col("o_orderstatus") == "P"), mode="overwrite")
+    rows = []
+    for e in t.metadata_log_entries().collect():
+        sid = e["snapshot_id"]
+        meta = t.metadata_row_count(sid)
+        assert meta == t.read(sid).count(), (sid, meta)
+        rows.append((sid, e["operation"], meta))
+    return spark.createDataFrame(
+        rows, "snapshot_id int, operation string, meta_rows long"
+    )
 
 
 @query(
@@ -1966,8 +1905,9 @@ def lakehouse_metadata_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("lakehouse", "matview", "incremental", "join"),
 )
+@scratch
 def lakehouse_incremental_matview_join(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, root: str
 ) -> DataFrame:
     """Incremental maintenance of a JOIN view — the delta-join algebra
     that completes IVM beyond aggregates (`lakehouse_incremental_matview`
@@ -2004,54 +1944,51 @@ def lakehouse_incremental_matview_join(
             )
         )
 
-    with tempfile.TemporaryDirectory(prefix="lh_ivmj_") as root:
-        src_o = SnapshotTable(spark, os.path.join(root, "o"))
-        src_c = SnapshotTable(spark, os.path.join(root, "c"))
-        mv = SnapshotTable(spark, os.path.join(root, "mv"))
-        # coalesce the split keys: NULL o_orderdate / NULL c_custkey rows
-        # satisfy NO plain predicate and would be silently written to
-        # NEITHER batch (round-12 warehouse axis); they ride with the
-        # seed batch (NULL custkey never joins, but the table must still
-        # hold every ingested row).
-        oyr = F.coalesce(F.year("o_orderdate"), F.lit(0))
-        ck2 = F.coalesce(F.pmod(F.col("c_custkey"), 2), F.lit(0))
-        o_old_id = src_o.write(o.filter(oyr < 1998))
-        c_old_id = src_c.write(c.filter(ck2 == 0))
-        mv.write(agg_join(src_o.read(), src_c.read()))
+    src_o = SnapshotTable(spark, os.path.join(root, "o"))
+    src_c = SnapshotTable(spark, os.path.join(root, "c"))
+    mv = SnapshotTable(spark, os.path.join(root, "mv"))
+    # coalesce the split keys: NULL o_orderdate / NULL c_custkey rows
+    # satisfy NO plain predicate and would be silently written to
+    # NEITHER batch; they ride with the seed batch (NULL custkey never
+    # joins, but the table must still hold every ingested row).
+    oyr = F.coalesce(F.year("o_orderdate"), F.lit(0))
+    ck2 = F.coalesce(F.pmod(F.col("c_custkey"), 2), F.lit(0))
+    o_old_id = src_o.write(o.filter(oyr < 1998))
+    c_old_id = src_c.write(c.filter(ck2 == 0))
+    mv.write(agg_join(src_o.read(), src_c.read()))
 
-        o_new_id = src_o.write(o.filter(oyr >= 1998))
-        c_new_id = src_c.write(c.filter(ck2 == 1))
+    o_new_id = src_o.write(o.filter(oyr >= 1998))
+    c_new_id = src_c.write(c.filter(ck2 == 1))
 
-        d_o = src_o.read_incremental(o_old_id, o_new_id)
-        d_c = src_c.read_incremental(c_old_id, c_new_id)
-        a_old = src_o.read(o_old_id)
-        b_old = src_c.read(c_old_id)
-        delta_view = (
-            agg_join(d_o, b_old)
-            .unionAll(agg_join(a_old, d_c))
-            .unionAll(agg_join(d_o, d_c))
-            .groupBy("c_mktsegment")
-            .agg(
-                F.sum("n_orders").alias("n_orders"),
-                F.sum("total_cents").alias("total_cents"),
-            )
+    d_o = src_o.read_incremental(o_old_id, o_new_id)
+    d_c = src_c.read_incremental(c_old_id, c_new_id)
+    a_old = src_o.read(o_old_id)
+    b_old = src_c.read(c_old_id)
+    delta_view = (
+        agg_join(d_o, b_old)
+        .unionAll(agg_join(a_old, d_c))
+        .unionAll(agg_join(d_o, d_c))
+        .groupBy("c_mktsegment")
+        .agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.sum("total_cents").alias("total_cents"),
         )
-        merged = (
-            mv.read()
-            .unionAll(delta_view)
-            .groupBy("c_mktsegment")
-            .agg(
-                F.sum("n_orders").alias("n_orders"),
-                F.sum("total_cents").alias("total_cents"),
-            )
+    )
+    merged = (
+        mv.read()
+        .unionAll(delta_view)
+        .groupBy("c_mktsegment")
+        .agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.sum("total_cents").alias("total_cents"),
         )
-        mv.write(merged, mode="overwrite")
-        out = mv.read().select(
-            "c_mktsegment",
-            F.col("n_orders").cast("long").alias("n_orders"),
-            F.col("total_cents").cast("long").alias("total_cents"),
-        )
-        return out.localCheckpoint(eager=True)
+    )
+    mv.write(merged, mode="overwrite")
+    return mv.read().select(
+        "c_mktsegment",
+        F.col("n_orders").cast("long").alias("n_orders"),
+        F.col("total_cents").cast("long").alias("total_cents"),
+    )
 
 
 @query(
@@ -2059,8 +1996,7 @@ def lakehouse_incremental_matview_join(
     oracle="""
     -- survivors are rows where the erasure predicate IS NOT TRUE: a
     -- keyless row is NOT deleted (DELETE removes only TRUE matches), so
-    -- the <> filter — which excludes NULL keys — undercounted n_after
-    -- (round-12 warehouse axis)
+    -- the <> filter — which excludes NULL keys — would undercount n_after
     SELECT 'customer' AS table_name,
            CAST(COUNT(*) AS BIGINT) AS n_before,
            CAST(COUNT(*) FILTER (WHERE c_custkey % 97 = 0) AS BIGINT)
@@ -2080,7 +2016,8 @@ def lakehouse_incremental_matview_join(
     """,
     tags=("lakehouse", "governance", "delete", "gdpr"),
 )
-def lakehouse_gdpr_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_gdpr_forget(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Right-to-be-forgotten cascade: delete a deterministic cohort of
     customers (custkey ≡ 0 mod 97 — standing in for the explicit erasure
     list a DSR queue supplies) from the customer table AND every fact
@@ -2109,32 +2046,31 @@ def lakehouse_gdpr_forget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_name")
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    with tempfile.TemporaryDirectory(prefix="lh_gdpr_") as root:
-        tc = SnapshotTable(spark, os.path.join(root, "customer"))
-        to = SnapshotTable(spark, os.path.join(root, "orders"))
-        vc = tc.write(c, mode="append")
-        vo = to.write(o, mode="append")
-        nc_before = tc.read().count()
-        no_before = to.read().count()
-        tc.delete_where(F.col("c_custkey") % 97 == 0)
-        to.delete_where(F.col("o_custkey") % 97 == 0)
-        nc_after = tc.read().count()
-        no_after = to.read().count()
-        # Erasure must not rewrite history (time travel intact until
-        # expire_snapshots runs its retention pass).
-        if tc.read(vc).count() != nc_before or to.read(vo).count() != no_before:
-            raise AssertionError("pre-erasure snapshot was mutated")
-        orph_c = tc.read().filter(F.col("c_custkey") % 97 == 0).count()
-        orph_o = to.read().filter(F.col("o_custkey") % 97 == 0).count()
-        rows = [
-            ("customer", nc_before, nc_before - nc_after, nc_after, orph_c),
-            ("orders", no_before, no_before - no_after, no_after, orph_o),
-        ]
-        return spark.createDataFrame(
-            rows,
-            "table_name STRING, n_before BIGINT, n_deleted BIGINT,"
-            " n_after BIGINT, n_orphans BIGINT",
-        )
+    tc = SnapshotTable(spark, os.path.join(root, "customer"))
+    to = SnapshotTable(spark, os.path.join(root, "orders"))
+    vc = tc.write(c, mode="append")
+    vo = to.write(o, mode="append")
+    nc_before = tc.read().count()
+    no_before = to.read().count()
+    tc.delete_where(F.col("c_custkey") % 97 == 0)
+    to.delete_where(F.col("o_custkey") % 97 == 0)
+    nc_after = tc.read().count()
+    no_after = to.read().count()
+    # Erasure must not rewrite history (time travel intact until
+    # expire_snapshots runs its retention pass).
+    if tc.read(vc).count() != nc_before or to.read(vo).count() != no_before:
+        raise AssertionError("pre-erasure snapshot was mutated")
+    orph_c = tc.read().filter(F.col("c_custkey") % 97 == 0).count()
+    orph_o = to.read().filter(F.col("o_custkey") % 97 == 0).count()
+    rows = [
+        ("customer", nc_before, nc_before - nc_after, nc_after, orph_c),
+        ("orders", no_before, no_before - no_after, no_after, orph_o),
+    ]
+    return spark.createDataFrame(
+        rows,
+        "table_name STRING, n_before BIGINT, n_deleted BIGINT,"
+        " n_after BIGINT, n_orphans BIGINT",
+    )
 
 
 def _keyed_rank(df: DataFrame, key: str) -> DataFrame:
@@ -2215,7 +2151,8 @@ def _keyed_rank(df: DataFrame, key: str) -> DataFrame:
     """,
     tags=("lakehouse", "lineage", "merge", "time-travel"),
 )
-def lakehouse_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def lakehouse_row_lineage(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Iceberg-v3-style ROW LINEAGE through a merge: every row carries
     `_row_id` (assigned once, from the table's next-row-id high-water
     mark, by deterministic key rank), `_created_snapshot`, and
@@ -2244,48 +2181,45 @@ def lakehouse_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).alias("created"),
         F.lit(1).alias("last_upd"),
     )
-    with tempfile.TemporaryDirectory(prefix="lh_lineage_") as root:
-        t = SnapshotTable(spark, root)
-        snap1 = t.write(v1, mode="append")
-        nb = t.read(snapshot_id=snap1).count()
-        base = t.read(snapshot_id=snap1)
-        survived = base.filter(F.col("o_orderkey") % 10 != 0)
-        updated = survived.withColumn(
-            "last_upd",
-            F.when(F.col("o_orderkey") % 10 == 1, F.lit(2)).otherwise(
-                F.col("last_upd")
-            ),
+    t = SnapshotTable(spark, root)
+    snap1 = t.write(v1, mode="append")
+    nb = t.read(snapshot_id=snap1).count()
+    base = t.read(snapshot_id=snap1)
+    survived = base.filter(F.col("o_orderkey") % 10 != 0)
+    updated = survived.withColumn(
+        "last_upd",
+        F.when(F.col("o_orderkey") % 10 == 1, F.lit(2)).otherwise(
+            F.col("last_upd")
+        ),
+    )
+    p = o.filter(F.col("o_orderstatus") == "P").select(
+        "o_orderkey", "o_orderpriority"
+    )
+    ins = _keyed_rank(p, "o_orderkey").select(
+        "o_orderkey",
+        "o_orderpriority",
+        (F.col("rid") + F.lit(nb)).cast("long").alias("rid"),
+        F.lit(2).alias("created"),
+        F.lit(2).alias("last_upd"),
+    )
+    t.write(updated.unionByName(ins), mode="overwrite")
+    return (
+        t.read()
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_rows"),
+            F.count(
+                F.when((F.col("created") == 1) & (F.col("last_upd") == 1), 1)
+            ).alias("n_untouched"),
+            F.count(
+                F.when((F.col("created") == 1) & (F.col("last_upd") == 2), 1)
+            ).alias("n_updated"),
+            F.count(F.when(F.col("created") == 2, 1)).alias("n_inserted"),
+            F.sum("rid").cast("long").alias("rowid_sum"),
         )
-        p = o.filter(F.col("o_orderstatus") == "P").select(
-            "o_orderkey", "o_orderpriority"
-        )
-        ins = _keyed_rank(p, "o_orderkey").select(
-            "o_orderkey",
-            "o_orderpriority",
-            (F.col("rid") + F.lit(nb)).cast("long").alias("rid"),
-            F.lit(2).alias("created"),
-            F.lit(2).alias("last_upd"),
-        )
-        t.write(updated.unionByName(ins), mode="overwrite")
-        out = (
-            t.read()
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.count(
-                    F.when((F.col("created") == 1) & (F.col("last_upd") == 1), 1)
-                ).alias("n_untouched"),
-                F.count(
-                    F.when((F.col("created") == 1) & (F.col("last_upd") == 2), 1)
-                ).alias("n_updated"),
-                F.count(F.when(F.col("created") == 2, 1)).alias("n_inserted"),
-                F.sum("rid").cast("long").alias("rowid_sum"),
-            )
-            .withColumn("v1_rows", F.lit(nb).cast("long"))
-            .orderBy("o_orderpriority")
-        )
-        out = out.localCheckpoint(eager=True)  # materialize before tmp cleanup
-    return out
+        .withColumn("v1_rows", F.lit(nb).cast("long"))
+        .orderBy("o_orderpriority")
+    )
 
 
 # Fixed commit root for the second-engine-read proof: the DuckDB oracle is a

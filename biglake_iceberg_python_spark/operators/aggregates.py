@@ -244,8 +244,6 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Empty input reports no strata on both engines (`agg_rollup` policy).
     """
-    li = load_table(spark, sf_dir, "lineitem")
-    li.createOrReplaceTempView("lineitem_gs")
     return spark.sql(
         f"""
         SELECT
@@ -254,10 +252,11 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
           GROUPING(l_returnflag) AS g_flag,
           GROUPING(l_linestatus) AS g_status,
           {oracle_dsum('l_extendedprice')} AS sum_price
-        FROM lineitem_gs
+        FROM {{lineitem}}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
         HAVING COUNT(*) > 0
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -360,9 +359,7 @@ def subquery_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-empty at every test scale factor — a 0-row result would make the
     hash check vacuous.
     """
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_sq")
-    return spark.sql(_SUBQ_SCALAR_SQL.format(orders="orders_sq"))
+    return spark.sql(_SUBQ_SCALAR_SQL, orders=load_table(spark, sf_dir, "orders"))
 
 
 @query(
@@ -384,18 +381,17 @@ def subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — it never re-executes the inner query per row (the naive O(n²)
     a row-at-a-time engine would do).
     """
-    c = load_table(spark, sf_dir, "customer")
-    c.createOrReplaceTempView("customer_sq")
     return spark.sql(
         """
         SELECT c_custkey, c_acctbal
-        FROM customer_sq c
+        FROM {customer} c
         WHERE c_acctbal > (
           SELECT COALESCE(AVG(c2.c_acctbal), 0)
-          FROM customer_sq c2
+          FROM {customer} c2
           WHERE c2.c_nationkey = c.c_nationkey AND c2.c_custkey <> c.c_custkey
         )
-        """
+        """,
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -459,12 +455,10 @@ def subquery_not_in_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact-sized exclusion sets, pre-filter NULLs explicitly and use a plain
     LEFT ANTI join, which shuffles both sides on the key.
     """
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_nin")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer_nin"
-    )
     return spark.sql(
-        _NOT_IN_NULL_SQL.format(nation="nation_nin", customer="customer_nin")
+        _NOT_IN_NULL_SQL,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

@@ -435,14 +435,14 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _REACH_SQL = """
 WITH RECURSIVE walk(node, depth) AS (
-  SELECT CAST(MIN(l_partkey) AS BIGINT) AS node, 0 AS depth FROM lineitem
+  SELECT CAST(MIN(l_partkey) AS BIGINT) AS node, 0 AS depth FROM {lineitem}
   UNION ALL
   SELECT e.dst AS node, w.depth + 1 AS depth
   FROM walk w
   JOIN (
     SELECT DISTINCT a.pk AS src, b.pk AS dst
-    FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem) a
-    JOIN (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem) b
+    FROM (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM {lineitem}) a
+    JOIN (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM {lineitem}) b
       ON a.ok = b.ok AND a.pk <> b.pk
   ) e ON w.node = e.src
   WHERE w.depth < 2
@@ -455,7 +455,7 @@ GROUP BY depth
 
 @query(
     "sql_recursive_reachability",
-    oracle=_REACH_SQL,
+    oracle=_REACH_SQL.format(lineitem="lineitem"),
     tags=("graph", "sql", "recursive-cte"),
 )
 def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -475,8 +475,7 @@ def sql_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from biglake_iceberg_python_spark.sources.tables import load_table as _lt
 
-    _lt(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_REACH_SQL)
+    return spark.sql(_REACH_SQL, lineitem=_lt(spark, sf_dir, "lineitem"))
 
 
 

@@ -19,13 +19,12 @@ Scale notes per operator are in the docstrings. Common rules applied here:
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
-from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -253,7 +252,10 @@ def join_broadcast_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("join", "dpp", "partitioning", "prune"),
 )
-def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def join_dynamic_partition_pruning(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Dynamic Partition Pruning: the fact side is partitioned on the join
     key, the dimension side carries the selective filter — Spark evaluates
     the dim filter at RUNTIME, broadcasts the surviving keys, and prunes
@@ -271,31 +273,29 @@ def join_dynamic_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFram
     must be result-equivalent to.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="dpp_") as root:
-        path = os.path.join(root, "orders_by_prio")
-        o.write.partitionBy("o_orderpriority").parquet(path)
-        # Schema pinned from the written frame — file inference fails on
-        # a 0-row write (round-10 empty-table parity axis).
-        fact = spark.read.schema(o.schema).parquet(path)
-        dim = (
-            spark.read.schema(o.schema).parquet(path)
-            .select(F.col("o_orderpriority").alias("prio"))
-            .distinct()
-            .filter(
-                F.col("prio").startswith("1-") | F.col("prio").startswith("2-")
-            )
+    path = os.path.join(root, "orders_by_prio")
+    o.write.partitionBy("o_orderpriority").parquet(path)
+    # Schema pinned from the written frame — file inference fails on
+    # a 0-row write.
+    fact = spark.read.schema(o.schema).parquet(path)
+    dim = (
+        spark.read.schema(o.schema).parquet(path)
+        .select(F.col("o_orderpriority").alias("prio"))
+        .distinct()
+        .filter(
+            F.col("prio").startswith("1-") | F.col("prio").startswith("2-")
         )
-        out = (
-            fact.join(dim, fact.o_orderpriority == dim.prio)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-                .cast("double")
-                .alias("sum_price"),
-            )
+    )
+    return (
+        fact.join(dim, fact.o_orderpriority == dim.prio)
+        .groupBy("o_orderpriority")
+        .agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
+            .cast("double")
+            .alias("sum_price"),
         )
-        return out.localCheckpoint(eager=True)
+    )
 
 
 _BLOOM_CONFS = {

@@ -244,18 +244,18 @@ def sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle inlines the same values — results must be identical, which
     pins binding semantics (numeric stays double, string stays string).
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
         """
         SELECT
           o_orderpriority,
           COUNT(*) AS n_orders,
           CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
-        FROM orders
+        FROM {orders}
         WHERE o_totalprice > :threshold AND o_orderstatus = :status
         GROUP BY o_orderpriority
         """,
         args={"threshold": _PARAM_THRESHOLD, "status": _PARAM_STATUS},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -289,12 +289,10 @@ def sql_lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale (a naive per-outer-row loop would be a driver-side O(n) query
     storm).
     """
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_lat")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView(
-        "customer_lat"
-    )
     return spark.sql(
-        _LATERAL_SQL.format(nation="nation_lat", customer="customer_lat")
+        _LATERAL_SQL,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 
@@ -321,16 +319,16 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter still pushes to the scan, the aggregate still runs two-phase —
     so this pins the dialect to standard-SQL semantics.
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_pipe")
     return spark.sql(
         """
-        FROM orders_pipe
+        FROM {orders}
         |> WHERE o_orderstatus = 'O'
         |> AGGREGATE COUNT(*) AS n_orders,
                      CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
            GROUP BY o_orderpriority
         |> WHERE n_orders > 10
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -414,9 +412,6 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase hash aggregate as an explicit GROUP BY — the sugar is
     analysis-time only, zero plan cost.
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_gball"
-    )
     return spark.sql(
         """
         SELECT
@@ -425,10 +420,11 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
           CAST(COUNT(*) AS BIGINT) AS n_orders,
           CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE)
             AS total_price
-        FROM orders_gball
+        FROM {orders}
         GROUP BY ALL
         ORDER BY ALL
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -445,8 +441,8 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("sql", "identifier", "parameterized"),
 )
 def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``IDENTIFIER()`` clause (Spark 4): table and column NAMES arrive as
-    bound parameters — the injection-safe way to template object names,
+    """``IDENTIFIER()`` clause (Spark 4): column NAMES arrive as bound
+    parameters — the injection-safe way to template object names,
     completing the parameter surface (sql_parameterized binds VALUES;
     this binds identifiers). A name parameter can never smuggle SQL: the
     string resolves as one identifier or fails analysis.
@@ -455,7 +451,6 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis-time substitution with zero plan cost, so both engines see
     the same aggregate over the same table.
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_idp")
     return spark.sql(
         """
         SELECT
@@ -463,14 +458,11 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
           CAST(COUNT(*) AS BIGINT) AS n_orders,
           CAST(MAX(CAST(IDENTIFIER(:pricecol) AS DECIMAL(18,2))) AS DOUBLE)
             AS max_price
-        FROM IDENTIFIER(:tbl)
+        FROM {orders}
         GROUP BY IDENTIFIER(:keycol)
         """,
-        args={
-            "tbl": "orders_idp",
-            "keycol": "o_orderstatus",
-            "pricecol": "o_totalprice",
-        },
+        args={"keycol": "o_orderstatus", "pricecol": "o_totalprice"},
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -502,9 +494,6 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst expands the named window at analysis time — both functions
     share ONE exchange + sort, zero extra plan cost.
     """
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem_namedw"
-    )
     return spark.sql(
         """
         SELECT
@@ -514,12 +503,13 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
           ROW_NUMBER() OVER w AS rn,
           CAST(SUM(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
                    AS BIGINT)) OVER w AS BIGINT) AS running_cents
-        FROM lineitem_namedw
+        FROM {lineitem}
         WHERE l_quantity >= 45
         WINDOW w AS (PARTITION BY l_returnflag
                      ORDER BY l_extendedprice NULLS LAST,
                               l_orderkey NULLS LAST, l_linenumber)
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -548,19 +538,17 @@ def sql_session_variable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     spark.sql("DECLARE OR REPLACE VARIABLE price_floor DOUBLE")
     spark.sql("SET VARIABLE price_floor = 100000.0")
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_sessvar"
-    )
     return spark.sql(
         """
         SELECT
           o_orderstatus,
           CAST(COUNT(*) AS BIGINT) AS n_above,
           CAST(MIN(o_totalprice) AS DOUBLE) AS min_above
-        FROM orders_sessvar
+        FROM {orders}
         WHERE o_totalprice > price_floor
         GROUP BY o_orderstatus
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -677,27 +665,25 @@ def sql_execute_immediate(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameterization trio (typed args → `sql_parameterized`, injection-
     safe names → the IDENTIFIER query, dynamic statements → here).
 
-    The statement text lives in a session variable and the two predicate
-    values bind as named USING parameters; the oracle inlines the same
-    constants, so parse-at-execute plus binding resolve to the identical
-    plan, pushed-down filters included.
+    The statement text lives in a session variable; the table name and
+    the two predicate values bind as named USING parameters. The oracle
+    inlines the same constants, so parse-at-execute plus binding resolve
+    to the identical plan, pushed-down filters included.
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView(
-        "orders_execimm"
-    )
     spark.sql("DECLARE OR REPLACE VARIABLE stmt STRING")
     spark.sql(
         """SET VARIABLE stmt =
         'SELECT o_orderpriority,
                 CAST(COUNT(*) AS BIGINT) AS n_orders,
                 CAST(MAX(o_totalprice) AS DOUBLE) AS max_price
-         FROM orders_execimm
+         FROM IDENTIFIER(:tbl)
          WHERE o_orderstatus = :st AND o_totalprice > :floor
          GROUP BY o_orderpriority'
         """
     )
     return spark.sql(
-        "EXECUTE IMMEDIATE stmt USING 'O' AS st, 75000.0 AS floor"
+        "EXECUTE IMMEDIATE stmt USING '{orders}' AS tbl, 'O' AS st, 75000.0 AS floor",
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -722,18 +708,18 @@ def sql_values_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     plans the literal table as a LocalRelation that broadcasts — zero
     scan, zero shuffle for the lookup side.
     """
-    load_table(spark, sf_dir, "region").createOrReplaceTempView("region_vals")
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation_vals")
     return spark.sql(
         """
         SELECT t.region_code, r.r_name,
                CAST(COUNT(n.n_nationkey) AS BIGINT) AS n_nations
         FROM (VALUES (0, 'africa'), (1, 'america'), (2, 'asia'))
              AS t(region_key, region_code)
-        JOIN region_vals r ON r.r_regionkey = t.region_key
-        LEFT JOIN nation_vals n ON n.n_regionkey = t.region_key
+        JOIN {region} r ON r.r_regionkey = t.region_key
+        LEFT JOIN {nation} n ON n.n_regionkey = t.region_key
         GROUP BY t.region_code, r.r_name
-        """
+        """,
+        region=load_table(spark, sf_dir, "region"),
+        nation=load_table(spark, sf_dir, "nation"),
     )
 
 
@@ -863,18 +849,12 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
     what the oracle does; the hash pins that the function indirection
     costs nothing semantically.
 
-    Round-10 discriminating experiment (driver red r8+r9, judge-proved
-    tie-free locally both rounds — the residual hypotheses are
-    environmental, VERDICT r9 "What's wrong #1"): (i) the sum column is
-    renamed ``disc_centicents_sum`` → ``disc_sum_v10`` on BOTH sides —
-    if the driver compares against a stale oracle snapshot it must now
-    report ``schema_match: false``, which is the stale-oracle proof;
-    (ii) cents extraction is pure IEEE-754 double arithmetic,
+    Cents extraction is pure IEEE-754 double arithmetic,
     ``CAST(floor(x * 100 + 0.5) AS BIGINT)`` — multiply/add/floor are
     bit-identical on every engine and version, and no DECIMAL cast or
-    ``round()`` survives anywhere in the query, so an engine-version
-    divergence in DECIMAL semantics (the other hypothesis) cannot touch
-    it either. floor(x*100 + 0.5) is exact here because x is exact 2dp:
+    ``round()`` appears anywhere in the query, so no engine's DECIMAL
+    semantics can touch it. floor(x*100 + 0.5) is exact here because x is
+    exact 2dp:
     the IEEE product x*100 differs from the true integer by <1e-6 ulps,
     far inside the ±0.5 basin. The oracle's outer CAST(SUM(..) AS
     BIGINT) pins DuckDB's HUGEINT sum back to int64 (values ≈2e13 «
@@ -893,9 +873,6 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         " RETURN CASE WHEN q >= 40 THEN 'bulk'"
         " WHEN q >= 10 THEN 'mid' ELSE 'small' END"
     )
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView(
-        "lineitem_sqlfn"
-    )
     return spark.sql(
         """
         SELECT
@@ -905,8 +882,9 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
             AS disc_sum_v10,
           CAST(COUNT(IF(qty_tier(l_quantity) = 'bulk', 1, NULL)) AS BIGINT)
             AS n_bulk
-        FROM lineitem_sqlfn
+        FROM {lineitem}
         GROUP BY l_returnflag
         ORDER BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )

@@ -29,7 +29,10 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import words
-from biglake_iceberg_python_spark.operators.similarity import _valid_embeddings
+from biglake_iceberg_python_spark.operators.similarity import (
+    _dot,
+    _valid_embeddings,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -181,12 +184,6 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.select("doc_id", F.col("dl").cast("long").alias("dl"), "bm25_micro")
         .orderBy(F.col("bm25_micro").desc(), "doc_id")
         .limit(_TOP_K)
-    )
-
-
-def _dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
     )
 
 

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.sources.tables import load_table
 
 _N_QUERIES = 5  # vec_id < 5 are the query vectors
@@ -732,7 +732,8 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=_IVF_ORACLE,
     tags=("llm", "similarity", "ann", "ivf", "lakehouse", "index"),
 )
-def sim_ivf_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def sim_ivf_index_persisted(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """IVF index AS A LAKEHOUSE TABLE: the codebook and the inverted-list
     assignments are built once and COMMITTED to snapshot tables, then the
     query path runs entirely from the PERSISTED index — rank the query
@@ -748,7 +749,6 @@ def sim_ivf_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     of doubles round-trip parquet bit-exactly).
     """
     import os
-    import tempfile
 
     from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
 
@@ -756,58 +756,53 @@ def sim_ivf_index_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = e.select("vec_id", "label", _as_double("embedding").alias("ev"))
 
     # Offline build → two committed tables (codebook + inverted lists).
-    # The index lives in a TemporaryDirectory and the result is eagerly
-    # checkpointed before cleanup (the lakehouse query pattern) so repeated
-    # runs don't leak index directories on disk.
     cent = _ivf_codebook(v)
     assign = (
         _ivf_rank(v, cent)
         .filter(F.col("rk") == 1)
         .select("vec_id", "list_id")
     )
-    with tempfile.TemporaryDirectory(prefix="ivf_idx_") as root:
-        cent_tbl = SnapshotTable(spark, os.path.join(root, "cent"))
-        list_tbl = SnapshotTable(spark, os.path.join(root, "lists"))
-        cent_tbl.write(cent, mode="overwrite")
-        list_tbl.write(assign, mode="overwrite")
+    cent_tbl = SnapshotTable(spark, os.path.join(root, "cent"))
+    list_tbl = SnapshotTable(spark, os.path.join(root, "lists"))
+    cent_tbl.write(cent, mode="overwrite")
+    list_tbl.write(assign, mode="overwrite")
 
-        # Serving path: reads ONLY the persisted index + the vector table.
-        cent_r = cent_tbl.read()
-        assign_r = list_tbl.read()
-        qv = v.filter(F.col("vec_id") < _N_QUERIES)
-        probes = (
-            _ivf_rank(qv, cent_r)
-            .filter(F.col("rk") <= _IVF_NPROBE)
-            .select(F.col("vec_id").alias("qid"), "list_id")
-        )
-        cand = (
-            F.broadcast(probes)
-            .join(assign_r.withColumnRenamed("vec_id", "cid"), "list_id")
-            .filter(F.col("qid") != F.col("cid"))
-            .select("qid", "cid")
-            .distinct()
-        )
-        q = v.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"))
-        c = v.select(
-            F.col("vec_id").alias("cid"), "label", F.col("ev").alias("cv2")
-        )
-        cos = _dot(F.col("qv"), F.col("cv2")) / F.sqrt(
-            _dot(F.col("qv"), F.col("qv")) * _dot(F.col("cv2"), F.col("cv2"))
-        )
-        scored = (
-            cand.join(F.broadcast(q), "qid")
-            .join(c, "cid")
-            .select("qid", "cid", "label", cos.alias("cosine"))
-        )
-        w = Window.partitionBy("qid").orderBy(
-            F.col("cosine").desc(), F.col("cid")
-        )
-        return (
-            scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= _TOP_K)
-            .select("qid", "cid", "label", "cosine", "rk")
-            .localCheckpoint(eager=True)  # materialize before cleanup
-        )
+    # Serving path: reads ONLY the persisted index + the vector table.
+    cent_r = cent_tbl.read()
+    assign_r = list_tbl.read()
+    qv = v.filter(F.col("vec_id") < _N_QUERIES)
+    probes = (
+        _ivf_rank(qv, cent_r)
+        .filter(F.col("rk") <= _IVF_NPROBE)
+        .select(F.col("vec_id").alias("qid"), "list_id")
+    )
+    cand = (
+        F.broadcast(probes)
+        .join(assign_r.withColumnRenamed("vec_id", "cid"), "list_id")
+        .filter(F.col("qid") != F.col("cid"))
+        .select("qid", "cid")
+        .distinct()
+    )
+    q = v.select(F.col("vec_id").alias("qid"), F.col("ev").alias("qv"))
+    c = v.select(
+        F.col("vec_id").alias("cid"), "label", F.col("ev").alias("cv2")
+    )
+    cos = _dot(F.col("qv"), F.col("cv2")) / F.sqrt(
+        _dot(F.col("qv"), F.col("qv")) * _dot(F.col("cv2"), F.col("cv2"))
+    )
+    scored = (
+        cand.join(F.broadcast(q), "qid")
+        .join(c, "cid")
+        .select("qid", "cid", "label", cos.alias("cosine"))
+    )
+    w = Window.partitionBy("qid").orderBy(
+        F.col("cosine").desc(), F.col("cid")
+    )
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _TOP_K)
+        .select("qid", "cid", "label", "cosine", "rk")
+    )
 
 
 _SEM_T = 0.5  # within-cluster cosine threshold for semantic duplicates

@@ -326,9 +326,6 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (w, i)
 
     spark.udtf.register("split_words_udtf", _SplitWords)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents_udtf"
-    )
     return spark.sql(
         """
         SELECT
@@ -336,9 +333,10 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
           COUNT(*) AS n_tokens,
           COUNT(DISTINCT s.word) AS n_distinct_words,
           CAST(SUM(s.pos * length(s.word)) AS BIGINT) AS checksum
-        FROM documents_udtf d, LATERAL split_words_udtf(d.text) s
+        FROM {documents} d, LATERAL split_words_udtf(d.text) s
         GROUP BY d.source
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -699,8 +697,8 @@ def udf_udtf_polymorphic_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def eval(self, price, bounds):
             # NULL price: every CASE WHEN NULL >= bound is not-TRUE ->
-            # ELSE 0 in the oracle; Python None >= float would raise
-            # (round-12 warehouse axis). Row still counts toward n.
+            # ELSE 0 in the oracle; Python None >= float would raise.
+            # Row still counts toward n.
             if price is None:
                 yield 0, 0, 0
                 return
@@ -711,8 +709,6 @@ def udf_udtf_polymorphic_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield hi, mid, lo
 
     spark.udtf.register("bucketize_poly", Bucketize)
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("orders_poly")
     return spark.sql(
         """
         SELECT
@@ -721,8 +717,9 @@ def udf_udtf_polymorphic_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
           CAST(SUM(b.bucket_hi) AS BIGINT) AS bucket_hi,
           CAST(SUM(b.bucket_mid) AS BIGINT) AS bucket_mid,
           CAST(SUM(b.bucket_lo) AS BIGINT) AS bucket_lo
-        FROM orders_poly o,
+        FROM {orders} o,
              LATERAL bucketize_poly(o.o_totalprice, '100000,50000') b
         GROUP BY o.o_orderstatus
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )

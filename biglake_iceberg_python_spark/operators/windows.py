@@ -312,7 +312,6 @@ def window_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     total-order tiebreak makes every positional answer deterministic, and
     DISTINCT collapses the per-row duplicates to one row per status.
     """
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_nthv")
     return spark.sql(
         """
         SELECT DISTINCT
@@ -320,9 +319,10 @@ def window_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
           nth_value(o_totalprice, 2) OVER w AS second_highest,
           nth_value(o_totalprice, 3) OVER w AS third_highest,
           first_value(o_orderkey) OVER w AS top_orderkey
-        FROM orders_nthv
+        FROM {orders}
         WINDOW w AS (PARTITION BY o_orderstatus
                      ORDER BY o_totalprice DESC, o_orderkey
                      ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )

@@ -14,9 +14,11 @@ every spec is written with explicit aliases on both sides.
 
 from __future__ import annotations
 
+import functools
 import importlib
 import logging
 import os
+import tempfile
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -238,6 +240,30 @@ def query(
         return fn
 
     return deco
+
+
+def scratch(fn: Callable[[SparkSession, str, str], DataFrame]) -> QueryFn:
+    """Decorator, stacked under :func:`query`: adapt ``fn(spark, sf_dir,
+    root) -> DataFrame`` for a query that stages data.
+
+    ``root`` is a fresh temp directory; its basename is a valid identifier
+    and serves as the query's catalog namespace when it needs one. The
+    result is materialized before the namespace and the directory are
+    removed, so the returned frame outlives them; both go on failure too.
+    """
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        with tempfile.TemporaryDirectory(prefix=f"{fn.__name__}_") as root:
+            try:
+                return fn(spark, sf_dir, root).localCheckpoint(eager=True)
+            finally:
+                spark.sql(
+                    "DROP NAMESPACE IF EXISTS spark_catalog."
+                    f"{os.path.basename(root)} CASCADE"
+                )
+
+    return run
 
 
 def all_queries() -> dict[str, QueryFn]:

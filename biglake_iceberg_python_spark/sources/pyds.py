@@ -149,7 +149,7 @@ def register(spark) -> None:
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from biglake_iceberg_python_spark.plans.registry import query  # noqa: E402
+from biglake_iceberg_python_spark.plans.registry import query, scratch  # noqa: E402
 
 _N_ROWS = 50_000
 
@@ -470,7 +470,10 @@ def register_sink(spark) -> None:
     """,
     tags=("source", "python-datasource", "writer", "sink"),
 )
-def source_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_python_datasource_write(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """WRITE through the custom Python DataSource sink, then read the
     files back — the writer half of the Python DataSource API
     (``DataSourceWriter.write`` per executor partition → commit message →
@@ -485,8 +488,6 @@ def source_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFram
     is O(partitions), data never funnels through one node; abort()
     deletes uncommitted parts, same contract as Spark's file sinks.
     """
-    import tempfile as _tf
-
     from biglake_iceberg_python_spark.sources.tables import load_table as _lt
 
     register_sink(spark)
@@ -497,16 +498,14 @@ def source_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFram
             (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
         ).alias("price_cents"),
     )
-    with _tf.TemporaryDirectory(prefix="pysink_") as d:
-        agg.write.format("pycsvsink").option("path", d).mode("append").save()
-        back = (
-            spark.read.schema(
-                "l_returnflag string, l_linestatus string, "
-                "n_rows bigint, price_cents bigint"
-            )
-            .csv(f"{d}/part-*.csv")
+    agg.write.format("pycsvsink").option("path", root).mode("append").save()
+    return (
+        spark.read.schema(
+            "l_returnflag string, l_linestatus string, "
+            "n_rows bigint, price_cents bigint"
         )
-        return back.localCheckpoint(eager=True)
+        .csv(f"{root}/part-*.csv")
+    )
 
 
 def _make_stream_sink_datasource_class():
@@ -599,8 +598,9 @@ def register_stream_sink(spark) -> None:
     """,
     tags=("source", "streaming", "python-datasource", "writer", "sink"),
 )
+@scratch
 def source_python_datasource_stream_write(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, root: str
 ) -> DataFrame:
     """Python STREAMING source → Python STREAMING sink, end to end: the
     20k-row generator stream is written append-mode through the custom
@@ -618,9 +618,6 @@ def source_python_datasource_stream_write(
     triples, and replay idempotence hangs on the batch manifest, not on
     re-reading data.
     """
-    import tempfile as _tf
-    import uuid as _uuid
-
     register_stream(spark)
     register_stream_sink(spark)
     src = (
@@ -629,24 +626,22 @@ def source_python_datasource_stream_write(
         .option("batch_size", 5_000)
         .load()
     )
-    with _tf.TemporaryDirectory(prefix="pystreamsink_") as d:
-        q = (
-            src.select("id", "event_type", "value_i")
-            .writeStream.format("pycsvstreamsink")
-            .option("path", d)
-            .outputMode("append")
-            .option("checkpointLocation", _tf.mkdtemp(prefix="pss_ckpt_"))
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        back = spark.read.schema(
-            "id bigint, event_type string, value_i bigint"
-        ).csv(f"{d}/part-*.csv")
-        out = back.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value_i").alias("sum_value"),
-        )
-        return out.localCheckpoint(eager=True)
+    q = (
+        src.select("id", "event_type", "value_i")
+        .writeStream.format("pycsvstreamsink")
+        .option("path", root)
+        .outputMode("append")
+        .option("checkpointLocation", f"{root}/ckpt")
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    back = spark.read.schema(
+        "id bigint, event_type string, value_i bigint"
+    ).csv(f"{root}/part-*.csv")
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("value_i").alias("sum_value"),
+    )

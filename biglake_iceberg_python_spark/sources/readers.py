@@ -19,7 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.sources.tables import load_table
 
 
@@ -160,7 +160,8 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("source", "xml"),
 )
-def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_xml_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """parquet → XML files → typed XML scan → aggregate vs original.
 
     XML is a NATIVE Spark source since 4.0 (the spark-xml package merged
@@ -174,27 +175,25 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier").select(
         "s_suppkey", "s_nationkey", "s_acctbal"
     )
-    with tempfile.TemporaryDirectory(prefix="src_xml_") as root:
-        out = os.path.join(root, "supplier_xml")
-        (
-            s.write.format("xml")
-            .option("rootTag", "suppliers")
-            .option("rowTag", "supplier")
-            .save(out)
-        )
-        back = (
-            spark.read.format("xml")
-            .schema("s_suppkey bigint, s_nationkey int, s_acctbal double")
-            .option("rowTag", "supplier")
-            .load(out)
-        )
-        agg = back.groupBy("s_nationkey").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("s_acctbal").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_bal"),
-        )
-        return agg.localCheckpoint(eager=True)
+    out = os.path.join(root, "supplier_xml")
+    (
+        s.write.format("xml")
+        .option("rootTag", "suppliers")
+        .option("rowTag", "supplier")
+        .save(out)
+    )
+    back = (
+        spark.read.format("xml")
+        .schema("s_suppkey bigint, s_nationkey int, s_acctbal double")
+        .option("rowTag", "supplier")
+        .load(out)
+    )
+    return back.groupBy("s_nationkey").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("s_acctbal").cast("decimal(30,6)"))
+        .cast("double")
+        .alias("sum_bal"),
+    )
 
 
 @query(
@@ -202,7 +201,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="""
     SELECT doc_id,
            -- strlen = UTF-8 byte count; CAST(text AS BLOB) raises on any
-           -- non-ASCII character (round-10 unicode parity axis).
+           -- non-ASCII character.
            CAST(strlen(text) AS INTEGER) AS n_bytes,
            md5(text) AS digest
     FROM documents
@@ -210,7 +209,8 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("source", "binary", "multimodal"),
 )
-def source_binaryfile_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_binaryfile_digest(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """`binaryFile` source: opaque files land as (path, length, content
     BINARY) rows — the ingestion doorway for image/audio/video corpora
     (SURVEY §2B multimodal row). Twenty documents are written out as raw
@@ -226,10 +226,10 @@ def source_binaryfile_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL text = no payload = no file, mirrored by the oracle's
     # `text IS NOT NULL` (writing b"" instead would digest md5('') where
     # the oracle digests NULL — a hash mismatch on any corpus with NULLs).
-    # EMPTY text is excluded too (round-10 degenerate sweep): Spark's
-    # binaryFile source silently emits no row for a 0-byte file, so an
-    # ''-payload doc written out would appear in the oracle but never
-    # come back through the reader — "no content, no digest" on both.
+    # EMPTY text is excluded too: Spark's binaryFile source silently
+    # emits no row for a 0-byte file, so an ''-payload doc written out
+    # would appear in the oracle but never come back through the reader —
+    # "no content, no digest" on both.
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(
@@ -240,21 +240,19 @@ def source_binaryfile_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .collect()
     )
-    with tempfile.TemporaryDirectory(prefix="src_bf_") as root:
-        for r in docs:
-            with open(
-                os.path.join(root, f"doc_{r['doc_id']:05d}.txt"), "wb"
-            ) as f:
-                f.write(r["text"].encode("utf-8"))
-        back = spark.read.format("binaryFile").load(root)
-        out = back.select(
-            F.regexp_extract(F.col("path"), r"doc_(\d+)\.txt$", 1)
-            .cast("bigint")
-            .alias("doc_id"),
-            F.col("length").cast("int").alias("n_bytes"),
-            F.md5(F.col("content")).alias("digest"),
-        )
-        return out.localCheckpoint(eager=True)
+    for r in docs:
+        with open(
+            os.path.join(root, f"doc_{r['doc_id']:05d}.txt"), "wb"
+        ) as f:
+            f.write(r["text"].encode("utf-8"))
+    back = spark.read.format("binaryFile").load(root)
+    return back.select(
+        F.regexp_extract(F.col("path"), r"doc_(\d+)\.txt$", 1)
+        .cast("bigint")
+        .alias("doc_id"),
+        F.col("length").cast("int").alias("n_bytes"),
+        F.md5(F.col("content")).alias("digest"),
+    )
 
 
 @query(
@@ -276,7 +274,10 @@ def source_binaryfile_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("source", "parquet", "schema-merge"),
 )
-def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_parquet_schema_merge(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Parquet ``mergeSchema`` — FILE-level schema drift, the reader-side
     cousin of ALTER TABLE evolution (`lakehouse_schema_evolution`): a
     directory accumulates files written before and after a column was
@@ -293,29 +294,27 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     is unchanged — each file is still read with its own projection.
     """
     o = load_table(spark, sf_dir, "orders")
-    with tempfile.TemporaryDirectory(prefix="src_merge_") as root:
-        old = o.filter(F.col("o_orderstatus") == "F").select(
-            "o_orderkey", "o_totalprice"
-        )
-        new = (
-            o.filter(F.col("o_orderstatus") == "O")
-            .select("o_orderkey", "o_totalprice")
-            .withColumn("o_channel", F.lit("web"))
-        )
-        old.write.parquet(os.path.join(root, "batch=1"))
-        new.write.parquet(os.path.join(root, "batch=2"))
-        merged = spark.read.option("mergeSchema", "true").parquet(
-            os.path.join(root, "batch=1"), os.path.join(root, "batch=2")
-        )
-        assert "o_channel" in merged.columns
-        out = merged.groupBy(
-            F.coalesce(F.col("o_channel"), F.lit("legacy")).alias("channel")
-        ).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count("o_channel").alias("n_with_channel"),
-            F.sum("o_orderkey").cast("long").alias("key_sum"),
-        )
-        return out.localCheckpoint(eager=True)
+    old = o.filter(F.col("o_orderstatus") == "F").select(
+        "o_orderkey", "o_totalprice"
+    )
+    new = (
+        o.filter(F.col("o_orderstatus") == "O")
+        .select("o_orderkey", "o_totalprice")
+        .withColumn("o_channel", F.lit("web"))
+    )
+    old.write.parquet(os.path.join(root, "batch=1"))
+    new.write.parquet(os.path.join(root, "batch=2"))
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        os.path.join(root, "batch=1"), os.path.join(root, "batch=2")
+    )
+    assert "o_channel" in merged.columns
+    return merged.groupBy(
+        F.coalesce(F.col("o_channel"), F.lit("legacy")).alias("channel")
+    ).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count("o_channel").alias("n_with_channel"),
+        F.sum("o_orderkey").cast("long").alias("key_sum"),
+    )
 
 
 @query(
@@ -330,7 +329,8 @@ def source_parquet_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("source", "text"),
 )
-def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_text_lines(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """``spark.read.text`` — the raw line-oriented source (one row per
     line, single ``value`` column): how WET/plain-text web-crawl shards
     enter a pipeline before any schema exists.
@@ -344,19 +344,17 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     byte range — the same embarrassing parallelism as CSV, minus parsing.
     """
     d = load_table(spark, sf_dir, "documents")
-    with tempfile.TemporaryDirectory(prefix="src_text_") as root:
-        path = os.path.join(root, "docs.txt")
-        # documents text is single-line by construction; write one per line
-        d.select("text").write.text(path)
-        lines = spark.read.text(path)
-        out = lines.agg(
-            F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.length("value")).cast("long").alias("total_chars"),
-            F.sum(F.col("value").contains("dup").cast("long"))
-            .cast("long")
-            .alias("lines_with_dup"),
-        )
-        return out.localCheckpoint(eager=True)
+    path = os.path.join(root, "docs.txt")
+    # documents text is single-line by construction; write one per line
+    d.select("text").write.text(path)
+    lines = spark.read.text(path)
+    return lines.agg(
+        F.count(F.lit(1)).alias("n_lines"),
+        F.sum(F.length("value")).cast("long").alias("total_chars"),
+        F.sum(F.col("value").contains("dup").cast("long"))
+        .cast("long")
+        .alias("lines_with_dup"),
+    )
 
 
 @query(
@@ -370,7 +368,7 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       CAST(COUNT(*) AS BIGINT) AS n_rows,
       -- COUNT, not SUM: a corrupt-row COUNT over zero rows is 0 on both
-      -- engines where SUM would be NULL (round-10 empty-table parity).
+      -- engines where SUM would be NULL.
       CAST(COUNT(CASE WHEN corrupt = 1 THEN 1 END) AS BIGINT) AS n_corrupt,
       CAST(SUM(CASE WHEN corrupt = 0 THEN o_orderkey ELSE NULL END) AS BIGINT)
         AS clean_key_sum,
@@ -381,7 +379,10 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("source", "csv", "data-quality"),
 )
-def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_csv_malformed_permissive(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Malformed-record handling on CSV ingest: rows whose numeric field
     is garbage (injected for o_orderkey % 50 = 0) must survive the read
     under ``mode=PERMISSIVE`` with a populated ``_corrupt_record`` column
@@ -400,52 +401,50 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
     audit must.
     """
     o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    with tempfile.TemporaryDirectory(prefix="src_badcsv_") as root:
-        path = os.path.join(root, "orders_csv")
-        # inject garbage into the price field for a deterministic subset
-        # coalesce to "" so a NULL serializes as an EMPTY FIELD: concat_ws
-        # SKIPS NULL arguments, which wrote short lines that the CSV
-        # parser then flagged as token-count-corrupt instead of parsing
-        # back to NULL (round-12 warehouse axis).
-        lines = o.select(
-            F.concat_ws(
-                ",",
-                F.coalesce(F.col("o_orderkey").cast("string"), F.lit("")),
-                F.coalesce(
-                    F.when(
-                        F.col("o_orderkey") % 50 == 0, F.lit("NOT_A_NUMBER")
-                    ).otherwise(F.col("o_totalprice").cast("string")),
-                    F.lit(""),
-                ),
-            ).alias("value")
-        )
-        lines.write.text(path)
-        parsed = spark.read.csv(
-            path,
-            schema="o_orderkey LONG, o_totalprice DOUBLE, _corrupt_record STRING",
-            mode="PERMISSIVE",
-            columnNameOfCorruptRecord="_corrupt_record",
-        )
-        out = parsed.agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.count("_corrupt_record").alias("n_corrupt"),
-            F.sum(
-                F.when(F.col("_corrupt_record").isNull(), F.col("o_orderkey"))
-            )
-            .cast("long")
-            .alias("clean_key_sum"),
-            F.sum(
+    path = os.path.join(root, "orders_csv")
+    # inject garbage into the price field for a deterministic subset
+    # coalesce to "" so a NULL serializes as an EMPTY FIELD: concat_ws
+    # SKIPS NULL arguments, which wrote short lines that the CSV
+    # parser then flagged as token-count-corrupt instead of parsing
+    # back to NULL.
+    lines = o.select(
+        F.concat_ws(
+            ",",
+            F.coalesce(F.col("o_orderkey").cast("string"), F.lit("")),
+            F.coalesce(
                 F.when(
-                    F.col("_corrupt_record").isNull(),
-                    F.round(
-                        F.col("o_totalprice").cast("decimal(18,2)") * 100
-                    ).cast("long"),
-                )
-            )
-            .cast("long")
-            .alias("clean_cents_sum"),
+                    F.col("o_orderkey") % 50 == 0, F.lit("NOT_A_NUMBER")
+                ).otherwise(F.col("o_totalprice").cast("string")),
+                F.lit(""),
+            ),
+        ).alias("value")
+    )
+    lines.write.text(path)
+    parsed = spark.read.csv(
+        path,
+        schema="o_orderkey LONG, o_totalprice DOUBLE, _corrupt_record STRING",
+        mode="PERMISSIVE",
+        columnNameOfCorruptRecord="_corrupt_record",
+    )
+    return parsed.agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count("_corrupt_record").alias("n_corrupt"),
+        F.sum(
+            F.when(F.col("_corrupt_record").isNull(), F.col("o_orderkey"))
         )
-        return out.localCheckpoint(eager=True)
+        .cast("long")
+        .alias("clean_key_sum"),
+        F.sum(
+            F.when(
+                F.col("_corrupt_record").isNull(),
+                F.round(
+                    F.col("o_totalprice").cast("decimal(18,2)") * 100
+                ).cast("long"),
+            )
+        )
+        .cast("long")
+        .alias("clean_cents_sum"),
+    )
 
 
 @query(
@@ -460,7 +459,10 @@ def source_csv_malformed_permissive(spark: SparkSession, sf_dir: str) -> DataFra
     """,
     tags=("source", "layout", "glob"),
 )
-def source_recursive_glob_read(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_recursive_glob_read(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Messy-lake ingestion options: ``recursiveFileLookup=true`` walks an
     arbitrarily nested directory tree (no partition-discovery assumptions)
     and ``pathGlobFilter`` keeps only data files — the combination that
@@ -480,26 +482,23 @@ def source_recursive_glob_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    with tempfile.TemporaryDirectory(prefix="src_rec_") as root:
-        # scatter by key hash: hash thirds cover EVERY row — per-status
-        # filters silently lost NULL-status rows from the landing zone
-        # (round-12 warehouse axis)
-        for i, sub in ((0, "team_a/2024/01"), (1, "team_b/deep/nest/x"), (2, "misc")):
-            o.filter(F.pmod(F.hash("o_orderkey"), 3) == i).write.parquet(
-                os.path.join(root, sub)
-            )
-        # landing-zone junk the glob must ignore
-        with open(os.path.join(root, "README.txt"), "w") as f:
-            f.write("not data\n")
-        with open(os.path.join(root, "team_a", "notes.json"), "w") as f:
-            f.write('{"junk": true}\n')
-        back = (
-            spark.read.option("recursiveFileLookup", "true")
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(root)
+    # scatter by key hash: hash thirds cover EVERY row, NULL-status rows
+    # included
+    for i, sub in ((0, "team_a/2024/01"), (1, "team_b/deep/nest/x"), (2, "misc")):
+        o.filter(F.pmod(F.hash("o_orderkey"), 3) == i).write.parquet(
+            os.path.join(root, sub)
         )
-        out = back.groupBy("o_orderstatus").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("o_orderkey").cast("long").alias("key_sum"),
-        )
-        return out.localCheckpoint(eager=True)
+    # landing-zone junk the glob must ignore
+    with open(os.path.join(root, "README.txt"), "w") as f:
+        f.write("not data\n")
+    with open(os.path.join(root, "team_a", "notes.json"), "w") as f:
+        f.write('{"junk": true}\n')
+    back = (
+        spark.read.option("recursiveFileLookup", "true")
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(root)
+    )
+    return back.groupBy("o_orderstatus").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum("o_orderkey").cast("long").alias("key_sum"),
+    )

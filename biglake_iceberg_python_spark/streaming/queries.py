@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import oracle_dsum
-from biglake_iceberg_python_spark.plans.registry import query
+from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
 from biglake_iceberg_python_spark.streaming.pipeline import (
@@ -586,7 +586,10 @@ def _make_user_upsert(state):
     """,
     tags=("streaming", "checkpoint", "recovery", "exactly-once"),
 )
-def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def stream_restart_exactly_once(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Checkpoint recovery — exactly-once ACROSS A RESTART: run 1 streams
     the first half of the chunks into the upsert state table and
     terminates; the second half of the files then lands in the source
@@ -602,38 +605,36 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
 
     from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
 
     staged, _ = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    with tempfile.TemporaryDirectory(prefix="stream_restart_") as base:
-        inp = os.path.join(base, "in")
-        ckpt = os.path.join(base, "ckpt")
-        os.makedirs(inp)
-        chunks = sorted(
-            f for f in os.listdir(staged) if f.endswith(".parquet")
+    inp = os.path.join(root, "in")
+    ckpt = os.path.join(root, "ckpt")
+    os.makedirs(inp)
+    chunks = sorted(
+        f for f in os.listdir(staged) if f.endswith(".parquet")
+    )
+    state = SnapshotTable(spark, os.path.join(root, "state"))
+    upsert = _make_user_upsert(state)
+    # Run 1: only the first half of the replay exists yet.
+    for f in chunks[:2]:
+        shutil.copy(os.path.join(staged, f), os.path.join(inp, f))
+    run_stream_foreach_batch(read_event_stream(spark, inp), upsert, ckpt)
+    # The job "dies"; the remaining files arrive while it is down.
+    for f in chunks[2:]:
+        shutil.copy(os.path.join(staged, f), os.path.join(inp, f))
+    # Run 2: same checkpoint — committed offsets skip the first half.
+    LAST_STREAMING_QUERIES["stream_restart_exactly_once"] = (
+        run_stream_foreach_batch(
+            read_event_stream(spark, inp), upsert, ckpt
         )
-        state = SnapshotTable(spark, os.path.join(base, "state"))
-        upsert = _make_user_upsert(state)
-        # Run 1: only the first half of the replay exists yet.
-        for f in chunks[:2]:
-            shutil.copy(os.path.join(staged, f), os.path.join(inp, f))
-        run_stream_foreach_batch(read_event_stream(spark, inp), upsert, ckpt)
-        # The job "dies"; the remaining files arrive while it is down.
-        for f in chunks[2:]:
-            shutil.copy(os.path.join(staged, f), os.path.join(inp, f))
-        # Run 2: same checkpoint — committed offsets skip the first half.
-        LAST_STREAMING_QUERIES["stream_restart_exactly_once"] = (
-            run_stream_foreach_batch(
-                read_event_stream(spark, inp), upsert, ckpt
-            )
-        )
-        return state.read().select(
-            "user_id",
-            "n_events",
-            F.col("sum_dec").cast("double").alias("total_value"),
-        ).localCheckpoint(eager=True)  # materialize before cleanup
+    )
+    return state.read().select(
+        "user_id",
+        "n_events",
+        F.col("sum_dec").cast("double").alias("total_value"),
+    )
 
 
 @query(
@@ -648,7 +649,10 @@ def stream_restart_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("streaming", "foreachBatch", "merge"),
 )
-def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def stream_foreachbatch_upsert(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """foreachBatch incremental MERGE: each micro-batch's per-user partials
     are upserted (add counts / decimal sums) into a snapshot table — the
     streaming-materialized-view pattern (reference's Iceberg sink A8 made
@@ -657,20 +661,17 @@ def stream_foreachbatch_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     State arithmetic stays decimal end-to-end; only the final read casts to
     double, so cross-batch addition order cannot perturb the result.
     """
-    import tempfile
-
     from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
 
     input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    with tempfile.TemporaryDirectory(prefix="stream_upsert_") as root:
-        state = SnapshotTable(spark, root)
-        s = read_event_stream(spark, input_dir)
-        run_stream_foreach_batch(s, _make_user_upsert(state), ckpt)
-        return state.read().select(
-            "user_id",
-            "n_events",
-            F.col("sum_dec").cast("double").alias("total_value"),
-        ).localCheckpoint(eager=True)  # materialize before cleanup
+    state = SnapshotTable(spark, root)
+    s = read_event_stream(spark, input_dir)
+    run_stream_foreach_batch(s, _make_user_upsert(state), ckpt)
+    return state.read().select(
+        "user_id",
+        "n_events",
+        F.col("sum_dec").cast("double").alias("total_value"),
+    )
 
 
 @query(
@@ -1205,7 +1206,8 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     tags=("streaming", "sink", "file", "exactly-once"),
 )
-def stream_file_sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def stream_file_sink_manifest(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
     """Streaming FILE sink (parquet) with its exactly-once manifest — the
     sink family's third member after memory and foreachBatch: the file
     sink commits each batch by listing its files in ``_spark_metadata``,
@@ -1226,7 +1228,6 @@ def stream_file_sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
     import shutil
-    import tempfile
 
     input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
     stream = read_event_stream(spark, input_dir).select(
@@ -1236,35 +1237,33 @@ def stream_file_sink_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
-    with tempfile.TemporaryDirectory(prefix="stream_fsink_") as root:
-        sink = os.path.join(root, "out")
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", os.path.join(root, "ckpt"))
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        # plant an orphan data file the manifest never committed
-        committed = glob.glob(os.path.join(sink, "part-*.parquet"))
-        assert committed, "file sink wrote no data files"
-        orphan_src = os.path.join(root, "orphan")
-        spark.createDataFrame(
-            [(10**12, "orphan-type", 123456)],
-            "event_id long, event_type string, cents long",
-        ).coalesce(1).write.parquet(orphan_src)
-        orphan_part = glob.glob(os.path.join(orphan_src, "part-*.parquet"))[0]
-        planted = os.path.join(sink, "part-99999-orphan.snappy.parquet")
-        shutil.copy(orphan_part, planted)
-        assert spark.read.parquet(planted).count() == 1  # orphan is real
-        back = spark.read.parquet(sink)  # manifest-aware: orphan invisible
-        out = back.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("cents").cast("long").alias("total_cents"),
-        )
-        return out.localCheckpoint(eager=True)
+    sink = os.path.join(root, "out")
+    q = (
+        stream.writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    # plant an orphan data file the manifest never committed
+    committed = glob.glob(os.path.join(sink, "part-*.parquet"))
+    assert committed, "file sink wrote no data files"
+    orphan_src = os.path.join(root, "orphan")
+    spark.createDataFrame(
+        [(10**12, "orphan-type", 123456)],
+        "event_id long, event_type string, cents long",
+    ).coalesce(1).write.parquet(orphan_src)
+    orphan_part = glob.glob(os.path.join(orphan_src, "part-*.parquet"))[0]
+    planted = os.path.join(sink, "part-99999-orphan.snappy.parquet")
+    shutil.copy(orphan_part, planted)
+    assert spark.read.parquet(planted).count() == 1  # orphan is real
+    back = spark.read.parquet(sink)  # manifest-aware: orphan invisible
+    return back.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_events"),
+        F.sum("cents").cast("long").alias("total_cents"),
+    )
 
 
 @query(

@@ -629,3 +629,60 @@ def test_global_window_inventory_oracle_side():
     gone = _GLOBAL_WINDOW_ORACLE_NAMES - found
     assert not new, f"new oracle global-window name(s), document: {sorted(new)}"
     assert not gone, f"stale oracle inventory, prune: {sorted(gone)}"
+
+
+# Queries that open their own scratch directory instead of stacking
+# @scratch. Each returns a LAZY frame over files in a directory it never
+# removes; @scratch would materialize that frame, one more Spark job.
+_OWN_SCRATCH_QUERIES = {
+    "source_csv_roundtrip": "lazy scan of the CSV it wrote",
+    "source_json_roundtrip": "lazy scan of the JSON it wrote",
+    "source_orc_roundtrip": "lazy scan of the ORC it wrote",
+    "source_partitioned_write_prune":
+        "tests/test_plans.py reads the PartitionFilters of its lazy scan",
+    "source_python_datasource_stream":
+        "returns the memory sink's table; the directory is the stream's "
+        "checkpoint",
+}
+
+
+def _query_bodies_opening_scratch() -> set[str]:
+    """Registered names of @query functions whose body calls
+    ``TemporaryDirectory`` or ``mkdtemp``."""
+    import ast
+    import glob
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "biglake_iceberg_python_spark",
+    )
+    found = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        for fn in ast.walk(ast.parse(open(path).read())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            names = [
+                d.args[0].value
+                for d in fn.decorator_list
+                if isinstance(d, ast.Call) and getattr(d.func, "id", "") == "query"
+            ]
+            opens = any(
+                isinstance(c, ast.Call)
+                and getattr(c.func, "attr", getattr(c.func, "id", None))
+                in ("TemporaryDirectory", "mkdtemp")
+                for c in ast.walk(fn)
+            )
+            if names and opens:
+                found.add(names[0])
+    return found
+
+
+def test_staging_queries_use_scratch():
+    """A query that stages data takes its directory from @scratch, which
+    also materializes the result and removes the directory."""
+    found = _query_bodies_opening_scratch()
+    new = found - set(_OWN_SCRATCH_QUERIES)
+    gone = set(_OWN_SCRATCH_QUERIES) - found
+    assert not new, f"stack @scratch instead of a hand-made temp dir: {sorted(new)}"
+    assert not gone, f"stale allowlist entries, prune: {sorted(gone)}"

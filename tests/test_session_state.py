@@ -4,6 +4,9 @@ current database, the namespaces and the temp views."""
 
 from __future__ import annotations
 
+import glob
+import os
+import tempfile
 import uuid
 
 import pyarrow as pa
@@ -89,6 +92,41 @@ def test_conf_scoped_queries_leave_session_conf(plain, sf_dir, name):
     assert plain.conf.getAll == before
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "agg_grouping_sets",
+        "subquery_scalar",
+        "subquery_correlated",
+        "subquery_not_in_null",
+        "sql_recursive_reachability",
+        "sql_parameterized",
+        "sql_lateral_topn",
+        "sql_pipe_syntax",
+        "sql_group_order_by_all",
+        "sql_identifier_clause",
+        "sql_named_window",
+        "sql_session_variable",
+        "sql_execute_immediate",
+        "sql_values_inline",
+        "sql_temp_function",
+        "udf_python_udtf",
+        "udf_udtf_polymorphic_analyze",
+        "window_nth_value",
+    ],
+)
+def test_sql_queries_leave_no_temp_view(plain, sf_dir, name):
+    """SQL text binds its input frames by keyword, so no view outlives
+    the query to shadow a table of the caller's."""
+
+    def temp_views():
+        return {t.name for t in plain.catalog.listTables() if t.isTemporary}
+
+    before = temp_views()
+    load_all()[name].fn(plain, sf_dir).collect()
+    assert temp_views() - before == set()
+
+
 def test_bucketed_join_keeps_current_database(plain, sf_dir):
     """The bucketed join qualifies every table name, so the caller's
     current database survives it."""
@@ -104,20 +142,28 @@ def test_bucketed_join_keeps_current_database(plain, sf_dir):
 
 
 def test_failed_lakehouse_query_drops_its_namespace(plain, sf_dir, monkeypatch):
-    """A lakehouse query that fails after creating its namespace and temp
-    views still drops them: the catalog is left as the caller had it."""
+    """A staging query drops its namespace and temp views and removes its
+    scratch directory, whether it fails after creating them or succeeds;
+    a successful result still collects after that cleanup."""
+    name = "lakehouse_roundtrip"
 
-    def namespaces():
-        return sorted(r[0] for r in plain.sql("SHOW NAMESPACES").collect())
-
-    def temp_views():
-        return sorted(t.name for t in plain.catalog.listTables() if t.isTemporary)
+    def state():
+        return (
+            sorted(r[0] for r in plain.sql("SHOW NAMESPACES").collect()),
+            sorted(t.name for t in plain.catalog.listTables() if t.isTemporary),
+            set(glob.glob(os.path.join(tempfile.gettempdir(), f"{name}_*"))),
+        )
 
     def fail(*_args, **_kwargs):
         raise RuntimeError("read-back failed")
 
-    before = (namespaces(), temp_views())
-    monkeypatch.setattr(LakehouseCatalog, "table", fail)
-    with pytest.raises(RuntimeError, match="read-back failed"):
-        load_all()["lakehouse_roundtrip"].fn(plain, sf_dir)
-    assert (namespaces(), temp_views()) == before
+    before = state()
+    with monkeypatch.context() as m:
+        m.setattr(LakehouseCatalog, "table", fail)
+        with pytest.raises(RuntimeError, match="read-back failed"):
+            load_all()[name].fn(plain, sf_dir)
+    assert state() == before
+
+    df = load_all()[name].fn(plain, sf_dir)
+    assert state() == before
+    assert len(df.collect()) == load_table(plain, sf_dir, "region").count()
