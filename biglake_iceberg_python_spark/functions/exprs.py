@@ -51,6 +51,23 @@ def oracle_dsum(expr: str) -> str:
     return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(30,6))) AS STRING) AS DOUBLE)"
 
 
+# Events cleansing, the same on both engines: a row with a NULL ts is
+# dropped, and a value is kept only if it is finite and below this cap in
+# magnitude (else NULL). The cap is the exact-moment family's int64 budget
+# (a kept value's cents² is <= 1e12) and sits an order of magnitude above
+# the genuine domain ceiling (~560). Spark side: eventflow._timed_events.
+_EVENT_VALUE_CAP_SQL = "1.0e4"
+EVENT_VALUE_CAP = float(_EVENT_VALUE_CAP_SQL)
+
+
+def oracle_events(src: str = "events") -> str:
+    """The DuckDB twin of the events cleansing, as a subquery over ``src``."""
+    return (
+        "(SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < "
+        f"{_EVENT_VALUE_CAP_SQL} THEN value END AS value) FROM {src} WHERE ts IS NOT NULL)"
+    )
+
+
 def davg(col: str | Column, alias: str | None = None) -> Column:
     """Order-independent average: exact decimal sum / count, as double."""
     c = F.col(col) if isinstance(col, str) else col

@@ -16,10 +16,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import (
+    EVENT_VALUE_CAP,
     davg,
     dsum,
     oracle_davg,
     oracle_dsum,
+    oracle_events,
 )
 from biglake_iceberg_python_spark.functions.twophase import two_phase_rank
 from biglake_iceberg_python_spark.plans.registry import query
@@ -509,7 +511,7 @@ def agg_time_rollup_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(
                 ~F.isnan("value")
                 & (F.abs("value") != F.lit(float("inf")))
-                & (F.abs("value") < F.lit(1.0e4)),
+                & (F.abs("value") < F.lit(EVENT_VALUE_CAP)),
                 F.col("value"),
             ),
         )
@@ -848,7 +850,7 @@ def agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
                   >= INTERVAL '30 minutes'
              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
              THEN 1 ELSE 0 END AS new_session
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), sessions AS (
       SELECT
         user_id, ts, value,
@@ -884,21 +886,13 @@ def agg_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity sweep): Spark's session_window silently drops them while the
     oracle's gaps-and-islands window sorted them into a phantom session.
     """
-    e = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("ts").isNotNull())
-        .withColumn(
-            "value",
-            F.when(
-                ~F.isnan("value")
-                & (F.abs("value") != F.lit(float("inf")))
-                & (F.abs("value") < F.lit(1.0e4)),
-                F.col("value"),
-            ),
-        )
-    )
+    # Imported here: a module-level import would register eventflow's
+    # queries ahead of this module's and reorder the registry.
+    from biglake_iceberg_python_spark.operators.eventflow import _timed_events
+
     return (
-        e.groupBy(F.session_window("ts", "30 minutes"), "user_id")
+        _timed_events(spark, sf_dir)
+        .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),

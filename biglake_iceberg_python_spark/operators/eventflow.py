@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from biglake_iceberg_python_spark.functions.exprs import EVENT_VALUE_CAP, oracle_events
 from biglake_iceberg_python_spark.functions.twophase import two_phase_rank
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
@@ -62,26 +63,18 @@ def _timed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
         # Non-finite AND out-of-range measures reduce to NULL — the
-        # missing-measure class this module already handles symmetrically
-        # (round-10 NaN/Inf probe; extended by the round-10 out-of-range
-        # probe: a FINITE 5e16 value overflows the DECIMAL(18,2) cents
-        # cast, which raises in DuckDB and under ANSI while Spark
-        # ANSI-off silently NULLs — crash-vs-garbage again; and even an
-        # in-DECIMAL-range 9e14 value overflows the int64 CENTS SUMS,
-        # where DuckDB's HUGEINT-to-BIGINT cast raises and Spark wraps).
-        # The 1e4 cap is the exact-moment family's int64 BUDGET: it
-        # bounds not just the cast but the sums of squared cents (a kept
-        # value's cents^2 is <= 1e12, so second moments stay far inside
-        # 2^63 at every design scale factor), while still sitting an
-        # order of magnitude above the genuine domain ceiling (~560).
-        # Oracle twin: the `* REPLACE (CASE WHEN isfinite(value) AND
-        # abs(value) < 1.0e4 ...)` wrap on all 61 sites.
+        # missing-measure class this module already handles symmetrically:
+        # a FINITE 5e16 value overflows the DECIMAL(18,2) cents cast
+        # (DuckDB and ANSI raise, Spark ANSI-off silently NULLs), and an
+        # in-range 9e14 value overflows the int64 cents sums (DuckDB's
+        # HUGEINT-to-BIGINT cast raises, Spark wraps). The cap and its
+        # oracle twin (`exprs.oracle_events`) sit next to oracle_dsum.
         .withColumn(
             "value",
             F.when(
                 ~F.isnan("value")
                 & (F.abs("value") != F.lit(float("inf")))
-                & (F.abs("value") < F.lit(1.0e4)),
+                & (F.abs("value") < F.lit(EVENT_VALUE_CAP)),
                 F.col("value"),
             ),
         )
@@ -100,7 +93,7 @@ def _events_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     "funnel_conversion",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_type, {_ORACLE_ES} AS es FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, event_type, {_ORACLE_ES} AS es FROM {oracle_events()} events
     ), s1 AS (
       SELECT user_id, MIN(es) AS t1 FROM e
       WHERE event_type = 'view' GROUP BY user_id
@@ -189,7 +182,7 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cohort_retention",
     oracle=f"""
     WITH e AS (
-      SELECT DISTINCT user_id, ({_ORACLE_ES}) // {_WEEK_S} AS w FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT DISTINCT user_id, ({_ORACLE_ES}) // {_WEEK_S} AS w FROM {oracle_events()} events
     ), cohort AS (
       SELECT user_id, MIN(w) AS cw FROM e GROUP BY user_id
     )
@@ -232,7 +225,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_gap_fill_locf",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
     ), daily AS (
       SELECT user_id, day, COUNT(*) AS n_ev FROM e GROUP BY user_id, day
     ), bounds AS (
@@ -301,7 +294,7 @@ def ts_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_transition_matrix",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_id, event_type, {_ORACLE_ES} AS es FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, event_id, event_type, {_ORACLE_ES} AS es FROM {oracle_events()} events
     ), pairs AS (
       SELECT
         LAG(event_type) OVER (
@@ -365,7 +358,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "anomaly_zscore_daily",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
     ), daily AS (
       SELECT user_id, day, COUNT(*) AS n_ev FROM e GROUP BY user_id, day
     ), stats AS (
@@ -430,7 +423,7 @@ def anomaly_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_dau_wau_stickiness",
     oracle=f"""
     WITH ud AS (
-      SELECT DISTINCT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT DISTINCT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
     ), dau AS (
       SELECT day, COUNT(*) AS dau FROM ud GROUP BY day
     ), cover AS (
@@ -568,14 +561,14 @@ def agg_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_trend_slope",
-    oracle="""
+    oracle=f"""
     WITH pts AS (
       SELECT
         event_type,
         date_diff('second', TIMESTAMP '2024-01-01 00:00:00',
                   date_trunc('second', ts)) AS x,
         CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS y
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), s AS (
       SELECT
         event_type,
@@ -660,7 +653,7 @@ def events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
                WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
                WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's'
                ELSE 'e' END AS ch
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), seqs AS (
       SELECT user_id, string_agg(ch, '' ORDER BY es, event_id) AS seq
       FROM e GROUP BY user_id
@@ -791,7 +784,7 @@ _EWMA_W = [1000000, 700000, 489999, 342999, 240099, 168069, 117648]
         user_id,
         ({_ORACLE_ES}) // {_DAY_S} AS day,
         SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       GROUP BY user_id, ({_ORACLE_ES}) // {_DAY_S}
     ), w AS (
       SELECT * FROM (VALUES
@@ -881,7 +874,7 @@ def ts_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
           * CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT))
           FILTER (WHERE user_id % 2 = 1) AS q1
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       GROUP BY event_type
     )
     -- q0/q1 (sums of squared cents) exceed 2^53 on amplified
@@ -986,7 +979,7 @@ def events_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH first_hour AS (
       SELECT user_id, MIN(({_ORACLE_ES}) // 3600) AS hour
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events GROUP BY user_id
+      FROM {oracle_events()} events GROUP BY user_id
     ), hourly_new AS (
       SELECT hour, COUNT(*) AS new_users FROM first_hour GROUP BY hour
     )
@@ -1028,10 +1021,10 @@ def events_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_user_entropy",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT user_id, event_type, COUNT(*) AS cnt
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events GROUP BY user_id, event_type
+      FROM {oracle_events()} events GROUP BY user_id, event_type
     ), t AS (
       SELECT user_id, SUM(cnt) AS n, COUNT(*) AS n_types FROM c GROUP BY user_id
     ), terms AS (
@@ -1098,7 +1091,7 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
              LEAD(event_type, 1) OVER w AS nxt1,
              LEAD(event_type, 2) OVER w AS nxt2
       FROM (SELECT user_id, event_type, ({_ORACLE_ES}) AS es, event_id
-            FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+            FROM {oracle_events()} events
             WHERE event_type IS NOT NULL)
       WINDOW w AS (PARTITION BY user_id ORDER BY es, event_id)
     ), tri AS (
@@ -1170,7 +1163,7 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
            // 86400 + 4) % 7 + 7) % 7 AS dow,
         ((({_ORACLE_ES}) % 86400 + 86400) % 86400) // 3600 AS hour,
         CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     )
     SELECT
       CAST(dow AS BIGINT) AS dow,
@@ -1213,14 +1206,14 @@ def events_heatmap_hour_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_outlier_mad",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       -- value IS NOT NULL: a MAD over undefined values is undefined; a
       -- NULL cents rank key would also trip two_phase_rank's loud
       -- NULL-key guard on the Spark side (round-10 events parity sweep).
       SELECT event_type,
              CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       WHERE value IS NOT NULL
     ), med AS (
       SELECT event_type, cents,
@@ -1347,7 +1340,7 @@ def events_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_type,
         ({_ORACLE_ES}) // {_DAY_S} AS day,
         SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
     ), lagk AS (
       SELECT a.event_type, l.lag_k, a.v AS x, b.v AS y
@@ -1445,13 +1438,13 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "events_conversion_wilson_ci",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT
         user_id % 2 AS variant,
         COUNT(*) FILTER (WHERE event_type = 'purchase') AS k,
         COUNT(*) AS n
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       GROUP BY user_id % 2
     )
     SELECT
@@ -1509,7 +1502,7 @@ def events_conversion_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH daily AS (
       SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day,
              SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
+      FROM {oracle_events()} events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
     ), tot AS (
       SELECT event_type, SUM(v) AS t, COUNT(*) AS n FROM daily
       GROUP BY event_type
@@ -1593,8 +1586,7 @@ _KM_RISK_SQL = """
       SELECT user_id,
              MIN(({es}) // {day_s}) AS d0,
              MAX(({es}) // {day_s}) AS d1
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value)
-            FROM {events} WHERE ts IS NOT NULL) km_e
+      FROM {events} km_e
       GROUP BY user_id
     ), horizon AS (
       SELECT MAX(d1) AS dmax FROM span
@@ -1618,7 +1610,8 @@ _KM_RISK_SQL = """
 
 def _km_body_sql(events: str) -> str:
     return _KM_RISK_SQL.format(
-        es=_ORACLE_ES, day_s=_DAY_S, events=events, censor=_KM_CENSOR_DAYS
+        es=_ORACLE_ES, day_s=_DAY_S, events=oracle_events(events),
+        censor=_KM_CENSOR_DAYS,
     )
 
 
@@ -1778,12 +1771,12 @@ def events_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame
 
 @query(
     "events_ratio_metric_delta_ci",
-    oracle="""
+    oracle=f"""
     WITH per_user AS (
       SELECT user_id % 2 AS variant, user_id,
              SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS x,
              COUNT(*) AS y
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'purchase'
+      FROM {oracle_events()} events WHERE event_type = 'purchase'
       GROUP BY user_id % 2, user_id
     ), m AS (
       SELECT variant,
@@ -1884,7 +1877,7 @@ _ATTR_WINDOW_S = 7 * 86400  # lookback for credit assignment
     "events_attribution_multitouch",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_type, event_id, ({_ORACLE_ES}) AS es FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, event_type, event_id, ({_ORACLE_ES}) AS es FROM {oracle_events()} events
     ), conv AS (
       SELECT user_id, event_id AS conv_id, es AS conv_es
       FROM e WHERE event_type = 'purchase'
@@ -1965,7 +1958,7 @@ _BOOT_B = 50  # resamples; deterministic md5 draws, no RNG
     WITH daily AS (
       SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day,
              SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
+      FROM {oracle_events()} events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
     ), idx AS (
       SELECT event_type, v,
              ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) - 1 AS i,
@@ -2094,7 +2087,7 @@ def events_bootstrap_ci_daily_mean(spark: SparkSession, sf_dir: str) -> DataFram
                   % 86400)) // 86400 + 4) % 7 + 7) % 7) * 24
                + ((({_ORACLE_ES}) % 86400 + 86400) % 86400) // 3600 AS cell,
              CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS v
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), per_cell AS (
       SELECT event_type, cell,
              CAST(COUNT(*) AS DECIMAL(38,0)) AS nc,
@@ -2212,7 +2205,7 @@ _CONC_GAP_S = 30 * 60  # session gap, matches the sessionization queries
     "events_peak_concurrency",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) AS es FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, ({_ORACLE_ES}) AS es FROM {oracle_events()} events
     ), flagged AS (
       SELECT user_id, es,
              CASE WHEN es - COALESCE(LAG(es) OVER (PARTITION BY user_id
@@ -2354,7 +2347,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH daily AS (
       SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day,
              SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
+      FROM {oracle_events()} events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
     )
     SELECT
       a.event_type,
@@ -2417,7 +2410,7 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
     WITH e AS (
       SELECT user_id, ({_ORACLE_ES}) // {_WEEK_S} AS w,
              CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'purchase'
+      FROM {oracle_events()} events WHERE event_type = 'purchase'
     ), cohort AS (
       SELECT user_id, MIN(w) AS cw FROM e GROUP BY user_id
     ), wk AS (
@@ -2490,7 +2483,7 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "funnel_latency_percentiles",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_type, ({_ORACLE_ES}) AS es FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, event_type, ({_ORACLE_ES}) AS es FROM {oracle_events()} events
     ), v AS (
       SELECT user_id, MIN(es) AS t_view FROM e
       WHERE event_type = 'view' GROUP BY user_id
@@ -2589,7 +2582,7 @@ def funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- (round-10 events parity sweep); a typeless series is
       -- unattributable, so both engines drop it.
       SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       WHERE event_type IS NOT NULL
     ), daily AS (
       SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS x
@@ -2703,7 +2696,7 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_seasonal_decompose",
     oracle=f"""
     WITH e AS (
-      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
     ), daily AS (
       SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS x
       FROM e GROUP BY event_type, day
@@ -2831,7 +2824,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, {_ORACLE_ES} AS es,
              CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
                AS cents
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), b AS (
       SELECT (MIN(es) + MAX(es)) // 2 AS mid FROM e
     ), pu AS (
@@ -3017,7 +3010,7 @@ def events_cuped_adjusted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, {_ORACLE_ES} AS es,
              CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
                AS cents
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), b AS (
       SELECT (MIN(es) + MAX(es)) // 2 AS mid FROM e
     ), m AS (
@@ -3148,7 +3141,7 @@ def _hw_lnew(xm: str, sp: str, l: str, b: str) -> str:
       -- (round-10 events parity sweep); a typeless series is
       -- unattributable, so both engines drop it.
       SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       WHERE event_type IS NOT NULL
     ), daily AS (
       SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS x
@@ -3354,7 +3347,7 @@ _SHAPLEY_W_SQL = ", ".join(
     "events_shapley_attribution",
     oracle=f"""
     WITH conv AS (
-      SELECT user_id, MIN(ts) AS fp FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, MIN(ts) AS fp FROM {oracle_events()} events
       WHERE event_type = 'purchase' GROUP BY user_id
     ), touched AS (
       SELECT c.user_id,
@@ -3483,7 +3476,7 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_longest_streak",
     oracle=f"""
     WITH days AS (
-      SELECT DISTINCT user_id, ({_ORACLE_ES}) // 86400 AS day FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT DISTINCT user_id, ({_ORACLE_ES}) // 86400 AS day FROM {oracle_events()} events
     ), isl AS (
       SELECT user_id, day,
              day - DENSE_RANK() OVER (PARTITION BY user_id ORDER BY day)
@@ -3547,8 +3540,7 @@ _POWERLAW_ACT_SQL = """
       -- matching note on _KM_RISK_SQL; an all-NULL-ts user otherwise
       -- inflates the oracle's cohort n_users literal (round-10 review).
       SELECT DISTINCT user_id, ({es}) // 86400 AS day
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value)
-            FROM {events} WHERE ts IS NOT NULL) pl_e
+      FROM {events} pl_e
     ), fd AS (
       SELECT user_id, MIN(day) AS f FROM ud GROUP BY user_id
     ), coh AS (SELECT COUNT(*) AS n_users FROM fd),
@@ -3576,7 +3568,8 @@ def _powerlaw_oracle(sf_dir: str) -> str:
 
     con = duckdb.connect()
     body = _POWERLAW_ACT_SQL.format(
-        es=_ORACLE_ES, events=f"read_parquet('{sf_dir}/events.parquet')"
+        es=_ORACLE_ES,
+        events=oracle_events(f"read_parquet('{sf_dir}/events.parquet')"),
     )
     rows = con.execute(
         body + " SELECT act.k, act.active, coh.n_users FROM act, coh"
@@ -3585,7 +3578,7 @@ def _powerlaw_oracle(sf_dir: str) -> str:
     args = {r[0] for r in rows} | {r[1] for r in rows} | {
         r[2] for r in rows
     }
-    body = _POWERLAW_ACT_SQL.format(es=_ORACLE_ES, events="events")
+    body = _POWERLAW_ACT_SQL.format(es=_ORACLE_ES, events=oracle_events())
     return f"""
     {body},
     ln_tab(n, micro) AS (VALUES {micro_nat_values_sql(args or [1])}),
@@ -3720,7 +3713,7 @@ def events_retention_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_interpolate_linear",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
     ), daily AS (
       SELECT user_id, day, COUNT(*) AS n_ev FROM e GROUP BY user_id, day
     ), bounds AS (
@@ -3835,7 +3828,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ts_downsample_m4",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       -- value IS NOT NULL: a point with no value cannot be plotted, and
       -- the engines disagree on it — DuckDB's arg_min/arg_max SKIP
@@ -3844,7 +3837,7 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT event_id, value,
              CAST(date_diff('second', TIMESTAMP '1970-01-01',
                             date_trunc('second', ts)) AS BIGINT) AS es
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       WHERE value IS NOT NULL
     ), st AS (
       SELECT MIN(es) AS mn, MAX(es) AS mx FROM e

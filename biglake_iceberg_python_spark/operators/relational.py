@@ -873,18 +873,24 @@ def sql_temp_function(spark: SparkSession, sf_dir: str) -> DataFrame:
         " RETURN CASE WHEN q >= 40 THEN 'bulk'"
         " WHEN q >= 10 THEN 'mid' ELSE 'small' END"
     )
-    return spark.sql(
-        """
-        SELECT
-          l_returnflag,
-          CAST(COUNT(*) AS BIGINT) AS n_rows,
-          SUM(disc_centicents(l_extendedprice, l_discount))
-            AS disc_sum_v10,
-          CAST(COUNT(IF(qty_tier(l_quantity) = 'bulk', 1, NULL)) AS BIGINT)
-            AS n_bulk
-        FROM {lineitem}
-        GROUP BY l_returnflag
-        ORDER BY l_returnflag
-        """,
-        lineitem=load_table(spark, sf_dir, "lineitem"),
-    )
+    # spark.sql analyzes eagerly and inlines both functions, so they are
+    # dropped once it returns: neither outlives the query.
+    try:
+        return spark.sql(
+            """
+            SELECT
+              l_returnflag,
+              CAST(COUNT(*) AS BIGINT) AS n_rows,
+              SUM(disc_centicents(l_extendedprice, l_discount))
+                AS disc_sum_v10,
+              CAST(COUNT(IF(qty_tier(l_quantity) = 'bulk', 1, NULL)) AS BIGINT)
+                AS n_bulk
+            FROM {lineitem}
+            GROUP BY l_returnflag
+            ORDER BY l_returnflag
+            """,
+            lineitem=load_table(spark, sf_dir, "lineitem"),
+        )
+    finally:
+        for fn in ("disc_centicents", "qty_tier"):
+            spark.sql(f"DROP TEMPORARY FUNCTION IF EXISTS {fn}")

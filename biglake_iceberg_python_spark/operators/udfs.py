@@ -326,18 +326,23 @@ def udf_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield (w, i)
 
     spark.udtf.register("split_words_udtf", _SplitWords)
-    return spark.sql(
-        """
-        SELECT
-          d.source,
-          COUNT(*) AS n_tokens,
-          COUNT(DISTINCT s.word) AS n_distinct_words,
-          CAST(SUM(s.pos * length(s.word)) AS BIGINT) AS checksum
-        FROM {documents} d, LATERAL split_words_udtf(d.text) s
-        GROUP BY d.source
-        """,
-        documents=load_table(spark, sf_dir, "documents"),
-    )
+    # The analyzed frame holds the UDTF itself, so its name is dropped once
+    # spark.sql returns.
+    try:
+        return spark.sql(
+            """
+            SELECT
+              d.source,
+              COUNT(*) AS n_tokens,
+              COUNT(DISTINCT s.word) AS n_distinct_words,
+              CAST(SUM(s.pos * length(s.word)) AS BIGINT) AS checksum
+            FROM {documents} d, LATERAL split_words_udtf(d.text) s
+            GROUP BY d.source
+            """,
+            documents=load_table(spark, sf_dir, "documents"),
+        )
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS split_words_udtf")
 
 
 @query(
@@ -709,17 +714,21 @@ def udf_udtf_polymorphic_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
             yield hi, mid, lo
 
     spark.udtf.register("bucketize_poly", Bucketize)
-    return spark.sql(
-        """
-        SELECT
-          o.o_orderstatus,
-          CAST(COUNT(*) AS BIGINT) AS n,
-          CAST(SUM(b.bucket_hi) AS BIGINT) AS bucket_hi,
-          CAST(SUM(b.bucket_mid) AS BIGINT) AS bucket_mid,
-          CAST(SUM(b.bucket_lo) AS BIGINT) AS bucket_lo
-        FROM {orders} o,
-             LATERAL bucketize_poly(o.o_totalprice, '100000,50000') b
-        GROUP BY o.o_orderstatus
-        """,
-        orders=load_table(spark, sf_dir, "orders"),
-    )
+    # Dropped once spark.sql returns, as in udf_python_udtf.
+    try:
+        return spark.sql(
+            """
+            SELECT
+              o.o_orderstatus,
+              CAST(COUNT(*) AS BIGINT) AS n,
+              CAST(SUM(b.bucket_hi) AS BIGINT) AS bucket_hi,
+              CAST(SUM(b.bucket_mid) AS BIGINT) AS bucket_mid,
+              CAST(SUM(b.bucket_lo) AS BIGINT) AS bucket_lo
+            FROM {orders} o,
+                 LATERAL bucketize_poly(o.o_totalprice, '100000,50000') b
+            GROUP BY o.o_orderstatus
+            """,
+            orders=load_table(spark, sf_dir, "orders"),
+        )
+    finally:
+        spark.sql("DROP TEMPORARY FUNCTION IF EXISTS bucketize_poly")

@@ -129,7 +129,25 @@ def _make_datasource_class():
 EventGenDataSource = _make_datasource_class()
 
 
-_registered = False
+def _register_once(spark, source) -> None:
+    """Register ``source`` on this session unless it already is. A
+    registration lives in one session's state, but Spark's duplicate-name
+    check looks at the ACTIVE session, so a new session that shares its
+    context with one already holding the name could neither find the
+    source nor register it; the session is made active for the call."""
+    jsession = spark._jsparkSession
+    if jsession.sessionState().dataSourceManager().dataSourceExists(source.name()):
+        return
+    jss = spark._jvm.org.apache.spark.sql.SparkSession
+    prev = jss.getActiveSession()
+    jss.setActiveSession(jsession)
+    try:
+        spark.dataSource.register(source)
+    finally:
+        if prev.isDefined():
+            jss.setActiveSession(prev.get())
+        else:
+            jss.clearActiveSession()
 
 
 def register(spark) -> None:
@@ -137,11 +155,8 @@ def register(spark) -> None:
     filter pushdown ships behind a flag in Spark 4.1 — enable it here
     (runtime-settable SQL conf) so the reader's pushFilters hook is
     honored even on a plain driver-built session."""
-    global _registered
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    if not _registered:
-        spark.dataSource.register(EventGenDataSource)
-        _registered = True
+    _register_once(spark, EventGenDataSource)
 
 
 # -- registered query ---------------------------------------------------------
@@ -150,6 +165,9 @@ from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from biglake_iceberg_python_spark.plans.registry import query, scratch  # noqa: E402
+from biglake_iceberg_python_spark.streaming.pipeline import (  # noqa: E402
+    LAST_STREAMING_QUERIES,
+)
 
 _N_ROWS = 50_000
 
@@ -309,17 +327,6 @@ def _make_stream_datasource_class():
 
 EventGenStreamDataSource = _make_stream_datasource_class()
 
-_stream_registered = False
-LAST_STREAM_QUERY = {}  # name -> StreamingQuery, for tests
-
-
-def register_stream(spark) -> None:
-    global _stream_registered
-    if not _stream_registered:
-        spark.dataSource.register(EventGenStreamDataSource)
-        _stream_registered = True
-
-
 _STREAM_N = 20_000
 
 
@@ -340,7 +347,10 @@ _STREAM_N = 20_000
     """,
     tags=("source", "streaming", "python-datasource", "generator"),
 )
-def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+@scratch
+def source_python_datasource_stream(
+    spark: SparkSession, sf_dir: str, root: str
+) -> DataFrame:
     """Consume the custom PYTHON STREAMING source to exhaustion: 20k rows
     arrive over >= 4 offset-bounded micro-batches (latestOffset advances
     2.5k per side of the split — rate limiting), aggregated statefully per
@@ -348,11 +358,12 @@ def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFra
     output mode is the correct choice here (unlike unbounded windows).
     ``processAllAvailable`` drains the stream deterministically — the
     DuckDB oracle recomputes the identical rollup from generate_series.
+    The checkpoint lives under ``root``, whose basename names the sink's
+    temp view; the view is dropped once the returned frame is analyzed.
     """
-    import tempfile as _tf
-    import uuid as _uuid
+    import os
 
-    register_stream(spark)
+    _register_once(spark, EventGenStreamDataSource)
     src = (
         spark.readStream.format("eventgen_stream")
         .option("n_rows", _STREAM_N)
@@ -363,20 +374,21 @@ def source_python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFra
         F.count(F.lit(1)).alias("n_events"),
         F.sum("value_i").alias("sum_value"),
     )
-    name = f"egs_{_uuid.uuid4().hex[:8]}"
+    name = os.path.basename(root)
     q = (
         agg.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", _tf.mkdtemp(prefix="egs_ckpt_"))
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
         .start()
     )
     try:
         q.processAllAvailable()
+        LAST_STREAMING_QUERIES["source_python_datasource_stream"] = q
+        return spark.table(name)
     finally:
         q.stop()
-    LAST_STREAM_QUERY["source_python_datasource_stream"] = q
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
 
 
 # -- Python DataSource WRITER (the sink half of the API) ----------------------
@@ -446,16 +458,6 @@ def _make_sink_datasource_class():
 
 CsvSinkDataSource = _make_sink_datasource_class()
 
-_sink_registered = False
-
-
-def register_sink(spark) -> None:
-    global _sink_registered
-    if not _sink_registered:
-        spark.dataSource.register(CsvSinkDataSource)
-        _sink_registered = True
-
-
 @query(
     "source_python_datasource_write",
     oracle="""
@@ -490,7 +492,7 @@ def source_python_datasource_write(
     """
     from biglake_iceberg_python_spark.sources.tables import load_table as _lt
 
-    register_sink(spark)
+    _register_once(spark, CsvSinkDataSource)
     li = _lt(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -571,16 +573,6 @@ def _make_stream_sink_datasource_class():
 
 CsvStreamSinkDataSource = _make_stream_sink_datasource_class()
 
-_stream_sink_registered = False
-
-
-def register_stream_sink(spark) -> None:
-    global _stream_sink_registered
-    if not _stream_sink_registered:
-        spark.dataSource.register(CsvStreamSinkDataSource)
-        _stream_sink_registered = True
-
-
 @query(
     "source_python_datasource_stream_write",
     oracle=f"""
@@ -618,8 +610,8 @@ def source_python_datasource_stream_write(
     triples, and replay idempotence hangs on the batch manifest, not on
     re-reading data.
     """
-    register_stream(spark)
-    register_stream_sink(spark)
+    _register_once(spark, EventGenStreamDataSource)
+    _register_once(spark, CsvStreamSinkDataSource)
     src = (
         spark.readStream.format("eventgen_stream")
         .option("n_rows", _STREAM_N)

@@ -16,29 +16,52 @@ parquet scan; stateful operators shuffle on their keys with state kept in
 the state store (RocksDB on a real cluster). The state partition count is
 sized from the replay's input bytes (see ``run_stream_to_memory``).
 Watermarks bound that state — every windowed query here sets one.
+
+Lifetimes: the staged chunks are a per-process cache under one temp root
+that is removed at interpreter exit. Every memory-sink query ends with
+``run_stream_to_memory``, which owns the rest of its run — the
+checkpoint, the sink's temp view and the handle record in
+``LAST_STREAMING_QUERIES`` — so a query leaves nothing in the caller's
+session or temp dir.
 """
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 import tempfile
 import time
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from biglake_iceberg_python_spark.functions.exprs import EVENT_VALUE_CAP
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import parquet_schema, size_bytes
 
 
 # Staged-chunk cache: the replay input is a pure function of the events
 # file, keyed on its (path, mtime_ns, size) so a rewritten file is staged
-# again, and of (n_chunks, inject_dup_every, flush_sentinel, ordered).
-# Queries sharing a config reuse one on-disk staging — each call still gets
-# a FRESH checkpoint dir (a checkpoint is per-query state and must never be
-# shared).
-_STAGED: dict[tuple[str, int, int, int, int | None, bool, bool], str] = {}
+# again, and of (inject_dup_every, flush_sentinel, ordered). Queries
+# sharing a config reuse one on-disk staging; checkpoints are per-run state
+# and never live here.
+_STAGED: dict[tuple[str, int, int, int | None, bool, bool], str] = {}
+
+# Root of every staging in this process (created on the first miss and
+# removed at interpreter exit) and the sequence naming its subdirectories.
+_STAGE_ROOT: tempfile.TemporaryDirectory | None = None
+_STAGE_SEQ = itertools.count()
+
+# Every replay splits events into this many time-contiguous chunks; the
+# stream_late_data_drop oracle replays the same 4-way split in SQL.
+_N_CHUNKS = 4
+
+# Terminated StreamingQuery handles by registered query name, recorded on
+# every run so tests can assert state-store behavior (eviction, watermark
+# drops) from the progress telemetry without re-plumbing the queries.
+LAST_STREAMING_QUERIES: dict[str, StreamingQuery] = {}
 
 # Event type of the watermark-flush sentinel row (see stage_event_chunks).
 # Consumers running APPEND output filter it out AFTER withWatermark so it
@@ -54,13 +77,12 @@ _SENTINEL_HORIZON_S = 2 * 24 * 3600
 def stage_event_chunks(
     spark: SparkSession,
     sf_dir: str,
-    n_chunks: int = 4,
     inject_dup_every: int | None = None,
     flush_sentinel: bool = False,
     ordered: bool = True,
-) -> tuple[str, str]:
-    """Write events as ``n_chunks`` parquet files for replay (cached per
-    config).
+) -> str:
+    """Write events as 4 parquet files for replay (cached per config) and
+    return their directory.
 
     ``inject_dup_every=k`` duplicates every k-th event (same event_id) to
     exercise stateful dedup. ``flush_sentinel=True`` appends a single
@@ -82,7 +104,6 @@ def stage_event_chunks(
     DROPS rather than a clean ordered replay. (The events table's natural
     row order is itself time-sorted, so disorder must come from arrival
     order, not row order.)
-    Returns (input_dir, checkpoint_dir).
     """
     # Watermarks require TIMESTAMP (an instant), not TIMESTAMP_NTZ. Pin the
     # session to UTC so the NTZ→instant cast and every downstream
@@ -91,17 +112,14 @@ def stage_event_chunks(
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     events = os.path.join(sf_dir, "events.parquet")
     st = os.stat(events)
-    key = (
-        events, st.st_mtime_ns, st.st_size,
-        n_chunks, inject_dup_every, flush_sentinel, ordered,
-    )
+    key = (events, st.st_mtime_ns, st.st_size, inject_dup_every, flush_sentinel, ordered)
     cached = _STAGED.get(key)
     if cached is not None and os.path.isdir(cached):
-        ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-        return cached, ckpt
-    base = tempfile.mkdtemp(prefix="stream_events_")
-    input_dir = os.path.join(base, "input")
-    checkpoint_dir = os.path.join(base, "checkpoint")
+        return cached
+    global _STAGE_ROOT
+    if _STAGE_ROOT is None:
+        _STAGE_ROOT = tempfile.TemporaryDirectory(prefix="stream_events_")
+    input_dir = os.path.join(_STAGE_ROOT.name, f"input_{next(_STAGE_SEQ)}")
     os.makedirs(input_dir)
     # Stage with pyarrow, not a Spark write job: this is test-harness
     # plumbing (simulating a stream source from static parquet), so the
@@ -141,7 +159,7 @@ def stage_event_chunks(
     vidx = t.schema.get_field_index("value")
     vcol = t.column("value")
     ok = pc.and_kleene(
-        pc.is_finite(vcol), pc.less(pc.abs(vcol), 1.0e4)
+        pc.is_finite(vcol), pc.less(pc.abs(vcol), EVENT_VALUE_CAP)
     )
     t = t.set_column(vidx, "value", pc.if_else(ok, vcol, None))
     idx = t.schema.get_field_index("ts")
@@ -174,17 +192,17 @@ def stage_event_chunks(
     # the same bytes.)
     t = t.sort_by([("ts", "ascending"), ("event_id", "ascending")])
     n = t.num_rows
-    bounds = [n * i // n_chunks for i in range(n_chunks + 1)]
+    bounds = [n * i // _N_CHUNKS for i in range(_N_CHUNKS + 1)]
     now = time.time()
     # Arrival order: identity for the ordered replay; odds-then-evens for
     # the out-of-order case (chunk 1 and 3 arrive before 0 and 2, so the
     # watermark races ahead and the even chunks arrive late).
     arrival = (
-        list(range(n_chunks))
+        list(range(_N_CHUNKS))
         if ordered
-        else [i for i in range(n_chunks) if i % 2] + [i for i in range(n_chunks) if not i % 2]
+        else [i for i in range(_N_CHUNKS) if i % 2] + [i for i in range(_N_CHUNKS) if not i % 2]
     )
-    chunks = [t.slice(bounds[i], bounds[i + 1] - bounds[i]) for i in range(n_chunks)]
+    chunks = [t.slice(bounds[i], bounds[i + 1] - bounds[i]) for i in range(_N_CHUNKS)]
     if flush_sentinel:
         # Empty stage (0-row events table, or every row dead-lettered):
         # pc.max is NULL — anchor the sentinel at epoch 0 so the stream
@@ -214,7 +232,7 @@ def stage_event_chunks(
         pq.write_table(chunks[i], path)
         os.utime(path, (now + 10 * pos, now + 10 * pos))
     _STAGED[key] = input_dir
-    return input_dir, checkpoint_dir
+    return input_dir
 
 
 def read_event_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -246,16 +264,20 @@ def _state_partitions(spark: SparkSession, input_dir: str) -> int:
 
 
 def run_stream_to_memory(
-    sdf: DataFrame,
-    name: str,
-    output_mode: str,
-    input_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
+    sdf: DataFrame, query_name: str, output_mode: str, input_dir: str
+) -> DataFrame:
     """Run the streaming query to completion (availableNow) into a memory
-    sink table called ``name``; returns the terminated query so callers
-    (tests) can inspect ``lastProgress`` state-store metrics — e.g. assert
-    that the watermark actually evicted finalized windows.
+    sink and return the sink's rows — the one ending of every memory-sink
+    query.
+
+    The run owns what it creates. The checkpoint lives in a temp dir that
+    is removed when the run ends. The sink's temp view
+    (``{query_name}_<hex>``) is dropped once the returned frame is
+    analyzed; the frame keeps the sink's rows. The terminated query is
+    recorded in ``LAST_STREAMING_QUERIES[query_name]``, so tests can
+    inspect its progress telemetry — e.g. assert that the watermark
+    actually evicted finalized windows. When start or the run raises, the
+    view and the checkpoint still go.
 
     ``spark.sql.shuffle.partitions`` is set from the bytes of the staged
     ``input_dir`` for the run (see ``_state_partitions``), so the state
@@ -265,26 +287,38 @@ def run_stream_to_memory(
     fails.
     """
     spark = sdf.sparkSession
+    sink = f"{query_name}_{uuid.uuid4().hex[:8]}"
     n_parts = str(_state_partitions(spark, input_dir))
-    with session_conf(spark, {"spark.sql.shuffle.partitions": n_parts}):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return q
+    try:
+        # ignore_cleanup_errors: a state-store maintenance pass may still
+        # write into the checkpoint while it is removed; a leftover file
+        # must not fail a finished run.
+        with tempfile.TemporaryDirectory(
+            prefix="stream_ckpt_", ignore_cleanup_errors=True
+        ) as ckpt, session_conf(spark, {"spark.sql.shuffle.partitions": n_parts}):
+            q = (
+                sdf.writeStream.format("memory")
+                .queryName(sink)
+                .outputMode(output_mode)
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+        LAST_STREAMING_QUERIES[query_name] = q
+        return spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def run_stream_foreach_batch(
-    sdf: DataFrame, batch_fn, checkpoint_dir: str
-) -> StreamingQuery:
-    """Run the stream to completion through a foreachBatch sink; returns
-    the terminated query so callers can assert offset/progress telemetry
-    (e.g. that a restarted run processed only the new files)."""
+    sdf: DataFrame, query_name: str, batch_fn, checkpoint_dir: str
+) -> None:
+    """Run the stream to completion through a foreachBatch sink and record
+    the terminated query in ``LAST_STREAMING_QUERIES[query_name]``, so
+    tests can assert offset/progress telemetry (e.g. that a restarted run
+    processed only the new files). The checkpoint is the caller's: a
+    restart reuses it across two runs."""
     q = (
         sdf.writeStream.foreachBatch(batch_fn)
         .option("checkpointLocation", checkpoint_dir)
@@ -292,4 +326,4 @@ def run_stream_foreach_batch(
         .start()
     )
     q.awaitTermination()
-    return q
+    LAST_STREAMING_QUERIES[query_name] = q

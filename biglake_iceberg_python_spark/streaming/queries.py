@@ -11,16 +11,15 @@ guarantee under test.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import oracle_dsum
+from biglake_iceberg_python_spark.functions.exprs import oracle_dsum, oracle_events
 from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
 from biglake_iceberg_python_spark.streaming.pipeline import (
+    LAST_STREAMING_QUERIES,  # noqa: F401 - re-exported for the tests
     SENTINEL_EVENT_TYPE,
     read_event_stream,
     run_stream_foreach_batch,
@@ -29,11 +28,6 @@ from biglake_iceberg_python_spark.streaming.pipeline import (
 )
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
-
-# Terminated StreamingQuery handles by registered query name, recorded on
-# every run so tests can assert state-store behavior (eviction, watermark
-# drops) from lastProgress without re-plumbing the queries.
-LAST_STREAMING_QUERIES: dict[str, object] = {}
 
 
 @query(
@@ -45,7 +39,7 @@ LAST_STREAMING_QUERIES: dict[str, object] = {}
       event_type,
       COUNT(*) AS n_events,
       {oracle_dsum('value')} AS sum_value
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     WHERE event_type IN ('purchase', 'error')
     GROUP BY 1, 2
     """,
@@ -65,9 +59,7 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     own far-future window is never finalized before the trigger ends, so it
     cannot leak into the output. Tests assert eviction via lastProgress.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     s = read_event_stream(spark, input_dir).filter(
         F.col("event_type").isin("purchase", "error", SENTINEL_EVENT_TYPE)
     )
@@ -79,11 +71,8 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
         )
     )
-    name = f"tumbling_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_tumbling_window"] = run_stream_to_memory(
-        agg, name, "append", input_dir, ckpt
-    )
-    return spark.table(name).select(
+    sink = run_stream_to_memory(agg, "stream_tumbling_window", "append", input_dir)
+    return sink.select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
         "event_type",
         "n_events",
@@ -100,7 +89,7 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         time_bucket(INTERVAL '10 minutes', e.ts)
           - to_minutes(CAST(o.off_min AS BIGINT)) AS window_start,
         e.value
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) e CROSS JOIN offs o
+      FROM {oracle_events()} e CROSS JOIN offs o
       WHERE e.event_type = 'purchase'
     )
     SELECT
@@ -121,9 +110,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sentinel's far-future windows stay unfinalized, every real window
     is flushed and evicted.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     s = read_event_stream(spark, input_dir).filter(
         F.col("event_type").isin("purchase", SENTINEL_EVENT_TYPE)
     )
@@ -135,11 +122,8 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
         )
     )
-    name = f"sliding_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_sliding_window"] = run_stream_to_memory(
-        agg, name, "append", input_dir, ckpt
-    )
-    return spark.table(name).select(
+    sink = run_stream_to_memory(agg, "stream_sliding_window", "append", input_dir)
+    return sink.select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
         "n_events",
         F.col("sum_dec").cast("double").alias("sum_value"),
@@ -159,7 +143,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
                   >= INTERVAL '30 minutes'
              OR lag(ts) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
              THEN 1 ELSE 0 END AS new_session
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), sessions AS (
       SELECT
         user_id, ts, value,
@@ -191,9 +175,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel (user_id −1, 2 days ahead) flushes the last real sessions; its
     own session never closes, so it never reaches the sink.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     s = read_event_stream(spark, input_dir)
     agg = (
         s.withWatermark("ts", "10 minutes")
@@ -203,11 +185,8 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
         )
     )
-    name = f"session_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_session_window"] = run_stream_to_memory(
-        agg, name, "append", input_dir, ckpt
-    )
-    return spark.table(name).select(
+    sink = run_stream_to_memory(agg, "stream_session_window", "append", input_dir)
+    return sink.select(
         "user_id",
         F.date_format(F.col("session_window.start"), _TS_FMT).alias("session_start"),
         "n_events",
@@ -224,7 +203,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
       event_type,
       COUNT(*) AS n_events,
       {oracle_dsum('value')} AS sum_value
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     WHERE event_type IN ('purchase', 'error')
     GROUP BY 1, 2
     """,
@@ -257,7 +236,7 @@ def stream_tumbling_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
+    input_dir = stage_event_chunks(spark, sf_dir)
     s = read_event_stream(spark, input_dir).filter(
         F.col("event_type").isin("purchase", "error")
     )
@@ -269,16 +248,12 @@ def stream_tumbling_update(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
         )
     )
-    name = f"tumbling_upd_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_tumbling_update"] = run_stream_to_memory(
-        agg, name, "update", input_dir, ckpt
-    )
+    sink = run_stream_to_memory(agg, "stream_tumbling_update", "update", input_dir)
     w = Window.partitionBy("window", "event_type").orderBy(
         F.col("n_events").desc()
     )
     return (
-        spark.table(name)
-        .withColumn("rn", F.row_number().over(w))
+        sink.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select(
             F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
@@ -291,9 +266,9 @@ def stream_tumbling_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_dedup_rocksdb",
-    oracle="""
+    oracle=f"""
     SELECT event_type, COUNT(*) AS n_unique_events
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     GROUP BY event_type
     """,
     tags=("streaming", "dedup", "stateful", "watermark", "rocksdb"),
@@ -311,8 +286,8 @@ def stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     launch and restored after, leaving other queries on the default
     HDFS-backed heap provider.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, inject_dup_every=10, flush_sentinel=True
+    input_dir = stage_event_chunks(
+        spark, sf_dir, inject_dup_every=10, flush_sentinel=True
     )
     rocksdb = (
         "org.apache.spark.sql.execution.streaming.state."
@@ -325,13 +300,12 @@ def stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
         deduped = s.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
             ["event_id"]
         )
-        name = f"dedup_rdb_{uuid.uuid4().hex[:8]}"
-        LAST_STREAMING_QUERIES["stream_dedup_rocksdb"] = run_stream_to_memory(
-            deduped.select("event_id", "event_type"), name, "append", input_dir, ckpt
+        sink = run_stream_to_memory(
+            deduped.select("event_id", "event_type"),
+            "stream_dedup_rocksdb", "append", input_dir,
         )
     return (
-        spark.table(name)
-        .filter(~F.col("event_type").eqNullSafe(SENTINEL_EVENT_TYPE))
+        sink.filter(~F.col("event_type").eqNullSafe(SENTINEL_EVENT_TYPE))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_events"))
     )
@@ -339,9 +313,9 @@ def stream_dedup_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_dedup",
-    oracle="""
+    oracle=f"""
     SELECT event_type, COUNT(*) AS n_unique_events
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     GROUP BY event_type
     """,
     tags=("streaming", "dedup", "stateful"),
@@ -356,27 +330,23 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a watermark (dropDuplicatesWithinWatermark) when ids can't recur
     after a horizon. Here the id space is finite so plain state is right.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, inject_dup_every=10
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, inject_dup_every=10)
     s = read_event_stream(spark, input_dir)
     deduped = s.dropDuplicates(["event_id"])
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(
-        deduped.select("event_id", "event_type"), name, "append", input_dir, ckpt
+    sink = run_stream_to_memory(
+        deduped.select("event_id", "event_type"), "stream_dedup", "append", input_dir
     )
     return (
-        spark.table(name)
-        .groupBy("event_type")
+        sink.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_events"))
     )
 
 
 @query(
     "stream_dedup_within_watermark",
-    oracle="""
+    oracle=f"""
     SELECT event_type, COUNT(*) AS n_unique_events
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     GROUP BY event_type
     """,
     tags=("streaming", "dedup", "stateful", "watermark"),
@@ -398,20 +368,19 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     sentinel row itself is first-seen, hence emitted, and filtered out in
     the batch-side rollup.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, inject_dup_every=10, flush_sentinel=True
+    input_dir = stage_event_chunks(
+        spark, sf_dir, inject_dup_every=10, flush_sentinel=True
     )
     s = read_event_stream(spark, input_dir)
     deduped = s.withWatermark("ts", "30 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    name = f"dedup_wm_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_dedup_within_watermark"] = run_stream_to_memory(
-        deduped.select("event_id", "event_type"), name, "append", input_dir, ckpt
+    sink = run_stream_to_memory(
+        deduped.select("event_id", "event_type"),
+        "stream_dedup_within_watermark", "append", input_dir,
     )
     return (
-        spark.table(name)
-        .filter(~F.col("event_type").eqNullSafe(SENTINEL_EVENT_TYPE))
+        sink.filter(~F.col("event_type").eqNullSafe(SENTINEL_EVENT_TYPE))
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique_events"))
     )
@@ -432,12 +401,12 @@ def stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataFrame
     # watermark only after that batch; the closing no-data batch then
     # finalizes every surviving window (the sentinel's own never closes).
     # Verified exact vs the engine at sf0.001/0.01/0.1.
-    oracle="""
+    oracle=f"""
     WITH allrows AS (
       SELECT ts, event_type,
              row_number() OVER (ORDER BY ts, event_id) - 1 AS rn,
              count(*) OVER () AS n
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), chunked AS (
       -- floor((4·rn+3)/n) is the EXACT inverse of the staging's
       -- n*i//4 slice bounds for every n; the simpler floor(4·rn/n)
@@ -483,9 +452,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     lastProgress that numRowsDroppedByWatermark > 0 and the surviving
     count < the full count.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True, ordered=False
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True, ordered=False)
     s = read_event_stream(spark, input_dir).filter(
         F.col("event_type").isin("purchase", "error", SENTINEL_EVENT_TYPE)
     )
@@ -494,14 +461,11 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"late_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_late_data_drop"] = run_stream_to_memory(
-        agg, name, "append", input_dir, ckpt
-    )
+    sink = run_stream_to_memory(agg, "stream_late_data_drop", "append", input_dir)
     # coalesce: zero surviving windows (empty stage) must report 0
     # surviving events, the oracle's COUNT(*) (round-10 empty-table
     # parity axis).
-    return spark.table(name).agg(
+    return sink.agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.coalesce(F.sum("n_events"), F.lit(0))
         .cast("long")
@@ -581,7 +545,7 @@ def _make_user_upsert(state):
       user_id,
       COUNT(*) AS n_events,
       {oracle_dsum('value')} AS total_value
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     GROUP BY user_id
     """,
     tags=("streaming", "checkpoint", "recovery", "exactly-once"),
@@ -608,7 +572,7 @@ def stream_restart_exactly_once(
 
     from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
 
-    staged, _ = stage_event_chunks(spark, sf_dir, n_chunks=4)
+    staged = stage_event_chunks(spark, sf_dir)
     inp = os.path.join(root, "in")
     ckpt = os.path.join(root, "ckpt")
     os.makedirs(inp)
@@ -620,16 +584,13 @@ def stream_restart_exactly_once(
     # Run 1: only the first half of the replay exists yet.
     for f in chunks[:2]:
         shutil.copy(os.path.join(staged, f), os.path.join(inp, f))
-    run_stream_foreach_batch(read_event_stream(spark, inp), upsert, ckpt)
+    name = "stream_restart_exactly_once"
+    run_stream_foreach_batch(read_event_stream(spark, inp), name, upsert, ckpt)
     # The job "dies"; the remaining files arrive while it is down.
     for f in chunks[2:]:
         shutil.copy(os.path.join(staged, f), os.path.join(inp, f))
     # Run 2: same checkpoint — committed offsets skip the first half.
-    LAST_STREAMING_QUERIES["stream_restart_exactly_once"] = (
-        run_stream_foreach_batch(
-            read_event_stream(spark, inp), upsert, ckpt
-        )
-    )
+    run_stream_foreach_batch(read_event_stream(spark, inp), name, upsert, ckpt)
     return state.read().select(
         "user_id",
         "n_events",
@@ -644,7 +605,7 @@ def stream_restart_exactly_once(
       user_id,
       COUNT(*) AS n_events,
       {oracle_dsum('value')} AS total_value
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     GROUP BY user_id
     """,
     tags=("streaming", "foreachBatch", "merge"),
@@ -661,12 +622,18 @@ def stream_foreachbatch_upsert(
     State arithmetic stays decimal end-to-end; only the final read casts to
     double, so cross-batch addition order cannot perturb the result.
     """
+    import os
+
     from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
 
-    input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
-    state = SnapshotTable(spark, root)
-    s = read_event_stream(spark, input_dir)
-    run_stream_foreach_batch(s, _make_user_upsert(state), ckpt)
+    input_dir = stage_event_chunks(spark, sf_dir)
+    state = SnapshotTable(spark, os.path.join(root, "state"))
+    run_stream_foreach_batch(
+        read_event_stream(spark, input_dir),
+        "stream_foreachbatch_upsert",
+        _make_user_upsert(state),
+        os.path.join(root, "ckpt"),
+    )
     return state.read().select(
         "user_id",
         "n_events",
@@ -676,13 +643,13 @@ def stream_foreachbatch_upsert(
 
 @query(
     "stream_custom_stateful",
-    oracle="""
+    oracle=f"""
     SELECT
       user_id,
       COUNT(*) AS n_events,
       CAST(COUNT(CASE WHEN event_type = 'purchase' THEN 1 END) AS BIGINT)
         AS n_purchases
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     GROUP BY user_id
     """,
     tags=("streaming", "stateful", "applyInPandasWithState"),
@@ -703,7 +670,7 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
+    input_dir = stage_event_chunks(spark, sf_dir)
     s = read_event_stream(spark, input_dir)
 
     def count_events(key, pdfs, state: GroupState):
@@ -726,28 +693,22 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    name = f"stateful_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(out, name, "update", input_dir, ckpt)
+    sink = run_stream_to_memory(out, "stream_custom_stateful", "update", input_dir)
     # update mode emits one row per (user, batch); the final state per user
     # is the row with the max n_events.
-    final = (
-        spark.table(name)
-        .groupBy("user_id")
-        .agg(
-            F.max("n_events").alias("n_events"),
-            F.max("n_purchases").alias("n_purchases"),
-        )
+    return sink.groupBy("user_id").agg(
+        F.max("n_events").alias("n_events"),
+        F.max("n_purchases").alias("n_purchases"),
     )
-    return final
 
 
 @query(
     "stream_stateful_timeout_session",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id,
              CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
     ), x AS (
       SELECT user_id, sec,
              CASE WHEN lag(sec) OVER (PARTITION BY user_id ORDER BY sec)
@@ -797,9 +758,7 @@ def stream_stateful_timeout_session(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     gap_s = 1800
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     # Timestamp-less events cannot be sessionized — drop them BEFORE the
     # stateful operator (a real pipeline dead-letters them): a NULL
     # event-time reaches the state function as NaT and kills the stream
@@ -874,11 +833,10 @@ def stream_stateful_timeout_session(
         outputMode="update",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )
-    name = f"timeout_sess_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_stateful_timeout_session"] = (
-        run_stream_to_memory(out, name, "update", input_dir, ckpt)
+    sink = run_stream_to_memory(
+        out, "stream_stateful_timeout_session", "update", input_dir
     )
-    return spark.table(name).filter(
+    return sink.filter(
         # null-safe sentinel drop (round-10 events parity sweep):
         # NULL >= 0 is NULL, which silently discarded the NULL-user
         # session the oracle keeps as its own group.
@@ -894,7 +852,7 @@ def stream_stateful_timeout_session(
       e.event_type,
       COUNT(*) AS n_events,
       {oracle_dsum('e.value')} AS sum_value
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) e
+    FROM {oracle_events()} e
     JOIN customer c ON e.user_id = c.c_custkey
     WHERE e.event_type IN ('purchase', 'error')
     GROUP BY c.c_mktsegment, e.event_type
@@ -912,7 +870,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     and falls back to a shuffle join once the dimension outgrows the
     threshold, instead of OOMing on a forced broadcast. Batch twin = the same join in plain SQL.
     """
-    input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
+    input_dir = stage_event_chunks(spark, sf_dir)
     s = read_event_stream(spark, input_dir).filter(
         F.col("event_type").isin("purchase", "error")
     )
@@ -922,9 +880,8 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
     )
-    name = f"static_join_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(agg, name, "complete", input_dir, ckpt)
-    return spark.table(name).select(
+    sink = run_stream_to_memory(agg, "stream_static_join", "complete", input_dir)
+    return sink.select(
         "c_mktsegment",
         "event_type",
         "n_events",
@@ -937,10 +894,10 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH p AS (
       SELECT user_id, date_trunc('second', ts) AS ts_p, value
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'purchase'
+      FROM {oracle_events()} events WHERE event_type = 'purchase'
     ), e AS (
       SELECT user_id, event_id, date_trunc('second', ts) AS ts_e
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'error'
+      FROM {oracle_events()} events WHERE event_type = 'error'
     )
     SELECT
       p.user_id,
@@ -972,7 +929,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL. Joined timestamps are pre-truncated to seconds so the µs-vs-ns
     engines agree on boundary rows.
     """
-    input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
+    input_dir = stage_event_chunks(spark, sf_dir)
     src = read_event_stream(spark, input_dir)
     p = (
         src.filter(F.col("event_type") == "purchase")
@@ -1001,13 +958,11 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Stream-stream joins emit in APPEND mode only (each matched pair is
     # final once both watermarks pass it) — so the streaming stage is the
     # join itself; the per-user rollup is a batch query over the sink.
-    name = f"ss_join_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(
-        joined.select("p_user", "value"), name, "append", input_dir, ckpt
+    sink = run_stream_to_memory(
+        joined.select("p_user", "value"), "stream_stream_join", "append", input_dir
     )
     return (
-        spark.table(name)
-        .groupBy(F.col("p_user").alias("user_id"))
+        sink.groupBy(F.col("p_user").alias("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
             F.sum(F.col("value").cast("decimal(30,6)"))
@@ -1022,10 +977,10 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH p AS (
       SELECT user_id, date_trunc('second', ts) AS ts_p, value
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'purchase'
+      FROM {oracle_events()} events WHERE event_type = 'purchase'
     ), e AS (
       SELECT user_id, date_trunc('second', ts) AS ts_e
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'error'
+      FROM {oracle_events()} events WHERE event_type = 'error'
     ), j AS (
       SELECT p.user_id, p.value, e.user_id AS matched
       FROM p LEFT JOIN e ON p.user_id = e.user_id
@@ -1058,9 +1013,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (user_id −1) are dropped in the batch rollup. Batch twin: the same
     LEFT JOIN in SQL with per-user matched/unmatched accounting.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     src = read_event_stream(spark, input_dir)
     p = (
         src.filter(F.col("event_type").isin("purchase", SENTINEL_EVENT_TYPE))
@@ -1086,13 +1039,12 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("ts_e") <= F.col("ts_p") + F.expr("INTERVAL 6 HOURS")),
         "left_outer",
     )
-    name = f"ss_left_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_stream_left_join"] = run_stream_to_memory(
-        joined.select("p_user", "value", "e_user"), name, "append", input_dir, ckpt
+    sink = run_stream_to_memory(
+        joined.select("p_user", "value", "e_user"),
+        "stream_stream_left_join", "append", input_dir,
     )
     return (
-        spark.table(name)
-        .filter(
+        sink.filter(
             # null-safe: keep NULL-user purchases (their own group in
             # the oracle); only the sentinel's -1 row drops.
             (F.col("p_user") >= 0) | F.col("p_user").isNull()
@@ -1114,10 +1066,10 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH p AS (
       SELECT user_id, date_trunc('second', ts) AS ts_p, value
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'purchase'
+      FROM {oracle_events()} events WHERE event_type = 'purchase'
     ), e AS (
       SELECT user_id, date_trunc('second', ts) AS ts_e
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events WHERE event_type = 'error'
+      FROM {oracle_events()} events WHERE event_type = 'error'
     ), j AS (
       SELECT p.ts_p, p.value
       FROM p JOIN e ON p.user_id = e.user_id
@@ -1150,9 +1102,7 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     it without an explicit filter. Batch twin: the identical interval join
     rolled up by hour bucket.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     src = read_event_stream(spark, input_dir)
     p = (
         src.filter(F.col("event_type").isin("purchase", SENTINEL_EVENT_TYPE))
@@ -1182,11 +1132,8 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_pairs"),
         F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
     )
-    name = f"ss_chain_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_join_then_window"] = run_stream_to_memory(
-        agg, name, "append", input_dir, ckpt
-    )
-    return spark.table(name).select(
+    sink = run_stream_to_memory(agg, "stream_join_then_window", "append", input_dir)
+    return sink.select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
         "n_pairs",
         F.col("sum_dec").cast("double").alias("sum_purchase_value"),
@@ -1195,13 +1142,13 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_file_sink_manifest",
-    oracle="""
+    oracle=f"""
     SELECT
       event_type,
       CAST(COUNT(*) AS BIGINT) AS n_events,
       CAST(SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT))
         AS BIGINT) AS total_cents
-    FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+    FROM {oracle_events()} events
     GROUP BY event_type
     """,
     tags=("streaming", "sink", "file", "exactly-once"),
@@ -1229,7 +1176,7 @@ def stream_file_sink_manifest(spark: SparkSession, sf_dir: str, root: str) -> Da
     import os
     import shutil
 
-    input_dir, ckpt = stage_event_chunks(spark, sf_dir, n_chunks=4)
+    input_dir = stage_event_chunks(spark, sf_dir)
     stream = read_event_stream(spark, input_dir).select(
         "event_id",
         "event_type",
@@ -1268,12 +1215,12 @@ def stream_file_sink_manifest(spark: SparkSession, sf_dir: str, root: str) -> Da
 
 @query(
     "stream_windowed_dau",
-    oracle="""
+    oracle=f"""
     WITH du AS (
       SELECT DISTINCT
         time_bucket(INTERVAL '10 minutes', ts) AS window_start,
         user_id
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       WHERE event_type IN ('purchase', 'error')
     )
     SELECT
@@ -1297,9 +1244,7 @@ def stream_windowed_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows; both evict as the watermark passes. Matches the batch
     distinct exactly in append mode.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     s = read_event_stream(spark, input_dir).filter(
         F.col("event_type").isin("purchase", "error", SENTINEL_EVENT_TYPE)
     )
@@ -1309,11 +1254,8 @@ def stream_windowed_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicates(["user_id", "win"])
     )
     agg = deduped.groupBy("win").agg(F.count(F.lit(1)).alias("n_users"))
-    name = f"wdau_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_windowed_dau"] = run_stream_to_memory(
-        agg, name, "append", input_dir, ckpt
-    )
-    return spark.table(name).select(
+    sink = run_stream_to_memory(agg, "stream_windowed_dau", "append", input_dir)
+    return sink.select(
         F.date_format(F.col("win.start"), _TS_FMT).alias("window_start"),
         F.col("n_users").cast("long").alias("n_users"),
     )
@@ -1321,14 +1263,14 @@ def stream_windowed_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "stream_topk_trending",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT
         strftime(time_bucket(INTERVAL '10 minutes', ts),
                  '%Y-%m-%d %H:%M:%S') AS window_start,
         event_type,
         CAST(COUNT(*) AS BIGINT) AS n_events
-      FROM (SELECT * REPLACE (CASE WHEN isfinite(value) AND abs(value) < 1.0e4 THEN value END AS value) FROM events WHERE ts IS NOT NULL) events
+      FROM {oracle_events()} events
       GROUP BY 1, 2
     ), r AS (
       SELECT window_start, event_type, n_events,
@@ -1362,22 +1304,17 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is never finalized before the trigger ends, so it cannot
     reach the leaderboard.
     """
-    input_dir, ckpt = stage_event_chunks(
-        spark, sf_dir, n_chunks=4, flush_sentinel=True
-    )
+    input_dir = stage_event_chunks(spark, sf_dir, flush_sentinel=True)
     s = read_event_stream(spark, input_dir)
     agg = (
         s.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    name = f"trending_{uuid.uuid4().hex[:8]}"
-    LAST_STREAMING_QUERIES["stream_topk_trending"] = run_stream_to_memory(
-        agg, name, "append", input_dir, ckpt
-    )
+    sink = run_stream_to_memory(agg, "stream_topk_trending", "append", input_dir)
     from pyspark.sql import Window
 
-    finalized = spark.table(name).select(
+    finalized = sink.select(
         F.date_format(F.col("window.start"), _TS_FMT).alias("window_start"),
         "event_type",
         F.col("n_events").cast("long").alias("n_events"),

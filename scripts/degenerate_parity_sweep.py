@@ -802,6 +802,12 @@ def _helper_tables() -> dict:
     # internal events-encoding special case to every caller and balloon
     # each axis to the whole registry.
     tables["load_table"] = set()
+    # The oracle-side events wrap (functions/exprs.oracle_events) builds
+    # SQL text, it reads nothing on the Spark side. A function "body" here
+    # runs up to the next def, so it takes in the next query's decorator
+    # and oracle; counting the wrap as a reader would put the query
+    # defined above any events oracle in the events axes.
+    tables["oracle_events"] = set()
     # transitive closure: a helper that calls a table-reading helper
     # reads that table too. Call sites match on a word boundary
     # (round-11 ADVICE: a bare substring test made helper names that are

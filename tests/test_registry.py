@@ -640,9 +640,6 @@ _OWN_SCRATCH_QUERIES = {
     "source_orc_roundtrip": "lazy scan of the ORC it wrote",
     "source_partitioned_write_prune":
         "tests/test_plans.py reads the PartitionFilters of its lazy scan",
-    "source_python_datasource_stream":
-        "returns the memory sink's table; the directory is the stream's "
-        "checkpoint",
 }
 
 

@@ -1,6 +1,7 @@
 """Library code must leave the caller's session as it found it: the conf
 (the same keys set, to the same values, and the same keys unset), the
-current database, the namespaces and the temp views."""
+current database, the namespaces, the temp views and the temporary
+functions."""
 
 from __future__ import annotations
 
@@ -113,18 +114,46 @@ def test_conf_scoped_queries_leave_session_conf(plain, sf_dir, name):
         "udf_python_udtf",
         "udf_udtf_polymorphic_analyze",
         "window_nth_value",
+        "stream_tumbling_window",
+        "stream_sliding_window",
+        "stream_session_window",
+        "stream_tumbling_update",
+        "stream_dedup_rocksdb",
+        "stream_dedup",
+        "stream_dedup_within_watermark",
+        "stream_late_data_drop",
+        "stream_custom_stateful",
+        "stream_stateful_timeout_session",
+        "stream_static_join",
+        "stream_stream_join",
+        "stream_stream_left_join",
+        "stream_join_then_window",
+        "stream_windowed_dau",
+        "stream_topk_trending",
+        "source_python_datasource_stream",
     ],
 )
 def test_sql_queries_leave_no_temp_view(plain, sf_dir, name):
-    """SQL text binds its input frames by keyword, so no view outlives
-    the query to shadow a table of the caller's."""
+    """SQL text binds its input frames by keyword, temporary functions are
+    dropped once the frame is analyzed, and a stream's memory-sink view
+    and checkpoint go when its run ends: nothing outlives the query to
+    shadow a view or function of the caller's, or to fill the temp dir."""
 
-    def temp_views():
-        return {t.name for t in plain.catalog.listTables() if t.isTemporary}
+    def left_behind():
+        return (
+            {t.name for t in plain.catalog.listTables() if t.isTemporary},
+            {f.name for f in plain.catalog.listFunctions() if f.isTemporary},
+            {
+                path
+                for prefix in ("stream_ckpt_", "egs_ckpt_")
+                for path in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*"))
+            },
+        )
 
-    before = temp_views()
+    before = left_behind()
     load_all()[name].fn(plain, sf_dir).collect()
-    assert temp_views() - before == set()
+    after = left_behind()
+    assert [a - b for a, b in zip(after, before)] == [set(), set(), set()]
 
 
 def test_bucketed_join_keeps_current_database(plain, sf_dir):

@@ -9,7 +9,9 @@ streaming.queries.LAST_STREAMING_QUERIES.
 
 from __future__ import annotations
 
+import glob
 import os
+import tempfile
 
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
@@ -83,7 +85,7 @@ def test_tumbling_window_replay_shape(spark, sf_dir):
 def test_state_partitions_grow_with_input_bytes(spark, sf_dir):
     """ceil(bytes / advisoryPartitionSizeInBytes), clamped to
     [1, defaultParallelism]."""
-    input_dir, _ = stage_event_chunks(spark, sf_dir)
+    input_dir = stage_event_chunks(spark, sf_dir)
     assert _state_partitions(spark, input_dir) == 1
     n_bytes = sum(e.stat().st_size for e in os.scandir(input_dir))
     cores = spark.sparkContext.defaultParallelism
@@ -100,23 +102,34 @@ def test_state_partitions_grow_with_input_bytes(spark, sf_dir):
 
 def test_failed_stream_start_restores_shuffle_partitions(spark, sf_dir):
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    input_dir, ckpt = stage_event_chunks(spark, sf_dir)
+
+    def left_behind():
+        return (
+            {t.name for t in spark.catalog.listTables() if t.isTemporary},
+            set(glob.glob(os.path.join(tempfile.gettempdir(), "stream_ckpt_*"))),
+        )
+
+    views, ckpts = left_behind()
+    input_dir = stage_event_chunks(spark, sf_dir)
     # COMPLETE output needs an aggregation, so start() raises.
     with pytest.raises(AnalysisException):
         run_stream_to_memory(
-            read_event_stream(spark, input_dir), "no_agg", "complete", input_dir, ckpt
+            read_event_stream(spark, input_dir), "no_agg", "complete", input_dir
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    views_after, ckpts_after = left_behind()
+    assert views_after - views == set()
+    assert ckpts_after - ckpts == set()
 
 
 def test_stage_is_rebuilt_when_events_file_is_rewritten(spark, sf_dir, tmp_path):
     events = pq.read_table(f"{sf_dir}/events.parquet")
     events = events.filter(pc.is_valid(events.column("ts")))
     pq.write_table(events, tmp_path / "events.parquet")
-    first, _ = stage_event_chunks(spark, str(tmp_path))
-    assert stage_event_chunks(spark, str(tmp_path))[0] == first
+    first = stage_event_chunks(spark, str(tmp_path))
+    assert stage_event_chunks(spark, str(tmp_path)) == first
     pq.write_table(events.slice(0, 10), tmp_path / "events.parquet")
-    second, _ = stage_event_chunks(spark, str(tmp_path))
+    second = stage_event_chunks(spark, str(tmp_path))
     assert second != first
     assert pq.read_table(second).num_rows == 10
 
@@ -192,10 +205,8 @@ def test_python_stream_source_progresses_in_offset_batches(spark, sf_dir):
     """The custom Python streaming source must deliver its 20k rows across
     MULTIPLE offset-bounded micro-batches (rate-limited latestOffset), not
     one catch-all batch, and the drained rollup must cover every row."""
-    from biglake_iceberg_python_spark.sources import pyds
-
     out = REGISTRY["source_python_datasource_stream"].fn(spark, sf_dir).collect()
-    q = pyds.LAST_STREAM_QUERY["source_python_datasource_stream"]
+    q = sq.LAST_STREAMING_QUERIES["source_python_datasource_stream"]
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 3, n_batches
     assert sum(r["n_events"] for r in out) == 20_000
@@ -208,7 +219,7 @@ def test_update_mode_reemits_and_reconstructs(spark, sf_dir):
     replay must actually progress in multiple micro-batches."""
     out = REGISTRY["stream_tumbling_update"].fn(spark, sf_dir).collect()
     q = sq.LAST_STREAMING_QUERIES["stream_tumbling_update"]
-    sink_rows = spark.table(q.name).count()
+    sink_rows = sum(p["sink"]["numOutputRows"] for p in q.recentProgress)
     assert sink_rows > len(out), (sink_rows, len(out))
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 4
