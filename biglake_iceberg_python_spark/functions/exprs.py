@@ -97,24 +97,24 @@ def ts_s(col: str | Column, alias: str | None = None) -> Column:
 
 
 def words(col: str | Column = "text") -> Column:
-    """THE whitespace tokenizer — the single source of truth every
-    text-reading operator and module-level ``_words`` alias delegates to
-    (round-10 review finding: the same expression was inlined verbatim at
-    ~20 sites, so the next tokenizer-semantics fix would have to land in
-    all of them or the engines drift — the exact hazard class the
-    degenerate sweeps close).
+    """THE whitespace tokenizer: every text-reading operator calls it, and
+    its DuckDB twin :func:`oracle_words` is the one the oracles call, so
+    a tokenizer-semantics fix lands in one place per engine.
 
     COALESCE first (round-10 degenerate parity sweep): a NULL-text doc
     must tokenize to an EMPTY list on both engines. Unguarded, Spark's
     ``size(split(NULL))`` is session-dependent (-1 with ANSI off, NULL
     with ANSI on) while DuckDB's ``len(NULL)`` is NULL — token totals
-    silently diverged on any corpus with NULL documents. The oracle twin
-    is ``string_split(COALESCE(text, ''), ' ')`` with the empty-string
-    filter."""
+    silently diverged on any corpus with NULL documents."""
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(
         F.split(F.coalesce(c, F.lit("")), " "), lambda x: x != ""
     )
+
+
+def oracle_words(col: str = "text") -> str:
+    """The DuckDB SQL twin of :func:`words` for the column ``col``."""
+    return f"list_filter(string_split(COALESCE({col}, ''), ' '), x -> x <> '')"
 
 
 def adjacent_pairs(ws: Column, combine) -> Column:

@@ -94,69 +94,6 @@ class BucketTransform:
         ).cast("int")
 
 
-class HiddenPartitionedTable:
-    """A parquet table partitioned by a hidden transform of a source column.
-
-    Writers and readers see the ORIGINAL schema; the partition column is
-    engine-managed (derived on write, dropped on read, targeted by
-    projected predicates only).
-    """
-
-    def __init__(self, spark: SparkSession, root: str, transform):
-        self.spark = spark
-        self.root = os.path.join(root, "data")
-        self.transform = transform
-        self._schema = None
-
-    def write(self, df: DataFrame) -> None:
-        staged = df.withColumn(_PCOL, self.transform.derive())
-        # The table schema lives in table metadata, exactly as Iceberg
-        # readers plan from the metadata schema — never file inference,
-        # which fails outright on a 0-row table (no data files to sniff;
-        # round-10 empty-table parity axis).
-        self._schema = staged.schema
-        staged.write.mode("overwrite").partitionBy(_PCOL).parquet(self.root)
-
-    def _scan(self) -> DataFrame:
-        # The schema is table METADATA captured at write time (never file
-        # inference — round-10 empty-table axis). It lives on this handle
-        # only, so a scan through a fresh handle over an existing root has
-        # no metadata to plan from — fail loudly instead of passing
-        # schema=None into the reader (round-11 ADVICE).
-        if self._schema is None:
-            raise ValueError(
-                "no table metadata on this handle: write() before scanning "
-                "(schema is captured at write time, not re-inferred from "
-                "data files)"
-            )
-        return self.spark.read.schema(self._schema).parquet(self.root)
-
-    def scan_range(self, lower: str, upper_exclusive: str) -> DataFrame:
-        """Read rows with ``lower <= source_col < upper_exclusive``:
-        partition pruning via the projected predicate, then the exact
-        row-level filter — the engine adds both; the caller names only the
-        source column's bounds."""
-        c = F.col(self.transform.source_col)
-        return (
-            self._scan()
-            .filter(self.transform.project_range(lower, upper_exclusive))
-            .filter(
-                (c >= F.lit(lower).cast("timestamp"))
-                & (c < F.lit(upper_exclusive).cast("timestamp"))
-            )
-            .drop(_PCOL)
-        )
-
-    def scan_eq(self, value) -> DataFrame:
-        """Read rows with ``source_col = value`` (bucket transforms)."""
-        return (
-            self._scan()
-            .filter(self.transform.project_eq(value))
-            .filter(F.col(self.transform.source_col) == F.lit(value))
-            .drop(_PCOL)
-        )
-
-
 class SpecEvolvedTable:
     """Partition-SPEC evolution (Iceberg spec "Partition Evolution"): the
     table's partition layout can change over its lifetime WITHOUT
@@ -174,6 +111,11 @@ class SpecEvolvedTable:
     O(selected partitions) directory metadata per spec, never a full
     listing, and the union is plan-level (no shuffle — each branch is just
     a pruned file scan).
+
+    Writers and readers see the ORIGINAL schema; the partition column is
+    engine-managed (derived on write, dropped on read, targeted by
+    projected predicates only). A table that calls :meth:`evolve` once is
+    a plain hidden-partitioned table.
     """
 
     def __init__(self, spark: SparkSession, root: str):
@@ -209,23 +151,20 @@ class SpecEvolvedTable:
     def _written_specs(self) -> list[int]:
         return [i for i in range(len(self.specs)) if i in self._schemas]
 
-    def scan_range(self, lower: str, upper_exclusive: str) -> DataFrame:
-        """Rows with ``lower <= source_col < upper_exclusive`` across ALL
-        specs — each spec prunes with its own projection; the exact
-        row-level filter applies after, so spec granularity is invisible
-        in results."""
+    def _scan(self, predicates) -> DataFrame:
+        """Union of the per-spec scans: ``predicates(t)`` gives spec
+        transform ``t``'s projected partition predicate and the exact
+        row-level predicate. Each spec's files are pruned by its own
+        projection; the row filter applies after, so spec granularity is
+        invisible in results."""
         parts = []
         for spec_id in self._written_specs():
-            t = self.specs[spec_id]
-            c = F.col(t.source_col)
+            prune, rows = predicates(self.specs[spec_id])
             parts.append(
                 self.spark.read.schema(self._schemas[spec_id])
                 .parquet(self._spec_root(spec_id))
-                .filter(t.project_range(lower, upper_exclusive))
-                .filter(
-                    (c >= F.lit(lower).cast("timestamp"))
-                    & (c < F.lit(upper_exclusive).cast("timestamp"))
-                )
+                .filter(prune)
+                .filter(rows)
                 .drop(_PCOL)
             )
         if not parts:
@@ -234,3 +173,22 @@ class SpecEvolvedTable:
         for p in parts[1:]:
             out = out.unionByName(p)
         return out
+
+    def scan_range(self, lower: str, upper_exclusive: str) -> DataFrame:
+        """Rows with ``lower <= source_col < upper_exclusive`` across ALL
+        specs; the caller names only the source column's bounds."""
+
+        def predicates(t):
+            c = F.col(t.source_col)
+            return t.project_range(lower, upper_exclusive), (
+                (c >= F.lit(lower).cast("timestamp"))
+                & (c < F.lit(upper_exclusive).cast("timestamp"))
+            )
+
+        return self._scan(predicates)
+
+    def scan_eq(self, value) -> DataFrame:
+        """Rows with ``source_col = value`` (bucket transforms)."""
+        return self._scan(
+            lambda t: (t.project_eq(value), F.col(t.source_col) == F.lit(value))
+        )

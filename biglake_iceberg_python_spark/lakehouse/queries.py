@@ -700,11 +700,12 @@ def lakehouse_hidden_partitioning(
     """
     o = load_table(spark, sf_dir, "orders")
     from biglake_iceberg_python_spark.lakehouse.partitioning import (
-        HiddenPartitionedTable,
         MonthsTransform,
+        SpecEvolvedTable,
     )
 
-    t = HiddenPartitionedTable(spark, root, MonthsTransform("o_orderdate"))
+    t = SpecEvolvedTable(spark, root)
+    t.evolve(MonthsTransform("o_orderdate"))
     t.write(o)
     return (
         t.scan_range("1998-03-15", "1998-09-15")

@@ -40,9 +40,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import words, adjacent_pairs
+from biglake_iceberg_python_spark.functions.exprs import (
+    adjacent_pairs,
+    oracle_words,
+    words,
+)
 from biglake_iceberg_python_spark.functions.twophase import two_phase_rank
-from biglake_iceberg_python_spark.operators.dedup import _shingles, _words
+from biglake_iceberg_python_spark.operators.dedup import _shingles
 from biglake_iceberg_python_spark.operators.pipeline import (
     _md5_bucket,
     _oracle_md5_bucket,
@@ -86,7 +90,7 @@ _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in _STOPWORDS) + "]"
         len(list_distinct(ws)) AS n_dist,
         len(list_intersect(ws, {_STOP_SQL})) > 0 AS has_stop
       FROM (
-        SELECT lang, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+        SELECT lang, {oracle_words()} AS ws
         FROM documents
       )
     ), r AS (
@@ -125,7 +129,7 @@ def curate_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     a production curation run ships to its data-quality dashboard.
     """
     d = load_table(spark, sf_dir, "documents")
-    m = d.select("lang", _words().alias("w")).select(
+    m = d.select("lang", words().alias("w")).select(
         "lang",
         F.size("w").alias("n"),
         F.aggregate(
@@ -165,7 +169,7 @@ _PREMIUM_SQL = "(" + ", ".join(f"'{s}'" for s in _PREMIUM_SOURCES) + ")"
     WITH tok AS (
       SELECT
         doc_id, source,
-        len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS n_tok,
+        len({oracle_words()}) AS n_tok,
         CASE WHEN source IN {_PREMIUM_SQL}
              THEN {_PREMIUM_WEIGHT} ELSE {_BASE_WEIGHT} END AS w
       FROM documents
@@ -215,7 +219,7 @@ def curate_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = d.select(
         "doc_id",
         "source",
-        F.size(_words()).alias("n_tok"),
+        F.size(words()).alias("n_tok"),
         F.when(F.col("source").isin(*_PREMIUM_SOURCES), F.lit(_PREMIUM_WEIGHT))
         .otherwise(F.lit(_BASE_WEIGHT))
         .alias("w"),
@@ -273,7 +277,7 @@ _TEMP_BUDGET_NUM, _TEMP_BUDGET_DEN = 1, 2
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, source,
-             len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS n_tok
+             len({oracle_words()}) AS n_tok
       FROM documents
     ), per_src AS (
       SELECT source, COUNT(*) AS n_docs, SUM(n_tok) AS src_tokens,
@@ -329,7 +333,7 @@ def curate_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     global-statistics-then-sample policy.
     """
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", "source", F.size(_words()).alias("n_tok"))
+    tok = d.select("doc_id", "source", F.size(words()).alias("n_tok"))
     per_src = tok.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("n_tok").alias("src_tokens"),
@@ -384,7 +388,7 @@ def curate_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH t AS (
       SELECT
         doc_id,
-        len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS n_tok,
+        len({oracle_words()}) AS n_tok,
         {_oracle_md5_bucket("doc_id", _EPOCH_SALT, _N_SHARDS)} AS shard_id,
         md5(CAST(doc_id AS VARCHAR) || ':{_EPOCH_SALT}') AS h
       FROM documents
@@ -414,7 +418,7 @@ def curate_train_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
-        F.size(_words()).alias("n_tok"),
+        F.size(words()).alias("n_tok"),
         _md5_bucket(F.col("doc_id"), _EPOCH_SALT, _N_SHARDS).alias("shard_id"),
         F.md5(
             F.concat_ws(":", F.col("doc_id").cast("string"), F.lit(_EPOCH_SALT))
@@ -431,7 +435,7 @@ def curate_train_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     "curate_decontaminate",
     oracle=f"""
     WITH w AS (
-      SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+      SELECT doc_id, {oracle_words()} AS ws
       FROM documents
     ), sh AS (
       SELECT DISTINCT doc_id, md5(g0) AS g FROM (
@@ -474,7 +478,7 @@ def curate_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     sh = (
-        d.select("doc_id", _words().alias("w"))
+        d.select("doc_id", words().alias("w"))
         .select(
             "doc_id",
             F.explode(_shingles("w", _DECONTAM_NGRAM)).alias("raw_g"),
@@ -627,8 +631,7 @@ _FP_WORDS = 10
     WITH tagged AS (
       SELECT doc_id, source,
              md5(COALESCE(array_to_string(
-               (list_filter(string_split(COALESCE(text, ''), ' '),
-                            x -> x <> ''))
+               ({oracle_words()})
                  [1:{_FP_WORDS}], ' '), '')) AS h,
              {_oracle_md5_bucket("doc_id", "ingest", 100)} < {_HIST_PCT}
                AS is_hist
@@ -722,11 +725,9 @@ def curate_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- them — excluded on BOTH engines instead).
       SELECT
         doc_id, source, lang, n_chars,
-        len(list_filter(string_split(COALESCE(text, ''), ' '),
-                        x -> x <> '')) AS n_tok,
+        len({oracle_words()}) AS n_tok,
         md5(COALESCE(array_to_string(
-          (list_filter(string_split(COALESCE(text, ''), ' '),
-                       x -> x <> ''))
+          ({oracle_words()})
             [1:{_FP_WORDS}], ' '), '')) AS fp
       FROM documents
       WHERE source IS NOT NULL AND lang IS NOT NULL
@@ -828,7 +829,7 @@ def curate_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         {_oracle_md5_bucket("doc_id", "qws", 1000000)} AS bucket
       FROM (
         SELECT doc_id, source,
-               list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+               {oracle_words()} AS ws
         FROM documents
       )
       WHERE len(ws) > 0
@@ -865,7 +866,7 @@ def curate_quality_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFram
     corpus rollups); the only shuffle carries |sources| rows of accounting.
     """
     d = load_table(spark, sf_dir, "documents")
-    ws = _words()
+    ws = words()
     m = d.select(
         "doc_id",
         "source",
@@ -898,7 +899,7 @@ _BOILER_DF_MUL = 5
     oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+             {oracle_words()} AS ws
       FROM documents
     ), ti AS (
       SELECT doc_id, source, ws,
@@ -957,7 +958,7 @@ def curate_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered text; the accounting here is the decision layer of that pass.
     """
     d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", "source", _words().alias("w"))
+    base = d.select("doc_id", "source", words().alias("w"))
     # Docs shorter than the shingle width contribute NO shingles (round-10
     # degenerate sweep): _shingles' ELSE branch emits a whole-doc shingle
     # for short docs (the right call for MinHash, where short docs must
@@ -1607,8 +1608,7 @@ def _bloom_pos_col(col, j: int):
     WITH d AS (
       SELECT doc_id, source,
              md5(COALESCE(array_to_string(
-               list_filter(string_split(COALESCE(text, ''), ' '),
-                           x -> x <> '')[1:{_FP_WORDS}],
+               {oracle_words()}[1:{_FP_WORDS}],
                ' '), '')) AS h,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':ingest'), 1, 8))::BIGINT
                % 100 < {_HIST_PCT} AS is_hist
@@ -1840,9 +1840,9 @@ def _vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "curate_negative_sampling",
-    oracle="""
+    oracle=f"""
     WITH words AS (
-      SELECT unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+      SELECT unnest({oracle_words()})
         AS word
       FROM documents
     ), counts AS (
@@ -1927,11 +1927,11 @@ _DSIR_TARGET = "src0"  # proxy target domain for importance weights
 _DSIR_TOP = 20
 
 
-_DSIR_MODEL_SQL = """
+_DSIR_MODEL_SQL = f"""
     WITH t AS (
       SELECT doc_id, source,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
-      FROM {documents}
+             {oracle_words()} AS ws
+      FROM {{documents}}
     ), ti AS (
       SELECT doc_id, source, ws,
              unnest(generate_series(1, len(ws) - 1)) AS i
@@ -1941,7 +1941,7 @@ _DSIR_MODEL_SQL = """
     ), mb AS (
       SELECT w1, w2,
              CAST(COUNT(*) AS BIGINT) AS cr,
-             CAST(COUNT(*) FILTER (WHERE source = '{target}') AS BIGINT)
+             CAST(COUNT(*) FILTER (WHERE source = '{{target}}') AS BIGINT)
                AS ct
       FROM b GROUP BY w1, w2
     ), tot AS (
@@ -2128,7 +2128,7 @@ _APPORTION_BUDGET = 100_000  # sample slots to distribute across sources
     WITH tok AS (
       SELECT
         source,
-        len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS n_tok,
+        len({oracle_words()}) AS n_tok,
         CASE WHEN source IN {_PREMIUM_SQL}
              THEN {_PREMIUM_WEIGHT} ELSE {_BASE_WEIGHT} END AS w
       FROM documents
@@ -2185,7 +2185,7 @@ def curate_mix_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
         "source",
-        F.size(_words()).alias("n_tok"),
+        F.size(words()).alias("n_tok"),
         F.when(F.col("source").isin(*_PREMIUM_SOURCES), F.lit(_PREMIUM_WEIGHT))
         .otherwise(F.lit(_BASE_WEIGHT))
         .alias("w"),

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import words
+from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -40,12 +40,6 @@ _BAND_SIZE = 4
 # driver's plain SparkSession runs Spark 4 defaults, where overflow is an
 # ERROR, not a wrap; a 2^61 modulus would need the wraparound).
 _MERSENNE = (1 << 31) - 1
-
-
-def _words(col: str = "text"):
-    # Alias for the canonical tokenizer (functions/exprs.words) — one
-    # source of truth for the engine-symmetric NULL-text semantics.
-    return words(col)
 
 
 def _shingles(words_col, n: int = 3):
@@ -108,15 +102,17 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Complete SELECT yielding (doc_a, doc_b, jaccard) near-dup pairs — the
-# dedup_ngram_jaccard oracle, and reusable as a subquery by downstream
-# oracles (duplicate-cluster connected components in operators/pipeline.py).
-NEAR_DUP_PAIRS_SQL = f"""
+# The rare-shingle pair index, oracle side: word 3-shingles per doc, the
+# postings of shingles in at most _DF_CAP docs, and one row per doc pair
+# sharing any of them, (doc_a, doc_b, n_inter, n_a, n_b) with n_a/n_b the
+# rare-shingle set sizes. Ends in the ``rare_pairs`` CTE; a query appends
+# its own CTEs and final SELECT. The Spark twin is :func:`_rare_pairs`.
+_RARE_PAIRS_CTE = f"""
     WITH words AS (
-      SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS w
+      SELECT doc_id, {oracle_words()} AS w
       FROM documents
     ), pos AS (
-      SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS p, len(w) AS nw
+      SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS p
       FROM words
     ), sh AS (
       SELECT DISTINCT a.doc_id,
@@ -134,42 +130,34 @@ NEAR_DUP_PAIRS_SQL = f"""
       SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_inter
       FROM rs x JOIN rs y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
       GROUP BY x.doc_id, y.doc_id
-    )
-    SELECT
-      i.doc_a, i.doc_b,
-      CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) AS jaccard
-    FROM inter i
-    JOIN sizes sa ON sa.doc_id = i.doc_a
-    JOIN sizes sb ON sb.doc_id = i.doc_b
-    WHERE CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter)
-          >= {_JACCARD_THRESHOLD}
-"""
+    ), rare_pairs AS (
+      SELECT i.doc_a, i.doc_b, i.n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b
+      FROM inter i
+      JOIN sizes sa ON sa.doc_id = i.doc_a
+      JOIN sizes sb ON sb.doc_id = i.doc_b
+    )"""
 
 
-@query(
-    "dedup_ngram_jaccard",
-    oracle=NEAR_DUP_PAIRS_SQL,
-    tags=("llm", "dedup", "jaccard"),
-)
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs via a rare-shingle inverted index.
+def _rare_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The rare-shingle pair index: (doc_a, doc_b, n_inter, n_a, n_b) for
+    every doc pair (doc_a < doc_b) sharing a shingle that occurs in at most
+    _DF_CAP docs; n_inter counts the shared rare shingles and n_a/n_b are
+    each doc's rare-shingle set size.
 
     Pipeline: word 3-shingles per doc (codegen transform, no UDF) → distinct
-    postings → drop shingles with doc-frequency > {cap} (stop-phrases add no
-    signal and square the join fan-out) → self-join postings on shingle →
-    per-pair intersection counts → Jaccard over the rare-shingle sets.
-
-    Scale: the only quadratic term is per-shingle df², capped at {cap}² —
-    candidate volume grows linearly with corpus size. Integer counts and one
-    double division keep it bit-deterministic.
+    postings → drop shingles with doc-frequency > _DF_CAP (stop-phrases add
+    no signal and square the join fan-out) → self-join postings on shingle
+    → per-pair intersection counts → both set sizes. The only quadratic
+    term is per-shingle df², capped at _DF_CAP² — candidate volume grows
+    linearly with corpus size. Oracle twin: ``_RARE_PAIRS_CTE``.
     """
     d = load_table(spark, sf_dir, "documents")
     sh = (
-        d.select("doc_id", _words().alias("w"))
+        d.select("doc_id", words().alias("w"))
         .select("doc_id", F.explode(_shingles("w")).alias("shingle"))
         .distinct()
     )
-    sh.cache()
+    sh.cache()  # consumed by the df-cap build AND the postings join
     rare = (
         sh.groupBy("shingle")
         .agg(F.count(F.lit(1)).alias("df"))
@@ -195,12 +183,47 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sa = sizes.alias("sa")
     sb = sizes.alias("sb")
-    jac = F.col("n_inter").cast("double") / (
-        F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_inter")
-    )
     return (
         inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            "n_inter",
+            F.col("sa.n_sh").alias("n_a"),
+            F.col("sb.n_sh").alias("n_b"),
+        )
+    )
+
+
+# Complete SELECT yielding (doc_a, doc_b, jaccard) near-dup pairs — the
+# dedup_ngram_jaccard oracle, and reusable as a subquery by downstream
+# oracles (duplicate-cluster connected components in operators/pipeline.py).
+NEAR_DUP_PAIRS_SQL = _RARE_PAIRS_CTE + f"""
+    SELECT
+      doc_a, doc_b,
+      CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
+    FROM rare_pairs
+    WHERE CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter)
+          >= {_JACCARD_THRESHOLD}
+"""
+
+
+@query(
+    "dedup_ngram_jaccard",
+    oracle=NEAR_DUP_PAIRS_SQL,
+    tags=("llm", "dedup", "jaccard"),
+)
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs: Jaccard over the rare-shingle
+    sets of every pair in the rare-shingle pair index (:func:`_rare_pairs`).
+    Integer counts and one double division keep it bit-deterministic.
+    """
+    jac = F.col("n_inter").cast("double") / (
+        F.col("n_a") + F.col("n_b") - F.col("n_inter")
+    )
+    return (
+        _rare_pairs(spark, sf_dir)
         .select("doc_a", "doc_b", jac.alias("jaccard"))
         .filter(F.col("jaccard") >= _JACCARD_THRESHOLD)
     )
@@ -286,7 +309,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(
         spark, sf_dir, "documents", widen=True, columns=("doc_id", "text")
     )
-    docs = d.select("doc_id", _words().alias("w")).select(
+    docs = d.select("doc_id", words().alias("w")).select(
         "doc_id", F.array_distinct(_shingles("w")).alias("shingles")
     )
     sig = _minhash_signature(docs, "doc_id", "shingles").cache()
@@ -345,7 +368,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-bit keys. The full 64-bit/4-band production variant is the same plan.
     """
     d = load_table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(_words()).alias("word")).withColumn(
+    tok = d.select("doc_id", F.explode(words()).alias("word")).withColumn(
         "h", F.xxhash64("word")
     )
     bit_aggs = [
@@ -412,38 +435,14 @@ _CONTAIN_T = 0.6  # containment threshold: fraction of the SMALLER doc's
 
 @query(
     "dedup_containment",
-    oracle=f"""
-    WITH words AS (
-      SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS w
-      FROM documents
-    ), pos AS (
-      SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS p
-      FROM words
-    ), sh AS (
-      SELECT DISTINCT a.doc_id,
-             a.word || ' ' || b.word || ' ' || c.word AS shingle
-      FROM pos a
-      JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-      JOIN pos c ON c.doc_id = a.doc_id AND c.p = a.p + 2
-    ), rare AS (
-      SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= {_DF_CAP}
-    ), rs AS (
-      SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n_sh FROM rs GROUP BY doc_id
-    ), inter AS (
-      SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM rs x JOIN rs y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY x.doc_id, y.doc_id
-    ), scored AS (
+    oracle=_RARE_PAIRS_CTE + f"""
+    , scored AS (
       SELECT
-        i.doc_a, i.doc_b,
-        CAST(i.n_inter AS DOUBLE) / sa.n_sh AS contain_a_in_b,
-        CAST(i.n_inter AS DOUBLE) / sb.n_sh AS contain_b_in_a,
-        CAST(i.n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - i.n_inter) AS jaccard
-      FROM inter i
-      JOIN sizes sa ON sa.doc_id = i.doc_a
-      JOIN sizes sb ON sb.doc_id = i.doc_b
+        doc_a, doc_b,
+        CAST(n_inter AS DOUBLE) / n_a AS contain_a_in_b,
+        CAST(n_inter AS DOUBLE) / n_b AS contain_b_in_a,
+        CAST(n_inter AS DOUBLE) / (n_a + n_b - n_inter) AS jaccard
+      FROM rare_pairs
     )
     SELECT doc_a, doc_b, contain_a_in_b, contain_b_in_a, jaccard
     FROM scored
@@ -457,62 +456,21 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (boilerplate reuse, quote inflation, page concatenation) scores
     near 1.0 on containment while its Jaccard stays arbitrarily low.
 
-    Same rare-shingle inverted-index plan as dedup_ngram_jaccard (shared
-    candidate machinery, one extra pair of divisions), so the scale
-    properties carry over unchanged: candidate volume is bounded by the
-    df-cap and grows linearly with the corpus. Reported with both
-    directional containments plus Jaccard so downstream policy can
-    distinguish "a inside b" from "b inside a".
+    Same rare-shingle pair index as dedup_ngram_jaccard (one extra pair of
+    divisions), so the scale properties carry over unchanged: candidate
+    volume is bounded by the df-cap and grows linearly with the corpus.
+    Reported with both directional containments plus Jaccard so downstream
+    policy can distinguish "a inside b" from "b inside a".
     """
-    d = load_table(spark, sf_dir, "documents")
-    sh = (
-        d.select("doc_id", _words().alias("w"))
-        .select("doc_id", F.explode(_shingles("w")).alias("shingle"))
-        .distinct()
-        .cache()  # consumed by the df-cap build AND the postings join
-    )
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= _DF_CAP)
-        .select("shingle")
-    )
-    # Rare-shingle postings are consumed three times (sizes + both pair
-    # sides): cached, so the corpus explode and the rare join run once.
-    rs = sh.join(rare, "shingle").cache()
-    sizes = rs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    x = rs.alias("x")
-    y = rs.alias("y")
-    inter = (
-        x.join(
-            y,
-            (F.col("x.shingle") == F.col("y.shingle"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
-    scored = (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            (F.col("n_inter").cast("double") / F.col("sa.n_sh")).alias(
-                "contain_a_in_b"
-            ),
-            (F.col("n_inter").cast("double") / F.col("sb.n_sh")).alias(
-                "contain_b_in_a"
-            ),
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("sa.n_sh") + F.col("sb.n_sh") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
+    n_inter = F.col("n_inter").cast("double")
+    scored = _rare_pairs(spark, sf_dir).select(
+        "doc_a",
+        "doc_b",
+        (n_inter / F.col("n_a")).alias("contain_a_in_b"),
+        (n_inter / F.col("n_b")).alias("contain_b_in_a"),
+        (n_inter / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))).alias(
+            "jaccard"
+        ),
     )
     return scored.filter(
         F.greatest(F.col("contain_a_in_b"), F.col("contain_b_in_a"))
@@ -532,7 +490,7 @@ _LEV_REL_DEN = 5  # lev/max_chars <= 20%
     oracle=f"""
     WITH base AS (
       SELECT doc_id, lang, text,
-             len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+             len({oracle_words()})
                AS n_words
       FROM documents
     ), bucketed AS (
@@ -584,7 +542,7 @@ def dedup_fuzzy_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     base = d.select(
-        "doc_id", "lang", "text", F.size(_words()).alias("n_words")
+        "doc_id", "lang", "text", F.size(words()).alias("n_words")
     )
     bucketed = base.select(
         "doc_id",
@@ -644,7 +602,7 @@ _SUB_K = 8
     oracle=f"""
     WITH words AS (
       SELECT doc_id,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS w
+             {oracle_words()} AS w
       FROM documents
     ), pos AS (
       SELECT doc_id, len(w) AS n_tokens, i.i AS p,
@@ -892,7 +850,7 @@ def dedup_minhash_oph(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(
         spark, sf_dir, "documents", widen=True, columns=("doc_id", "text")
     )
-    docs = d.select("doc_id", _words().alias("w")).select(
+    docs = d.select("doc_id", words().alias("w")).select(
         "doc_id", F.array_distinct(_shingles("w")).alias("shingles")
     )
     # Slot-min expressions as ONE SQL string — same Catalyst tree, one
@@ -976,8 +934,7 @@ _PARA_W = 10  # paragraph analog: non-overlapping 10-word chunks
     oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
-             list_filter(string_split(COALESCE(text, ''), ' '),
-                         x -> x <> '') AS ws
+             {oracle_words()} AS ws
       FROM documents
     ), ti AS (
       -- len >= 1 gate: DuckDB's integer // TRUNCATES toward zero, so an
@@ -1082,35 +1039,11 @@ def dedup_paragraph_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_lsh_tuning_curve",
-    oracle=f"""
-    WITH words AS (
-      SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS w
-      FROM documents
-    ), pos AS (
-      SELECT doc_id, unnest(w) AS word, generate_subscripts(w, 1) AS p
-      FROM words
-    ), sh AS (
-      SELECT DISTINCT a.doc_id,
-             a.word || ' ' || b.word || ' ' || c.word AS shingle
-      FROM pos a
-      JOIN pos b ON b.doc_id = a.doc_id AND b.p = a.p + 1
-      JOIN pos c ON c.doc_id = a.doc_id AND c.p = a.p + 2
-    ), rare AS (
-      SELECT shingle FROM sh GROUP BY shingle HAVING COUNT(*) <= {_DF_CAP}
-    ), rs AS (
-      SELECT sh.doc_id, sh.shingle FROM sh JOIN rare USING (shingle)
-    ), sizes AS (
-      SELECT doc_id, COUNT(*) AS n_sh FROM rs GROUP BY doc_id
-    ), inter AS (
-      SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, COUNT(*) AS n_inter
-      FROM rs x JOIN rs y ON x.shingle = y.shingle AND x.doc_id < y.doc_id
-      GROUP BY x.doc_id, y.doc_id
-    ), hist AS (
-      SELECT 20 * i.n_inter // (sa.n_sh + sb.n_sh - i.n_inter) AS bucket,
+    oracle=_RARE_PAIRS_CTE + f"""
+    , hist AS (
+      SELECT 20 * n_inter // (n_a + n_b - n_inter) AS bucket,
              COUNT(*) AS n_pairs
-      FROM inter i
-      JOIN sizes sa ON sa.doc_id = i.doc_a
-      JOIN sizes sb ON sb.doc_id = i.doc_b
+      FROM rare_pairs
       GROUP BY 1
     ), curve AS (
       SELECT bucket, n_pairs,
@@ -1156,43 +1089,9 @@ def dedup_lsh_tuning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     as `dedup_ngram_jaccard` (df-capped, linear candidate volume); the
     curve itself runs on ≤21 bucket rows.
     """
-    d = load_table(spark, sf_dir, "documents")
-    sh = (
-        d.select("doc_id", _words().alias("w"))
-        .select("doc_id", F.explode(_shingles("w")).alias("shingle"))
-        .distinct()
-    )
-    rare = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") <= _DF_CAP)
-        .select("shingle")
-    )
-    rs = sh.join(rare, "shingle").cache()
-    sizes = rs.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    x = rs.alias("x")
-    y = rs.alias("y")
-    inter = (
-        x.join(
-            y,
-            (F.col("x.shingle") == F.col("y.shingle"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .groupBy(
-            F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b")
-        )
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.alias("sa")
-    sb = sizes.alias("sb")
     hist = (
-        inter.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            F.expr(
-                "20 * n_inter DIV (sa.n_sh + sb.n_sh - n_inter)"
-            ).alias("bucket")
-        )
+        _rare_pairs(spark, sf_dir)
+        .select(F.expr("20 * n_inter DIV (n_a + n_b - n_inter)").alias("bucket"))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_pairs"))
     )

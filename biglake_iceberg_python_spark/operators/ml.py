@@ -26,7 +26,7 @@ from biglake_iceberg_python_spark.operators.curation import (
     _STOP_SQL,
     _STOPWORDS,
 )
-from biglake_iceberg_python_spark.functions.exprs import words
+from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -730,17 +730,17 @@ def ml_linreg_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("l_returnflag", "l_linestatus")
 
 
-_NB_WC_SQL = """
+_NB_WC_SQL = f"""
     WITH docs AS (
       -- lang IS NOT NULL: a supervised classifier needs a label — an
       -- unlabeled doc can neither train a class nor anchor a confusion
       -- row, and a None label crashed the Spark driver's sorted(classes)
       -- (round-10 NULL-metadata probe).
       SELECT doc_id, lang,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws,
+             {oracle_words()} AS ws,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':nb'), 1, 8))
                ::BIGINT % 5 = 0 AS is_test
-      FROM {documents} WHERE lang IS NOT NULL
+      FROM {{documents}} WHERE lang IS NOT NULL
     ), train AS (SELECT * FROM docs WHERE NOT is_test),
     classes AS (SELECT lang AS clang, COUNT(*) AS dc FROM train GROUP BY lang),
     wc AS (
@@ -1043,7 +1043,7 @@ _PR_THRESHOLDS = tuple(range(500, 1000, 50))  # per-mille score cutoffs
         len(list_distinct(ws)) AS n_dist,
         len(list_intersect(ws, {_STOP_SQL})) > 0 AS has_stop
       FROM (
-        SELECT list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+        SELECT {oracle_words()} AS ws
         FROM documents
       )
     ), scored AS (
@@ -1197,7 +1197,7 @@ def ml_pr_curve_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         len(list_distinct(ws)) AS n_dist,
         len(list_intersect(ws, {_STOP_SQL})) > 0 AS has_stop
       FROM (
-        SELECT list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+        SELECT {oracle_words()} AS ws
         FROM documents
       )
     ), scored AS (

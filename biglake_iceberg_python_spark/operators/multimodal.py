@@ -30,7 +30,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from biglake_iceberg_python_spark.functions.exprs import words
+from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -384,11 +384,11 @@ def multimodal_dedup_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "multimodal_training_record",
-    oracle="""
+    oracle=f"""
     WITH rec AS (
       SELECT
         d.source,
-        len(list_filter(string_split(COALESCE(d.text, ''), ' '), x -> x <> ''))
+        len({oracle_words('d.text')})
           AS n_tokens,
         strlen(d.text) AS payload_bytes,
         CAST(FLOOR(1e6 * sqrt(list_dot_product(e.embedding::DOUBLE[],

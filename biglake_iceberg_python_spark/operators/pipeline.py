@@ -41,7 +41,7 @@ from biglake_iceberg_python_spark.operators.dedup import (
     NEAR_DUP_PAIRS_SQL,
     dedup_ngram_jaccard,
 )
-from biglake_iceberg_python_spark.functions.exprs import words
+from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -285,7 +285,7 @@ def sample_reservoir_pergroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS n_tok
+             len({oracle_words()}) AS n_tok
       FROM documents
     ), o AS (
       SELECT doc_id, n_tok,
@@ -372,7 +372,7 @@ _MIN_TOKENS = 20
     oracle=f"""
     WITH tok AS (
       SELECT doc_id, lang,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+             {oracle_words()} AS ws
       FROM documents
     ), q AS (
       SELECT doc_id, lang, len(ws) AS n_tok,
@@ -502,7 +502,7 @@ _PAD_QUANT = 64  # sequence-length bucket width (tokens)
     oracle=f"""
     WITH t AS (
       SELECT
-        len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS n_tok
+        len({oracle_words()}) AS n_tok
       FROM documents
     ), b AS (
       SELECT
@@ -645,7 +645,7 @@ _SPAN_SENTINEL = "<extra_id_0>"
     oracle=f"""
     WITH base AS (
       SELECT doc_id,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS w
+             {oracle_words()} AS w
       FROM documents
     ), sized AS (
       SELECT doc_id, w, len(w) AS n FROM base WHERE len(w) > {_SPAN_LEN}
@@ -781,7 +781,7 @@ _PACK_CTX = 128  # context-window token budget per packed bin
     oracle=f"""
     WITH d AS (
       SELECT doc_id,
-             CAST(len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+             CAST(len({oracle_words()})
                AS BIGINT) AS n_tok
       FROM documents
     ), n AS (

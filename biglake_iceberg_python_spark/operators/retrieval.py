@@ -28,7 +28,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import words
+from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
 from biglake_iceberg_python_spark.operators.similarity import (
     _dot,
     _valid_embeddings,
@@ -46,15 +46,8 @@ _FUSE_DEPTH = 50  # per-ranker candidate depth for RRF
 _RRF_C = 60  # the standard reciprocal-rank-fusion constant
 
 
-def _words() -> Column:
-    # Alias for the canonical tokenizer (functions/exprs.words): NULL
-    # text tokenizes to an EMPTY list on both engines, so NULL docs
-    # still count in BM25's sum_dl/avgdl corpus stats.
-    return words("text")
-
-
 def _tf(term: str) -> Column:
-    return F.size(F.filter(_words(), lambda x: x == F.lit(term)))
+    return F.size(F.filter(words(), lambda x: x == F.lit(term)))
 
 
 def _spark_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -74,7 +67,7 @@ def _spark_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_doc = d.select(
         "doc_id",
-        F.size(_words()).alias("dl"),
+        F.size(words()).alias("dl"),
         *[_tf(t).alias(f"tf_{i}") for i, t in enumerate(_QUERY_TERMS)],
     )
     stats = per_doc.agg(
@@ -138,8 +131,7 @@ def _oracle_bm25() -> str:
         len(w) AS dl,
         {tf_cols}
       FROM (SELECT doc_id,
-                   list_filter(string_split(COALESCE(text, ''), ' '),
-                               x -> x <> '') AS w
+                   {oracle_words()} AS w
             FROM documents)
     ), stats AS (
       SELECT COUNT(*) AS n_docs, SUM(dl) AS sum_dl,

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import words
+from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -289,11 +289,11 @@ def scalar_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_array",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT
         doc_id,
-        list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')
+        {oracle_words()}
           AS words
       FROM documents
     )
@@ -353,10 +353,10 @@ def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_array_explode",
-    oracle="""
+    oracle=f"""
     SELECT word, COUNT(*) AS freq
     FROM (
-      SELECT unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS word
+      SELECT unnest({oracle_words()}) AS word
       FROM documents
     )
     GROUP BY word
@@ -672,10 +672,10 @@ def scalar_binary_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_array_reduce",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT doc_id,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+             {oracle_words()} AS ws
       FROM documents WHERE doc_id < 200
     )
     SELECT

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from biglake_iceberg_python_spark.functions.exprs import (
     adjacent_pairs,
     oracle_davg,
+    oracle_words,
     words,
 )
 from biglake_iceberg_python_spark.plans.registry import query
@@ -35,24 +36,16 @@ _LANG_MARKERS = {
 }
 
 
-def _words(col: str = "text") -> Column:
-    # Alias for the canonical tokenizer (functions/exprs.words) — one
-    # source of truth; the oracle twins carry the matching
-    # string_split(COALESCE(text, ''), ' ') with the empty filter.
-    return words(col)
-
-
 @query(
     "text_quality_stats",
     oracle=f"""
     WITH per_doc AS (
       SELECT
         lang,
-        len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS n_words,
+        len({oracle_words()}) AS n_words,
         length(text) AS n_chars_actual,
         length(text) - length(replace(text, ' ', '')) AS n_spaces,
-        len(list_filter(string_split(COALESCE(text, ''), ' '),
-                        x -> x IN ('{_STOP_SQL}'))) AS n_stop
+        len(list_filter({oracle_words()}, x -> x IN ('{_STOP_SQL}'))) AS n_stop
       FROM documents
     )
     SELECT
@@ -86,7 +79,7 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     words" is also the statistic a quality filter actually wants.
     """
     d = load_table(spark, sf_dir, "documents")
-    w = _words()
+    w = words()
     stop_arr = F.array(*[F.lit(s) for s in _STOPWORDS])
     per_doc = d.select(
         "lang",
@@ -113,10 +106,7 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lang_score_sql(lang: str) -> str:
     m = "', '".join(_LANG_MARKERS[lang])
-    return (
-        f"len(list_filter(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''),"
-        f" x -> x IN ('{m}')))"
-    )
+    return f"len(list_filter({oracle_words()}, x -> x IN ('{m}')))"
 
 
 @query(
@@ -149,7 +139,7 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     replace per-row. Pure codegen, no UDF.)
     """
     d = load_table(spark, sf_dir, "documents")
-    w = _words()
+    w = words()
 
     def score(lang: str) -> Column:
         markers = F.array(*[F.lit(s) for s in _LANG_MARKERS[lang]])
@@ -169,10 +159,10 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_token_count",
-    oracle=r"""
+    oracle=rf"""
     SELECT
       source,
-      CAST(SUM(len(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')))
+      CAST(SUM(len({oracle_words()}))
         AS BIGINT) AS ws_tokens,
       CAST(SUM(len(regexp_extract_all(COALESCE(text, ''),
                                       '[a-z]+|[0-9]+|[^a-z0-9 ]')))
@@ -192,7 +182,7 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     each NULL doc silently SUBTRACTED one token from its source)."""
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("source").agg(
-        F.sum(F.size(_words())).cast("long").alias("ws_tokens"),
+        F.sum(F.size(words())).cast("long").alias("ws_tokens"),
         F.sum(
             F.size(
                 F.regexp_extract_all(
@@ -210,12 +200,12 @@ def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT
         doc_id,
-        unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS word,
-        generate_subscripts(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''), 1)
+        unnest({oracle_words()}) AS word,
+        generate_subscripts({oracle_words()}, 1)
           AS pos
       FROM documents
     ), fp AS (
@@ -244,7 +234,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
-        "doc_id", F.posexplode(_words()).alias("pos0", "word")
+        "doc_id", F.posexplode(words()).alias("pos0", "word")
     ).select(
         "doc_id",
         (F.col("pos0") + 1).alias("pos"),  # align with 1-based subscripts
@@ -263,15 +253,15 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TFIDF_DF_SQL = """
+_TFIDF_DF_SQL = f"""
     WITH toks AS (
       SELECT DISTINCT doc_id,
-        unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS word
-      FROM {documents}
+        unnest({oracle_words()}) AS word
+      FROM {{documents}}
     ), df AS (
       SELECT word, COUNT(*) AS doc_freq FROM toks GROUP BY word
     ), n AS (
-      SELECT COUNT(*) AS n_docs FROM {documents}
+      SELECT COUNT(*) AS n_docs FROM {{documents}}
     )
 """
 
@@ -347,7 +337,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_words()).alias("word")).distinct()
+    toks = d.select("doc_id", F.explode(words()).alias("word")).distinct()
     df_tbl = toks.groupBy("word").agg(
         F.count(F.lit(1)).alias("doc_freq")
     ).cache()
@@ -365,10 +355,10 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BIGRAM_MODEL_SQL = """
+_BIGRAM_MODEL_SQL = f"""
     WITH t AS (
-      SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
-      FROM {documents}
+      SELECT doc_id, {oracle_words()} AS ws
+      FROM {{documents}}
     ), ti AS (
       SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM t
     ), b AS (
@@ -486,7 +476,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(
         spark, sf_dir, "documents", widen=True, columns=("doc_id", "text")
     )
-    ws = _words()
+    ws = words()
     bigs = d.select(
         "doc_id",
         F.explode(
@@ -567,10 +557,10 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_repetition_stats",
-    oracle="""
+    oracle=f"""
     WITH t AS (
       SELECT doc_id, source,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+             {oracle_words()} AS ws
       FROM documents
     ), ti AS (
       SELECT doc_id, source, ws,
@@ -615,7 +605,7 @@ def text_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigrams of that doc), and documents never join documents.
     """
     d = load_table(spark, sf_dir, "documents")
-    ws = _words()
+    ws = words()
     bigs = d.select(
         "doc_id",
         "source",
@@ -659,7 +649,7 @@ _VOCAB_KS = (100, 500, 2000)
     WITH cnt AS (
       SELECT word, COUNT(*) AS c
       FROM (
-        SELECT unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+        SELECT unnest({oracle_words()})
           AS word
         FROM documents
       ) GROUP BY word
@@ -706,7 +696,7 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranked and tot both consume cnt, and without the checkpoint Catalyst
     # re-derives the corpus explode for each.
     cnt = (
-        d.select(F.explode(_words()).alias("word"))
+        d.select(F.explode(words()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=False)
@@ -754,9 +744,9 @@ def text_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_bigram_novelty",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+      SELECT doc_id, {oracle_words()} AS ws
       FROM documents
     ), ti AS (
       SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM t
@@ -826,13 +816,13 @@ def text_bigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ZIPF_RANKS = 200  # fit over the head of the frequency distribution
 
 
-_ZIPF_HEAD_SQL = """
+_ZIPF_HEAD_SQL = f"""
     WITH cnt AS (
       SELECT word, COUNT(*) AS c
       FROM (
-        SELECT unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+        SELECT unnest({oracle_words()})
           AS word
-        FROM {documents}
+        FROM {{documents}}
       ) GROUP BY word
     ), ranked AS (
       SELECT c, ROW_NUMBER() OVER (ORDER BY c DESC, word) AS r FROM cnt
@@ -928,7 +918,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     cnt = (
-        d.select(F.explode(_words()).alias("word"))
+        d.select(F.explode(words()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -994,7 +984,7 @@ _CHUNK_S = 24
     oracle=f"""
     WITH toks AS (
       SELECT doc_id,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS t
+             {oracle_words()} AS t
       FROM documents
     ), base AS (
       SELECT doc_id, t, len(t) AS n FROM toks
@@ -1030,7 +1020,7 @@ def text_chunk_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     base = d.select(
-        "doc_id", _words().alias("t")
+        "doc_id", words().alias("t")
     ).withColumn("n", F.size("t"))
     st = base.select(
         "doc_id",
@@ -1066,7 +1056,7 @@ _BPE_TOP = 20
     "text_bpe_pair_stats",
     oracle=f"""
     WITH words AS (
-      SELECT unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+      SELECT unnest({oracle_words()})
         AS w
       FROM documents
     ), wc AS (
@@ -1106,7 +1096,7 @@ def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     wc = (
-        d.select(F.explode(_words()).alias("w"))
+        d.select(F.explode(words()).alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("c"))
     )
@@ -1127,10 +1117,10 @@ def text_bpe_pair_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_js_divergence_sources",
-    oracle="""
+    oracle=f"""
     WITH w AS (
       SELECT source,
-             unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS word
+             unnest({oracle_words()}) AS word
       FROM documents
     ), sc AS (
       SELECT source, word, COUNT(*) AS c FROM w GROUP BY source, word
@@ -1197,7 +1187,7 @@ def text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized work is the (source, word) count, map-side combined.
     """
     d = load_table(spark, sf_dir, "documents")
-    w = F.explode(_words()).alias("word")
+    w = F.explode(words()).alias("word")
     sc = (
         d.select("source", w)
         .groupBy("source", "word")
@@ -1259,10 +1249,10 @@ def text_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_heldout_bigram_coverage",
-    oracle="""
+    oracle=f"""
     WITH split AS (
       SELECT doc_id,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws,
+             {oracle_words()} AS ws,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':heldout'), 1, 8))::BIGINT
                % 5 = 0 AS is_heldout
       FROM documents
@@ -1301,7 +1291,7 @@ def text_heldout_bigram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe join. All four outputs are exact integer counts.
     """
     d = load_table(spark, sf_dir, "documents")
-    ws = _words()
+    ws = words()
     from biglake_iceberg_python_spark.operators.pipeline import _md5_bucket
 
     split = d.select(
@@ -1401,7 +1391,7 @@ _PMI_TOP = 20
     oracle=f"""
     WITH dw AS (
       SELECT DISTINCT doc_id,
-             unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '')) AS w
+             unnest({oracle_words()}) AS w
       FROM documents
     ), n_docs AS (SELECT COUNT(DISTINCT doc_id) AS nd FROM dw),
     df AS (SELECT w, COUNT(*) AS dfw FROM dw GROUP BY w),
@@ -1441,7 +1431,7 @@ def text_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     dw = d.select(
-        "doc_id", F.explode(_words()).alias("w")
+        "doc_id", F.explode(words()).alias("w")
     ).distinct()
     nd = dw.agg(F.count_distinct("doc_id").alias("nd"))
     df = dw.groupBy("w").agg(F.count(F.lit(1)).alias("dfw"))
@@ -1492,7 +1482,7 @@ _RAKE_TOP = 15
     oracle=f"""
     WITH t AS (
       SELECT doc_id,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+             {oracle_words()} AS ws
       FROM documents
     ), ti AS (
       SELECT doc_id, unnest(generate_series(1, len(ws))) AS i, ws
@@ -1556,7 +1546,7 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     d = load_table(spark, sf_dir, "documents")
     tok = d.select(
-        "doc_id", F.posexplode(_words()).alias("i", "w")
+        "doc_id", F.posexplode(words()).alias("i", "w")
     ).withColumn(
         "st",
         F.when(F.col("w").isin(*_STOPWORDS), F.lit(1)).otherwise(F.lit(0)),
@@ -1607,9 +1597,9 @@ def text_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_kneser_ney_bigram",
-    oracle="""
+    oracle=f"""
     WITH t AS (
-      SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+      SELECT doc_id, {oracle_words()} AS ws
       FROM documents
     ), ti AS (
       SELECT doc_id, ws, unnest(generate_series(1, len(ws) - 1)) AS i FROM t
@@ -1679,7 +1669,7 @@ def text_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-sized exchange after the first rollup.
     """
     d = load_table(spark, sf_dir, "documents")
-    ws = _words()
+    ws = words()
     bigs = d.select(
         F.explode(
             adjacent_pairs(
@@ -1753,7 +1743,7 @@ def _bpe_chain_sql() -> str:
     )""")
     return f"""
     WITH words AS (
-      SELECT unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+      SELECT unnest({oracle_words()})
         AS word
       FROM documents
     ), w AS (
@@ -1856,7 +1846,7 @@ def _bpe_train(
     """
     d = load_table(spark, sf_dir, "documents")
     w = (
-        d.select(F.explode(_words()).alias("word"))
+        d.select(F.explode(words()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).cast("long").alias("freq"))
     )
@@ -1914,7 +1904,7 @@ def _bpe_train(
     oracle=f"""{_bpe_chain_sql()}
     , cw AS (
       SELECT source,
-             unnest(list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> ''))
+             unnest({oracle_words()})
                AS word
       FROM documents
     ), csw AS (
@@ -1958,7 +1948,7 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     t, _ = _bpe_train(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     csw = (
-        d.select("source", F.explode(_words()).alias("word"))
+        d.select("source", F.explode(words()).alias("word"))
         .groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
@@ -1983,11 +1973,11 @@ def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "text_heaps_law",
-    oracle="""
+    oracle=f"""
     WITH d AS (SELECT COUNT(*) AS nd FROM documents),
     docs AS (
       SELECT (doc_id * 10) // (SELECT nd FROM d) AS dec,
-             list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+             {oracle_words()} AS ws
       FROM documents
     ), per_dec AS (
       SELECT dec, COUNT(*) AS n_docs, SUM(len(ws)) AS dec_tokens
@@ -2057,7 +2047,7 @@ def text_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = d.agg(F.count(F.lit(1)).alias("nd"))
     docs = d.crossJoin(F.broadcast(nd)).select(
         F.expr("doc_id * 10 DIV nd").alias("dec"),
-        _words().alias("ws"),
+        words().alias("ws"),
     )
     per_dec = docs.groupBy("dec").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
+from biglake_iceberg_python_spark.functions.exprs import oracle_words
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -280,7 +281,7 @@ def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_python_udtf",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
       SELECT
         d.source,
@@ -288,7 +289,7 @@ def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.pos
       FROM (
         SELECT source,
-               list_filter(string_split(COALESCE(text, ''), ' '), x -> x <> '') AS ws
+               {oracle_words()} AS ws
         FROM documents
       ) d, LATERAL (
         SELECT unnest(d.ws) AS word, generate_subscripts(d.ws, 1) - 1 AS pos

@@ -103,30 +103,8 @@ _QUERY_MODULES = [
 
 _loaded = False
 
-# The grading driver verifies the FIRST 50 registered queries each round
-# (registration order). Everything outside the window stays pinned by
-# tests/test_oracle_parity.py's full sweep, which runs every registered
-# query against its oracle regardless of ordering.
-#
-# Provenance of this rotation (round 14, per round-13 VERDICT "Next round"
-# #2): the optimization rounds touched query internals that only the
-# driver's official t2 hash-match can certify, so the window leads with
-# every round-13/14-optimized path, then fills with the stalest cohort.
-# Staleness recomputed from CORRECTNESS_r01..r13 (histogram r3x4 / r5x5 /
-# r7x45 / r8x46 / r9x48 / r10x50 / r11x50 / r12x50 / r13x50; the r3/r5
-# residue is the rows-only/approximate set that never hash-passes by
-# design -- rows-only names have windowed before: r03 carried
-# dedup_minhash_lsh, r08 dedup_minhash_oph).
-#   * 16 optimized/touched paths: the round-13 verdict's 11 (q21, graph x4,
-#     dedup x3, text_lm_perplexity, sim_hybrid_rrf -- plus the shared-bm25
-#     inheritor curate_quality_weighted_sample) and the round-14 rewrites
-#     (BPE trainer/encoder driver-literal argmax, bm25/agg_unpivot widen
-#     projection, stream_tumbling_window as the events schema-cache probe).
-#   * 3 r3-stale + 5 r5-stale (the full remaining pre-r7 residue).
-#   * 26 of the 45 r7-stale names, preferring families whose shared
-#     helpers round 14 touched (dedup tokenizer/shingle consumers x7),
-#     then the pandas-UDF x3, streaming x5, similarity x8 and as-of x3
-#     batteries. 16 + 8 + 26 = 50.
+# The driver verifies the first 50 registered queries each round, so this
+# window leads with the recently optimized paths, then the stalest ones.
 _PRIORITY_WINDOW = [
     # round-13/14 optimized paths (16)
     "tpch_q21_waiting_supplier",
@@ -264,6 +242,21 @@ def scratch(fn: Callable[[SparkSession, str, str], DataFrame]) -> QueryFn:
                 )
 
     return run
+
+
+# Parent of every process_dir() directory: created on first use and
+# removed, with everything under it, at interpreter exit.
+_PROCESS_ROOT: tempfile.TemporaryDirectory | None = None
+
+
+def process_dir(prefix: str) -> str:
+    """A fresh directory that lives until interpreter exit, for a query
+    whose returned frame stays LAZY over files it wrote (where
+    :func:`scratch` would materialize the frame, one more Spark job)."""
+    global _PROCESS_ROOT
+    if _PROCESS_ROOT is None:
+        _PROCESS_ROOT = tempfile.TemporaryDirectory(prefix="process_dir_")
+    return tempfile.mkdtemp(prefix=prefix, dir=_PROCESS_ROOT.name)
 
 
 def all_queries() -> dict[str, QueryFn]:

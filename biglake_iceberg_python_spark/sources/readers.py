@@ -14,12 +14,11 @@ once, convert to parquet/Iceberg, query columnar thereafter.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.plans.registry import query, scratch
+from biglake_iceberg_python_spark.plans.registry import process_dir, query, scratch
 from biglake_iceberg_python_spark.sources.tables import load_table
 
 
@@ -49,7 +48,7 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the original parquet (lossless round-trip incl. doubles
     — Spark writes round-trippable float text)."""
     c = load_table(spark, sf_dir, "customer")
-    out = os.path.join(tempfile.mkdtemp(prefix="src_csv_"), "customer_csv")
+    out = os.path.join(process_dir("src_csv_"), "customer_csv")
     c.write.option("header", "true").csv(out)
     schema = (
         "c_custkey bigint, c_name string, c_nationkey int, "
@@ -79,7 +78,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    out = os.path.join(tempfile.mkdtemp(prefix="src_json_"), "orders_json")
+    out = os.path.join(process_dir("src_json_"), "orders_json")
     o.write.json(out)
     schema = "o_orderkey bigint, o_orderstatus string, o_totalprice double"
     back = read_json(spark, out, schema)
@@ -107,7 +106,7 @@ def source_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFram
     other partitions are opened). The core 100 TB scan-avoidance mechanism;
     Iceberg hidden partitioning is the same idea with transforms."""
     o = load_table(spark, sf_dir, "orders")
-    out = os.path.join(tempfile.mkdtemp(prefix="src_part_"), "orders_part")
+    out = os.path.join(process_dir("src_part_"), "orders_part")
     o.write.partitionBy("o_orderpriority").parquet(out)
     # Schema pinned from the written frame — file inference fails on a
     # 0-row write (round-10 empty-table parity axis).
@@ -139,7 +138,7 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary columnar round-trips are exact, so the oracle is the same
     aggregate over the original table."""
     p = load_table(spark, sf_dir, "part")
-    out = os.path.join(tempfile.mkdtemp(prefix="src_orc_"), "part_orc")
+    out = os.path.join(process_dir("src_orc_"), "part_orc")
     p.write.orc(out)
     back = spark.read.orc(out)
     return back.groupBy("p_brand").agg(

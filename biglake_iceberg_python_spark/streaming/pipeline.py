@@ -27,7 +27,6 @@ session or temp dir.
 
 from __future__ import annotations
 
-import itertools
 import math
 import os
 import tempfile
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from biglake_iceberg_python_spark.functions.exprs import EVENT_VALUE_CAP
+from biglake_iceberg_python_spark.plans.registry import process_dir
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import parquet_schema, size_bytes
 
@@ -48,11 +48,6 @@ from biglake_iceberg_python_spark.sources.tables import parquet_schema, size_byt
 # sharing a config reuse one on-disk staging; checkpoints are per-run state
 # and never live here.
 _STAGED: dict[tuple[str, int, int, int | None, bool, bool], str] = {}
-
-# Root of every staging in this process (created on the first miss and
-# removed at interpreter exit) and the sequence naming its subdirectories.
-_STAGE_ROOT: tempfile.TemporaryDirectory | None = None
-_STAGE_SEQ = itertools.count()
 
 # Every replay splits events into this many time-contiguous chunks; the
 # stream_late_data_drop oracle replays the same 4-way split in SQL.
@@ -116,11 +111,7 @@ def stage_event_chunks(
     cached = _STAGED.get(key)
     if cached is not None and os.path.isdir(cached):
         return cached
-    global _STAGE_ROOT
-    if _STAGE_ROOT is None:
-        _STAGE_ROOT = tempfile.TemporaryDirectory(prefix="stream_events_")
-    input_dir = os.path.join(_STAGE_ROOT.name, f"input_{next(_STAGE_SEQ)}")
-    os.makedirs(input_dir)
+    input_dir = process_dir("stream_events_")
     # Stage with pyarrow, not a Spark write job: this is test-harness
     # plumbing (simulating a stream source from static parquet), so the
     # ~seconds of Spark job overhead would be pure bench noise. The ns→µs

@@ -11,10 +11,9 @@ phantom chunks). This script closes the class: it crafts the degenerate
 corpora and runs the FULL Spark-vs-DuckDB compare for every oracle-bearing
 query that reads the affected table.
 
-Usage:  python scripts/degenerate_parity_sweep.py
-            [--table documents|embeddings|events|magnitude|singular|oneday|
-                     monodoc|monovec|epoch_straddle|warehouse|flatline|dims|
-                     empty|unicode|ties|all]
+Usage:  python scripts/degenerate_parity_sweep.py [--table AXIS|all]
+
+Each ``@axis`` craft below is one AXIS, named after its function.
 
 Exit 0 iff every comparable query matches. Queries whose oracle builders
 derive literal tables are resolved against the crafted corpus (the same
@@ -25,7 +24,9 @@ still covers them).
 
 from __future__ import annotations
 
+import argparse
 import datetime
+import functools
 import os
 import re
 import shutil
@@ -39,15 +40,36 @@ TABLES = [
     "lineitem", "events", "documents", "embeddings",
 ]
 
+# Axis name -> (craft function, the tables it rewrites), in definition order.
+AXES: dict[str, tuple] = {}
 
+
+def axis(*rewritten: str):
+    """Register ``craft_<name>(d)`` as the degenerate axis ``name`` that
+    rewrites the ``rewritten`` tables: the registered craft creates ``d``
+    and links every other table from SF_BASE before the body writes its
+    own. A query is in the axis when it reads any rewritten table."""
+
+    def deco(craft):
+        @functools.wraps(craft)
+        def run(d: str) -> None:
+            os.makedirs(d)
+            for t in TABLES:
+                if t not in rewritten:
+                    os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
+            craft(d)
+
+        AXES[craft.__name__.removeprefix("craft_")] = (run, rewritten)
+        return run
+
+    return deco
+
+
+@axis("documents")
 def craft_documents(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "documents":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     base = pq.read_table(f"{SF_BASE}/documents.parquet")
     cols = {n: base[n] for n in base.column_names}
     texts = cols["text"].to_pylist()
@@ -71,14 +93,11 @@ def craft_documents(d: str) -> None:
     pq.write_table(pa.table(cols), f"{d}/documents.parquet")
 
 
+@axis("embeddings")
 def craft_embeddings(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "embeddings":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/embeddings.parquet")
     cols = {n: tbl[n] for n in tbl.column_names}
     vals = cols["embedding"].to_pylist()
@@ -123,6 +142,7 @@ def craft_embeddings(d: str) -> None:
     pq.write_table(pa.table(cols), f"{d}/embeddings.parquet")
 
 
+@axis("embeddings")
 def craft_monovec(d: str) -> None:
     """Constant embeddings (round 13, the SEVENTEENTH axis — the vector
     twin of `singular`): every vector becomes the SAME in-contract
@@ -137,10 +157,6 @@ def craft_monovec(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "embeddings":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/embeddings.parquet")
     cols = {n: tbl[n] for n in tbl.column_names}
     dim = len(tbl["embedding"][0].as_py())
@@ -154,6 +170,7 @@ def craft_monovec(d: str) -> None:
     pq.write_table(pa.table(cols), f"{d}/embeddings.parquet")
 
 
+@axis("events")
 def craft_epoch_straddle(d: str) -> None:
     """Epoch-straddling timestamps (round 12, the TENTH axis): shift the
     ENTIRE events table by one fixed timedelta so the corpus midpoint
@@ -180,10 +197,6 @@ def craft_epoch_straddle(d: str) -> None:
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "events":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/events.parquet")
     mm = pc.min_max(tbl["ts"]).as_py()
     mid = mm["min"] + (mm["max"] - mm["min"]) / 2
@@ -194,6 +207,7 @@ def craft_epoch_straddle(d: str) -> None:
     pq.write_table(pa.table(cols), f"{d}/events.parquet")
 
 
+@axis("lineitem", "orders")
 def craft_flatline(d: str) -> None:
     """Constant warehouse measures (round 13, the SIXTEENTH axis — the
     TPC-H twin of `singular`): every lineitem quantity / extendedprice /
@@ -209,10 +223,6 @@ def craft_flatline(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t not in ("lineitem", "orders"):
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
 
     li = pq.read_table(f"{SF_BASE}/lineitem.parquet")
     cols = {n: li[n] for n in li.column_names}
@@ -235,6 +245,7 @@ def craft_flatline(d: str) -> None:
     pq.write_table(pa.table(ocols), f"{d}/orders.parquet")
 
 
+@axis("lineitem", "orders")
 def craft_warehouse(d: str) -> None:
     """Degenerate WAREHOUSE tables (round 12, the ELEVENTH axis): the
     TPC-H lineitem/orders tables are read by 143 oracle-bearing queries
@@ -260,10 +271,6 @@ def craft_warehouse(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t not in ("lineitem", "orders"):
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
 
     li = pq.read_table(f"{SF_BASE}/lineitem.parquet")
     cols = {n: li[n] for n in li.column_names}
@@ -326,6 +333,7 @@ def craft_warehouse(d: str) -> None:
     pq.write_table(pa.table(ocols), f"{d}/orders.parquet")
 
 
+@axis("customer", "supplier", "part", "nation", "region")
 def craft_dims(d: str) -> None:
     """Degenerate DIMENSION tables (round 12, the TWELFTH axis — with it
     every base table has a degenerate axis): customer / supplier / part
@@ -353,10 +361,6 @@ def craft_dims(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t not in ("customer", "supplier", "part", "nation", "region"):
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
 
     reg = pq.read_table(f"{SF_BASE}/region.parquet").replace_schema_metadata(
         None
@@ -423,6 +427,7 @@ def craft_dims(d: str) -> None:
     ])
 
 
+@axis("events")
 def craft_singular(d: str) -> None:
     """Zero-variance / singleton statistics (round 13, the THIRTEENTH
     axis): every event `value` becomes the SAME constant and a slice of
@@ -441,10 +446,6 @@ def craft_singular(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "events":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/events.parquet")
     cols = {n: tbl[n] for n in tbl.column_names}
     n = tbl.num_rows
@@ -469,6 +470,7 @@ def craft_singular(d: str) -> None:
     pq.write_table(pa.table(cols), f"{d}/events.parquet")
 
 
+@axis("documents")
 def craft_monodoc(d: str) -> None:
     """Constant-corpus text (round 13, the FIFTEENTH axis — the text
     twin of `singular`): every document becomes the SAME 30-token
@@ -487,10 +489,6 @@ def craft_monodoc(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "documents":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/documents.parquet")
     cols = {n: tbl[n] for n in tbl.column_names}
     n = tbl.num_rows
@@ -502,6 +500,7 @@ def craft_monodoc(d: str) -> None:
     pq.write_table(pa.table(cols), f"{d}/documents.parquet")
 
 
+@axis("events")
 def craft_oneday(d: str) -> None:
     """Single-day time domain (round 13, the FOURTEENTH axis — the
     time-series sibling of `singular`): events SLICED to the one calendar
@@ -519,10 +518,6 @@ def craft_oneday(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "events":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/events.parquet")
     tsv = tbl["ts"].to_pylist()
     days = collections.Counter(v.date() for v in tsv if v is not None)
@@ -534,6 +529,7 @@ def craft_oneday(d: str) -> None:
     pq.write_table(tbl.filter(mask), f"{d}/events.parquet")
 
 
+@axis("events")
 def craft_events(d: str) -> None:
     """NULL ts / user_id / event_type / value / props interleaved — the
     shapes a real event stream delivers (late ingestion writes NULL
@@ -543,10 +539,6 @@ def craft_events(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "events":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/events.parquet")
     cols = {n: tbl[n] for n in tbl.column_names}
     n = tbl.num_rows
@@ -618,14 +610,11 @@ _UNICODE_TEXTS = [
 ]
 
 
+@axis("documents")
 def craft_unicode(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "documents":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     base = pq.read_table(f"{SF_BASE}/documents.parquet")
     cols = {n: base[n] for n in base.column_names}
     texts = cols["text"].to_pylist()
@@ -636,6 +625,7 @@ def craft_unicode(d: str) -> None:
     pq.write_table(pa.table(cols), f"{d}/documents.parquet")
 
 
+@axis("events", "documents")
 def craft_ties(d: str) -> None:
     """Order-key ties: duplicate event timestamps ACROSS different rows
     (same ts, different user/type/value) and duplicate document texts
@@ -645,10 +635,6 @@ def craft_ties(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t not in ("events", "documents"):
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     etbl = pq.read_table(f"{SF_BASE}/events.parquet")
     ecols = {n: etbl[n] for n in etbl.column_names}
     ts = ecols["ts"].to_pylist()
@@ -683,6 +669,7 @@ def craft_ties(d: str) -> None:
     pq.write_table(pa.table(dcols), f"{d}/documents.parquet")
 
 
+@axis("events")
 def craft_magnitude(d: str) -> None:
     """Ninth axis (round 11): amplified IN-CONTRACT magnitudes. Every
     event value sits just under the |v| < 1e4 ingest cap and the corpus
@@ -701,10 +688,6 @@ def craft_magnitude(d: str) -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
-    for t in TABLES:
-        if t != "events":
-            os.symlink(f"{SF_BASE}/{t}.parquet", f"{d}/{t}.parquet")
     tbl = pq.read_table(f"{SF_BASE}/events.parquet")
     cols = {n: tbl[n].to_pylist() for n in tbl.column_names}
     n = tbl.num_rows
@@ -740,6 +723,7 @@ def craft_magnitude(d: str) -> None:
     )
 
 
+@axis(*TABLES)
 def craft_empty(d: str) -> None:
     """ALL tables 0-row (schema preserved) — the limit shape of an empty
     partition / a zero-new-files incremental ingest, which a 100 TB
@@ -751,7 +735,6 @@ def craft_empty(d: str) -> None:
     empty-train discipline applied engine-wide."""
     import pyarrow.parquet as pq
 
-    os.makedirs(d)
     for t in TABLES:
         pq.write_table(
             pq.read_table(f"{SF_BASE}/{t}.parquet").slice(0, 0),
@@ -776,6 +759,7 @@ def _helper_tables() -> dict:
     global _HELPER_TABLES_CACHE
     if _HELPER_TABLES_CACHE is not None:
         return _HELPER_TABLES_CACHE
+    import ast
     import glob
 
     pkg = os.path.join(
@@ -785,14 +769,16 @@ def _helper_tables() -> dict:
     table_re = re.compile(
         r'"(' + "|".join(TABLES) + r')(?:\.parquet)?"'
     )
+    # Each module-level function's own lines, from its def to its last
+    # line: decorators (and the oracle text they carry) belong to no body.
     funcs: dict[str, str] = {}
     for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
         src = open(path).read()
-        for m in re.finditer(
-            r"^def (\w+)\(.*?(?=^def |\Z)", src, re.M | re.S
-        ):
-            funcs.setdefault(m.group(1), "")
-            funcs[m.group(1)] += m.group(0)
+        lines = src.splitlines(keepends=True)
+        for fn in ast.parse(src).body:
+            if isinstance(fn, ast.FunctionDef):
+                funcs.setdefault(fn.name, "")
+                funcs[fn.name] += "".join(lines[fn.lineno - 1 : fn.end_lineno])
     tables = {
         name: set(table_re.findall(body)) for name, body in funcs.items()
     }
@@ -802,12 +788,6 @@ def _helper_tables() -> dict:
     # internal events-encoding special case to every caller and balloon
     # each axis to the whole registry.
     tables["load_table"] = set()
-    # The oracle-side events wrap (functions/exprs.oracle_events) builds
-    # SQL text, it reads nothing on the Spark side. A function "body" here
-    # runs up to the next def, so it takes in the next query's decorator
-    # and oracle; counting the wrap as a reader would put the query
-    # defined above any events oracle in the events axes.
-    tables["oracle_events"] = set()
     # transitive closure: a helper that calls a table-reading helper
     # reads that table too. Call sites match on a word boundary
     # (round-11 ADVICE: a bare substring test made helper names that are
@@ -832,46 +812,7 @@ def _helper_tables() -> dict:
     return _HELPER_TABLES_CACHE
 
 
-def reads_table(name, spec, table: str) -> bool:
-    if table == "empty":  # all tables empty — every query is in scope
-        return True
-    if table == "unicode":
-        return reads_table(name, spec, "documents")
-    if table == "magnitude":
-        return reads_table(name, spec, "events")
-    if table == "singular":
-        return reads_table(name, spec, "events")
-    if table == "oneday":
-        return reads_table(name, spec, "events")
-    if table == "monodoc":
-        return reads_table(name, spec, "documents")
-    if table == "monovec":
-        return reads_table(name, spec, "embeddings")
-    if table == "dims":
-        return any(
-            reads_table(name, spec, t)
-            for t in ("customer", "supplier", "part", "nation", "region")
-        )
-    if table in ("warehouse", "flatline"):
-        return reads_table(name, spec, "lineitem") or reads_table(
-            name, spec, "orders"
-        )
-    if table == "epoch_straddle":
-        # Watermarked streaming is structurally post-epoch in Spark: the
-        # engine initializes the global watermark to epoch 0 ms (not -inf)
-        # and only advances it, so EVERY pre-1970 event-time row is below
-        # the initial watermark and dropped as late in batch 0 — an
-        # engine-level domain boundary, not an operator bug (verified
-        # behaviorally: the straddle corpus halves every streaming count
-        # while the batch twins keep both halves). Batch operators have no
-        # such floor and must be epoch-sign-correct — they stay in scope.
-        return "streaming" not in spec.tags and reads_table(
-            name, spec, "events"
-        )
-    if table == "ties":
-        return reads_table(name, spec, "events") or reads_table(
-            name, spec, "documents"
-        )
+def reads_table(spec, table: str) -> bool:
     import inspect
 
     src = inspect.getsource(spec.fn)
@@ -885,10 +826,36 @@ def reads_table(name, spec, table: str) -> bool:
     )
 
 
+def selected(reg: dict, name: str) -> list[str]:
+    """The oracle-bearing queries in axis ``name``: those reading any
+    table the axis rewrites."""
+    rewritten = AXES[name][1]
+
+    def in_axis(spec) -> bool:
+        if name == "empty":
+            # Every oracle-bearing query: two lakehouse queries read no
+            # table, and an empty corpus is still their limit shape.
+            return True
+        if name == "epoch_straddle" and "streaming" in spec.tags:
+            # Watermarked streaming is structurally post-epoch in Spark:
+            # the engine initializes the global watermark to epoch 0 ms
+            # (not -inf) and only advances it, so EVERY pre-1970
+            # event-time row is below the initial watermark and dropped
+            # as late in batch 0 — an engine-level domain boundary, not an
+            # operator bug (verified behaviorally: the straddle corpus
+            # halves every streaming count while the batch twins keep
+            # both halves). Batch operators have no such floor and must
+            # be epoch-sign-correct — they stay in scope.
+            return False
+        return any(reads_table(spec, t) for t in rewritten)
+
+    return sorted(n for n, s in reg.items() if s.has_oracle() and in_axis(s))
+
+
 def main() -> int:
-    which = "all"
-    if "--table" in sys.argv:
-        which = sys.argv[sys.argv.index("--table") + 1]
+    ap = argparse.ArgumentParser()
+    ap.add_argument("--table", choices=[*AXES, "all"], default="all")
+    which = ap.parse_args().table
 
     from biglake_iceberg_python_spark.plans.check import report, run_checks
     from biglake_iceberg_python_spark.plans.registry import load_all
@@ -910,33 +877,14 @@ def main() -> int:
     reg = load_all()
     fails = 0
     total = 0
-    for table, craft in [
-        ("documents", craft_documents),
-        ("embeddings", craft_embeddings),
-        ("events", craft_events),
-        ("magnitude", craft_magnitude),
-        ("singular", craft_singular),
-        ("oneday", craft_oneday),
-        ("monodoc", craft_monodoc),
-        ("monovec", craft_monovec),
-        ("epoch_straddle", craft_epoch_straddle),
-        ("warehouse", craft_warehouse),
-        ("flatline", craft_flatline),
-        ("dims", craft_dims),
-        ("empty", craft_empty),
-        ("unicode", craft_unicode),
-        ("ties", craft_ties),
-    ]:
-        if which not in ("all", table):
+    for name, (craft, _) in AXES.items():
+        if which not in ("all", name):
             continue
-        d = f"/tmp/sf_degenerate_{table}"
+        d = f"/tmp/sf_degenerate_{name}"
         shutil.rmtree(d, ignore_errors=True)
         craft(d)
-        names = sorted(
-            n for n, s in reg.items()
-            if s.has_oracle() and reads_table(n, s, table)
-        )
-        print(f"== {table}: {len(names)} oracle-bearing readers ==", flush=True)
+        names = selected(reg, name)
+        print(f"== {name}: {len(names)} oracle-bearing readers ==", flush=True)
         results = run_checks(spark, d, names)
         report(results)
         total += len(results)

@@ -11,12 +11,18 @@ claim 2 with real Spark jobs under adversarial partitionings.
 
 from __future__ import annotations
 
+import os
+import sys
 from decimal import Decimal
 
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from pyspark.sql import functions as F
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts"))
+from degenerate_parity_sweep import _UNICODE_TEXTS  # noqa: E402
 
 
 @given(
@@ -487,3 +493,32 @@ def test_km_retention_survival_zero_terminal_row(spark, tmp_path):
     con = duckdb_connect(str(tmp_path))
     r = compare(df, con, resolve_oracle(spec, str(tmp_path)))
     assert r["ok"], r
+
+
+@pytest.mark.parametrize(
+    "text",
+    [
+        None,
+        "",
+        "   ",
+        "solo",
+        "  a  b ",
+        "tab\tseparated\nnew  line",
+        _UNICODE_TEXTS[1],  # NFD combining marks
+        _UNICODE_TEXTS[7],  # tab, no-break and thin spaces
+    ],
+)
+def test_tokenizer_twins_agree(spark, text):
+    """Spark's words() and its DuckDB twin oracle_words() split every text
+    into the same token list: NULL and blank texts into none, and only the
+    ASCII space separates."""
+    import duckdb
+
+    from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
+
+    df = spark.createDataFrame([(text,)], "text string")
+    spark_tokens = df.select(words().alias("w")).first()["w"]
+    duck_tokens = duckdb.connect().execute(
+        f"SELECT {oracle_words()} FROM (SELECT $1::VARCHAR AS text)", [text]
+    ).fetchone()[0]
+    assert spark_tokens == duck_tokens

@@ -318,14 +318,15 @@ def test_hidden_partitioning_prunes_to_projected_months(spark, sf_dir):
 
     from biglake_iceberg_python_spark.lakehouse.partitioning import (
         BucketTransform,
-        HiddenPartitionedTable,
         MonthsTransform,
+        SpecEvolvedTable,
     )
     from biglake_iceberg_python_spark.sources.tables import load_table
 
     o = load_table(spark, sf_dir, "orders")
     with tempfile.TemporaryDirectory(prefix="lh_hidpart_t_") as root:
-        t = HiddenPartitionedTable(spark, root, MonthsTransform("o_orderdate"))
+        t = SpecEvolvedTable(spark, root)
+        t.evolve(MonthsTransform("o_orderdate"))
         t.write(o)
         pruned = t.scan_range("1998-03-15", "1998-09-15")
         plan = pruned._jdf.queryExecution().executedPlan().toString()
@@ -340,9 +341,8 @@ def test_hidden_partitioning_prunes_to_projected_months(spark, sf_dir):
         ).count()
         assert n == expect and n > 0
 
-        b = HiddenPartitionedTable(
-            spark, root + "/b", BucketTransform("o_custkey", 16)
-        )
+        b = SpecEvolvedTable(spark, root + "/b")
+        b.evolve(BucketTransform("o_custkey", 16))
         b.write(o)
         one = b.scan_eq(42)
         bplan = one._jdf.queryExecution().executedPlan().toString()

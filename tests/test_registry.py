@@ -632,15 +632,9 @@ def test_global_window_inventory_oracle_side():
 
 
 # Queries that open their own scratch directory instead of stacking
-# @scratch. Each returns a LAZY frame over files in a directory it never
-# removes; @scratch would materialize that frame, one more Spark job.
-_OWN_SCRATCH_QUERIES = {
-    "source_csv_roundtrip": "lazy scan of the CSV it wrote",
-    "source_json_roundtrip": "lazy scan of the JSON it wrote",
-    "source_orc_roundtrip": "lazy scan of the ORC it wrote",
-    "source_partitioned_write_prune":
-        "tests/test_plans.py reads the PartitionFilters of its lazy scan",
-}
+# @scratch, each with its reason. A query whose frame stays lazy over files
+# it wrote takes its directory from registry.process_dir instead.
+_OWN_SCRATCH_QUERIES: dict[str, str] = {}
 
 
 def _query_bodies_opening_scratch() -> set[str]:
@@ -683,3 +677,20 @@ def test_staging_queries_use_scratch():
     gone = set(_OWN_SCRATCH_QUERIES) - found
     assert not new, f"stack @scratch instead of a hand-made temp dir: {sorted(new)}"
     assert not gone, f"stale allowlist entries, prune: {sorted(gone)}"
+
+
+def test_degenerate_axis_selects_readers_of_its_tables():
+    """A query is in a degenerate axis when it reads a table the axis
+    rewrites; the oracle text of the query defined after it does not count.
+    sql_parameterized reads only orders and lineitem."""
+    import os
+    import sys
+
+    sys.path.insert(
+        0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "scripts")
+    )
+    from degenerate_parity_sweep import selected
+
+    dims = selected(load_all(), "dims")
+    assert "tpch_q2_min_cost_supplier" in dims
+    assert "sql_parameterized" not in dims

@@ -131,6 +131,10 @@ def test_conf_scoped_queries_leave_session_conf(plain, sf_dir, name):
         "stream_windowed_dau",
         "stream_topk_trending",
         "source_python_datasource_stream",
+        "source_csv_roundtrip",
+        "source_json_roundtrip",
+        "source_orc_roundtrip",
+        "source_partitioned_write_prune",
     ],
 )
 def test_sql_queries_leave_no_temp_view(plain, sf_dir, name):
@@ -145,7 +149,10 @@ def test_sql_queries_leave_no_temp_view(plain, sf_dir, name):
             {f.name for f in plain.catalog.listFunctions() if f.isTemporary},
             {
                 path
-                for prefix in ("stream_ckpt_", "egs_ckpt_")
+                for prefix in (
+                    "stream_ckpt_", "egs_ckpt_",
+                    "src_csv_", "src_json_", "src_orc_", "src_part_",
+                )
                 for path in glob.glob(os.path.join(tempfile.gettempdir(), prefix + "*"))
             },
         )
