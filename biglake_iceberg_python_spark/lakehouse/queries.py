@@ -18,7 +18,13 @@ from biglake_iceberg_python_spark.lakehouse.catalog import (
     LakehouseCatalog,
     run_reference_pipeline,
 )
-from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
+from biglake_iceberg_python_spark.functions.exprs import (
+    cents,
+    dec,
+    dsum,
+    oracle_cents,
+    oracle_dsum,
+)
 from biglake_iceberg_python_spark.lakehouse.merge import merge_into
 from biglake_iceberg_python_spark.lakehouse.snapshots import SnapshotTable
 from biglake_iceberg_python_spark.plans.registry import query, scratch
@@ -333,9 +339,9 @@ def lakehouse_catalog_introspection(
 
 @query(
     "lakehouse_bucketed_join",
-    oracle="""
+    oracle=f"""
     SELECT o.o_orderpriority, COUNT(*) AS n_lines,
-           CAST(CAST(SUM(CAST(l.l_quantity AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_qty
+           {oracle_dsum('l.l_quantity')} AS sum_qty
     FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
     GROUP BY o.o_orderpriority
     """,
@@ -369,9 +375,7 @@ def lakehouse_bucketed_join(spark: SparkSession, sf_dir: str, root: str) -> Data
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            F.sum(F.col("l_quantity").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_qty"),
+            dsum("l_quantity", "sum_qty"),
         )
     )
 
@@ -417,7 +421,7 @@ def lakehouse_compaction(spark: SparkSession, sf_dir: str, root: str) -> DataFra
 
 @query(
     "lakehouse_schema_evolution",
-    oracle="""
+    oracle=f"""
     WITH unioned AS (
       SELECT o_orderkey, o_totalprice, NULL::VARCHAR AS o_channel
       FROM orders WHERE o_orderstatus = 'F'
@@ -428,7 +432,7 @@ def lakehouse_compaction(spark: SparkSession, sf_dir: str, root: str) -> DataFra
     SELECT
       COALESCE(o_channel, 'unknown') AS channel,
       COUNT(*) AS n,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+      {oracle_dsum('o_totalprice')} AS sum_price
     FROM unioned
     GROUP BY COALESCE(o_channel, 'unknown')
     """,
@@ -474,20 +478,18 @@ def lakehouse_schema_evolution(
         .groupBy(F.coalesce(F.col("o_channel"), F.lit("unknown")).alias("channel"))
         .agg(
             F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            dsum("o_totalprice", "sum_price"),
         )
     )
 
 
 @query(
     "lakehouse_incremental_read",
-    oracle="""
+    oracle=f"""
     SELECT
       o_orderstatus,
       CAST(COUNT(*) AS BIGINT) AS n,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+      {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders
     WHERE o_orderstatus IN ('O', 'P')
     GROUP BY o_orderstatus
@@ -515,9 +517,7 @@ def lakehouse_incremental_read(
     delta = t.read_incremental(v1, v3)
     return delta.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-        .cast("double")
-        .alias("sum_price"),
+        dsum("o_totalprice", "sum_price"),
     )
 
 
@@ -612,11 +612,11 @@ def lakehouse_snapshot_diff(spark: SparkSession, sf_dir: str, root: str) -> Data
 
 @query(
     "lakehouse_partition_evolution",
-    oracle="""
+    oracle=f"""
     SELECT
       o_orderpriority,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+      {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1995-07-01 00:00:00'
       AND o_orderdate <  TIMESTAMP '1996-07-01 00:00:00'
@@ -660,20 +660,18 @@ def lakehouse_partition_evolution(
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            dsum("o_totalprice", "sum_price"),
         )
     )
 
 
 @query(
     "lakehouse_hidden_partitioning",
-    oracle="""
+    oracle=f"""
     SELECT
       o_orderpriority,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+      {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1998-03-15 00:00:00'
       AND o_orderdate <  TIMESTAMP '1998-09-15 00:00:00'
@@ -712,20 +710,18 @@ def lakehouse_hidden_partitioning(
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            dsum("o_totalprice", "sum_price"),
         )
     )
 
 
 @query(
     "lakehouse_manifest_pruning",
-    oracle="""
+    oracle=f"""
     SELECT
       o_orderstatus,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+      {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders
     WHERE o_orderdate >= TIMESTAMP '1997-03-01 00:00:00'
       AND o_orderdate <  TIMESTAMP '1997-09-01 00:00:00'
@@ -762,22 +758,20 @@ def lakehouse_manifest_pruning(
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            dsum("o_totalprice", "sum_price"),
         )
     )
 
 
 @query(
     "lakehouse_expire_snapshots",
-    oracle="""
+    oracle=f"""
     SELECT
       CAST(3 AS BIGINT) AS expired,
       CAST(3 AS BIGINT) AS dirs_removed,
       CAST(1 AS BIGINT) AS n_snapshots,
       CAST(COUNT(*) AS BIGINT) AS n_rows,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+      {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders WHERE o_orderstatus = 'F'
     """,
     tags=("lakehouse", "snapshots", "maintenance", "expire"),
@@ -807,9 +801,7 @@ def lakehouse_expire_snapshots(
     acct = t.expire_snapshots(keep_last=1)
     state = t.read().agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-        .cast("double")
-        .alias("sum_price"),
+        dsum("o_totalprice", "sum_price"),
     )
     return state.select(
         F.lit(acct["expired"]).cast("bigint").alias("expired"),
@@ -1467,11 +1459,11 @@ def lakehouse_write_audit_publish(
 
 @query(
     "lakehouse_incremental_matview",
-    oracle="""
+    oracle=f"""
     SELECT
       CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+      {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders
     GROUP BY 1
     """,
@@ -1503,7 +1495,7 @@ def lakehouse_incremental_matview(
     def rollup(df: DataFrame) -> DataFrame:
         return df.groupBy(month.alias("month")).agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)")).alias("sum_price"),
+            F.sum(dec("o_totalprice")).alias("sum_price"),
         )
 
     # Dateless orders (NULL o_orderdate, a real ingest shape) must not
@@ -1544,23 +1536,16 @@ def lakehouse_incremental_matview(
                 # NULL/absent — coalescing NULL to 0 unconditionally
                 # would surface an all-NULL month as 0.0 while the
                 # oracle's SUM(decimal) is NULL.
-                F.when(
-                    cur["sum_price"].isNull()
-                    & delta["sum_price_d"].isNull(),
-                    F.lit(None).cast("decimal(30,6)"),
-                )
-                .otherwise(
-                    F.coalesce(
-                        cur["sum_price"],
-                        F.lit(0).cast("decimal(30,6)"),
+                dec(
+                    F.when(
+                        cur["sum_price"].isNull()
+                        & delta["sum_price_d"].isNull(),
+                        dec(F.lit(None)),
+                    ).otherwise(
+                        F.coalesce(cur["sum_price"], dec(F.lit(0)))
+                        + F.coalesce(delta["sum_price_d"], dec(F.lit(0)))
                     )
-                    + F.coalesce(
-                        delta["sum_price_d"],
-                        F.lit(0).cast("decimal(30,6)"),
-                    )
-                )
-                .cast("decimal(30,6)")
-                .alias("sum_price"),
+                ).alias("sum_price"),
             )
         )
         mv.write(merged, mode="overwrite")
@@ -1895,12 +1880,11 @@ def lakehouse_metadata_count(spark: SparkSession, sf_dir: str, root: str) -> Dat
 
 @query(
     "lakehouse_incremental_matview_join",
-    oracle="""
+    oracle=f"""
     SELECT
       c.c_mktsegment,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
-      CAST(SUM(CAST(round(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100)
-               AS BIGINT)) AS BIGINT) AS total_cents
+      CAST(SUM({oracle_cents('o.o_totalprice')}) AS BIGINT) AS total_cents
     FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     GROUP BY c.c_mktsegment
     """,
@@ -1931,9 +1915,6 @@ def lakehouse_incremental_matview_join(
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    cents = F.round(F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
-        "long"
-    )
 
     def agg_join(orders_df: DataFrame, cust_df: DataFrame) -> DataFrame:
         return (
@@ -1941,7 +1922,7 @@ def lakehouse_incremental_matview_join(
             .groupBy("c_mktsegment")
             .agg(
                 F.count(F.lit(1)).alias("n_orders"),
-                F.sum(cents).alias("total_cents"),
+                F.sum(cents("o_totalprice")).alias("total_cents"),
             )
         )
 
@@ -2243,8 +2224,7 @@ _SECOND_ENGINE_ROOT = "/tmp/spark_graft_second_engine_read"
       CAST(COUNT(*) AS BIGINT) AS n_customers,
       CAST(COUNT(*) AS BIGINT) AS n_customers_src,
       CAST(COUNT(*) FILTER (WHERE c_custkey % 2 = 0) AS BIGINT) AS n_commit1,
-      CAST(SUM(CAST(round(CAST(c_acctbal AS DECIMAL(18,2)) * 100)
-               AS BIGINT)) AS BIGINT) AS acctbal_cents,
+      CAST(SUM({oracle_cents('c_acctbal')}) AS BIGINT) AS acctbal_cents,
       CAST(MIN(c_custkey) AS BIGINT) AS min_custkey,
       CAST(MAX(c_custkey) AS BIGINT) AS max_custkey
     FROM t GROUP BY c_mktsegment
@@ -2288,18 +2268,17 @@ def lakehouse_second_engine_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = SnapshotTable(spark, _SECOND_ENGINE_ROOT)
     # coalesced split key: a NULL custkey satisfies NEITHER plain %2
     # predicate and would be committed to NO append — the commit must be
-    # lossless for every ingested row (round-12 dims axis).
+    # lossless for every ingested row.
     half = F.coalesce(F.pmod(F.col("c_custkey"), 2), F.lit(0))
     t.write(src.filter(half == 0), mode="append")
     t.write(src.filter(half == 1), mode="append")
-    cents = F.round(F.col("c_acctbal").cast("decimal(18,2)") * 100).cast("long")
     back = (
         t.read()
         .groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).alias("n_customers"),
             F.count(F.when(F.col("c_custkey") % 2 == 0, 1)).alias("n_commit1"),
-            F.sum(cents).cast("long").alias("acctbal_cents"),
+            F.sum(cents("c_acctbal")).cast("long").alias("acctbal_cents"),
             F.min("c_custkey").cast("long").alias("min_custkey"),
             F.max("c_custkey").cast("long").alias("max_custkey"),
         )
@@ -2308,7 +2287,7 @@ def lakehouse_second_engine_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_customers_src")
     )
     # NULL-SAFE segment join: a plain equi-join would drop the NULL
-    # mktsegment group that both engines' GROUP BYs keep (round-12).
+    # mktsegment group that both engines' GROUP BYs keep.
     return back.join(
         src_n, back["c_mktsegment"].eqNullSafe(src_n["seg_src"])
     ).select(

@@ -17,11 +17,16 @@ from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import (
     EVENT_VALUE_CAP,
+    cents,
     davg,
+    dec,
     dsum,
+    oracle_cents,
     oracle_davg,
     oracle_dsum,
+    oracle_epoch_s,
     oracle_events,
+    spark_epoch_s,
 )
 from biglake_iceberg_python_spark.functions.twophase import two_phase_rank
 from biglake_iceberg_python_spark.plans.registry import query
@@ -178,7 +183,7 @@ def agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP subtotal lattice: (flag,status), (flag), () — Expand operator
     replicates each input row once per grouping set before one shuffle.
 
-    Empty-input policy (round-10 empty-table parity axis): Spark emits 0
+    Empty-input policy: Spark emits 0
     rows for ROLLUP over empty input while DuckDB keeps the SQL-standard
     grand-total row at count 0 — both engines filter it (`HAVING
     COUNT(*) > 0`, a no-op on non-empty input where every materialized
@@ -264,12 +269,12 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_variance",
-    oracle="""
+    oracle=f"""
     SELECT
       l_returnflag,
-      (CAST(CAST(SUM(CAST(l_quantity * l_quantity AS DECIMAL(30,6))) AS STRING) AS DOUBLE)
-       - CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS STRING) AS DOUBLE)
-         * CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS STRING) AS DOUBLE) / COUNT(*))
+      ({oracle_dsum('l_quantity * l_quantity')}
+       - {oracle_dsum('l_quantity')}
+         * {oracle_dsum('l_quantity')} / COUNT(*))
       / (COUNT(*) - 1) AS var_qty
     FROM lineitem
     GROUP BY l_returnflag
@@ -284,10 +289,8 @@ def agg_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # Exact decimal sums → cast to double → IEEE arithmetic, so both engines
     # perform the identical final operations on identical operands.
-    sq = F.sum(
-        (F.col("l_quantity") * F.col("l_quantity")).cast("decimal(30,6)")
-    ).cast("double")
-    s = F.sum(F.col("l_quantity").cast("decimal(30,6)")).cast("double")
+    sq = dsum(F.col("l_quantity") * F.col("l_quantity"))
+    s = dsum("l_quantity")
     n = F.count(F.lit(1))
     var = (sq - s * s / n) / (n - 1)
     return li.groupBy("l_returnflag").agg(var.alias("var_qty"))
@@ -333,14 +336,12 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SUBQ_SCALAR_SQL = """
+_SUBQ_SCALAR_SQL = f"""
     SELECT o_orderkey, o_totalprice
-    FROM {orders}
-    WHERE CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)
-            * (SELECT COUNT(*) FROM {orders}) * 10
-          > 18 * (SELECT SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
-                                  AS BIGINT))
-                  FROM {orders})
+    FROM {{orders}}
+    WHERE {oracle_cents('o_totalprice')}
+            * (SELECT COUNT(*) FROM {{orders}}) * 10
+          > 18 * (SELECT SUM({oracle_cents('o_totalprice')}) FROM {{orders}})
 """
 
 
@@ -500,9 +501,9 @@ def agg_time_rollup_hypertable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the NTZ timestamp (timezone-proof, equals DuckDB's epoch-aligned
     time_bucket for divisors of 60).
     """
-    # Non-finite measures reduce to NULL on both engines (round-10
-    # NaN/Inf probe): under ANSI the decimal sum would otherwise abort on
-    # the first NaN, and DuckDB's DECIMAL cast raises unconditionally.
+    # Non-finite measures reduce to NULL on both engines: under ANSI the
+    # decimal sum would otherwise abort on the first NaN, and DuckDB's DECIMAL
+    # cast raises unconditionally.
     e = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -665,11 +666,10 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_sessionize_events",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id,
-             CAST(date_diff('second', TIMESTAMP '1970-01-01',
-                            date_trunc('second', ts)) AS BIGINT) AS es
+             {oracle_epoch_s()} AS es
       FROM events WHERE ts IS NOT NULL
     ), flagged AS (
       SELECT user_id, event_id, es,
@@ -710,7 +710,7 @@ def agg_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     sub-second precision (SURVEY.md §1.3; cross-engine cookbook).
     """
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
-    # Dead-letter NULL event-times (round-10 events parity sweep): a NULL
+    # Dead-letter NULL event-times: a NULL
     # es is unordered — Spark sorts NULLS FIRST, DuckDB NULLS LAST, so
     # session boundaries diverge; both engines drop timestamp-less rows.
     e = load_table(spark, sf_dir, "events").filter(
@@ -718,10 +718,7 @@ def agg_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "user_id",
         "event_id",
-        F.expr(
-            "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
-            " date_trunc('second', ts))"
-        ).cast("long").alias("es"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
     )
     flagged = e.withColumn(
         "new_s",
@@ -757,7 +754,7 @@ def agg_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT c_mktsegment, c_nationkey, cnt,
              -- NULLS LAST: a known nation must win the tie over the
              -- NULL "unknown" group (Spark asc defaults NULLS FIRST,
-             -- DuckDB NULLS LAST - round-12 dims axis)
+             -- DuckDB NULLS LAST)
              ROW_NUMBER() OVER (PARTITION BY c_mktsegment
                                 ORDER BY cnt DESC, c_nationkey NULLS LAST)
                AS rk
@@ -882,9 +879,9 @@ def agg_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps-and-islands formulation at 100 TB (it needs a full per-user
     ordered window before it can even flag session starts).
 
-    NULL event-times are dead-lettered on both engines (round-10 events
-    parity sweep): Spark's session_window silently drops them while the
-    oracle's gaps-and-islands window sorted them into a phantom session.
+    NULL event-times are dead-lettered on both engines: Spark's session_window
+    silently drops them while the oracle's gaps-and-islands window sorted them
+    into a phantom session.
     """
     # Imported here: a module-level import would register eventflow's
     # queries ahead of this module's and reorder the registry.
@@ -895,7 +892,7 @@ def agg_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+            F.sum(dec("value")).alias("sum_dec"),
         )
         .select(
             "user_id",
@@ -923,7 +920,7 @@ def agg_session_window_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM lineitem
       -- a row with no price cannot be ordered and a row with no weight
       -- cannot count; NULL keys would also trip two_phase_rank's loud
-      -- NULL-ordering-key guard (round-12 warehouse axis)
+      -- NULL-ordering-key guard
       WHERE l_extendedprice IS NOT NULL AND l_quantity IS NOT NULL
         AND l_orderkey IS NOT NULL AND l_returnflag IS NOT NULL
     )
@@ -958,7 +955,7 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     Group totals are a separate map-side-combined rollup broadcast back.
     """
     li = load_table(spark, sf_dir, "lineitem").filter(
-        # mirrors the oracle WHERE — see the oracle comment (round-12 axis)
+        # mirrors the oracle WHERE — see the oracle comment
         F.col("l_extendedprice").isNotNull()
         & F.col("l_quantity").isNotNull()
         & F.col("l_orderkey").isNotNull()
@@ -967,14 +964,10 @@ def agg_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         & F.col("l_returnflag").isNotNull()
     )
     wt = F.col("l_quantity").cast("long")
-    cents = (
-        F.round(F.col("l_extendedprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-    )
     base = li.select(
         "l_returnflag",
         F.col("l_extendedprice").alias("price"),
-        cents.alias("price_c"),
+        cents("l_extendedprice").alias("price_c"),
         wt.alias("wt"),
         (F.col("l_orderkey") * 8 + F.col("l_linenumber")).alias("tie"),
     )
@@ -1033,23 +1026,20 @@ def agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_try_arithmetic",
-    oracle="""
+    oracle=f"""
     SELECT
       l_returnflag,
       -- every row whose try_divide is NULL: zero divisor OR a NULL in
-      -- either operand (round-12 warehouse axis — the zero-only filter
-      -- undercounted once NULL prices/discounts exist)
+      -- either operand (a zero-only filter undercounts NULL
+      -- prices/discounts)
       CAST(COUNT(*) FILTER (
         WHERE l_discount = 0 OR l_discount IS NULL
            OR l_extendedprice IS NULL
       ) AS BIGINT) AS n_null_ratio,
       CAST(SUM(CASE WHEN l_discount <> 0
-               THEN (200 * CAST(round(CAST(l_extendedprice AS DECIMAL(18,2))
-                                      * 100) AS BIGINT)
-                     + CAST(round(CAST(l_discount AS DECIMAL(18,2)) * 100)
-                            AS BIGINT))
-                    // (2 * CAST(round(CAST(l_discount AS DECIMAL(18,2))
-                                       * 100) AS BIGINT)) END)
+               THEN (200 * {oracle_cents('l_extendedprice')}
+                     + {oracle_cents('l_discount')})
+                    // (2 * {oracle_cents('l_discount')}) END)
            AS BIGINT) AS sum_ratio_hundredths,
       CAST(COUNT(*) AS BIGINT) AS n_rows
     FROM lineitem
@@ -1067,15 +1057,15 @@ def scalar_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows a non-try division would have killed) and sums the survivors.
 
     The NULL count pins try_divide's permissive semantics (the operator
-    under test). The survivor sum is exact by construction (round-9
-    rewrite): price/discount is the RATIONAL cents_p/cents_d, and its
+    under test). The survivor sum is exact by construction:
+    price/discount is the RATIONAL cents_p/cents_d, and its
     2dp half-up rounding is the pure integer ``(200·a + b) // (2·b)``
     (hundredth units) — no decimal round exists at all. The previous form
     rounded a DECIMAL(30,8) quotient to 2dp: quotients of 2-decimal
     prices by 2-decimal discounts terminate exactly on a halfway boundary
     on 3,071 rows at sf0.01 (0.01/0.08 = 0.125 and friends) — the same
-    tie-dense hazard class that flipped round-8's ``sql_temp_function``
-    driver hash. Integer division has no tie for an engine to break, and
+    tie-dense hazard class that flipped ``sql_temp_function``'s driver
+    hash. Integer division has no tie for an engine to break, and
     the int64 sum is order-independent under any partitioning
     (per-row ≤ 1e9 hundredths; 6e8 rows at sf100 stays below 2^63).
     """
@@ -1084,12 +1074,9 @@ def scalar_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     hundredths = F.when(
         F.col("l_discount") != 0,
         F.expr(
-            "(200 * CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)"
-            "       AS BIGINT)"
-            " + CAST(round(CAST(l_discount AS DECIMAL(18,2)) * 100)"
-            "        AS BIGINT))"
-            " div (2 * CAST(round(CAST(l_discount AS DECIMAL(18,2)) * 100)"
-            "          AS BIGINT))"
+            f"(200 * {oracle_cents('l_extendedprice')}"
+            f" + {oracle_cents('l_discount')})"
+            f" div (2 * {oracle_cents('l_discount')})"
         ),
     )
     return li.groupBy("l_returnflag").agg(
@@ -1101,19 +1088,19 @@ def scalar_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_corr_covar",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT
         l_returnflag,
         CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-        SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS sx,
-        SUM(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS sy,
-        SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS sxx,
-        SUM(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS syy,
-        SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS sxy
+        SUM({oracle_cents('l_quantity', 'DECIMAL(38,0)')}) AS sx,
+        SUM({oracle_cents('l_extendedprice', 'DECIMAL(38,0)')}) AS sy,
+        SUM({oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_quantity', 'DECIMAL(38,0)')}) AS sxx,
+        SUM({oracle_cents('l_extendedprice', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_extendedprice', 'DECIMAL(38,0)')}) AS syy,
+        SUM({oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_extendedprice', 'DECIMAL(38,0)')}) AS sxy
       FROM lineitem
       GROUP BY l_returnflag
     )
@@ -1121,7 +1108,7 @@ def scalar_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- INT128->double cast mis-rounds ~1.3% of >2^53 values (sxx/syy/sxy
     -- exceed 2^53 at sf0.1) and the behavior is engine-BUILD-dependent —
     -- the strtod parse is correctly rounded on every build, matching
-    -- Spark's BigDecimal path bit-for-bit (round-11 magnitude hazard).
+    -- Spark's BigDecimal path bit-for-bit.
     SELECT
       l_returnflag,
       CAST(n AS BIGINT) AS n_rows,
@@ -1152,10 +1139,8 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same single-pass moment-sketch shape as `agg_variance`.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    x = F.round(F.col("l_quantity").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
-    y = F.round(F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast(
-        "decimal(38,0)"
-    )
+    x = cents("l_quantity", "decimal(38,0)")
+    y = cents("l_extendedprice", "decimal(38,0)")
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum(x).alias("sx"),
@@ -1174,7 +1159,7 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
         # try_divide: a zero-variance measure (all-constant qty or price)
         # makes √(denx·deny) exactly 0 — Spark 4 ANSI raises
         # DIVIDE_BY_ZERO on DOUBLE/0 where DuckDB and ANSI-off Spark
-        # return NULL (round-13 flatline axis).
+        # return NULL.
         F.try_divide(
             nd * sxyd - sxd * syd,
             F.sqrt((nd * sxxd - sxd * sxd) * (nd * syyd - syd * syd)),
@@ -1187,28 +1172,28 @@ def agg_corr_covar(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "agg_skew_kurtosis",
-    oracle="""
+    oracle=f"""
     WITH m AS (
       SELECT
         l_returnflag,
         CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-        SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS s1,
-        SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS s2,
-        SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS s3,
-        SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))
-          * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS DECIMAL(38,0))) AS s4
+        SUM({oracle_cents('l_quantity', 'DECIMAL(38,0)')}) AS s1,
+        SUM({oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_quantity', 'DECIMAL(38,0)')}) AS s2,
+        SUM({oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_quantity', 'DECIMAL(38,0)')}) AS s3,
+        SUM({oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_quantity', 'DECIMAL(38,0)')}
+          * {oracle_cents('l_quantity', 'DECIMAL(38,0)')}) AS s4
       FROM lineitem
       GROUP BY l_returnflag
     )
     -- s2/s3/s4 (power sums of cents) exceed 2^53 (s3 ~2.5e16 and s4
     -- ~1.25e20 at sf0.1): VARCHAR-routed conversion is correctly
     -- rounded on any DuckDB build (native INT128->double is not),
-    -- matching Spark's BigDecimal path (round-11 magnitude hazard).
+    -- matching Spark's BigDecimal path.
     SELECT
       l_returnflag,
       CAST(n AS BIGINT) AS n_rows,
@@ -1263,7 +1248,7 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merge tree is unchanged.)
     """
     li = load_table(spark, sf_dir, "lineitem")
-    x = F.round(F.col("l_quantity").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
+    x = cents("l_quantity", "decimal(38,0)")
     m = li.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum(x).alias("s1"),
@@ -1279,10 +1264,10 @@ def agg_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     var = m2 - m1 * m1
     # var^1.5 as var * sqrt(var): IEEE multiply is exact and sqrt is
     # correctly rounded, whereas pow(x, 1.5) is libm-dependent (JVM vs
-    # DuckDB last-ulp drift — same class as round 4's scalar_math red).
+    # DuckDB last-ulp drift, see scalar_math).
     # try_divide: zero-variance input makes var^1.5 / var² exactly 0 —
     # Spark 4 ANSI raises DIVIDE_BY_ZERO on DOUBLE/0 where DuckDB and
-    # ANSI-off Spark return NULL (round-13 flatline axis).
+    # ANSI-off Spark return NULL.
     skew = F.try_divide(
         m3 - F.lit(3.0) * m1 * m2 + F.lit(2.0) * m1 * m1 * m1,
         var * F.sqrt(var),
@@ -1367,8 +1352,8 @@ _BENFORD_P = {
     "agg_benford_digit_test",
     oracle=f"""
     WITH d AS (
-      SELECT CAST(substr(CAST(CAST(round(CAST(o_totalprice AS DECIMAL(18,2)) * 100)
-                               AS BIGINT) AS VARCHAR), 1, 1) AS INT) AS digit
+      SELECT CAST(substr(CAST({oracle_cents('o_totalprice')} AS VARCHAR), 1, 1)
+                  AS INT) AS digit
       FROM orders WHERE o_totalprice > 0
     ), obs AS (
       SELECT digit, COUNT(*) AS n_obs FROM d GROUP BY digit
@@ -1404,9 +1389,7 @@ def agg_benford_digit_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     digit = F.substring(
-        F.round(F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .cast("string"),
+        cents("o_totalprice").cast("string"),
         1,
         1,
     ).cast("int")

@@ -25,7 +25,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.twophase import two_phase_rank
-from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
+from biglake_iceberg_python_spark.functions.exprs import (
+    cents,
+    dec,
+    dsum,
+    oracle_cents,
+    oracle_dec,
+    oracle_dsum,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -84,7 +91,7 @@ _ORACLE_RFM = f"""
       CAST(f AS INTEGER) AS f_score,
       CAST(m AS INTEGER) AS m_score,
       CAST(COUNT(*) AS BIGINT) AS n_customers,
-      CAST(CAST(SUM(CAST(monetary AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS segment_value
+      {oracle_dsum('monetary')} AS segment_value
     FROM scored GROUP BY r, f, m
 """
 
@@ -149,11 +156,11 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT
         l_suppkey, revenue,
         ROW_NUMBER() OVER (ORDER BY revenue DESC, l_suppkey) AS rk,
-        CAST(CAST(SUM(CAST(revenue AS DECIMAL(30,6))) OVER (
+        CAST(CAST(SUM({oracle_dec('revenue')}) OVER (
           ORDER BY revenue DESC, l_suppkey
           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS STRING) AS DOUBLE)
           AS cum_revenue,
-        CAST(CAST(SUM(CAST(revenue AS DECIMAL(30,6))) OVER () AS STRING) AS DOUBLE)
+        CAST(CAST(SUM({oracle_dec('revenue')}) OVER () AS STRING) AS DOUBLE)
           AS total_revenue
       FROM rev
     )
@@ -189,11 +196,11 @@ def supplier_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     rev = li.groupBy("l_suppkey").agg(
         dsum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "revenue")
     )
-    dec = F.col("revenue").cast("decimal(30,6)")
+    rd = dec("revenue")
     # revenue DESC, suppkey ASC == ascending on the negated micro-unit key
-    key = -((dec * 1000000).cast("long"))
-    ranked = two_phase_rank(rev, key, "l_suppkey", cums={"revenue": dec})
-    tot = rev.agg(F.sum(dec).alias("__tot"))
+    key = -((rd * 1000000).cast("long"))
+    ranked = two_phase_rank(rev, key, "l_suppkey", cums={"revenue": rd})
+    tot = rev.agg(F.sum(rd).alias("__tot"))
     ranked = ranked.crossJoin(F.broadcast(tot)).select(
         "l_suppkey",
         F.col("rk").cast("long").alias("rk"),
@@ -267,8 +274,7 @@ def basket_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)
     )
     # count_distinct skips a NULL order key like the oracle's
-    # COUNT(DISTINCT); distinct()+COUNT(*) counted the NULL row
-    # (round-12 warehouse axis).
+    # COUNT(DISTINCT); distinct()+COUNT(*) counted the NULL row.
     n = op.agg(F.count_distinct("l_orderkey").alias("n_orders"))
     pk = (
         op.groupBy("l_partkey")
@@ -308,13 +314,12 @@ def basket_copurchase_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_gini_spend",
-    oracle="""
+    oracle=f"""
     WITH spend AS (
       SELECT
         c.c_nationkey,
         o.o_custkey,
-        SUM(CAST(round(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT))
-          AS cents
+        SUM({oracle_cents('o.o_totalprice')}) AS cents
       FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
       GROUP BY c.c_nationkey, o.o_custkey
     ), ranked AS (
@@ -360,9 +365,8 @@ def customer_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     n = load_table(spark, sf_dir, "nation")
-    cents = F.round(F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
     spend = (
-        o.select("o_custkey", cents.alias("cents"))
+        o.select("o_custkey", cents("o_totalprice").alias("cents"))
         .groupBy("o_custkey")
         .agg(F.sum("cents").alias("cents"))
         .join(c.select("c_custkey", "c_nationkey"),
@@ -388,11 +392,10 @@ def customer_gini_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "supplier_concentration_hhi",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT l_suppkey,
-             SUM(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
-                 AS BIGINT)) AS cents
+             SUM({oracle_cents('l_extendedprice')}) AS cents
       FROM lineitem GROUP BY l_suppkey
     ), tot AS (SELECT SUM(cents) AS t, COUNT(*) AS n FROM s)
     SELECT
@@ -423,11 +426,10 @@ def supplier_concentration_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduction here. One supplier-key shuffle, map-side combined.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    cents = F.round(F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast(
-        "long"
-    )
-    s = li.select("l_suppkey", cents.alias("cents")).groupBy("l_suppkey").agg(
-        F.sum("cents").alias("cents")
+    s = (
+        li.select("l_suppkey", cents("l_extendedprice").alias("cents"))
+        .groupBy("l_suppkey")
+        .agg(F.sum("cents").alias("cents"))
     )
     tot = s.agg(F.sum("cents").alias("t"), F.count(F.lit(1)).alias("n"))
     share = F.col("cents").cast("double") / F.col("t")
@@ -511,17 +513,14 @@ def orders_mix_shift_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "part_abc_xyz_classification",
-    oracle="""
+    oracle=f"""
     WITH pr AS (
       SELECT l_partkey,
-             SUM(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
-                 AS BIGINT)) AS rev,
+             SUM({oracle_cents('l_extendedprice')}) AS rev,
              CAST(COUNT(*) AS DECIMAL(38,0)) AS n,
-             CAST(SUM(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100)
-                 AS BIGINT)) AS DECIMAL(38,0)) AS sq,
-             SUM(CAST(CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100)
-                 AS BIGINT) AS DECIMAL(38,0))
-               * CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS BIGINT))
+             CAST(SUM({oracle_cents('l_quantity')}) AS DECIMAL(38,0)) AS sq,
+             SUM(CAST({oracle_cents('l_quantity')} AS DECIMAL(38,0))
+               * {oracle_cents('l_quantity')})
                AS sqq
       FROM lineitem GROUP BY l_partkey
     ), ranked AS (
@@ -566,10 +565,8 @@ def part_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket table crosses an ordered window.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    rev_c = F.round(F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast(
-        "long"
-    )
-    qty_c = F.round(F.col("l_quantity").cast("decimal(18,2)") * 100).cast("long")
+    rev_c = cents("l_extendedprice")
+    qty_c = cents("l_quantity")
     pr = li.groupBy("l_partkey").agg(
         F.sum(rev_c).alias("rev"),
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
@@ -604,12 +601,11 @@ def part_abc_xyz_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "orders_aging_buckets",
-    oracle="""
+    oracle=f"""
     WITH mx AS (SELECT MAX(o_orderdate) AS dmax FROM orders),
     aged AS (
       SELECT o.o_orderstatus,
-             CAST(round(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents,
+             {oracle_cents('o.o_totalprice')} AS cents,
              date_diff('day', CAST(o.o_orderdate AS DATE), CAST(mx.dmax AS DATE))
                AS age_days
       FROM orders o CROSS JOIN mx
@@ -647,9 +643,7 @@ def orders_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     aged = o.crossJoin(F.broadcast(mx)).select(
         "o_orderstatus",
-        F.round(F.col("o_totalprice").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("o_totalprice").alias("cents"),
         F.datediff(
             F.col("dmax").cast("date"), F.col("o_orderdate").cast("date")
         ).alias("age_days"),
@@ -667,11 +661,10 @@ def orders_aging_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "customer_theil_index",
-    oracle="""
+    oracle=f"""
     WITH s AS (
       SELECT o_custkey,
-             SUM(CAST(round(CAST(o_totalprice AS DECIMAL(18,2)) * 100)
-                 AS BIGINT)) AS cents
+             SUM({oracle_cents('o_totalprice')}) AS cents
       FROM orders GROUP BY o_custkey
     ), tot AS (SELECT SUM(cents) AS t, COUNT(*) AS n FROM s)
     SELECT
@@ -699,15 +692,14 @@ def customer_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical shape to the HHI query it complements.
     """
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice").cast("decimal(18,2)") * 100).cast(
-        "long"
-    )
-    s = o.select("o_custkey", cents.alias("cents")).groupBy("o_custkey").agg(
-        F.sum("cents").alias("cents")
+    s = (
+        o.select("o_custkey", cents("o_totalprice").alias("cents"))
+        .groupBy("o_custkey")
+        .agg(F.sum("cents").alias("cents"))
     )
     tot = s.agg(F.sum("cents").alias("t"), F.count(F.lit(1)).alias("n"))
     share = F.col("cents").cast("double") / F.col("t")
-    # <= 0, not == 0 (round-12 warehouse axis): a refund-heavy customer
+    # <= 0, not == 0: a refund-heavy customer
     # can have NEGATIVE net cents, and ln(negative) RAISES in DuckDB while
     # Spark returns NULL — crash-vs-garbage. Theil is defined on positive
     # incomes; nonpositive spenders contribute a zero term on both engines.

@@ -29,21 +29,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import EVENT_VALUE_CAP, oracle_events
+from biglake_iceberg_python_spark.functions.exprs import (
+    EVENT_VALUE_CAP,
+    cents,
+    oracle_cents,
+    oracle_epoch_s,
+    oracle_events,
+    spark_epoch_s,
+)
 from biglake_iceberg_python_spark.functions.twophase import two_phase_rank
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
-
-# Epoch seconds from a second-truncated NTZ timestamp — the TZ-independent
-# integer both engines agree on (see agg_sessionize_events).
-_ES = (
-    "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
-    " date_trunc('second', ts))"
-)
-_ORACLE_ES = (
-    "CAST(date_diff('second', TIMESTAMP '1970-01-01',"
-    " date_trunc('second', ts)) AS BIGINT)"
-)
 
 _WEEK_S = 7 * 86400
 _DAY_S = 86400
@@ -55,8 +51,8 @@ def _timed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketed, ordered, or watermarked; worse, it makes results
     ENGINE-DIVERGENT (Spark windows order NULLS FIRST, DuckDB NULLS
     LAST; epoch arithmetic yields NULL keys that each engine routes
-    differently) and SESSION-DEPENDENT on the Spark side. Round-10
-    events parity sweep: dead-letter them at load, exactly as the
+    differently) and SESSION-DEPENDENT on the Spark side. So they are
+    dead-lettered at load, exactly as the
     streaming surface drops them at ingestion — every oracle in this
     module carries the matching `WHERE ts IS NOT NULL` wrap."""
     return (
@@ -85,7 +81,7 @@ def _events_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _timed_events(spark, sf_dir).select(
         "user_id",
         "event_type",
-        F.expr(_ES).cast("long").alias("es"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
     )
 
 
@@ -93,7 +89,7 @@ def _events_es(spark: SparkSession, sf_dir: str) -> DataFrame:
     "funnel_conversion",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_type, {_ORACLE_ES} AS es FROM {oracle_events()} events
+      SELECT user_id, event_type, {oracle_epoch_s()} AS es FROM {oracle_events()} events
     ), s1 AS (
       SELECT user_id, MIN(es) AS t1 FROM e
       WHERE event_type = 'view' GROUP BY user_id
@@ -182,7 +178,8 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cohort_retention",
     oracle=f"""
     WITH e AS (
-      SELECT DISTINCT user_id, ({_ORACLE_ES}) // {_WEEK_S} AS w FROM {oracle_events()} events
+      SELECT DISTINCT user_id, ({oracle_epoch_s()}) // {_WEEK_S} AS w
+      FROM {oracle_events()} events
     ), cohort AS (
       SELECT user_id, MIN(w) AS cw FROM e GROUP BY user_id
     )
@@ -225,7 +222,8 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_gap_fill_locf",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
+      SELECT user_id, ({oracle_epoch_s()}) // {_DAY_S} AS day
+      FROM {oracle_events()} events
     ), daily AS (
       SELECT user_id, day, COUNT(*) AS n_ev FROM e GROUP BY user_id, day
     ), bounds AS (
@@ -294,7 +292,8 @@ def ts_gap_fill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_transition_matrix",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_id, event_type, {_ORACLE_ES} AS es FROM {oracle_events()} events
+      SELECT user_id, event_id, event_type, {oracle_epoch_s()} AS es
+      FROM {oracle_events()} events
     ), pairs AS (
       SELECT
         LAG(event_type) OVER (
@@ -332,7 +331,7 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "event_type",
-        F.expr(_ES).cast("long").alias("es"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
     )
     w = Window.partitionBy("user_id").orderBy("es", "event_id")
     pairs = e.select(
@@ -358,7 +357,8 @@ def events_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     "anomaly_zscore_daily",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
+      SELECT user_id, ({oracle_epoch_s()}) // {_DAY_S} AS day
+      FROM {oracle_events()} events
     ), daily AS (
       SELECT user_id, day, COUNT(*) AS n_ev FROM e GROUP BY user_id, day
     ), stats AS (
@@ -423,7 +423,8 @@ def anomaly_zscore_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_dau_wau_stickiness",
     oracle=f"""
     WITH ud AS (
-      SELECT DISTINCT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
+      SELECT DISTINCT user_id, ({oracle_epoch_s()}) // {_DAY_S} AS day
+      FROM {oracle_events()} events
     ), dau AS (
       SELECT day, COUNT(*) AS dau FROM ud GROUP BY day
     ), cover AS (
@@ -567,7 +568,7 @@ def agg_hll_set_algebra(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_type,
         date_diff('second', TIMESTAMP '2024-01-01 00:00:00',
                   date_trunc('second', ts)) AS x,
-        CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS y
+        {oracle_cents('value')} AS y
       FROM {oracle_events()} events
     ), s AS (
       SELECT
@@ -605,8 +606,7 @@ def events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     IEEE op on a small exact integer. The former form divided the two
     DECIMAL(38,0) sums as doubles — but at sf0.1 the sums exceed 2^53
     (num ~1.7e16, den ~2.2e20) and the DECIMAL→DOUBLE casts round
-    DIFFERENTLY per engine (found by the round-11 full-registry sf0.1
-    sweep: one-ulp slope divergence). Same class as the
+    DIFFERENTLY per engine (a one-ulp slope divergence at sf0.1). Same class as the
     sql_temp_function post-mortem: no >2^53 decimal-to-double cast at a
     hash boundary. Budget: |num|·1e9 < 1e38 holds to ~1e11 events/group
     at the domain's value/time ranges. One map-side-combined shuffle on
@@ -621,7 +621,7 @@ def events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("x"),
         # value is 2-decimal-aligned; deciding the ×100 integerization on
         # DECIMAL keeps it oracle-version-independent (see scalar_math).
-        F.round(F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("y"),
+        cents("value").alias("y"),
     )
     xd = F.col("x").cast("decimal(38,0)")
     s = pts.groupBy("event_type").agg(
@@ -648,7 +648,7 @@ def events_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_sequence_motif",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_id, {_ORACLE_ES} AS es,
+      SELECT user_id, event_id, {oracle_epoch_s()} AS es,
              CASE event_type
                WHEN 'view' THEN 'v' WHEN 'click' THEN 'c'
                WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's'
@@ -689,7 +689,7 @@ def events_sequence_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _timed_events(spark, sf_dir).select(
         "user_id",
         "event_id",
-        F.expr(_ES).cast("long").alias("es"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
         F.when(F.col("event_type") == "view", "v")
         .when(F.col("event_type") == "click", "c")
         .when(F.col("event_type") == "purchase", "p")
@@ -741,7 +741,7 @@ def agg_kll_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _timed_events(spark, sf_dir).select(
         "value",
-        (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
+        (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
     )
     daily = e.groupBy("day").agg(
         F.kll_sketch_agg_double("value").alias("sk"),
@@ -782,10 +782,10 @@ _EWMA_W = [1000000, 700000, 489999, 342999, 240099, 168069, 117648]
     WITH daily AS (
       SELECT
         user_id,
-        ({_ORACLE_ES}) // {_DAY_S} AS day,
-        SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
+        ({oracle_epoch_s()}) // {_DAY_S} AS day,
+        SUM({oracle_cents('value')}) AS v
       FROM {oracle_events()} events
-      GROUP BY user_id, ({_ORACLE_ES}) // {_DAY_S}
+      GROUP BY user_id, ({oracle_epoch_s()}) // {_DAY_S}
     ), w AS (
       SELECT * FROM (VALUES
         {", ".join(f"({k}, {wt})" for k, wt in enumerate(_EWMA_W))}
@@ -826,10 +826,8 @@ def ts_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _timed_events(spark, sf_dir).select(
         "user_id",
-        (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
+        cents("value").alias("cents"),
     )
     daily = e.groupBy("user_id", "day").agg(F.sum("cents").alias("v"))
     lags = F.array(
@@ -864,15 +862,15 @@ def ts_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
         event_type,
         COUNT(*) FILTER (WHERE user_id % 2 = 0) AS n0,
         COUNT(*) FILTER (WHERE user_id % 2 = 1) AS n1,
-        SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT))
+        SUM({oracle_cents('value')})
           FILTER (WHERE user_id % 2 = 0) AS s0,
-        SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT))
+        SUM({oracle_cents('value')})
           FILTER (WHERE user_id % 2 = 1) AS s1,
-        SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-          * CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT))
+        SUM({oracle_cents('value')}
+          * {oracle_cents('value')})
           FILTER (WHERE user_id % 2 = 0) AS q0,
-        SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-          * CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT))
+        SUM({oracle_cents('value')}
+          * {oracle_cents('value')})
           FILTER (WHERE user_id % 2 = 1) AS q1
       FROM {oracle_events()} events
       GROUP BY event_type
@@ -880,7 +878,7 @@ def ts_ewma_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     -- q0/q1 (sums of squared cents) exceed 2^53 on amplified
     -- in-contract data: VARCHAR-routed conversion is correctly rounded
     -- on any DuckDB build (native INT128->double is not), matching
-    -- Spark's path (round-11 magnitude hazard). s0/s1 stay <= ~1e11.
+    -- Spark's path. s0/s1 stay <= ~1e11.
     SELECT
       event_type,
       CAST(n0 AS BIGINT) AS n0, CAST(n1 AS BIGINT) AS n1,
@@ -922,16 +920,16 @@ def events_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cheapest possible experiment readout and it is already exact.
     """
     e = _timed_events(spark, sf_dir)
-    cents = F.round(F.col("value").cast("decimal(18,2)") * 100).cast("long")
+    c = cents("value")
     v0 = F.col("user_id") % 2 == 0
     v1 = F.col("user_id") % 2 == 1
     m = e.groupBy("event_type").agg(
         F.count(F.when(v0, 1)).alias("n0"),
         F.count(F.when(v1, 1)).alias("n1"),
-        F.sum(F.when(v0, cents)).alias("s0"),
-        F.sum(F.when(v1, cents)).alias("s1"),
-        F.sum(F.when(v0, cents * cents)).alias("q0"),
-        F.sum(F.when(v1, cents * cents)).alias("q1"),
+        F.sum(F.when(v0, c)).alias("s0"),
+        F.sum(F.when(v1, c)).alias("s1"),
+        F.sum(F.when(v0, c * c)).alias("q0"),
+        F.sum(F.when(v1, c * c)).alias("q1"),
     )
     s0d, s1d = F.col("s0").cast("double"), F.col("s1").cast("double")
     q0d, q1d = F.col("q0").cast("double"), F.col("q1").cast("double")
@@ -940,8 +938,7 @@ def events_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # se = 0 for zero-variance spend — and Spark 4's ANSI mode raises
     # DIVIDE_BY_ZERO even for DOUBLE/DOUBLE where DuckDB (and ANSI-off
     # Spark) return NULL. try_divide is NULL on 0-divisor in BOTH modes
-    # and value-identical otherwise (round-13 singular axis; the tpch_q2
-    # recipe).
+    # and value-identical otherwise (the tpch_q2 recipe).
     se0 = F.try_divide(
         F.try_divide(
             q0d - F.try_divide(s0d * F.col("s0"), F.col("n0")),
@@ -978,7 +975,7 @@ def events_ab_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_cumulative_uniques",
     oracle=f"""
     WITH first_hour AS (
-      SELECT user_id, MIN(({_ORACLE_ES}) // 3600) AS hour
+      SELECT user_id, MIN(({oracle_epoch_s()}) // 3600) AS hour
       FROM {oracle_events()} events GROUP BY user_id
     ), hourly_new AS (
       SELECT hour, COUNT(*) AS new_users FROM first_hour GROUP BY hour
@@ -1007,7 +1004,8 @@ def events_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw event set is never windowed.
     """
     e = _timed_events(spark, sf_dir).select(
-        "user_id", (F.expr(_ES).cast("long") / 3600).cast("long").alias("hour")
+        "user_id",
+        (F.expr(spark_epoch_s()).cast("long") / 3600).cast("long").alias("hour"),
     )
     first_hour = e.groupBy("user_id").agg(F.min("hour").alias("hour"))
     hourly_new = first_hour.groupBy("hour").agg(F.count(F.lit(1)).alias("new_users"))
@@ -1090,7 +1088,7 @@ def events_user_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT user_id, event_type,
              LEAD(event_type, 1) OVER w AS nxt1,
              LEAD(event_type, 2) OVER w AS nxt2
-      FROM (SELECT user_id, event_type, ({_ORACLE_ES}) AS es, event_id
+      FROM (SELECT user_id, event_type, ({oracle_epoch_s()}) AS es, event_id
             FROM {oracle_events()} events
             WHERE event_type IS NOT NULL)
       WINDOW w AS (PARTITION BY user_id ORDER BY es, event_id)
@@ -1122,11 +1120,10 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     key space is |types|³ (tiny), so the count aggregation collapses
     map-side.
 
-    A typeless event is not a journey step: NULL event_type rows are
-    excluded from the sequence on BOTH engines (round-10 events parity
-    sweep — unguarded, Spark's concat_ws silently SKIPPED the NULL
-    segment producing a 2-step path while DuckDB's `||` NULLed the whole
-    path).
+    A typeless event is not a journey step: NULL event_type rows are excluded
+    from the sequence on BOTH engines (unguarded, Spark's concat_ws silently
+    SKIPPED the NULL segment producing a 2-step path while DuckDB's `||` NULLed
+    the whole path).
     """
     ev = (
         _timed_events(spark, sf_dir)
@@ -1134,7 +1131,7 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "user_id",
             "event_type",
-            F.expr(_ES).cast("long").alias("es"),
+            F.expr(spark_epoch_s()).cast("long").alias("es"),
             "event_id",
         )
     )
@@ -1159,10 +1156,10 @@ def events_path_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH e AS (
       SELECT
-        (((({_ORACLE_ES}) - ((({_ORACLE_ES}) % 86400 + 86400) % 86400))
+        (((({oracle_epoch_s()}) - ((({oracle_epoch_s()}) % 86400 + 86400) % 86400))
            // 86400 + 4) % 7 + 7) % 7 AS dow,
-        ((({_ORACLE_ES}) % 86400 + 86400) % 86400) // 3600 AS hour,
-        CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents
+        ((({oracle_epoch_s()}) % 86400 + 86400) % 86400) // 3600 AS hour,
+        {oracle_cents('value')} AS cents
       FROM {oracle_events()} events
     )
     SELECT
@@ -1186,10 +1183,8 @@ def events_heatmap_hour_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction here. One map-side-combined shuffle of ≤168 cells.
     """
     e = _timed_events(spark, sf_dir).select(
-        F.expr(_ES).cast("long").alias("es"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
+        cents("value").alias("cents"),
     )
     cells = e.select(
         F.expr("pmod((es - pmod(es, 86400)) DIV 86400 + 4, 7)").alias(
@@ -1210,9 +1205,9 @@ def events_heatmap_hour_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH v AS (
       -- value IS NOT NULL: a MAD over undefined values is undefined; a
       -- NULL cents rank key would also trip two_phase_rank's loud
-      -- NULL-key guard on the Spark side (round-10 events parity sweep).
+      -- NULL-key guard on the Spark side.
       SELECT event_type,
-             CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents
+             {oracle_cents('value')} AS cents
       FROM {oracle_events()} events
       WHERE value IS NOT NULL
     ), med AS (
@@ -1275,9 +1270,7 @@ def events_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "event_id",
-            F.round(F.col("value").cast("decimal(18,2)") * 100)
-            .cast("long")
-            .alias("cents"),
+            cents("value").alias("cents"),
         )
     )
     n_by_type = (
@@ -1338,10 +1331,10 @@ def events_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH daily AS (
       SELECT
         event_type,
-        ({_ORACLE_ES}) // {_DAY_S} AS day,
-        SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
+        ({oracle_epoch_s()}) // {_DAY_S} AS day,
+        SUM({oracle_cents('value')}) AS v
       FROM {oracle_events()} events
-      GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
+      GROUP BY event_type, ({oracle_epoch_s()}) // {_DAY_S}
     ), lagk AS (
       SELECT a.event_type, l.lag_k, a.v AS x, b.v AS y
       FROM (SELECT 1 AS lag_k UNION ALL SELECT 7) l
@@ -1359,7 +1352,7 @@ def events_outlier_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     -- VARCHAR-routed conversions: daily-sum second moments exceed 2^53
     -- and DuckDB's native INT128->double cast is build-dependently
-    -- mis-rounded; strtod matches Spark's BigDecimal path (round 11).
+    -- mis-rounded; strtod matches Spark's BigDecimal path.
     SELECT
       event_type,
       CAST(lag_k AS BIGINT) AS lag_k,
@@ -1386,10 +1379,8 @@ def events_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _timed_events(spark, sf_dir).select(
         "event_type",
-        (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
+        cents("value").alias("cents"),
     )
     daily = e.groupBy("event_type", "day").agg(F.sum("cents").alias("v"))
     lags = spark.range(2).select(
@@ -1500,9 +1491,10 @@ def events_conversion_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_changepoint_cusum",
     oracle=f"""
     WITH daily AS (
-      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day,
-             SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM {oracle_events()} events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
+      SELECT event_type, ({oracle_epoch_s()}) // {_DAY_S} AS day,
+             SUM({oracle_cents('value')}) AS v
+      FROM {oracle_events()} events
+      GROUP BY event_type, ({oracle_epoch_s()}) // {_DAY_S}
     ), tot AS (
       SELECT event_type, SUM(v) AS t, COUNT(*) AS n FROM daily
       GROUP BY event_type
@@ -1541,10 +1533,8 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _timed_events(spark, sf_dir).select(
         "event_type",
-        (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
+        cents("value").alias("cents"),
     )
     daily = e.groupBy("event_type", "day").agg(F.sum("cents").alias("v"))
     tot = daily.groupBy("event_type").agg(
@@ -1579,7 +1569,7 @@ _KM_RISK_SQL = """
     WITH span AS (
       -- The FULL module-wide dead-letter wrap (_timed_events): ts IS NOT
       -- NULL (an all-NULL-ts user otherwise yields a NULL-lifetime row
-      -- the Spark side excludes entirely — round-10 review finding) AND
+      -- the Spark side excludes entirely) AND
       -- the isfinite(value) fold, carried even though this template
       -- never reads value, so a future value-reading edit inherits the
       -- parity-verified semantics instead of the NaN/Inf hazard.
@@ -1610,7 +1600,7 @@ _KM_RISK_SQL = """
 
 def _km_body_sql(events: str) -> str:
     return _KM_RISK_SQL.format(
-        es=_ORACLE_ES, day_s=_DAY_S, events=oracle_events(events),
+        es=oracle_epoch_s(), day_s=_DAY_S, events=oracle_events(events),
         censor=_KM_CENSOR_DAYS,
     )
 
@@ -1680,8 +1670,8 @@ def events_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame
     censored; KM handles exactly that, here with a {c}-day censor
     window).
 
-    Exactness (by construction since round 8, the ml_woe_binning pattern
-    with RATIONAL ln arguments): n_at_risk and event counts are pure
+    Exactness (by construction, the ml_woe_binning pattern with
+    RATIONAL ln arguments): n_at_risk and event counts are pure
     integers (at-risk via a DESCENDING cumulative sum over the lifetime
     table); each hazard −ln(1−d/n) = ln(n/(n−d)) is an integer micro-nat
     computed once in Python decimal arithmetic over the collected
@@ -1705,7 +1695,8 @@ def events_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
     e = _timed_events(spark, sf_dir).select(
-        "user_id", (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day")
+        "user_id",
+        (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
     )
     span = e.groupBy("user_id").agg(
         F.min("day").alias("d0"), F.max("day").alias("d1")
@@ -1774,7 +1765,7 @@ def events_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle=f"""
     WITH per_user AS (
       SELECT user_id % 2 AS variant, user_id,
-             SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS x,
+             SUM({oracle_cents('value')}) AS x,
              COUNT(*) AS y
       FROM {oracle_events()} events WHERE event_type = 'purchase'
       GROUP BY user_id % 2, user_id
@@ -1790,7 +1781,7 @@ def events_kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     -- VARCHAR-routed conversions: per-user cross moments exceed 2^53 and
     -- DuckDB's native INT128->double cast is build-dependently
-    -- mis-rounded; strtod matches Spark's BigDecimal path (round 11).
+    -- mis-rounded; strtod matches Spark's BigDecimal path.
     SELECT
       CAST(variant AS BIGINT) AS variant,
       CAST(n AS BIGINT) AS n_users,
@@ -1824,17 +1815,16 @@ def events_ratio_metric_delta_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     A single-user variant (degenerate corpora: all NULL-user purchases
     collapse to one per_user row) has no sample variance: NULLIF guards
-    the n−1 divisor on BOTH engines (round-10 ANSI-mode sweep — under
+    the n−1 divisor on BOTH engines (under
     the driver's ANSI default the bare division is a job-killing
     DIVIDE_BY_ZERO, not a silent NULL).
     """
     e = _timed_events(spark, sf_dir).filter(
         F.col("event_type") == "purchase"
     )
-    cents = F.round(F.col("value").cast("decimal(18,2)") * 100).cast("long")
     per_user = e.groupBy(
         (F.col("user_id") % 2).alias("variant"), "user_id"
-    ).agg(F.sum(cents).alias("x"), F.count(F.lit(1)).alias("y"))
+    ).agg(F.sum(cents("value")).alias("x"), F.count(F.lit(1)).alias("y"))
     xd = F.col("x").cast("decimal(38,0)")
     yd = F.col("y").cast("decimal(38,0)")
     m = per_user.groupBy("variant").agg(
@@ -1877,7 +1867,8 @@ _ATTR_WINDOW_S = 7 * 86400  # lookback for credit assignment
     "events_attribution_multitouch",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_type, event_id, ({_ORACLE_ES}) AS es FROM {oracle_events()} events
+      SELECT user_id, event_type, event_id, ({oracle_epoch_s()}) AS es
+      FROM {oracle_events()} events
     ), conv AS (
       SELECT user_id, event_id AS conv_id, es AS conv_es
       FROM e WHERE event_type = 'purchase'
@@ -1920,7 +1911,10 @@ def events_attribution_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame
     conv_id partitioning the join already established.
     """
     e = _timed_events(spark, sf_dir).select(
-        "user_id", "event_type", "event_id", F.expr(_ES).cast("long").alias("es")
+        "user_id",
+        "event_type",
+        "event_id",
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
     )
     conv = e.filter(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("conv_id"), F.col("es").alias("conv_es")
@@ -1956,9 +1950,10 @@ _BOOT_B = 50  # resamples; deterministic md5 draws, no RNG
     "events_bootstrap_ci_daily_mean",
     oracle=f"""
     WITH daily AS (
-      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day,
-             SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM {oracle_events()} events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
+      SELECT event_type, ({oracle_epoch_s()}) // {_DAY_S} AS day,
+             SUM({oracle_cents('value')}) AS v
+      FROM {oracle_events()} events
+      GROUP BY event_type, ({oracle_epoch_s()}) // {_DAY_S}
     ), idx AS (
       SELECT event_type, v,
              ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) - 1 AS i,
@@ -2007,10 +2002,8 @@ def events_bootstrap_ci_daily_mean(spark: SparkSession, sf_dir: str) -> DataFram
     """
     e = _timed_events(spark, sf_dir).select(
         "event_type",
-        (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
+        cents("value").alias("cents"),
     )
     daily = e.groupBy("event_type", "day").agg(F.sum("cents").alias("v"))
     wt = Window.partitionBy("event_type")
@@ -2083,10 +2076,10 @@ def events_bootstrap_ci_daily_mean(spark: SparkSession, sf_dir: str) -> DataFram
     oracle=f"""
     WITH x AS (
       SELECT event_type,
-             ((((({_ORACLE_ES}) - ((({_ORACLE_ES}) % 86400 + 86400)
+             ((((({oracle_epoch_s()}) - ((({oracle_epoch_s()}) % 86400 + 86400)
                   % 86400)) // 86400 + 4) % 7 + 7) % 7) * 24
-               + ((({_ORACLE_ES}) % 86400 + 86400) % 86400) // 3600 AS cell,
-             CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS v
+               + ((({oracle_epoch_s()}) % 86400 + 86400) % 86400) // 3600 AS cell,
+             {oracle_cents('value')} AS v
       FROM {oracle_events()} events
     ), per_cell AS (
       SELECT event_type, cell,
@@ -2115,7 +2108,7 @@ def events_bootstrap_ci_daily_mean(spark: SparkSession, sf_dir: str) -> DataFram
       CAST(t.k AS BIGINT) AS n_cells,
       -- t.ss (Σv² per type) exceeds 2^53 on amplified in-contract data:
       -- VARCHAR-routed conversion = correctly rounded on any DuckDB
-      -- build, matching Spark's BigDecimal path (round 11). s/sc stay
+      -- build, matching Spark's BigDecimal path. s/sc stay
       -- ≤ ~1e10 — their native casts are exact.
       (b.sum_sc2_over_nc - CAST(t.s AS DOUBLE) * CAST(t.s AS DOUBLE) / CAST(t.n AS DOUBLE))
         / (CAST(CAST(t.ss AS VARCHAR) AS DOUBLE) - CAST(t.s AS DOUBLE) * CAST(t.s AS DOUBLE) / CAST(t.n AS DOUBLE))
@@ -2142,15 +2135,14 @@ def events_anova_hour_of_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     quadratic forms are the identical double sequence in both engines. Two aggregations share
     the event_type key; the per-cell table is ≤ |types|·168 rows.
     """
+    es = spark_epoch_s()
     e = _timed_events(spark, sf_dir).select(
         "event_type",
         F.expr(
-            f"pmod((({_ES}) - pmod(({_ES}), 86400)) DIV 86400 + 4, 7) * 24"
-            f" + pmod(({_ES}), 86400) DIV 3600"
+            f"pmod((({es}) - pmod(({es}), 86400)) DIV 86400 + 4, 7) * 24"
+            f" + pmod(({es}), 86400) DIV 3600"
         ).alias("cell"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("v"),
+        cents("value").alias("v"),
     )
     per_cell = e.groupBy("event_type", "cell").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("nc"),
@@ -2178,7 +2170,7 @@ def events_anova_hour_of_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     ssd = F.col("ss").cast("double")
     kd = F.col("k").cast("double")
     b = F.col("sum_sc2_over_nc")
-    # Zero-capable divisors (round-13 singular axis): total SS = 0 for
+    # Zero-capable divisors: total SS = 0 for
     # zero-variance spend (eta's denominator), k = 1 / n = k for a
     # one-cell or one-event type (F's df divisors). Spark 4 ANSI raises
     # DIVIDE_BY_ZERO on DOUBLE/0 where DuckDB returns NULL — try_divide
@@ -2205,7 +2197,7 @@ _CONC_GAP_S = 30 * 60  # session gap, matches the sessionization queries
     "events_peak_concurrency",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) AS es FROM {oracle_events()} events
+      SELECT user_id, ({oracle_epoch_s()}) AS es FROM {oracle_events()} events
     ), flagged AS (
       SELECT user_id, es,
              CASE WHEN es - COALESCE(LAG(es) OVER (PARTITION BY user_id
@@ -2259,7 +2251,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     single partition ever holds the full boundary set at 100 TB.
     """
     e = _timed_events(spark, sf_dir).select(
-        "user_id", F.expr(_ES).cast("long").alias("es")
+        "user_id", F.expr(spark_epoch_s()).cast("long").alias("es")
     )
     wu = Window.partitionBy("user_id").orderBy("es")
     flagged = e.withColumn(
@@ -2345,9 +2337,10 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_seasonal_naive_backtest",
     oracle=f"""
     WITH daily AS (
-      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day,
-             SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)) AS v
-      FROM {oracle_events()} events GROUP BY event_type, ({_ORACLE_ES}) // {_DAY_S}
+      SELECT event_type, ({oracle_epoch_s()}) // {_DAY_S} AS day,
+             SUM({oracle_cents('value')}) AS v
+      FROM {oracle_events()} events
+      GROUP BY event_type, ({oracle_epoch_s()}) // {_DAY_S}
     )
     SELECT
       a.event_type,
@@ -2376,10 +2369,8 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
     """
     e = _timed_events(spark, sf_dir).select(
         "event_type",
-        (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
+        cents("value").alias("cents"),
     )
     daily = e.groupBy("event_type", "day").agg(F.sum("cents").alias("v"))
     a = daily.alias("a")
@@ -2408,8 +2399,8 @@ def events_seasonal_naive_backtest(spark: SparkSession, sf_dir: str) -> DataFram
     "cohort_ltv_curve",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) // {_WEEK_S} AS w,
-             CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT) AS cents
+      SELECT user_id, ({oracle_epoch_s()}) // {_WEEK_S} AS w,
+             {oracle_cents('value')} AS cents
       FROM {oracle_events()} events WHERE event_type = 'purchase'
     ), cohort AS (
       SELECT user_id, MIN(w) AS cw FROM e GROUP BY user_id
@@ -2449,10 +2440,8 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type") == "purchase"
     ).select(
         "user_id",
-        (F.expr(_ES).cast("long") / _WEEK_S).cast("long").alias("w"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        (F.expr(spark_epoch_s()).cast("long") / _WEEK_S).cast("long").alias("w"),
+        cents("value").alias("cents"),
     )
     cohort = e.groupBy("user_id").agg(F.min("w").alias("cw"))
     wk = (
@@ -2483,7 +2472,8 @@ def cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     "funnel_latency_percentiles",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_type, ({_ORACLE_ES}) AS es FROM {oracle_events()} events
+      SELECT user_id, event_type, ({oracle_epoch_s()}) AS es
+      FROM {oracle_events()} events
     ), v AS (
       SELECT user_id, MIN(es) AS t_view FROM e
       WHERE event_type = 'view' GROUP BY user_id
@@ -2529,7 +2519,7 @@ def funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchangeable at a rank boundary.
     """
     e = _timed_events(spark, sf_dir).select(
-        "user_id", "event_type", F.expr(_ES).cast("long").alias("es")
+        "user_id", "event_type", F.expr(spark_epoch_s()).cast("long").alias("es")
     )
     v = (
         e.filter(F.col("event_type") == "view")
@@ -2578,10 +2568,9 @@ def funnel_latency_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE e AS (
       -- event_type IS NOT NULL: the per-type recursion equi-joins on
       -- event_type and NULL never matches — DuckDB's recursive CTE
-      -- silently lost the NULL-type series while Spark's groupBy kept it
-      -- (round-10 events parity sweep); a typeless series is
-      -- unattributable, so both engines drop it.
-      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day
+      -- silently lost the NULL-type series while Spark's groupBy kept it;
+      -- a typeless series is unattributable, so both engines drop it.
+      SELECT event_type, ({oracle_epoch_s()}) // {_DAY_S} AS day
       FROM {oracle_events()} events
       WHERE event_type IS NOT NULL
     ), daily AS (
@@ -2646,7 +2635,7 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         _timed_events(spark, sf_dir)
         .filter(F.col("event_type").isNotNull())
-        .select("event_type", F.expr(_ES).cast("long").alias("es"))
+        .select("event_type", F.expr(spark_epoch_s()).cast("long").alias("es"))
     )
     daily = (
         e.select("event_type", (F.col("es") / _DAY_S).cast("long").alias("day"))
@@ -2696,7 +2685,8 @@ def ts_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_seasonal_decompose",
     oracle=f"""
     WITH e AS (
-      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
+      SELECT event_type, ({oracle_epoch_s()}) // {_DAY_S} AS day
+      FROM {oracle_events()} events
     ), daily AS (
       SELECT event_type, day, CAST(COUNT(*) AS BIGINT) AS x
       FROM e GROUP BY event_type, day
@@ -2760,7 +2750,7 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation with map-side combine.
     """
     e = _timed_events(spark, sf_dir).select(
-        "event_type", F.expr(_ES).cast("long").alias("es")
+        "event_type", F.expr(spark_epoch_s()).cast("long").alias("es")
     )
     daily = (
         e.select("event_type", (F.col("es") / _DAY_S).cast("long").alias("day"))
@@ -2821,9 +2811,8 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_cuped_adjusted_delta",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, {_ORACLE_ES} AS es,
-             CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
+      SELECT user_id, {oracle_epoch_s()} AS es,
+             {oracle_cents('value')} AS cents
       FROM {oracle_events()} events
     ), b AS (
       SELECT (MIN(es) + MAX(es)) // 2 AS mid FROM e
@@ -2837,14 +2826,13 @@ def ts_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT
         CAST(COUNT(*) AS BIGINT) AS n,
         CAST(SUM(x) AS BIGINT) AS sx, CAST(SUM(y) AS BIGINT) AS sy,
-        -- second moments of PER-USER sums exceed int64 under in-contract
-        -- data (a heavy user's pre/post cents square; round-11 magnitude
-        -- axis): accumulate in HUGEINT and convert to double through
-        -- VARCHAR, DuckDB's only correctly-rounded INT128->double path
-        -- (the native cast mis-rounds ~1.3% of >2^53 values; probed).
-        -- Spark accumulates DECIMAL(38,0) and BigDecimal->double is
-        -- correctly rounded, so both engines feed the identical doubles
-        -- into the identical IEEE formula sequence.
+        -- second moments of PER-USER sums exceed int64 under in-contract data
+        -- (a heavy user's pre/post cents square): accumulate in HUGEINT and
+        -- convert to double through VARCHAR, DuckDB's only correctly-rounded
+        -- INT128->double path (the native cast mis-rounds ~1.3% of >2^53
+        -- values; probed). Spark accumulates DECIMAL(38,0) and
+        -- BigDecimal->double is correctly rounded, so both engines feed the
+        -- identical doubles into the identical IEEE formula sequence.
         CAST(CAST(SUM(CAST(x AS HUGEINT) * y) AS VARCHAR) AS DOUBLE)
           AS sxyd,
         CAST(CAST(SUM(CAST(x AS HUGEINT) * x) AS VARCHAR) AS DOUBLE)
@@ -2905,7 +2893,7 @@ def events_cuped_adjusted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     are int64 sums; n/Σx/Σy and the per-variant partials accumulate as
     exact int64; the SECOND moments Σxy/Σx²/Σy² accumulate in
     DECIMAL(38,0)/HUGEINT (per-user sums square — in-contract heavy
-    users push them past int64; round-11 magnitude axis) and convert to
+    users push them past int64) and convert to
     double through each engine's correctly-rounded path (Spark
     BigDecimal→double; DuckDB INT128→VARCHAR→double — the native INT128
     cast mis-rounds ~1.3% of >2^53 values). θ, the adjusted delta, and
@@ -2922,10 +2910,8 @@ def events_cuped_adjusted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _timed_events(spark, sf_dir).select(
         "user_id",
-        F.expr(_ES).cast("long").alias("es"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
+        cents("value").alias("cents"),
     )
     b = e.agg(F.expr("(MIN(es) + MAX(es)) DIV 2").alias("mid"))
     pu = (
@@ -2945,8 +2931,8 @@ def events_cuped_adjusted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     v0 = F.col("user_id") % 2 == 0
     v1 = F.col("user_id") % 2 == 1
     # Per-user sums square in the second moments, so Σxy/Σx²/Σy² exceed
-    # int64 under in-contract data (round-11 magnitude axis: a long*long
-    # product sum would silently WRAP here while the oracle's
+    # int64 under in-contract data (a long*long product sum would
+    # silently WRAP here while the oracle's
     # HUGEINT→BIGINT pin raises — the worst divergence shape). Accumulate
     # in DECIMAL(38,0) and convert the final exact sum to double
     # (BigDecimal→double is correctly rounded; the oracle routes its
@@ -2978,8 +2964,7 @@ def events_cuped_adjusted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULLIF every denominator (the events_delta_method discipline): an
     # empty or one-variant population has n0/n1 = 0 and a constant
     # covariate has var(X) = 0 — silent NULL ANSI-off but a job-killing
-    # DIVIDE_BY_ZERO under ANSI, where DuckDB yields NULL either way
-    # (round-10 empty-table parity, ANSI axis).
+    # DIVIDE_BY_ZERO under ANSI, where DuckDB yields NULL either way.
     nd = F.col("n").cast("double")
     cov_n = nd * F.col("sxyd") - F.col("sx").cast("double") * F.col("sy")
     varx_n = nd * F.col("sxxd") - F.col("sx").cast("double") * F.col("sx")
@@ -3007,9 +2992,8 @@ def events_cuped_adjusted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_diff_in_diff",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, {_ORACLE_ES} AS es,
-             CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT)
-               AS cents
+      SELECT user_id, {oracle_epoch_s()} AS es,
+             {oracle_cents('value')} AS cents
       FROM {oracle_events()} events
     ), b AS (
       SELECT (MIN(es) + MAX(es)) // 2 AS mid FROM e
@@ -3035,7 +3019,7 @@ def events_cuped_adjusted_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     -- NULLIF on each cell count: an empty cell (no events in a
     -- group-period) is NULL-mean on both engines — silent NULL ANSI-off
-    -- but DIVIDE_BY_ZERO under ANSI (round-10 empty-table parity).
+    -- but DIVIDE_BY_ZERO under ANSI.
     SELECT n_c_pre, n_c_post, n_t_pre, n_t_post,
            (CAST(s_t_post AS DOUBLE) / NULLIF(CAST(n_t_post AS DOUBLE), 0.0)
             - CAST(s_t_pre AS DOUBLE) / NULLIF(CAST(n_t_pre AS DOUBLE), 0.0))
@@ -3073,10 +3057,8 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _timed_events(spark, sf_dir).select(
         "user_id",
-        F.expr(_ES).cast("long").alias("es"),
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
+        cents("value").alias("cents"),
     )
     b = e.agg(F.expr("(MIN(es) + MAX(es)) DIV 2").alias("mid"))
     ctl = F.col("user_id") % 2 == 0
@@ -3099,7 +3081,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         *cell(trt & post, "n_t_post", "s_t_post"),
     )
     # NULLIF each cell count: empty cells must read as NULL means on
-    # both engines, not DIVIDE_BY_ZERO under ANSI (round-10 parity).
+    # both engines, not DIVIDE_BY_ZERO under ANSI.
     def _nz(c: str):
         return F.nullif(F.col(c).cast("double"), F.lit(0.0))
 
@@ -3137,10 +3119,9 @@ def _hw_lnew(xm: str, sp: str, l: str, b: str) -> str:
     WITH RECURSIVE e AS (
       -- event_type IS NOT NULL: the per-type recursion equi-joins on
       -- event_type and NULL never matches — DuckDB's recursive CTE
-      -- silently lost the NULL-type series while Spark's groupBy kept it
-      -- (round-10 events parity sweep); a typeless series is
-      -- unattributable, so both engines drop it.
-      SELECT event_type, ({_ORACLE_ES}) // {_DAY_S} AS day
+      -- silently lost the NULL-type series while Spark's groupBy kept it;
+      -- a typeless series is unattributable, so both engines drop it.
+      SELECT event_type, ({oracle_epoch_s()}) // {_DAY_S} AS day
       FROM {oracle_events()} events
       WHERE event_type IS NOT NULL
     ), daily AS (
@@ -3226,7 +3207,7 @@ def ts_holt_winters_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         _timed_events(spark, sf_dir)
         .filter(F.col("event_type").isNotNull())
-        .select("event_type", F.expr(_ES).cast("long").alias("es"))
+        .select("event_type", F.expr(spark_epoch_s()).cast("long").alias("es"))
     )
     daily = (
         e.select("event_type", (F.col("es") / _DAY_S).cast("long").alias("day"))
@@ -3476,7 +3457,8 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_longest_streak",
     oracle=f"""
     WITH days AS (
-      SELECT DISTINCT user_id, ({_ORACLE_ES}) // 86400 AS day FROM {oracle_events()} events
+      SELECT DISTINCT user_id, ({oracle_epoch_s()}) // 86400 AS day
+      FROM {oracle_events()} events
     ), isl AS (
       SELECT user_id, day,
              day - DENSE_RANK() OVER (PARTITION BY user_id ORDER BY day)
@@ -3511,7 +3493,7 @@ def events_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = _timed_events(spark, sf_dir)
     days = e.select(
-        "user_id", F.expr(f"({_ES}) DIV 86400").alias("day")
+        "user_id", F.expr(f"({spark_epoch_s()}) DIV 86400").alias("day")
     ).distinct()
     isl = days.select(
         "user_id",
@@ -3538,7 +3520,7 @@ _POWERLAW_ACT_SQL = """
     WITH ud AS (
       -- The FULL module-wide dead-letter wrap (_timed_events) — see the
       -- matching note on _KM_RISK_SQL; an all-NULL-ts user otherwise
-      -- inflates the oracle's cohort n_users literal (round-10 review).
+      -- inflates the oracle's cohort n_users literal.
       SELECT DISTINCT user_id, ({es}) // 86400 AS day
       FROM {events} pl_e
     ), fd AS (
@@ -3568,7 +3550,7 @@ def _powerlaw_oracle(sf_dir: str) -> str:
 
     con = duckdb.connect()
     body = _POWERLAW_ACT_SQL.format(
-        es=_ORACLE_ES,
+        es=oracle_epoch_s(),
         events=oracle_events(f"read_parquet('{sf_dir}/events.parquet')"),
     )
     rows = con.execute(
@@ -3578,7 +3560,7 @@ def _powerlaw_oracle(sf_dir: str) -> str:
     args = {r[0] for r in rows} | {r[1] for r in rows} | {
         r[2] for r in rows
     }
-    body = _POWERLAW_ACT_SQL.format(es=_ORACLE_ES, events=oracle_events())
+    body = _POWERLAW_ACT_SQL.format(es=oracle_epoch_s(), events=oracle_events())
     return f"""
     {body},
     ln_tab(n, micro) AS (VALUES {micro_nat_values_sql(args or [1])}),
@@ -3604,7 +3586,7 @@ def _powerlaw_oracle(sf_dir: str) -> str:
       CAST(n AS BIGINT) AS n_points,
       -- num/denx/deny are HUGEINT products-of-sums past 2^53: VARCHAR-
       -- routed conversion is correctly rounded on any DuckDB build,
-      -- matching Spark's int64->double path (round-11 magnitude hazard)
+      -- matching Spark's int64->double path
       CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(CAST(denx AS VARCHAR) AS DOUBLE) AS powerlaw_exponent,
       ((CAST(sy AS DOUBLE)
         - (CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(CAST(denx AS VARCHAR) AS DOUBLE)) * CAST(sx AS DOUBLE))
@@ -3625,16 +3607,16 @@ def events_retention_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     teams put on dashboards: regress ln(active at day-offset k) on ln(k)
     and report the decay exponent b of retention ∝ k^b (plus fit R²).
 
-    Exactness (by construction since round 8, the ml_woe_binning
-    pattern): both logs quantize to integer micro-nats computed ONCE in
-    Python decimal arithmetic (functions/exactlog.py) over the bounded
-    argument domain — day offsets, active counts, cohort size — and the
-    identical integer literals enter the Spark plan (literal map lookup)
-    and the DuckDB oracle (literal VALUES join). Neither engine runs ln,
-    so the JVM-vs-libm ulp boundary the old round(1e6*ln(n)) carried is
-    gone. The OLS readout stays ml_linreg_normal_eq's exact integer
-    moments with the identical-double-sequence closed form, so the
-    fitted doubles hash bit-for-bit.
+    Exactness (by construction, the ml_woe_binning pattern): both logs quantize
+    to integer micro-nats computed ONCE in Python decimal arithmetic
+    (functions/exactlog.py) over the bounded argument domain — day offsets,
+    active counts, cohort size — and the identical integer literals enter the
+    Spark plan (literal map lookup) and the DuckDB oracle (literal VALUES
+    join). Neither engine runs ln, so the JVM-vs-libm ulp boundary the old
+    round(1e6*ln(n)) carried is gone. The OLS readout stays
+    ml_linreg_normal_eq's exact integer moments with the
+    identical-double-sequence closed form, so the fitted doubles hash
+    bit-for-bit.
 
     Scale shape: two shuffles on user_id (distinct days, first-day join)
     collapse the corpus to <=|days| offset rows; that calendar-bounded
@@ -3651,7 +3633,7 @@ def events_retention_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = _timed_events(spark, sf_dir)
     ud = e.select(
-        "user_id", F.expr(f"({_ES}) DIV 86400").alias("day")
+        "user_id", F.expr(f"({spark_epoch_s()}) DIV 86400").alias("day")
     ).distinct()
     fd = ud.groupBy("user_id").agg(F.min("day").alias("f"))
     coh = fd.agg(F.count(F.lit(1)).alias("n_users"))
@@ -3713,7 +3695,8 @@ def events_retention_powerlaw(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ts_interpolate_linear",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, ({_ORACLE_ES}) // {_DAY_S} AS day FROM {oracle_events()} events
+      SELECT user_id, ({oracle_epoch_s()}) // {_DAY_S} AS day
+      FROM {oracle_events()} events
     ), daily AS (
       SELECT user_id, day, COUNT(*) AS n_ev FROM e GROUP BY user_id, day
     ), bounds AS (
@@ -3832,11 +3815,10 @@ def ts_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH e AS (
       -- value IS NOT NULL: a point with no value cannot be plotted, and
       -- the engines disagree on it — DuckDB's arg_min/arg_max SKIP
-      -- NULL-valued rows while Spark's min_by/max_by return the NULL
-      -- (round-10 events parity sweep); min/max skip it on both anyway.
+      -- NULL-valued rows while Spark's min_by/max_by return the NULL;
+      -- min/max skip it on both anyway.
       SELECT event_id, value,
-             CAST(date_diff('second', TIMESTAMP '1970-01-01',
-                            date_trunc('second', ts)) AS BIGINT) AS es
+             {oracle_epoch_s()} AS es
       FROM {oracle_events()} events
       WHERE value IS NOT NULL
     ), st AS (
@@ -3872,7 +3854,7 @@ def ts_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNIQUE integer ordering key — range-relative epoch seconds scaled by
     1e10 plus the unique event_id (the `agg_extrema_argminmax`
     determinism trick). The key accumulates in DECIMAL(38,0)/HUGEINT
-    (round-12 pre-1970 axis: an 80-year time range puts es·1e10 past
+    (an 80-year time range puts es·1e10 past
     int64, where Spark silently WRAPPED while DuckDB raised — the
     garbage-vs-error shape; 128-bit headroom covers any range to ~29
     billion years). One precondition remains: event_id < 1e10, or the
@@ -3892,7 +3874,7 @@ def ts_downsample_m4(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = (
         _timed_events(spark, sf_dir)
         .filter(F.col("value").isNotNull())
-        .select("event_id", "value", F.expr(_ES).cast("long").alias("es"))
+        .select("event_id", "value", F.expr(spark_epoch_s()).cast("long").alias("es"))
     )
     st = e.agg(F.min("es").alias("mn"), F.max("es").alias("mx"))
     b = e.crossJoin(F.broadcast(st)).select(

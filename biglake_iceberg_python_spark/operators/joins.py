@@ -23,7 +23,14 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
+from biglake_iceberg_python_spark.functions.exprs import (
+    cents,
+    dsum,
+    oracle_cents,
+    oracle_dsum,
+    oracle_epoch_s,
+    spark_epoch_s,
+)
 from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
@@ -241,11 +248,10 @@ def join_broadcast_star(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_dynamic_partition_pruning",
-    oracle="""
+    oracle=f"""
     SELECT o_orderpriority,
            COUNT(*) AS n_orders,
-           CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE)
-             AS sum_price
+           {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders
     WHERE o_orderpriority LIKE '1-%' OR o_orderpriority LIKE '2-%'
     GROUP BY o_orderpriority
@@ -291,9 +297,7 @@ def join_dynamic_partition_pruning(
         .groupBy("o_orderpriority")
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_price"),
+            dsum("o_totalprice", "sum_price"),
         )
     )
 
@@ -440,17 +444,15 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_type) so same-instant rows have one canonical order on both
     engines — determinism does not ride on per-user ts uniqueness.
 
-    BOTH sides date_trunc each operand before differencing (round-12
-    pre-1970 axis): DuckDB's raw date_diff truncates a negative-epoch
-    operand toward ZERO (probed: date_diff('second', 23:59:59.3,
-    +1.0s) = 1) while Spark's trunc-then-diff floors (= 2) — raw-vs-trunc
-    was off by one whenever the earlier operand predates 1970 with a
-    sub-second fraction. The trunc'd floor form is identical on both
-    engines for any epoch sign.
+    BOTH sides date_trunc each operand before differencing: DuckDB's raw
+    date_diff truncates a negative-epoch operand toward ZERO (probed:
+    date_diff('second', 23:59:59.3, +1.0s) = 1) while Spark's trunc-then-diff
+    floors (= 2) — raw-vs-trunc was off by one whenever the earlier operand
+    predates 1970 with a sub-second fraction. The trunc'd floor form is
+    identical on both engines for any epoch sign.
     """
     e = load_table(spark, sf_dir, "events").filter(
-        # Dead-letter NULL event-times (round-10 events parity
-        # sweep): a timestamp-less row is unordered in the as-of
+        # Dead-letter NULL event-times: a timestamp-less row is unordered in the as-of
         # window — Spark sorts NULLS FIRST, DuckDB NULLS LAST, so
         # prior-match existence flips by engine; both sides drop.
         F.col("ts").isNotNull()
@@ -525,8 +527,7 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines.
     """
     e = load_table(spark, sf_dir, "events").filter(
-        # Dead-letter NULL event-times (round-10 events parity
-        # sweep): a timestamp-less row is unordered in the as-of
+        # Dead-letter NULL event-times: a timestamp-less row is unordered in the as-of
         # window — Spark sorts NULLS FIRST, DuckDB NULLS LAST, so
         # prior-match existence flips by engine; both sides drop.
         F.col("ts").isNotNull()
@@ -666,23 +667,14 @@ def join_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Epoch seconds of a (sub-second) NTZ timestamp, truncated — identical
-# integers in both engines (boundary-crossing count from truncated values).
-_ES_SPARK = (
-    "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
-    " date_trunc('second', ts))"
-)
-_ES_DUCK = "date_diff('second', TIMESTAMP '1970-01-01', date_trunc('second', ts))"
-
-
 @query(
     "join_range_bucketed",
     oracle=f"""
     WITH e AS (
-      SELECT user_id, event_id, {_ES_DUCK} AS es
+      SELECT user_id, event_id, {oracle_epoch_s()} AS es
       FROM events WHERE event_type = 'error'
     ), p AS (
-      SELECT user_id, {_ES_DUCK} AS es
+      SELECT user_id, {oracle_epoch_s()} AS es
       FROM events WHERE event_type = 'purchase'
     )
     SELECT
@@ -708,7 +700,7 @@ def join_range_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     once because a purchase lives in exactly one bucket.
     """
     ev = load_table(spark, sf_dir, "events")
-    es = F.expr(_ES_SPARK)
+    es = F.expr(spark_epoch_s())
     e = ev.filter(F.col("event_type") == "error").select(
         "user_id", "event_id", es.alias("es_e")
     )
@@ -930,8 +922,7 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines.
     """
     e = load_table(spark, sf_dir, "events").filter(
-        # Dead-letter NULL event-times (round-10 events parity
-        # sweep): a timestamp-less row is unordered in the as-of
+        # Dead-letter NULL event-times: a timestamp-less row is unordered in the as-of
         # window — Spark sorts NULLS FIRST, DuckDB NULLS LAST, so
         # prior-match existence flips by engine; both sides drop.
         F.col("ts").isNotNull()
@@ -989,8 +980,7 @@ _PIT_CHANGE_DATE = "1998-01-01 00:00:00"
     SELECT
       d.segment AS segment_at_order,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
-      CAST(SUM(CAST(round(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100)
-               AS BIGINT)) AS BIGINT) AS total_cents
+      CAST(SUM({oracle_cents('o.o_totalprice')}) AS BIGINT) AS total_cents
     FROM orders o
     JOIN dim d
       ON o.o_custkey = d.c_custkey
@@ -1032,7 +1022,6 @@ def join_point_in_time_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = v1.unionAll(v2)
     o = load_table(spark, sf_dir, "orders")
-    cents = F.round(F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
     joined = o.join(
         F.broadcast(dim),
         (o["o_custkey"] == dim["c_custkey"])
@@ -1041,7 +1030,7 @@ def join_point_in_time_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return joined.groupBy("segment").agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(cents).cast("long").alias("total_cents"),
+        F.sum(cents("o_totalprice")).cast("long").alias("total_cents"),
     ).withColumnRenamed("segment", "segment_at_order")
 
 
@@ -1119,8 +1108,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ride on per-user ts uniqueness in the generated data.
     """
     e = load_table(spark, sf_dir, "events").filter(
-        # Dead-letter NULL event-times (round-10 events parity
-        # sweep): a timestamp-less row is unordered in the as-of
+        # Dead-letter NULL event-times: a timestamp-less row is unordered in the as-of
         # window — Spark sorts NULLS FIRST, DuckDB NULLS LAST, so
         # prior-match existence flips by engine; both sides drop.
         F.col("ts").isNotNull()
@@ -1182,11 +1170,10 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "join_interval_overlap",
-    oracle="""
+    oracle=f"""
     WITH e AS (
       SELECT user_id, event_id,
-             CAST(date_diff('second', TIMESTAMP '1970-01-01',
-                            date_trunc('second', ts)) AS BIGINT) AS es
+             {oracle_epoch_s()} AS es
       FROM events
     ), flagged AS (
       SELECT user_id, event_id, es,
@@ -1204,7 +1191,7 @@ def join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ), hours AS (
       -- FLOOR division (// truncates toward zero): hour -0.5 must be hr
       -- -1, or the hr id and its nominal range [hr*3600, hr*3600+3599]
-      -- disagree on pre-1970 epochs (round-12 epoch-straddle axis).
+      -- disagree on pre-1970 epochs.
       SELECT (es - ((es % 3600 + 3600) % 3600)) // 3600 AS hr,
              COUNT(*) AS c
       FROM e GROUP BY hr
@@ -1257,10 +1244,7 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_id",
-        F.expr(
-            "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
-            " date_trunc('second', ts))"
-        ).cast("long").alias("es"),
+        F.expr(spark_epoch_s()).cast("long").alias("es"),
     )
     flagged = e.withColumn(
         "new_s",
@@ -1281,12 +1265,12 @@ def join_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessions = numbered.groupBy("user_id", "sid").agg(
         F.min("es").alias("s0"), F.max("es").alias("s1")
     )
-    # Floor division (DIV truncates toward zero): pmod makes the operand
-    # an exact multiple first, so the division is truncation-direction-
+    # Floor division (DIV truncates toward zero): pmod makes the operand an
+    # exact multiple first, so the division is truncation-direction-
     # independent and the hr id matches its nominal [hr*3600, hr*3600+3599]
-    # range for ANY epoch sign (round-12 epoch-straddle axis: trunc'd ids
-    # put pre-1970 seconds into hours whose nominal range excludes them,
-    # and the explode-by-id and predicate-join formulations diverge).
+    # range for ANY epoch sign (trunc'd ids would put pre-1970 seconds into
+    # hours whose nominal range excludes them, and the explode-by-id and
+    # predicate-join formulations diverge).
     hours = e.groupBy(
         F.expr("(es - pmod(es, 3600)) DIV 3600").cast("long").alias("hr")
     ).agg(F.count(F.lit(1)).alias("c"))

@@ -26,7 +26,14 @@ from biglake_iceberg_python_spark.operators.curation import (
     _STOP_SQL,
     _STOPWORDS,
 )
-from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
+from biglake_iceberg_python_spark.functions.exprs import (
+    EMB_DIM,
+    oracle_cents,
+    oracle_valid_embeddings,
+    oracle_words,
+    valid_embedding,
+    words,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -116,7 +123,6 @@ def ml_quality_distill(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _KM_K = 8       # clusters
 _KM_ITERS = 4   # fixed Lloyd iterations (deterministic, resumable)
-_KM_DIM = 64
 
 
 @query(
@@ -141,19 +147,10 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterminism cannot flip assignments between runs.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    # Exclude NULL/wrong-dimension vectors (failed-encoder rows in a real
-    # pipeline): the fold expressions assume exactly _KM_DIM components,
-    # and a NULL init row would crash the driver-side centroid list.
-    vecs = e.filter(
-        F.col("embedding").isNotNull()
-        & (F.size("embedding") == _KM_DIM)
-        & F.forall(
-            F.transform("embedding", lambda x: x.cast("double")),
-            lambda x: x.isNotNull()
-            & ~F.isnan(x)
-            & (F.abs(x) != F.lit(float("inf"))),
-        )
-    ).select(
+    # Only valid vectors: the fold expressions assume exactly EMB_DIM
+    # components, and a NULL init row would crash the driver-side
+    # centroid list.
+    vecs = e.filter(valid_embedding()).select(
         "vec_id",
         F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
     )
@@ -163,7 +160,7 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     init = vecs.orderBy("vec_id").select("v").limit(_KM_K).collect()
     cents: list[list[float]] = [list(r["v"]) for r in init]
     if not cents:
-        # All-degenerate corpus (round-9 ADVICE): zero valid vectors means
+        # All-degenerate corpus: zero valid vectors means
         # zero centers — F.array() over an empty choice list is malformed,
         # so return an empty history, mirroring ml_coreset_kcenter and the
         # NB empty-train early return. (1 ≤ |cents| < k needs no guard:
@@ -202,7 +199,7 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("d2").cast("decimal(38,12)")).alias("inertia"),
                 *[
                     F.sum(F.get("v", d).cast("decimal(30,12)")).alias(f"s{d}")
-                    for d in range(_KM_DIM)
+                    for d in range(EMB_DIM)
                 ],
             )
             .collect()
@@ -214,7 +211,7 @@ def ml_kmeans_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
                 history.append((it, j, 0, 0.0))
                 continue
             history.append((it, j, r["n"], float(r["inertia"])))
-            cents[j] = [float(r[f"s{d}"] / r["n"]) for d in range(_KM_DIM)]
+            cents[j] = [float(r[f"s{d}"] / r["n"]) for d in range(EMB_DIM)]
 
     return spark.createDataFrame(
         history, "iter int, cluster int, n_points bigint, inertia double"
@@ -336,7 +333,6 @@ def ml_logistic_newton(spark: SparkSession, sf_dir: str) -> DataFrame:
 # runs distributed as fixed-size per-batch partials, and the d×d eigensolve
 # runs on the driver — the same "tree-aggregate statistics, solve the tiny
 # dense system locally" shape as ml_logistic_newton's 7×7 solve.
-_PCA_DIM = 64
 _PCA_QUANT = 1_000_000  # embedding values quantize to integer micro-units
 _PCA_TOP = 8
 
@@ -355,7 +351,7 @@ def _pca_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pyarrow as pa
 
-    iu, ju = np.triu_indices(_PCA_DIM)
+    iu, ju = np.triu_indices(EMB_DIM)
 
     def batch_gram(batches):
         for b in batches:
@@ -377,52 +373,37 @@ def _pca_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    # Rectangular input only (round-10 degenerate sweep): NULL/wrong-dim
-    # rows crash np.stack's ragged conversion, and the oracle carries the
-    # identical len(embedding) = {_PCA_DIM} predicate. Zero-norm vectors
-    # STAY — they are valid data points for a moment matrix (unlike the
-    # cosine family, whose _valid_embeddings also requires norm > 0).
-    # |component| <= 8 is the quantization contract (round-11 magnitude
-    # class, the embeddings mirror of the events |v| < 1e4 fold): a
-    # FINITE out-of-range component overflows the int64 micro-unit grid
-    # — numpy's astype silently WRAPS while the oracle's BIGINT cast
-    # raises, the worst divergence shape. 8 = the int64 GEMM budget
-    # (8e6 micro-units → pair products <= 6.4e13, 64k-row batch sums
-    # <= 4.2e18 < 2^63) and an order of magnitude above any normalized
-    # embedding's component range. Out-of-range vectors are excluded on
-    # BOTH engines.
-    finite = F.forall(
-        F.transform("embedding", lambda x: x.cast("double")),
-        lambda x: x.isNotNull()
-        & ~F.isnan(x)
-        & (F.abs(x) <= F.lit(8.0)),
-    )
+    # Valid vectors only, on both engines: NULL/wrong-dim rows crash
+    # np.stack's ragged conversion, and a component beyond |x| <= 8
+    # overflows the int64 micro-unit grid, where numpy's astype silently
+    # WRAPS while the oracle's BIGINT cast raises. 8 is also the int64
+    # GEMM budget (8e6 micro-units → pair products <= 6.4e13, 64k-row
+    # batch sums <= 4.2e18 < 2^63). Zero-norm vectors STAY — they are
+    # valid data points for a moment matrix (unlike the cosine family,
+    # whose _valid_embeddings also requires norm > 0).
     e = (
         load_table(spark, sf_dir, "embeddings")
-        .filter((F.size("embedding") == _PCA_DIM) & finite)
+        .filter(valid_embedding())
         .select("embedding")
     )
     partials = e.mapInArrow(
         batch_gram, "i int, j int, n bigint, si bigint, sj bigint, sij bigint"
     )
-    dec = lambda c: F.sum(F.col(c).cast("decimal(38,0)"))  # noqa: E731
+    isum = lambda c: F.sum(F.col(c).cast("decimal(38,0)"))  # noqa: E731
     return partials.groupBy("i", "j").agg(
-        dec("n").cast("long").alias("n_rows"),
-        dec("si").cast("long").alias("sum_i"),
-        dec("sj").cast("long").alias("sum_j"),
-        dec("sij").cast("long").alias("sum_ij"),
+        isum("n").cast("long").alias("n_rows"),
+        isum("si").cast("long").alias("sum_i"),
+        isum("sj").cast("long").alias("sum_j"),
+        isum("sij").cast("long").alias("sum_ij"),
     )
 
 
 @query(
     "ml_pca_gram",
     oracle=f"""
-    WITH dims AS (SELECT unnest(generate_series(1, {_PCA_DIM})) AS i),
-    q AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-          WHERE len(embedding) = {_PCA_DIM}
-            AND len(list_filter(embedding,
-                    x -> x IS NULL OR NOT isfinite(x::DOUBLE)
-                         OR abs(x::DOUBLE) > 8.0)) = 0),
+    WITH dims AS (SELECT unnest(generate_series(1, {EMB_DIM})) AS i),
+    q AS (SELECT vec_id, embedding::DOUBLE[] AS v
+          FROM {oracle_valid_embeddings(nonzero=False)}),
     x AS (
       SELECT vec_id, d.i AS i,
              CAST(floor(v[d.i] * {_PCA_QUANT}) AS BIGINT) AS xi
@@ -477,7 +458,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     rows = _pca_gram(spark, sf_dir).collect()  # 2080 fixed-size rows
-    d = _PCA_DIM
+    d = EMB_DIM
     n = rows[0]["n_rows"]
     s = np.zeros(d)
     m2 = np.zeros((d, d))
@@ -502,7 +483,7 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
                 float(evals[c]),
                 # rank-zero covariance (all vectors identical): total
                 # variance is 0 and the ratio is undefined — None, not
-                # the NaN a raw 0/0 produces (round-13 monovec probe)
+                # the NaN a raw 0/0 produces
                 float(evals[c] / total) if total > 0.0 else None,
                 top_dim + 1,
                 float(vec[top_dim]),
@@ -545,21 +526,11 @@ def ml_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (max over corpus of distance to nearest center) AFTER each pick —
     the radius curve is the coreset's quality certificate.
     """
-    # Exclude NULL/wrong-dimension vectors (failed-encoder rows): the
-    # distance folds assume equal-length arrays, and a NULL seed row
-    # would crash the driver-side center list.
+    # Only valid vectors: the distance folds assume equal-length arrays,
+    # and a NULL seed row would crash the driver-side center list.
     e = (
         load_table(spark, sf_dir, "embeddings")
-        .filter(
-            F.col("embedding").isNotNull()
-            & (F.size("embedding") == _KM_DIM)
-            & F.forall(
-                F.transform("embedding", lambda x: x.cast("double")),
-                lambda x: x.isNotNull()
-                & ~F.isnan(x)
-                & (F.abs(x) != F.lit(float("inf"))),
-            )
-        )
+        .filter(valid_embedding())
         .select(
             "vec_id",
             F.transform("embedding", lambda x: x.cast("double")).alias("v"),
@@ -569,11 +540,10 @@ def ml_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # clean corpus, and still defined when vec 0 itself was filtered).
     first = e.orderBy("vec_id").select("vec_id", "v").first()
     if first is None:
-        # Every embedding row was NULL/wrong-dim (round-9 ADVICE: the
-        # validity filter can empty the table on an all-degenerate
-        # corpus): no seed exists, so degrade to an empty pick list —
-        # the NB empty-train discipline — instead of TypeError-ing on
-        # first["vec_id"].
+        # Every embedding row was invalid (the validity filter can empty the
+        # table on an all-degenerate corpus): no seed exists, so degrade to an
+        # empty pick list — the NB empty-train discipline — instead of
+        # TypeError-ing on first["vec_id"].
         return spark.createDataFrame(
             [], "pick int, center_vec_id long, radius_sq_after double"
         )
@@ -605,14 +575,13 @@ def ml_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ml_linreg_normal_eq",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT
         l_returnflag,
         l_linestatus,
-        CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS BIGINT) AS qc,
-        CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-          AS pc
+        {oracle_cents('l_quantity')} AS qc,
+        {oracle_cents('l_extendedprice')} AS pc
       FROM lineitem
     ), m AS (
       SELECT
@@ -634,7 +603,7 @@ def ml_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- num/denx/deny are HUGEINT products-of-sums past 2^53 (already at
       -- sf0.01): VARCHAR-routed conversion is correctly rounded on any
       -- DuckDB build — the native INT128->double cast is not — matching
-      -- Spark's BigDecimal path (round-11 magnitude hazard)
+      -- Spark's BigDecimal path
       CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(CAST(denx AS VARCHAR) AS DOUBLE) AS slope_dollars_per_unit,
       ((CAST(sy AS DOUBLE)
         - (CAST(CAST(num AS VARCHAR) AS DOUBLE) / CAST(CAST(denx AS VARCHAR) AS DOUBLE)) * CAST(sx AS DOUBLE))
@@ -709,7 +678,7 @@ def ml_linreg_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # denx (or deny) exactly 0 — the singular-Gram case. Spark 4 ANSI
     # raises DIVIDE_BY_ZERO on DOUBLE/0 where DuckDB and ANSI-off Spark
     # return NULL; NULL slope/intercept/R² is the correct undefined-fit
-    # readout on both engines (round-13 flatline axis).
+    # readout on both engines.
     return k.select(
         "l_returnflag",
         "l_linestatus",
@@ -734,8 +703,7 @@ _NB_WC_SQL = f"""
     WITH docs AS (
       -- lang IS NOT NULL: a supervised classifier needs a label — an
       -- unlabeled doc can neither train a class nor anchor a confusion
-      -- row, and a None label crashed the Spark driver's sorted(classes)
-      -- (round-10 NULL-metadata probe).
+      -- row, and a None label crashed the Spark driver's sorted(classes).
       SELECT doc_id, lang,
              {oracle_words()} AS ws,
              ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':nb'), 1, 8))
@@ -799,7 +767,7 @@ def _nb_oracle(sf_dir: str) -> str:
     )
     # Empty corpus: n_train is 0, which is not a valid ln argument and is
     # never joined (classtab is empty when classes is) — drop non-positive
-    # args instead of crashing the builder (round-10 empty-table parity).
+    # args instead of crashing the builder.
     args = {a for a in args if a >= 1}
     body = _NB_WC_SQL.format(documents="documents")
     return f"""
@@ -869,8 +837,8 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     The same shape scores quality/domain/toxicity classifiers at corpus
     scale: training IS an aggregation, scoring IS a broadcast join.
 
-    Exactness (by construction since round 8, the ml_woe_binning pattern
-    over a TYPE-level domain): every log term — ln(c_wc+1), ln(docs_c),
+    Exactness (by construction, the ml_woe_binning pattern over a
+    TYPE-level domain): every log term — ln(c_wc+1), ln(docs_c),
     ln(n_train), ln(tok_c+V) — is an integer micro-nat computed ONCE in
     Python decimal arithmetic (functions/exactlog.py) over the collected
     DISTINCT-argument set, entering the Spark plan as a broadcast-joined
@@ -885,9 +853,9 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     lazily-checkpointed; the ln-argument domain (DISTINCT count values,
     Zipf-collapsed ≪ |V|), the 5-row class stats, and the class doc
     counts all arrive in ONE collect (rollup ∪ doc-count agg, tagged by
-    grouping id) whose results become the literal classtab — REMOVING
-    both the ntr/classes corpus scans the round-7 version re-ran inside
-    the final DAG and the extra collect round-trip round 8 added. Scoring joins held-out
+    grouping id) whose results become the literal classtab, so the final
+    DAG rescans no corpus for ntr/classes and no extra collect round-trip
+    runs. Scoring joins held-out
     token counts against the model on the word key, then 5 class rows
     broadcast into the posterior assembly. No corpus-sized shuffle
     carries text.
@@ -914,17 +882,15 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("c"))
         .localCheckpoint(eager=False)
     )
-    # Driver-side literal derivation (all from the materialized checkpoint
-    # + one train count scan): DISTINCT count values (type-level,
-    # Zipf-collapsed), per-class token totals, vocab size, class doc
-    # counts. n_train = Σ dc — no separate corpus count job.
-    # ONE driver action for the whole model skeleton (round-9 fix for the
-    # round-8 +41% bench regression, which came from an extra collect
-    # round-trip): the rollup over the checkpointed type table (grand-total
-    # row g=1 carries the distinct-count domain + vocab size, per-class
-    # rows g=0 carry token totals) is UNIONed with the class doc-count agg
-    # (tagged g=2, column-pruned scan — Catalyst drops the split(text))
-    # and collected once.
+    # Driver-side literal derivation (all from the materialized checkpoint +
+    # one train count scan): DISTINCT count values (type-level,
+    # Zipf-collapsed), per-class token totals, vocab size, class doc counts.
+    # n_train = Σ dc — no separate corpus count job. ONE driver action for the
+    # whole model skeleton (an extra collect round-trip cost +41% bench time):
+    # the rollup over the checkpointed type table (grand-total row g=1 carries
+    # the distinct-count domain + vocab size, per-class rows g=0 carry token
+    # totals) is UNIONed with the class doc-count agg (tagged g=2,
+    # column-pruned scan — Catalyst drops the split(text)) and collected once.
     rollup = wc.rollup("clang").agg(
         F.sum("c").alias("tok"),
         F.collect_set("c").alias("cs"),
@@ -942,7 +908,7 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     if total is None:
         # Empty/degenerate training corpus: a rollup over empty input
         # emits no grand-total row; degrade to an empty confusion matrix
-        # (the pre-round-8 behavior) instead of raising.
+        # instead of raising.
         return spark.createDataFrame(
             [], "actual_lang string, predicted_lang string, n_docs long"
         )
@@ -952,7 +918,7 @@ def ml_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_train = sum(dc.values())
     # Class priors and normalizers are PYTHON ints at this point — inline
     # them as literals instead of crossJoin-ing a 5-row classtab and
-    # window-ranking 5 rows per doc (the round-8 shape): the per-class
+    # window-ranking 5 rows per doc: the per-class
     # score becomes a codegen column, and the argmax a struct-max over a
     # literal array. Removes one shuffle (the (doc,class) groupBy), the
     # broadcast crossJoin, and the ranking window from the scoring DAG.
@@ -1369,7 +1335,7 @@ def ml_woe_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     WOE = ln(P(bin|pos)) − ln(P(bin|neg)) for a binary target (urgent
     priority), plus the per-bin rate gap that feeds information value.
 
-    Exactness (by construction since round 8): WOE decomposes into four
+    Exactness (by construction): WOE decomposes into four
     lns of Laplace-smoothed INTEGER counts (+1 per bin, +10 = n_bins on
     totals). Those integers live in a <=22-value domain derived from the
     <=10-row histogram, so the micro-nat quantization round(1e6*ln(n))

@@ -30,7 +30,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
+from biglake_iceberg_python_spark.functions.exprs import (
+    oracle_valid_embeddings,
+    oracle_words,
+    valid_embedding,
+    words,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -73,12 +78,12 @@ def decode_image_stub(payload: bytes) -> tuple[int, int, int]:
     checksum = 0
     # Code-point walk, not byte walk: the SQL twin replays the hash with
     # ord(substr(text, i, 1)) — code points — and on multibyte text a
-    # byte walk diverges (round-10 unicode parity axis). Identical on
+    # byte walk diverges. Identical on
     # ASCII, where byte == code point. The stub's payload contract is
     # therefore UTF-8 text bytes; any other binary payload is by
     # definition a real-codec payload, which is this build's explicit
     # NotImplementedError seam — not a UnicodeDecodeError escaping a
-    # Python worker (round-11 ADVICE).
+    # Python worker.
     try:
         data = payload.decode("utf-8")
     except UnicodeDecodeError as exc:
@@ -99,8 +104,8 @@ def _decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     and lets a real decoder release the GIL / use vectorized libs.
     """
     for pdf in batches:
-        # NULL payload = nothing to decode: skip the row (round-10
-        # degenerate sweep — bytes(None) raised in the worker), exactly
+        # NULL payload = nothing to decode: skip the row (bytes(None)
+        # raises in the worker), exactly
         # as the oracle's recursive CTE drops NULL-text docs. Empty
         # payloads stay: checksum 0, the 16x16 floor dimensions.
         pdf = pdf[pdf["payload"].notna()]
@@ -145,7 +150,7 @@ def _with_binary_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
       source,
       CAST(COUNT(*) AS BIGINT) AS n_payloads,
       -- strlen, not length: the payload is the UTF-8 ENCODING of text,
-      -- so its size is bytes, not code points (round-10 unicode axis).
+      -- so its size is bytes, not code points.
       CAST(SUM(strlen(text)) AS BIGINT) AS total_payload_bytes,
       CAST(MAX(strlen(text)) AS BIGINT) AS max_payload_bytes,
       min(md5(text)) AS min_payload_md5
@@ -178,7 +183,7 @@ def multimodal_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 31-polynomial rolling hash mod 2^31 over the first 64 CODE POINTS of
     # the decoded payload — SQL-expressible because ord(substr(text, i, 1))
     # is exactly the stub's ord(ch) on every engine (byte == code point on
-    # ASCII; round-10 unicode axis pinned the multibyte case), so a
+    # ASCII, and the multibyte case is pinned), so a
     # recursive CTE replays the exact per-doc checksum and the aggregate is
     # hash-checked rather than rows-only.
     oracle="""
@@ -269,17 +274,15 @@ def _frame_sample_batches(
     for pdf in batches:
         out: dict[str, list] = {"doc_id": [], "frame_idx": [], "frame_md5": []}
         for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-            # NULL payload → zero frames, like the oracle's NULL-length
-            # join predicate (round-10 degenerate sweep).
-            # Code-point windows, not byte windows: a byte window can
-            # split a multibyte character mid-sequence, which the SQL
-            # twin's substr cannot express (round-10 unicode parity
-            # axis); each frame is md5'd over its UTF-8 re-encoding, the
-            # same bytes DuckDB's md5(substr(..)) hashes. Identical on
-            # ASCII payloads. Same UTF-8 payload contract as
-            # decode_image_stub: a non-UTF-8 payload is a real-media
-            # payload and surfaces as the explicit codec seam rather
-            # than a stray UnicodeDecodeError (round-11 ADVICE).
+            # NULL payload → zero frames, like the oracle's NULL-length join
+            # predicate. Code-point windows, not byte windows: a byte window
+            # can split a multibyte character mid-sequence, which the SQL
+            # twin's substr cannot express; each frame is md5'd over its UTF-8
+            # re-encoding, the same bytes DuckDB's md5(substr(..)) hashes.
+            # Identical on ASCII payloads. Same UTF-8 payload contract as
+            # decode_image_stub: a non-UTF-8 payload is a real-media payload
+            # and surfaces as the explicit codec seam rather than a stray
+            # UnicodeDecodeError.
             try:
                 data = (
                     bytes(payload).decode("utf-8")
@@ -391,15 +394,12 @@ def multimodal_dedup_payload(spark: SparkSession, sf_dir: str) -> DataFrame:
         len({oracle_words('d.text')})
           AS n_tokens,
         strlen(d.text) AS payload_bytes,
-        CAST(FLOOR(1e6 * sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                               e.embedding::DOUBLE[])))
+        CAST(FLOOR(1e6 * sqrt(list_dot_product(
+               embeddings.embedding::DOUBLE[], embeddings.embedding::DOUBLE[])))
              AS BIGINT) AS norm_micro
       FROM documents d
-      JOIN (SELECT * FROM embeddings WHERE len(embedding) = 64
-            AND len(list_filter(embedding,
-                    x -> x IS NULL OR NOT isfinite(x::DOUBLE)
-                         OR abs(x::DOUBLE) > 8.0)) = 0) e
-        ON d.doc_id = e.vec_id
+      JOIN {oracle_valid_embeddings(nonzero=False)}
+        ON d.doc_id = embeddings.vec_id
     )
     SELECT
       source,
@@ -428,25 +428,11 @@ def multimodal_training_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the same exactness convention as the LM-surprisal sums.
     """
     mm = _with_binary_payload(spark, sf_dir)
-    # Records need a WELL-FORMED embedding (exactly 64 components — NULL
-    # and wrong-dim failed-encoder rows drop out of the join on both
-    # engines; zero-norm stays, norm 0 is representable) and a NULL
-    # payload tokenizes to zero tokens (round-10 degenerate sweep: the
-    # uncoalesced size(split(NULL)) subtracted one token per NULL doc
-    # under ANSI-off sessions).
-    # |component| <= 8 is the engine-wide embedding contract (round-11
-    # magnitude class): a FINITE huge component passes every isfinite
-    # tier and then overflows the norm's BIGINT micro-quantization —
-    # DuckDB raises, Spark floors garbage.
-    e = load_table(spark, sf_dir, "embeddings").filter(
-        (F.size("embedding") == 64)
-        & F.forall(
-            F.transform("embedding", lambda x: x.cast("double")),
-            lambda x: x.isNotNull()
-            & ~F.isnan(x)
-            & (F.abs(x) <= F.lit(8.0)),
-        )
-    )
+    # Records need a valid embedding (invalid rows drop out of the join
+    # on both engines; zero-norm stays, norm 0 is representable — and a
+    # FINITE huge component would overflow the norm's BIGINT
+    # micro-quantization). A NULL payload tokenizes to zero tokens.
+    e = load_table(spark, sf_dir, "embeddings").filter(valid_embedding())
     ev = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     dot = F.aggregate(
         F.zip_with(ev, ev, lambda a, b: a * b),

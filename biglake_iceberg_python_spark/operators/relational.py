@@ -16,22 +16,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from biglake_iceberg_python_spark.functions.exprs import dec, oracle_cents, oracle_dsum
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
 
 @query(
     "pricing_summary",
-    oracle="""
+    oracle=f"""
     WITH c AS (
       SELECT
         l_returnflag,
         l_linestatus,
-        CAST(round(CAST(l_quantity AS DECIMAL(18,2)) * 100) AS BIGINT) AS qc,
-        CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100) AS BIGINT)
-          AS pc,
-        CAST(round(CAST(l_discount AS DECIMAL(18,2)) * 100) AS BIGINT) AS dc,
-        CAST(round(CAST(l_tax AS DECIMAL(18,2)) * 100) AS BIGINT) AS tc
+        {oracle_cents('l_quantity')} AS qc,
+        {oracle_cents('l_extendedprice')} AS pc,
+        {oracle_cents('l_discount')} AS dc,
+        {oracle_cents('l_tax')} AS tc
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '2002-09-02 00:00:00'
     )
@@ -334,10 +334,10 @@ def sql_pipe_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "util_observe_metrics",
-    oracle="""
+    oracle=f"""
     SELECT
       CAST(COUNT(*) AS BIGINT) AS n_scanned,
-      CAST(CAST(SUM(CAST(l_quantity AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS total_qty,
+      {oracle_dsum('l_quantity')} AS total_qty,
       CAST(COUNT(*) FILTER (WHERE l_shipdate IS NULL) AS BIGINT)
         AS null_ship_dates,
       CAST(COUNT(*) FILTER (WHERE l_discount > 0.05) AS BIGINT) AS n_kept
@@ -365,7 +365,7 @@ def util_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     observed = li.observe(
         obs,
         F.count(F.lit(1)).alias("n_scanned"),
-        F.sum(F.col("l_quantity").cast("decimal(30,6)")).alias("qty_dec"),
+        F.sum(dec("l_quantity")).alias("qty_dec"),
         F.count(F.when(F.col("l_shipdate").isNull(), 1)).alias(
             "null_ship_dates"
         ),
@@ -377,7 +377,7 @@ def util_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = obs.get
     # Empty scan: the observed SUM is None (NULL), matching the oracle's
-    # SUM over zero rows (round-10 empty-table parity axis).
+    # SUM over zero rows.
     qty = m["qty_dec"]
     return spark.range(1).select(
         F.lit(m["n_scanned"]).cast("long").alias("n_scanned"),
@@ -391,12 +391,12 @@ def util_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_group_order_by_all",
-    oracle="""
+    oracle=f"""
     SELECT
       o_orderstatus,
       o_orderpriority,
       CAST(COUNT(*) AS BIGINT) AS n_orders,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS total_price
+      {oracle_dsum('o_totalprice')} AS total_price
     FROM orders
     GROUP BY ALL
     ORDER BY ALL
@@ -413,14 +413,13 @@ def sql_group_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis-time only, zero plan cost.
     """
     return spark.sql(
-        """
+        f"""
         SELECT
           o_orderstatus,
           o_orderpriority,
           CAST(COUNT(*) AS BIGINT) AS n_orders,
-          CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE)
-            AS total_price
-        FROM {orders}
+          {oracle_dsum('o_totalprice')} AS total_price
+        FROM {{orders}}
         GROUP BY ALL
         ORDER BY ALL
         """,
@@ -468,14 +467,13 @@ def sql_identifier_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sql_named_window",
-    oracle="""
+    oracle=f"""
     SELECT
       l_orderkey,
       l_linenumber,
       l_returnflag,
       ROW_NUMBER() OVER w AS rn,
-      CAST(SUM(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
-               AS BIGINT)) OVER w AS BIGINT) AS running_cents
+      CAST(SUM({oracle_cents('l_extendedprice')}) OVER w AS BIGINT) AS running_cents
     FROM lineitem
     WHERE l_quantity >= 45
     WINDOW w AS (PARTITION BY l_returnflag
@@ -495,15 +493,14 @@ def sql_named_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     share ONE exchange + sort, zero extra plan cost.
     """
     return spark.sql(
-        """
+        f"""
         SELECT
           l_orderkey,
           l_linenumber,
           l_returnflag,
           ROW_NUMBER() OVER w AS rn,
-          CAST(SUM(CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
-                   AS BIGINT)) OVER w AS BIGINT) AS running_cents
-        FROM {lineitem}
+          CAST(SUM({oracle_cents('l_extendedprice')}) OVER w AS BIGINT) AS running_cents
+        FROM {{lineitem}}
         WHERE l_quantity >= 45
         WINDOW w AS (PARTITION BY l_returnflag
                      ORDER BY l_extendedprice NULLS LAST,

@@ -28,7 +28,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
+from biglake_iceberg_python_spark.functions.exprs import (
+    oracle_valid_embeddings,
+    oracle_words,
+    words,
+)
 from biglake_iceberg_python_spark.operators.similarity import (
     _dot,
     _valid_embeddings,
@@ -56,7 +60,7 @@ def _spark_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stage 1: one aggregation row (N, Σdl, df per term) — broadcast.
     Stage 2: map-side tf + score, no shuffle until the caller's top-k.
 
-    Widen (round 13): both corpus passes (stats + scoring) tokenize and
+    Widen: both corpus passes (stats + scoring) tokenize and
     count term frequencies map-side; on the testdata's single-row-group
     scan they single-thread. Filling scan parallelism (one doc-row
     round-robin exchange, a no-op on multi-split data) cut the sf0.1
@@ -188,12 +192,13 @@ def text_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
       ORDER BY bm25_micro DESC, doc_id
       LIMIT {_FUSE_DEPTH}
     ), q AS (
-      SELECT embedding::DOUBLE[] AS qv FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id = 0
+      SELECT embedding::DOUBLE[] AS qv FROM {oracle_valid_embeddings()} WHERE vec_id = 0
     ), cos AS (
       SELECT vec_id AS doc_id,
              list_dot_product(qv, cv)
                / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)) AS cosine
-      FROM (SELECT vec_id, embedding::DOUBLE[] AS cv FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id <> 0)
+      FROM (SELECT vec_id, embedding::DOUBLE[] AS cv
+            FROM {oracle_valid_embeddings()} WHERE vec_id <> 0)
            CROSS JOIN q
     ), vec AS (
       SELECT doc_id, ROW_NUMBER() OVER (ORDER BY cosine DESC, doc_id) AS rank_vec
@@ -240,9 +245,8 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "rank_bm25")
     )
-    # The shared validity tier (round-10 review finding: this was the one
-    # cosine consumer left reading raw embeddings — a wrong-dimension row
-    # crashes DuckDB's list_dot_product while Spark's zip_with NULL-pads).
+    # The shared validity tier: a wrong-dimension row crashes DuckDB's
+    # list_dot_product while Spark's zip_with NULL-pads.
     e = _valid_embeddings(spark, sf_dir)
     to_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     q = e.filter(F.col("vec_id") == 0).select(to_double.alias("qv"))

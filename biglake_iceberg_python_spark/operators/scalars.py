@@ -18,7 +18,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import oracle_words, words
+from biglake_iceberg_python_spark.functions.exprs import (
+    oracle_cents,
+    oracle_words,
+    words,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -33,7 +37,7 @@ from biglake_iceberg_python_spark.sources.tables import load_table
       substr(p_name, 1, 5) AS name_prefix,
       length(p_name) AS name_len,
       -- concat_ws (skip-NULL) like the Spark side: plain concat treats
-      -- NULL as '' and leaves the separator in (round-12 dims axis)
+      -- NULL as '' and leaves the separator in
       concat_ws(':', p_brand, p_type) AS brand_type,
       trim('  ' || p_type || ' ') AS type_trimmed,
       replace(p_name, ' ', '_') AS name_snake,
@@ -180,12 +184,11 @@ def scalar_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "scalar_math",
-    oracle="""
+    oracle=f"""
     SELECT
       l_orderkey,
       l_linenumber,
-      CAST((CAST(round(CAST(l_extendedprice AS DECIMAL(18,2)) * 100)
-                 AS BIGINT)
+      CAST(({oracle_cents('l_extendedprice')}
             + CASE WHEN l_extendedprice < 0 THEN -5 ELSE 5 END) // 10
            AS DOUBLE) / 10
         AS price_round1,
@@ -208,24 +211,24 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
     The round() goes through DECIMAL(18,2) first: rounding a raw DOUBLE at a
     decimal boundary is oracle-VERSION-dependent (a price of 26612.55 is
     binary ≈26612.549999999999, and engines disagree on whether to round the
-    shortest decimal repr half-up or truncate the true binary value — this
-    was round 3's one driver-red row). The Spark body demos
+    shortest decimal repr half-up or truncate the true binary value). The
+    Spark body demos
     ``F.round(decimal, 1)`` (HALF_UP per Spark's Decimal spec); the ORACLE
     does not mirror the decimal round — a 2dp price rounded to 1dp is a
     halfway tie on every ``.x5`` (6,013 rows at sf0.01, the same tie-dense
-    hazard class as round-8's ``sql_temp_function`` red), so the oracle
+    hazard class as ``sql_temp_function``), so the oracle
     instead computes half-up by pure integer arithmetic
     (``(cents + 5) // 10``), which has no tie for any engine to break. The
     hash therefore pins Spark's decimal HALF_UP against the integer
     formula — bit-deterministic on both sides by construction.
 
     ln() is NOT correctly rounded by either engine's libm (JVM Math.log vs
-    DuckDB's system libm drift in the last ulp on ~2% of rows — round 4's
-    driver-red root cause), so price_ln is cast to REAL on both sides: a
-    1-ulp double disagreement survives float32 rounding with probability
-    ~2^-29. pow() is likewise not guaranteed correctly rounded, so disc_sq
-    is a plain IEEE multiply (exact) on both sides. abs/ceil/floor/sqrt/mod
-    ARE correctly rounded per IEEE 754 and compare bit-exactly as doubles.
+    DuckDB's system libm drift in the last ulp on ~2% of rows), so price_ln is
+    cast to REAL on both sides: a 1-ulp double disagreement survives float32
+    rounding with probability ~2^-29. pow() is likewise not guaranteed
+    correctly rounded, so disc_sq is a plain IEEE multiply (exact) on both
+    sides. abs/ceil/floor/sqrt/mod ARE correctly rounded per IEEE 754 and
+    compare bit-exactly as doubles.
     """
     li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_orderkey") % 50 == 0)
     return li.select(
@@ -238,7 +241,7 @@ def scalar_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ceil(F.col("l_quantity") / 7).alias("qty_ceil"),
         F.floor(F.col("l_extendedprice") / 1000).alias("price_kfloor"),
         (F.col("l_discount") * F.col("l_discount")).alias("disc_sq"),
-        # Domain-guarded on both engines (round-12 warehouse axis): a
+        # Domain-guarded on both engines: a
         # negative price (credit line) RAISES in DuckDB's ln while Spark
         # returns NULL — ln is NULL for nonpositive input on both now.
         F.when(
@@ -318,7 +321,7 @@ def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct+sort (deterministic serialization), transform, filter.
     All HOFs run in codegen — no UDFs.
 
-    Degenerate-doc symmetry (round-10 array_to_string audit): text
+    Degenerate-doc symmetry: text
     coalesces to '' on both engines (Spark's size(split(NULL)) is -1 and
     DuckDB's len(NULL) is NULL), and the serialized vocab/words_upper of
     an EMPTY word list is pinned to '' on both (Spark's array_join([])
@@ -332,8 +335,8 @@ def scalar_array(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(F.array_sort(F.array_distinct(ws_col)), ",").alias("vocab"),
         # ASCII translate, not upper(): Unicode casing is an ENGINE
         # convention, not a standard — Spark full-folds upper('ß')='SS',
-        # upper('ﬁ')='FI' where DuckDB maps simply to 'ẞ' / 'ﬁ'
-        # (round-10 unicode parity axis). The a-z translate is the
+        # upper('ﬁ')='FI' where DuckDB maps simply to 'ẞ' / 'ﬁ'.
+        # The a-z translate is the
         # deterministic cross-engine contract; identical to upper() on
         # ASCII words.
         F.array_join(
@@ -616,7 +619,7 @@ def scalar_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
       -- NULL text => NULL verdict on BOTH engines: the Spark side's
       -- byte-cap gate is NULL-valued for NULL text, while a bare ELSE 0
       -- here would claim a failed roundtrip for a payload that does not
-      -- exist (round-10 review finding).
+      -- exist.
       CASE WHEN text IS NULL THEN NULL
            WHEN strlen(substr(text, 1, 57)) > 57 THEN NULL
            WHEN decode(from_base64(base64(encode(substr(text, 1, 57)))))
@@ -642,7 +645,7 @@ def scalar_binary_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     line breaks past 76 output chars where DuckDB never does (the one
     cross-engine divergence in this battery, documented instead of
     papered over). A char-sliced prefix of multibyte text can exceed the
-    byte cap (round-10 unicode parity axis), so both engines NULL the
+    byte cap, so both engines NULL the
     base64 columns for any slice whose UTF-8 encoding is > 57 bytes — a
     no-op on ASCII, where 57 chars ARE 57 bytes. Pure codegen string ops.
     """
@@ -681,7 +684,7 @@ def scalar_binary_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       doc_id,
       CAST(len(ws) AS BIGINT) AS n_words,
-      -- COALESCE to the fold identities (round-10 degenerate sweep):
+      -- COALESCE to the fold identities:
       -- DuckDB's list_sum/list_max of an EMPTY list are NULL, while the
       -- Spark fold's zero-token result is its (0, 0, 0) init struct.
       CAST(COALESCE(list_sum(list_transform(ws, x -> length(x))), 0)
@@ -769,7 +772,7 @@ def scalar_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     return p.select(
         "p_partkey",
         # guarded: ANSI-off size(NULL) is -1 while len(NULL) is NULL
-        # (round-12 dims axis)
+        #
         F.when(
             F.col("p_name").isNotNull(),
             F.size(F.regexp_extract_all("p_name", F.lit("[a-z]+"), F.lit(0))),

@@ -21,6 +21,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from biglake_iceberg_python_spark.functions.exprs import (
+    EMB_DIM,
+    oracle_valid_embeddings,
+    valid_embedding,
+)
 from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -32,7 +37,6 @@ _TOP_K = 10
 # L buys recall linearly in cost.
 _LSH_K = 4
 _LSH_L = 16
-_DIM = 64
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -52,16 +56,13 @@ def _as_double(col: str) -> Column:
 def _valid_embeddings(
     spark: SparkSession, sf_dir: str, with_norm2: bool = False
 ) -> DataFrame:
-    """The embeddings rows a distance/cosine pipeline can score: exactly
-    _DIM components (excludes NULL and wrong-dim failed-encoder rows —
-    session-invariantly: size() of NULL is -1 with ANSI off and NULL with
-    ANSI on, both ≠ _DIM) and nonzero norm (cosine undefined; DuckDB's
-    list_dot_product raises on NULL/mismatched lists). Every similarity
-    oracle wraps its embeddings scan in the identical SQL predicate, so
-    degenerate rows are excluded SYMMETRICALLY — round-10 degenerate
-    parity sweep, generalizing the round-9 dedup_embedding_cosine fix.
-    On a clean corpus the filter keeps every row and the plan cost is one
-    codegen predicate on the scan.
+    """The embeddings rows a distance/cosine pipeline can score:
+    :func:`valid_embedding` (exactly EMB_DIM non-NULL, finite components of
+    |x| <= 8) and nonzero norm (cosine undefined). Every similarity
+    oracle scans :func:`oracle_valid_embeddings` instead of the table, so
+    degenerate rows are excluded SYMMETRICALLY. On a clean corpus the
+    filter keeps every row and the plan cost is one codegen predicate on
+    the scan.
 
     ``with_norm2=True`` keeps the filter's norm² fold as a ``_n2``
     column so cosine consumers reuse it instead of re-folding per row —
@@ -70,29 +71,11 @@ def _valid_embeddings(
     ``sqrt(dot(a,a) * dot(b,b))`` because _n2 IS the same sequential
     fold.
 
-    Finiteness is EXPLICIT (round-10 NaN/Inf probe): `norm² > 0` does
-    NOT exclude non-finite vectors — both engines order NaN above
-    everything, so `NaN > 0` and `Inf > 0` are TRUE — and once such a
-    vector is in, DuckDB's DECIMAL quantizations raise where Spark
-    ANSI-off silently NULLs (crash-vs-garbage). A NULL component counts
-    as non-finite on both sides.
-
-    |component| <= 8 is the engine-wide embedding contract (round 11,
-    the embeddings mirror of the events |v| < 1e4 fold): a FINITE huge
-    component (1e19, 1e200) passes every isfinite tier and then
-    overflows the family's integer/DECIMAL quantization grids — IVF
-    centroid micro-units, PQ codebooks, int8 scales, norm micros —
-    where DuckDB raises and Spark wraps or NULLs, the worst divergence
-    shape. 8 is an order of magnitude above any normalized embedding's
-    component range (a unit vector's max |component| is 1) and keeps
-    every downstream quantization inside int64."""
-    finite = F.forall(
-        _as_double("embedding"),
-        lambda x: x.isNotNull() & ~F.isnan(x) & (F.abs(x) <= F.lit(8.0)),
-    )
+    The component check is not redundant with `norm² > 0`: both engines
+    order NaN above everything, so `NaN > 0` and `Inf > 0` are TRUE."""
     e = load_table(spark, sf_dir, "embeddings").withColumn(
         "_n2", _dot(_as_double("embedding"), _as_double("embedding"))
-    ).filter((F.size("embedding") == _DIM) & finite & (F.col("_n2") > 0))
+    ).filter(valid_embedding() & (F.col("_n2") > 0))
     return e if with_norm2 else e.drop("_n2")
 
 
@@ -101,10 +84,10 @@ def _valid_embeddings(
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id < {_N_QUERIES}
+      FROM {oracle_valid_embeddings()} WHERE vec_id < {_N_QUERIES}
     ), c AS (
       SELECT vec_id AS cid, label, embedding::DOUBLE[] AS cv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      FROM {oracle_valid_embeddings()}
     ), scored AS (
       SELECT
         q.qid, c.cid, c.label,
@@ -175,7 +158,7 @@ def _plane(global_j: int) -> Column:
                 (((global_j + 1) * 73856093 + d * 19349663 + global_j * d * 83492791)
                  % 2001 - 1000) / 1000.0
             )
-            for d in range(_DIM)
+            for d in range(EMB_DIM)
         ]
     )
 
@@ -254,13 +237,13 @@ def sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "sim_label_centroids",
-    oracle="""
+    oracle=f"""
     WITH expanded AS (
       SELECT
         label,
         generate_subscripts(embedding, 1) AS dim,
         CAST(unnest(embedding) AS DOUBLE) AS comp
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      FROM {oracle_valid_embeddings()}
     )
     SELECT
       label,
@@ -292,7 +275,7 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q40 = F.lit(1099511627776.0)  # 2^40
     return expanded.groupBy("label").agg(
-        (F.count(F.lit(1)) / _DIM).cast("long").alias("n_vectors"),
+        (F.count(F.lit(1)) / EMB_DIM).cast("long").alias("n_vectors"),
         (F.sum(F.floor(F.col("comp") * q40)).cast("double") / q40).alias(
             "sum_all_components"
         ),
@@ -302,9 +285,9 @@ def sim_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "dedup_embedding_cosine",
-    oracle="""
+    oracle=f"""
     WITH v AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM {oracle_valid_embeddings()}
     ), pairs AS (
       SELECT
         a.vec_id AS vec_a, b.vec_id AS vec_b,
@@ -330,15 +313,15 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ground-truth/verification tier of that pipeline.
 
     NULL, zero-norm, AND wrong-dimension vectors are excluded on BOTH
-    engines (size = {_DIM} plus norm > 0): cosine is undefined for the
+    engines (size = {EMB_DIM} plus norm > 0): cosine is undefined for the
     first two, and under Spark's default ANSI mode the bare division
     would abort the whole job on the first degenerate vector a real
     embedding pipeline emits (failed encoder calls land as NULL/empty
-    rows). The dimension predicate (round-9 ADVICE) closes a
+    rows). The dimension predicate closes a
     crash-vs-drop divergence: a wrong-dim row passes norm > 0 on both
     engines, then Spark's zip_with NULL-pads the mismatched pair
     (silently dropped) while DuckDB's list_dot_product raises on length
-    mismatch — the same _KM_DIM filter kmeans/coreset already carry.
+    mismatch — the same EMB_DIM filter kmeans/coreset already carry.
     """
     e = _valid_embeddings(spark, sf_dir)
     a = e.select(
@@ -378,7 +361,7 @@ _IVF_NPROBE = 6  # lists probed per query
 
 _IVF_ORACLE = f"""
     WITH v AS (
-      SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      SELECT vec_id, label, embedding::DOUBLE[] AS ev FROM {oracle_valid_embeddings()}
     ), comp AS (
       SELECT vec_id % {_IVF_K} AS list_id,
              generate_subscripts(ev, 1) AS dim,
@@ -540,10 +523,10 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qv, label AS true_label
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id < {_N_QUERIES}
+      FROM {oracle_valid_embeddings()} WHERE vec_id < {_N_QUERIES}
     ), c AS (
       SELECT vec_id AS cid, label, embedding::DOUBLE[] AS cv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      FROM {oracle_valid_embeddings()}
     ), scored AS (
       SELECT
         q.qid, c.cid, c.label,
@@ -610,7 +593,7 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH comp AS (
       SELECT vec_id, label, generate_subscripts(embedding, 1) AS dim,
              CAST(unnest(embedding) AS DOUBLE) AS x
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      FROM {oracle_valid_embeddings()}
     ), stats AS (
       SELECT dim, MIN(x) AS lo, MAX(x) AS hi FROM comp GROUP BY dim
     ), coded AS (
@@ -628,7 +611,7 @@ def sim_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM coded GROUP BY vec_id
     ), q AS (
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id < {_N_QUERIES}
+      FROM {oracle_valid_embeddings()} WHERE vec_id < {_N_QUERIES}
     ), scored AS (
       SELECT qid, cid, label, code_sum, list_dot_product(qv, rv) AS adot
       FROM q CROSS JOIN cand WHERE qid <> cid
@@ -662,8 +645,8 @@ def sim_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _valid_embeddings(spark, sf_dir)
     vecs = e.select("vec_id", "label", _as_double("embedding").alias("v"))
     stats = vecs.agg(
-        F.array(*[F.min(F.get("v", d)) for d in range(_DIM)]).alias("lo"),
-        F.array(*[F.max(F.get("v", d)) for d in range(_DIM)]).alias("hi"),
+        F.array(*[F.min(F.get("v", d)) for d in range(EMB_DIM)]).alias("lo"),
+        F.array(*[F.max(F.get("v", d)) for d in range(EMB_DIM)]).alias("hi"),
     )
 
     with_stats = vecs.crossJoin(F.broadcast(stats))
@@ -812,7 +795,7 @@ _SEM_T = 0.5  # within-cluster cosine threshold for semantic duplicates
     "dedup_semantic_ivf",
     oracle=f"""
     WITH base AS (
-      SELECT vec_id, embedding::DOUBLE[] AS ev FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      SELECT vec_id, embedding::DOUBLE[] AS ev FROM {oracle_valid_embeddings()}
     ), v AS (
       -- deterministic planted duplicates: every 50th vector re-enters the
       -- corpus as an exact copy under a high id (paraphrase stand-in)
@@ -958,7 +941,7 @@ _PQ_K = 16  # codes per sub-codebook → 4 codes of 4 bits each per vector
 
 _PQ_ORACLE = f"""
     WITH v AS (
-      SELECT vec_id, embedding::DOUBLE[] AS ev FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      SELECT vec_id, embedding::DOUBLE[] AS ev FROM {oracle_valid_embeddings()}
     ), sub AS (
       SELECT vec_id, s,
              ev[s * {_PQ_SUBDIM} + 1 : s * {_PQ_SUBDIM} + {_PQ_SUBDIM}] AS sv
@@ -1122,9 +1105,9 @@ _MRL_SHORTLIST = 30
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id < {_N_QUERIES}
+      FROM {oracle_valid_embeddings()} WHERE vec_id < {_N_QUERIES}
     ), c AS (
-      SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM {oracle_valid_embeddings()}
     ), coarse AS (
       SELECT
         q.qid, c.cid, q.qv, c.cv,
@@ -1237,9 +1220,10 @@ _RANGE_TAU = 0.28  # ~p99 of the cosine distribution → a few hits per query
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id < {_N_QUERIES}
+      FROM {oracle_valid_embeddings()} WHERE vec_id < {_N_QUERIES}
     ), c AS (
-      SELECT vec_id AS cid, label, embedding::DOUBLE[] AS cv FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      SELECT vec_id AS cid, label, embedding::DOUBLE[] AS cv
+      FROM {oracle_valid_embeddings()}
     )
     SELECT
       q.qid, c.cid, c.label,
@@ -1292,9 +1276,9 @@ def sim_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH q AS (
       SELECT vec_id AS qid, embedding::DOUBLE[] AS qv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id < {_N_QUERIES}
+      FROM {oracle_valid_embeddings()} WHERE vec_id < {_N_QUERIES}
     ), c AS (
-      SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings
+      SELECT vec_id AS cid, embedding::DOUBLE[] AS cv FROM {oracle_valid_embeddings()}
     ), scored AS (
       SELECT q.qid, c.cid, list_dot_product(q.qv, c.cv) AS dot
       FROM q CROSS JOIN c WHERE q.qid <> c.cid
@@ -1402,10 +1386,10 @@ def _mmr_oracle() -> str:
     )""")
     return f"""
     WITH q AS (
-      SELECT embedding::DOUBLE[] AS qv FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id = 0
+      SELECT embedding::DOUBLE[] AS qv FROM {oracle_valid_embeddings()} WHERE vec_id = 0
     ), c AS (
       SELECT vec_id AS cid, embedding::DOUBLE[] AS cv
-      FROM (SELECT * FROM embeddings WHERE len(embedding) = 64 AND len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(x::DOUBLE) OR abs(x::DOUBLE) > 8.0)) = 0 AND list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) embeddings WHERE vec_id <> 0
+      FROM {oracle_valid_embeddings()} WHERE vec_id <> 0
     ), scored AS (
       SELECT c.cid, c.cv,
              list_dot_product(q.qv, c.cv)

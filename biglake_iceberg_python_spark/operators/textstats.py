@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 
 from biglake_iceberg_python_spark.functions.exprs import (
     adjacent_pairs,
+    davg,
+    dsum,
     oracle_davg,
     oracle_words,
     words,
@@ -67,16 +69,15 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword ratio — the standard cheap filters before expensive pipeline
     stages. One pass, one 5-group shuffle.
 
-    Empty/NULL documents (n_words = 0) contribute NULL ratios via
-    NULLIF on both engines — under Spark's default ANSI mode a bare
-    division would ABORT the whole job on the first empty doc (real
-    corpora always contain some), while DuckDB would return inf; NULLIF
-    makes both engines skip those rows in the ratio sums identically.
-    The ratio means divide by the count of DEFINED ratios, not n_docs
-    (round-10 degenerate sweep: oracle_davg's COUNT(expr) skips NULLs,
-    and a COUNT(*) denominator silently deflated both averages on any
-    corpus with empty docs): "mean chars-per-word among docs that have
-    words" is also the statistic a quality filter actually wants.
+    Empty/NULL documents (n_words = 0) contribute NULL ratios via NULLIF on
+    both engines — under Spark's default ANSI mode a bare division would ABORT
+    the whole job on the first empty doc (real corpora always contain some),
+    while DuckDB would return inf; NULLIF makes both engines skip those rows in
+    the ratio sums identically. The ratio means divide by the count of DEFINED
+    ratios, not n_docs (oracle_davg's COUNT(expr) skips NULLs; a COUNT(*)
+    denominator would deflate both averages on any corpus with empty docs):
+    "mean chars-per-word among docs that have words" is also the statistic a
+    quality filter actually wants.
     """
     d = load_table(spark, sf_dir, "documents")
     w = words()
@@ -92,13 +93,9 @@ def text_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     swr = F.col("n_stop").cast("double") / nw_nz
     return per_doc.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        (F.sum(F.col("n_words").cast("decimal(30,6)")).cast("double") / F.count(F.lit(1))).alias("avg_words"),
-        (
-            F.sum(cpw.cast("decimal(30,6)")).cast("double") / F.count(cpw)
-        ).alias("avg_chars_per_word"),
-        (
-            F.sum(swr.cast("decimal(30,6)")).cast("double") / F.count(swr)
-        ).alias("avg_stopword_ratio"),
+        (dsum("n_words") / F.count(F.lit(1))).alias("avg_words"),
+        davg(cpw, "avg_chars_per_word"),
+        davg(swr, "avg_stopword_ratio"),
         F.min("n_words").cast("long").alias("min_words"),
         F.max("n_words").cast("long").alias("max_words"),
     )
@@ -176,10 +173,10 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting two ways: whitespace split and a BPE-ish regex
     lexer (letter runs / digit runs / single punctuation) — the standard
-    pre-tokenizer shape. regexp_extract_all stays JVM-side. The lexer
-    input coalesces NULL text to '' on both engines (round-10 degenerate
-    sweep: Spark's size(regexp_extract_all(NULL)) is -1 with ANSI off —
-    each NULL doc silently SUBTRACTED one token from its source)."""
+    pre-tokenizer shape. regexp_extract_all stays JVM-side. The lexer input
+    coalesces NULL text to '' on both engines (Spark's
+    size(regexp_extract_all(NULL)) is -1 with ANSI off —
+    each NULL doc would silently SUBTRACT one token from its source)."""
     d = load_table(spark, sf_dir, "documents")
     return d.groupBy("source").agg(
         F.sum(F.size(words())).cast("long").alias("ws_tokens"),
@@ -319,8 +316,8 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     stages are partial-aggregated; the idf values join back from a
     broadcast literal table.
 
-    Exactness (by construction since round 8, the ml_woe_binning pattern
-    with RATIONAL arguments): idf = ln(n_docs/doc_freq) is an integer
+    Exactness (by construction, the ml_woe_binning pattern with
+    RATIONAL arguments): idf = ln(n_docs/doc_freq) is an integer
     micro-nat computed once in Python decimal arithmetic
     (functions/exactlog.py micro_nat_ratio) over the collected
     DISTINCT-doc-frequency domain (Zipf-collapsed, ≪ vocab) and inlined
@@ -445,10 +442,8 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed ONCE in Python decimal arithmetic (functions/exactlog.py)
     over the two collected DISTINCT-count domains (Zipf-collapsed ≪ |V|²)
     and inlined into both engines as broadcast literal joins / VALUES
-    joins — by construction since round 9, retiring the raw-round lint
-    exemption this query carried (its previous in-engine
-    ``round(1e6·ln(n))`` leaned on the measure-zero-tie argument that the
-    driver voted against twice in this hazard family). The per-doc sum is
+    joins — by construction, so no in-engine ``round(1e6·ln(n))`` leans
+    on a measure-zero-tie argument. The per-doc sum is
     exact int64 arithmetic — order- and partitioning-independent; the
     single double division at the end divides two exact integers, so it
     too is bit-stable.
@@ -467,7 +462,7 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     time ~15%: the checkpoint lineage hides the table's true size from
     AQE, so the hint is load-bearing.)
 
-    Widen (round 13): both corpus passes (model-build explode and the
+    Widen: both corpus passes (model-build explode and the
     scoring join + per-doc rollup partials) run below any keyed exchange;
     on the testdata's single-row-group scan they single-thread. Filling
     scan parallelism trims the sf0.1 median ~0.1s and halves the sample
@@ -506,8 +501,8 @@ def text_lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (distinct prefix counts, g=1); the shared checkpointed shuffle
         # stage runs once. Both domains are Zipf-collapsed count VALUES —
         # O(√instances) rows, never the type tables themselves. Memoized
-        # per sf_dir (round-9 verdict #4: this action ran inside every
-        # timed bench pass, +21%): the corpus under a given sf_dir is
+        # per sf_dir (unmemoized, this action ran inside every timed bench
+        # pass, +21%): the corpus under a given sf_dir is
         # immutable for the life of a process — the same argument
         # plans/registry.py:_BUILDER_CACHE already relies on, and tests
         # that craft their own tables write to a fresh tmp_path (new key).
@@ -879,7 +874,7 @@ def _zipf_oracle(sf_dir: str) -> str:
       CAST(sy AS BIGINT) AS sum_log_freq_micro,
       -- products-of-sums past 2^53: VARCHAR-routed conversion is
       -- correctly rounded on any DuckDB build (the native INT128->double
-      -- cast is not), matching Spark's path (round-11 magnitude hazard)
+      -- cast is not), matching Spark's path
       CAST(CAST(CAST(n * sxy - sx * sy AS VARCHAR) AS DOUBLE)
            / CAST(CAST(n * sxx - sx * sx AS VARCHAR) AS DOUBLE) AS DOUBLE)
         AS zipf_exponent
@@ -899,16 +894,15 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     degenerate corpora — a cheap corpus-health check beside the quality
     filters).
 
-    Exactness (by construction since round 8, the ml_woe_binning
-    pattern): log-rank (ranks 1..200, a STATIC domain) and log-frequency
-    (the head's 200 count values, collected from the cached head) are
-    integer micro-nats computed once in Python decimal arithmetic
-    (functions/exactlog.py) and inlined into both engines as literal map
-    lookups / VALUES joins — no ln runs anywhere. The normal-equation
-    sums combine in DECIMAL(38,0) so the products cannot overflow int64
-    in either engine; only the final slope division is floating point —
-    one IEEE op on identical exact inputs. The rank window runs over the
-    TYPE table, never corpus rows.
+    Exactness (by construction, the ml_woe_binning pattern): log-rank (ranks
+    1..200, a STATIC domain) and log-frequency (the head's 200 count values,
+    collected from the cached head) are integer micro-nats computed once in
+    Python decimal arithmetic (functions/exactlog.py) and inlined into both
+    engines as literal map lookups / VALUES joins — no ln runs anywhere. The
+    normal-equation sums combine in DECIMAL(38,0) so the products cannot
+    overflow int64 in either engine; only the final slope division is floating
+    point — one IEEE op on identical exact inputs. The rank window runs over
+    the TYPE table, never corpus rows.
     """
     from pyspark.sql import Window
 
@@ -960,7 +954,7 @@ def text_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         # try_divide: a single-type corpus has a ONE-rank head, so the
         # regression denominator n·Σx²−(Σx)² is exactly 0 — Spark 4 ANSI
         # raises DIVIDE_BY_ZERO on DOUBLE/0 where DuckDB and ANSI-off
-        # Spark return NULL (round-13 monodoc axis).
+        # Spark return NULL.
         F.try_divide(
             (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")).cast(
                 "double"
@@ -1799,9 +1793,8 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     query); all six training rounds run on the TYPE table (vocabulary-
     sized — orders of magnitude below the corpus), each round = one
     pair-count shuffle whose 1-row argmax is COLLECTED and applied as
-    literal strings in a map-side replace (round 14 — see _bpe_train for
-    the plan-shape rationale; the former TakeOrdered-broadcast-crossJoin
-    forced a localCheckpoint per round). This is exactly how industrial
+    literal strings in a map-side replace (see _bpe_train for the
+    plan-shape rationale). This is exactly how industrial
     BPE trainers distribute (type-level counting, driver-coordinated
     argmax) — at a 1M-type vocabulary each round's pair table is ~10M
     rows, trivial for a cluster. Token arrays never explode
@@ -1821,7 +1814,7 @@ def _bpe_train(
     """Run the 6-round trainer; return (final encoded type table, per-round
     merge tuples). Shared by text_bpe_train_merges and text_bpe_encode.
 
-    Round 14 (driver-overhead optimization): each round's argmax pair is
+    Each round's argmax pair is
     COLLECTED (one row — the driver-coordinated argmax industrial BPE
     trainers use) and applied as two string literals in the merge
     ``replace``, instead of the former 1-row localCheckpoint broadcast

@@ -30,7 +30,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import dsum, oracle_dsum
+from biglake_iceberg_python_spark.functions.exprs import (
+    dec,
+    dsum,
+    oracle_dec,
+    oracle_dsum,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -110,7 +115,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH all_sales AS (
       SELECT
         CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-        CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(30,6)) AS volume,
+        {oracle_dec(_REV)} AS volume,
         sn.n_name AS supp_nation
       FROM lineitem l
       JOIN orders o ON l.l_orderkey = o.o_orderkey
@@ -128,7 +133,7 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       o_year,
       CAST(CAST(SUM(CASE WHEN supp_nation = 'NATION_3' THEN volume
-               ELSE CAST(0 AS DECIMAL(30,6)) END) AS STRING) AS DOUBLE)
+               ELSE {oracle_dec(0)} END) AS STRING) AS DOUBLE)
         / CAST(CAST(SUM(volume) AS STRING) AS DOUBLE) AS mkt_share
     FROM all_sales
     GROUP BY o_year
@@ -163,10 +168,8 @@ def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     cn = n.select(
         F.col("n_nationkey").alias("cn_key"), F.col("n_regionkey").alias("cn_rkey")
     )
-    volume = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(30,6)"
-    )
-    zero = F.lit(0).cast("decimal(30,6)")
+    volume = dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    zero = dec(F.lit(0))
     sales = (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
@@ -286,9 +289,9 @@ def tpch_q12_priority_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     SELECT
       100.00 * CAST(CAST(SUM(CASE WHEN p.p_type = 'PROMO'
-                   THEN CAST({_REV} AS DECIMAL(30,6))
-                   ELSE CAST(0 AS DECIMAL(30,6)) END) AS STRING) AS DOUBLE)
-        / CAST(CAST(SUM(CAST({_REV} AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS promo_revenue
+                   THEN {oracle_dec(_REV)}
+                   ELSE {oracle_dec(0)} END) AS STRING) AS DOUBLE)
+        / {oracle_dsum(_REV)} AS promo_revenue
     FROM lineitem l
     JOIN part p ON l.l_partkey = p.p_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1999-03-01 00:00:00'
@@ -311,10 +314,8 @@ def tpch_q14_promo_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1999-09-01").cast("timestamp"))
     )
     p = load_table(spark, sf_dir, "part")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-        "decimal(30,6)"
-    )
-    zero = F.lit(0).cast("decimal(30,6)")
+    rev = dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
+    zero = dec(F.lit(0))
     promo = F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(zero)).cast(
         "double"
     )
@@ -519,8 +520,8 @@ def tpch_q4_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tpch_q6_revenue_forecast",
-    oracle="""
-    SELECT CAST(CAST(SUM(CAST(l_extendedprice * l_discount AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS revenue
+    oracle=f"""
+    SELECT {oracle_dsum('l_extendedprice * l_discount')} AS revenue
     FROM lineitem
     WHERE l_shipdate >= TIMESTAMP '1999-01-01 00:00:00'
       AND l_shipdate < TIMESTAMP '2000-01-01 00:00:00'
@@ -636,9 +637,9 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tpch_q17_small_quantity_revenue",
-    oracle="""
+    oracle=f"""
     SELECT
-      CAST(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) / 7.0
+      {oracle_dsum('l.l_extendedprice')} / 7.0
         AS avg_yearly
     FROM lineitem l
     JOIN part p ON p.p_partkey = l.l_partkey
@@ -675,7 +676,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         (
             F.lit(0.2)
             * (
-                F.sum(F.col("l_quantity").cast("decimal(30,6)")).cast("double")
+                dsum("l_quantity")
                 / F.count("l_quantity")
             )
         ).alias("qty_threshold")
@@ -687,9 +688,7 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
         .filter(F.col("l_quantity") < F.col("qty_threshold"))
         .agg(
             (
-                F.sum(F.col("l_extendedprice").cast("decimal(30,6)")).cast(
-                    "double"
-                )
+                dsum("l_extendedprice")
                 / 7.0
             ).alias("avg_yearly")
         )
@@ -698,13 +697,11 @@ def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFra
 
 @query(
     "tpch_q9_product_profit",
-    oracle="""
+    oracle=f"""
     SELECT
       n.n_name AS nation,
       CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-      CAST(CAST(SUM(CAST(l.l_extendedprice * (1 - l.l_discount)
-                    - p.p_retailprice * l.l_quantity
-               AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_profit
+      {oracle_dsum(f"{_REV} - p.p_retailprice * l.l_quantity")} AS sum_profit
     FROM lineitem l
     JOIN orders o ON o.o_orderkey = l.l_orderkey
     JOIN part p ON p.p_partkey = l.l_partkey
@@ -797,8 +794,8 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_suppkey"),
     )
     # Two COUNT(DISTINCT)s in one agg plan as a 3× Expand + double
-    # exchange (round-13 plan audit: the Expand ran on the undersplit scan
-    # split, tripling the single-threaded stage). Equivalent two-level
+    # exchange (the Expand ran on the undersplit scan split, tripling the
+    # single-threaded stage). Equivalent two-level
     # form: distinct (orderkey, suppkey) pairs first — late_supp folds to
     # MIN, which is the supplier's key iff ANY of its lines shipped late —
     # then plain per-order counts (count skips NULLs, so n_supp/n_late
@@ -809,8 +806,8 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3 and shuffles 1× rows instead of 3×. Identical results (verified
     # row-for-row); sf0.1 bench 0.96s → 0.67s.
     #
-    # Deliberately NOT pinned to a partition count (round-13 ADVICE #2,
-    # round-14 A/B: pinning measured ~15% SLOWER at sf0.1): unlike the
+    # Deliberately NOT pinned to a partition count (pinning measured ~15%
+    # SLOWER at sf0.1): unlike the
     # graph pair expansion, nothing below this exchange multiplies rows —
     # both aggregation levels only shrink the data — so AQE's advisory
     # coalescing of the post-exchange side is the right behavior and the
@@ -840,16 +837,16 @@ def tpch_q21_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tpch_q22_sales_opportunity",
-    oracle="""
+    oracle=f"""
     WITH avg_bal AS (
-      SELECT CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(30,6))) AS STRING) AS DOUBLE)
+      SELECT {oracle_dsum('c_acctbal')}
                / COUNT(c_acctbal) AS a
       FROM customer WHERE c_acctbal > 0.0
     )
     SELECT
       c.c_nationkey,
       COUNT(*) AS numcust,
-      CAST(CAST(SUM(CAST(c.c_acctbal AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS totacctbal
+      {oracle_dsum('c.c_acctbal')} AS totacctbal
     FROM customer c, avg_bal
     WHERE c.c_acctbal > avg_bal.a
       AND NOT EXISTS (
@@ -883,7 +880,7 @@ def tpch_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(
         (
-            F.sum(F.col("c_acctbal").cast("decimal(30,6)")).cast("double")
+            dsum("c_acctbal")
             / F.count("c_acctbal")
         ).alias("a")
     )
@@ -894,9 +891,7 @@ def tpch_q22_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("c_nationkey")
         .agg(
             F.count(F.lit(1)).alias("numcust"),
-            F.sum(F.col("c_acctbal").cast("decimal(30,6)")).cast("double").alias(
-                "totacctbal"
-            ),
+            dsum("c_acctbal", "totacctbal"),
         )
     )
 
@@ -959,7 +954,7 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # try_divide: a zero-quantity line (real shape — cancelled/credit
     # lines) has no unit cost. DuckDB's double division by zero yields
-    # NULL; Spark ANSI-on RAISES on plain `/` (round-12 warehouse axis),
+    # NULL; Spark ANSI-on RAISES on plain `/`,
     # so try_divide is the engine- and mode-symmetric spelling.
     supply = li.groupBy("l_partkey", "l_suppkey").agg(
         F.min(
@@ -993,10 +988,10 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tpch_q11_important_stock",
-    oracle="""
+    oracle=f"""
     WITH v AS (
       SELECT l.l_partkey AS ps_partkey,
-             SUM(CAST(l.l_extendedprice AS DECIMAL(30,6))) AS value_dec
+             SUM({oracle_dec('l.l_extendedprice')}) AS value_dec
       FROM lineitem l
       JOIN supplier s ON s.s_suppkey = l.l_suppkey
       JOIN nation n ON n.n_nationkey = s.s_nationkey
@@ -1034,7 +1029,7 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(s, li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(F.col("l_partkey").alias("ps_partkey"))
-        .agg(F.sum(F.col("l_extendedprice").cast("decimal(30,6)")).alias("value_dec"))
+        .agg(F.sum(dec("l_extendedprice")).alias("value_dec"))
     )
     total = v.agg(
         F.sum("value_dec").cast("double").alias("__total")
@@ -1048,16 +1043,17 @@ def tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tpch_q20_promo_suppliers",
-    oracle="""
+    oracle=f"""
     WITH pp AS (
       SELECT p_partkey FROM part WHERE p_name LIKE 'large%'
     ), sp AS (
       SELECT l.l_suppkey,
-             SUM(CAST(l.l_quantity AS DECIMAL(30,6))) AS avail,
-             SUM(CAST(CASE WHEN l.l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'
-                            AND l.l_shipdate <  TIMESTAMP '1999-01-01 00:00:00'
-                           THEN l.l_quantity ELSE 0 END
-                      AS DECIMAL(30,6))) AS qty98
+             SUM({oracle_dec('l.l_quantity')}) AS avail,
+             SUM({oracle_dec(
+               "CASE WHEN l.l_shipdate >= TIMESTAMP '1998-01-01 00:00:00'"
+               " AND l.l_shipdate < TIMESTAMP '1999-01-01 00:00:00'"
+               " THEN l.l_quantity ELSE 0 END"
+             )}) AS qty98
       FROM lineitem l
       JOIN pp ON pp.p_partkey = l.l_partkey
       GROUP BY l.l_suppkey, l.l_partkey
@@ -1102,10 +1098,9 @@ def tpch_q20_promo_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(pp, li.l_partkey == pp.p_partkey)
         .groupBy("l_suppkey", "l_partkey")
         .agg(
-            F.sum(F.col("l_quantity").cast("decimal(30,6)")).alias("avail"),
+            F.sum(dec("l_quantity")).alias("avail"),
             F.sum(
-                F.when(in98, F.col("l_quantity")).otherwise(F.lit(0.0))
-                .cast("decimal(30,6)")
+                dec(F.when(in98, F.col("l_quantity")).otherwise(F.lit(0.0)))
             ).alias("qty98"),
         )
         .filter((F.col("avail") > 2 * F.col("qty98")) & (F.col("qty98") > 0))

@@ -17,7 +17,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import DoubleType, LongType
 
-from biglake_iceberg_python_spark.functions.exprs import oracle_words
+from biglake_iceberg_python_spark.functions.exprs import (
+    dsum,
+    oracle_cents,
+    oracle_dsum,
+    oracle_words,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -38,7 +43,7 @@ def _net_price_vec(price: pd.Series, discount: pd.Series, tax: pd.Series) -> pd.
     NULL inputs arrive as NaN; returned through the NULLABLE Float64
     dtype so Arrow hands Spark a real NULL, matching the SQL
     expression's NULL (a float64 NaN would instead hit the downstream
-    decimal cast, which raises under ANSI — round-12 warehouse axis)."""
+    decimal cast, which raises under ANSI)."""
     return (price * (1.0 - discount) * (1.0 + tax)).astype("Float64")
 
 
@@ -51,12 +56,11 @@ def _qty_band_vec(qty: pd.Series) -> pd.Series:
 
 @query(
     "udf_pandas_scalar",
-    oracle="""
+    oracle=f"""
     SELECT
       CAST(floor(l_quantity / 10) AS BIGINT) AS qty_band,
       COUNT(*) AS n,
-      CAST(CAST(SUM(CAST(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-                    AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_net
+      {oracle_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_net
     FROM lineitem
     WHERE l_orderkey % 4 = 0
     GROUP BY 1
@@ -76,7 +80,7 @@ def udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return with_udf.groupBy("qty_band").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("net").cast("decimal(30,6)")).cast("double").alias("sum_net"),
+        dsum("net", "sum_net"),
     )
 
 
@@ -92,11 +96,11 @@ def _weighted_avg_price(price: pd.Series, qty: pd.Series) -> float:
 
     NULL discipline mirrors the oracle's SQL sums exactly: the numerator
     SUM(cents*qty) skips rows where EITHER factor is NULL, the
-    denominator SUM(qty) skips only NULL-qty rows (round-12 warehouse
-    axis — plain astype('int64') raised on the NaN a NULL arrives as)."""
+    denominator SUM(qty) skips only NULL-qty rows (plain astype('int64')
+    raises on the NaN a NULL arrives as)."""
     both = price.notna() & qty.notna()
     if not both.any():  # numerator SUM over empty set is SQL NULL (e.g.
-        return None  # all-NULL prices with non-NULL qty; round-13 ADVICE)
+        return None  # all-NULL prices with non-NULL qty)
     pq = (price[both] * 100).round().astype("int64") * qty[both].astype(
         "int64"
     )
@@ -116,10 +120,10 @@ def _group_size(price: pd.Series) -> int:
 
 @query(
     "udf_pandas_grouped_agg",
-    oracle="""
+    oracle=f"""
     SELECT
       l_returnflag, l_linestatus,
-      CAST(CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)
+      CAST(CAST(SUM({oracle_cents('l_extendedprice')}
                * CAST(l_quantity AS BIGINT)) AS STRING) AS DOUBLE)
         / (100.0 * SUM(CAST(l_quantity AS BIGINT))) AS wavg_price,
       COUNT(*) AS n
@@ -165,11 +169,10 @@ def _zscore_group(pdf: pd.DataFrame) -> pd.DataFrame:
     """
     import math
 
-    # NULL discipline mirrors the oracle exactly (round-12 warehouse
-    # axis): COUNT(*) counts every row, SUM(qi)/SUM(qi*qi) skip NULL
-    # quantities, and a NULL quantity z-scores to NULL (the CASE's THEN
-    # branch on a NULL operand) — via the nullable Float64 dtype so
-    # Arrow hands Spark a real NULL, not NaN.
+    # NULL discipline mirrors the oracle exactly: COUNT(*) counts every row,
+    # SUM(qi)/SUM(qi*qi) skip NULL quantities, and a NULL quantity z-scores to
+    # NULL (the CASE's THEN branch on a NULL operand) — via the nullable
+    # Float64 dtype so Arrow hands Spark a real NULL, not NaN.
     qv = pdf["l_quantity"]
     qi = qv[qv.notna()].round().astype("int64")
     n = len(pdf)
@@ -230,7 +233,7 @@ def udf_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # Flagless rows dropped symmetrically: the oracle's g JOIN f
     # USING (l_returnflag) can never match a NULL flag, while groupBy
-    # would keep a NULL group (round-12 warehouse axis) — an unflagged
+    # would keep a NULL group — an unflagged
     # line is unattributable to a z-score population on either engine.
     li = load_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_orderkey") % 25 == 0) & F.col("l_returnflag").isNotNull()
@@ -368,8 +371,8 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact.
     """
     f = F.udf(
-        # BOTH args need the None guard (round-10 NULL-metadata probe: a
-        # NULL n_chars crashed the worker) — the SQL twin
+        # BOTH args need the None guard (a NULL n_chars crashes the
+        # worker) — the SQL twin
         # `length(text) * n_chars` is NULL when EITHER side is NULL.
         lambda t, n: len(t) * n if t is not None and n is not None else None,
         "long",
@@ -422,8 +425,7 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
                         pa.int64(),
                     ),
                     # drop_null first: COUNT(DISTINCT) skips NULL, while
-                    # pc.unique would count it as a value (round-12
-                    # warehouse axis).
+                    # pc.unique would count it as a value.
                     "prios": pa.array(
                         [
                             pc.unique(
@@ -442,7 +444,7 @@ def udf_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_stats, "n bigint, s bigint, prios array<string>"
     )
     # coalesce: zero Arrow batches (empty table) must still report
-    # n_rows = 0, the oracle's COUNT(*) (round-10 empty-table parity).
+    # n_rows = 0, the oracle's COUNT(*).
     return partials.agg(
         F.coalesce(F.sum("n"), F.lit(0)).cast("long").alias("n_rows"),
         F.sum("s").cast("long").alias("sum_key"),
@@ -499,7 +501,7 @@ def _asof_cogroup(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
               WHERE f.o_custkey = o.o_custkey AND f.o_orderstatus = 'F'
                 AND f.o_orderdate <= o.o_orderdate) AS BIGINT) AS gap_days
     FROM orders o
-    -- key+time dead-letter (round-12 warehouse axis): an as-of match
+    -- key+time dead-letter: an as-of match
     -- needs both; NULL keys also diverge structurally (the correlated
     -- equi-predicate never matches NULL while cogroup pairs NULL groups)
     WHERE o.o_orderstatus = 'O'
@@ -532,7 +534,7 @@ def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.datediff(
         F.col("o_orderdate").cast("date"), F.lit("1970-01-01").cast("date")
     ).cast("long")
-    # key+time dead-letter on BOTH inputs (round-12 warehouse axis): the
+    # key+time dead-letter on BOTH inputs: the
     # oracle's correlated equi-predicate never matches a NULL custkey,
     # while cogroup would pair the two NULL groups; a dateless fulfilled
     # order can never be "latest <= t" (NULL comparison) on either side.
@@ -556,15 +558,15 @@ def udf_cogrouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_pandas_scalar_iter",
-    oracle="""
+    oracle=f"""
     SELECT
       o_orderstatus,
       CAST(COUNT(*) AS BIGINT) AS n_scored,
       -- floor-mod, not SQL's dividend-sign %: the pandas worker's % IS
       -- floor-mod, and the two disagree on negative cents (credit
-      -- orders, round-12 warehouse axis)
-      CAST(SUM(((CAST(round(CAST(o_totalprice AS DECIMAL(18,2)) * 100)
-                 AS BIGINT) % 97) + 97) % 97) AS BIGINT) AS score_sum
+      -- orders)
+      CAST(SUM((({oracle_cents('o_totalprice')} % 97) + 97) % 97) AS BIGINT)
+        AS score_sum
     FROM orders
     GROUP BY o_orderstatus
     """,
@@ -588,7 +590,7 @@ def udf_pandas_scalar_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         model_modulus = 97
         for s in batches:
             # Nullable Int64: NULL price -> NULL score (SQL's % on NULL),
-            # not an IntCastingNaNError (round-12 warehouse axis).
+            # not an IntCastingNaNError.
             cents = (s.astype("float64") * 100).round().astype("Int64")
             yield (cents % model_modulus).astype("Int64")
 
@@ -605,11 +607,11 @@ def udf_pandas_scalar_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "udf_pandas_window_agg",
-    oracle="""
+    oracle=f"""
     SELECT
       o_custkey,
       o_orderkey,
-      CAST(SUM(CAST(round(CAST(o_totalprice AS DECIMAL(18,2)) * 100) AS BIGINT))
+      CAST(SUM({oracle_cents('o_totalprice')})
            OVER (PARTITION BY o_custkey) AS BIGINT) AS cust_total_cents,
       CAST(COUNT(*) OVER (PARTITION BY o_custkey) AS BIGINT) AS cust_orders
     FROM orders
@@ -635,7 +637,7 @@ def udf_pandas_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     @pandas_udf("long")
     def cents_sum(price: pd.Series) -> int:
         # SQL SUM skips NULLs and is NULL over an all-NULL partition
-        # (round-12 warehouse axis: np.rint(NaN).astype(int64) wraps).
+        # (np.rint(NaN).astype(int64) wraps).
         v = price.to_numpy(dtype="float64")
         v = v[~np.isnan(v)]
         if len(v) == 0:

@@ -13,6 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from biglake_iceberg_python_spark.functions.exprs import (
+    dec,
+    oracle_dec,
+    oracle_epoch_s,
+    spark_epoch_s,
+)
 from biglake_iceberg_python_spark.plans.registry import query
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -86,8 +92,8 @@ def window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 100)
     pw = Window.partitionBy("o_custkey").orderBy(
         # NULLS LAST explicitly: Spark defaults NULLS FIRST ascending,
-        # DuckDB NULLS LAST — an undated order diverged in window order
-        # (round-12 warehouse axis); dated history first on both engines.
+        # DuckDB NULLS LAST — an undated order diverged in window order;
+        # dated history first on both engines.
         F.col("o_orderdate").asc_nulls_last(), "o_orderkey"
     )
     lag_price = F.lag("o_totalprice").over(pw)
@@ -106,16 +112,16 @@ def window_analytic(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_frames",
-    oracle="""
+    oracle=f"""
     SELECT
       o_custkey,
       o_orderkey,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6)))
+      CAST(CAST(SUM({oracle_dec('o_totalprice')})
         OVER (PARTITION BY o_custkey
               ORDER BY o_orderdate NULLS LAST, o_orderkey
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS STRING) AS DOUBLE)
         AS running_total,
-      CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6)))
+      CAST(CAST(SUM({oracle_dec('o_totalprice')})
         OVER (PARTITION BY o_custkey
               ORDER BY o_orderdate NULLS LAST, o_orderkey
               ROWS BETWEEN 2 PRECEDING AND CURRENT ROW) AS STRING) AS DOUBLE)
@@ -135,7 +141,7 @@ def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     running totals bit-identical across engines regardless of frame
     evaluation order."""
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_custkey") < 50)
-    # NULLS LAST on both engines — see window_analytic (round-12 axis).
+    # NULLS LAST on both engines — see window_analytic.
     ordering = [F.col("o_orderdate").asc_nulls_last(), F.col("o_orderkey")]
     run = (
         Window.partitionBy("o_custkey")
@@ -147,7 +153,7 @@ def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(*ordering)
         .rowsBetween(-2, Window.currentRow)
     )
-    price_dec = F.col("o_totalprice").cast("decimal(30,6)")
+    price_dec = dec("o_totalprice")
     return o.select(
         "o_custkey",
         "o_orderkey",
@@ -159,7 +165,7 @@ def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "window_range_frame",
-    oracle="""
+    oracle=f"""
     SELECT
       user_id,
       event_id,
@@ -168,9 +174,7 @@ def window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
         RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW
       ) AS events_last_hour
     FROM (
-      SELECT user_id, event_id,
-             date_diff('second', TIMESTAMP '1970-01-01 00:00:00',
-                       date_trunc('second', ts)) AS epoch_s
+      SELECT user_id, event_id, {oracle_epoch_s()} AS epoch_s
       FROM events
     )
     """,
@@ -186,7 +190,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     (both truncate the result toward zero) but semantically warty on
     pre-1970 timestamps: truncation toward zero maps (-1s, +1s) onto a
     double-width "second 0", so a trailing-hour frame at the epoch
-    boundary admitted 3601 distinct seconds (round-12 pre-1970 axis)."""
+    boundary admitted 3601 distinct seconds."""
     e = load_table(spark, sf_dir, "events")
     w = (
         Window.partitionBy("user_id")
@@ -196,10 +200,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.withColumn(
             "epoch_s",
-            F.expr(
-                "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00',"
-                " date_trunc('second', ts))"
-            ),
+            F.expr(spark_epoch_s()),
         )
         .select(
             "user_id",
@@ -272,8 +273,8 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     pr = (rk-1)/(n-1), cd = rk/n under this total order) — the form the
     exact-order-statistic queries here already use."""
     p = load_table(spark, sf_dir, "part").filter(F.col("p_size") > 40)
-    # NULLS LAST on both engines (round-12 dims axis: priceless /
-    # keyless parts diverged in rank order).
+    # NULLS LAST on both engines: priceless / keyless parts diverged in
+    # rank order.
     pw = Window.partitionBy("p_brand").orderBy(
         F.col("p_retailprice").asc_nulls_last(),
         F.col("p_partkey").asc_nulls_last(),

@@ -104,67 +104,64 @@ _QUERY_MODULES = [
 _loaded = False
 
 # The driver verifies the first 50 registered queries each round, so this
-# window leads with the recently optimized paths, then the stalest ones.
+# window leads with the paths whose rows could have moved since the last
+# verification, then the ones verified longest ago.
 _PRIORITY_WINDOW = [
-    # round-13/14 optimized paths (16)
-    "tpch_q21_waiting_supplier",
-    "graph_pagerank",
-    "graph_kcore",
-    "graph_triangle_count",
-    "graph_resource_allocation",
-    "dedup_minhash_lsh",
-    "dedup_minhash_oph",
-    "dedup_substring_spans",
-    "text_lm_perplexity",
-    "sim_hybrid_rrf",
-    "curate_quality_weighted_sample",
-    "text_bpe_train_merges",
-    "text_bpe_encode",
-    "text_bm25_search",
-    "agg_unpivot",
-    "stream_tumbling_window",
-    # r3-stale residue (3)
-    "agg_approx",
-    "dedup_simhash",
-    "sim_ann_lsh",
-    # r5-stale residue (5)
-    "ml_coreset_kcenter",
-    "ml_kmeans_embeddings",
-    "ml_logistic_newton",
-    "ml_pca_power",
-    "ml_quality_distill",
-    # r7-stale: dedup family (7) -- consumers of the round-14-touched
-    # tokenizer/shingle/load helpers
-    "dedup_cluster_representative",
-    "dedup_containment",
-    "dedup_fuzzy_levenshtein",
-    "dedup_lsh_tuning_curve",
-    "dedup_paragraph_exact",
-    "dedup_semantic_ivf",
-    "dedup_trigram_similarity",
-    # r7-stale: pandas-UDF battery (3)
+    # Spark plan or oracle text changed by the shared value-rule twins
+    # (the two k-means queries are rows-only)
+    "subquery_scalar",
+    "source_python_datasource_write",
     "udf_pandas_grouped_agg",
-    "udf_pandas_scalar_iter",
-    "udf_udtf_polymorphic_analyze",
-    # r7-stale: streaming battery (5)
-    "stream_file_sink_manifest",
-    "stream_join_then_window",
+    "join_range_bucketed",
+    "ml_pca_gram",
+    "multimodal_training_record",
     "stream_stateful_timeout_session",
-    "stream_topk_trending",
-    "stream_windowed_dau",
-    # r7-stale: similarity battery (8)
-    "sim_ivf_index_persisted",
-    "sim_matryoshka_rescore",
-    "sim_mips_transform",
-    "sim_mmr_diversify",
-    "sim_pq_adc",
-    "sim_quantize_int8",
-    "sim_range_search",
-    "sim_recall_eval",
-    # r7-stale: as-of join family (3)
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_asof_tolerance",
+    "window_range_frame",
+    "ml_kmeans_embeddings",
+    "ml_coreset_kcenter",
+    # Spark side rewritten onto the twins with an unchanged plan, least
+    # recently verified first
+    "sql_group_order_by_all",
+    "sql_named_window",
+    "tpch_q11_important_stock",
+    "tpch_q20_promo_suppliers",
+    "cohort_ltv_curve",
+    "funnel_latency_percentiles",
+    "events_diff_in_diff",
+    "events_longest_streak",
+    "part_abc_xyz_classification",
+    "orders_aging_buckets",
+    "tpch_q8_market_share",
+    "tpch_q14_promo_effect",
+    "tpch_q17_small_quantity_revenue",
+    "tpch_q22_sales_opportunity",
+    "agg_variance",
+    "scalar_try_arithmetic",
+    "events_kaplan_meier_retention",
+    "events_retention_powerlaw",
+    "source_csv_roundtrip",
+    "source_json_roundtrip",
+    "source_orc_roundtrip",
+    "window_frames",
+    "text_quality_stats",
+    "stream_sliding_window",
+    "stream_session_window",
+    # oracle-backed, verified longest ago
+    "join_dynamic_partition_pruning",
+    "join_runtime_bloom_filter",
+    "join_hint_strategies",
+    "join_point_in_time_scd2",
+    "join_interval_overlap",
+    "ts_gap_fill_locf",
+    "ts_ewma_decay",
+    "ts_holt_forecast",
+    "ts_seasonal_decompose",
+    "ts_holt_winters_forecast",
+    "ts_interpolate_linear",
+    "ts_downsample_m4",
+    "ml_pr_curve_quality",
+    "ml_calibration_bins",
+    "lakehouse_second_engine_read",
 ]
 
 
@@ -272,8 +269,8 @@ def all_oracle_sql() -> dict[str, str]:
     other sf without setting ``SPARK_GRAFT_ORACLE_SF_DIR`` would get
     literal tables derived from the wrong data — silent dropped-row hash
     mismatches. Fail loudly instead: the resolved dir must exist — but
-    only when a registered spec actually HAS an oracle_builder (round-9
-    ADVICE: data-free environments — docs/lint tooling over the static
+    only when a registered spec actually HAS an oracle_builder (data-free
+    environments — docs/lint tooling over the static
     oracle inventory — must still be able to enumerate; today builders
     always exist, so the driver path is unchanged)."""
     sf_dir = os.environ.get(_ORACLE_SF_ENV, DRIVER_ORACLE_SF_DIR)

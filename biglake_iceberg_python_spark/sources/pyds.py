@@ -164,6 +164,10 @@ def register(spark) -> None:
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from biglake_iceberg_python_spark.functions.exprs import (  # noqa: E402
+    cents,
+    oracle_cents,
+)
 from biglake_iceberg_python_spark.plans.registry import query, scratch  # noqa: E402
 from biglake_iceberg_python_spark.streaming.pipeline import (  # noqa: E402
     LAST_STREAMING_QUERIES,
@@ -460,13 +464,12 @@ CsvSinkDataSource = _make_sink_datasource_class()
 
 @query(
     "source_python_datasource_write",
-    oracle="""
+    oracle=f"""
     SELECT
       l_returnflag,
       l_linestatus,
       CAST(COUNT(*) AS BIGINT) AS n_rows,
-      CAST(SUM(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-                    AS BIGINT)) AS BIGINT) AS price_cents
+      CAST(SUM({oracle_cents('l_extendedprice')}) AS BIGINT) AS price_cents
     FROM lineitem
     GROUP BY l_returnflag, l_linestatus
     """,
@@ -496,9 +499,7 @@ def source_python_datasource_write(
     li = _lt(spark, sf_dir, "lineitem")
     agg = li.groupBy("l_returnflag", "l_linestatus").agg(
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("long")
-        ).alias("price_cents"),
+        F.sum(cents("l_extendedprice")).alias("price_cents"),
     )
     agg.write.format("pycsvsink").option("path", root).mode("append").save()
     return (

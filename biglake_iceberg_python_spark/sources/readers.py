@@ -18,6 +18,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from biglake_iceberg_python_spark.functions.exprs import (
+    cents,
+    dsum,
+    oracle_cents,
+    oracle_dsum,
+)
 from biglake_iceberg_python_spark.plans.registry import process_dir, query, scratch
 from biglake_iceberg_python_spark.sources.tables import load_table
 
@@ -35,9 +41,9 @@ def read_json(spark: SparkSession, path: str, schema: str) -> DataFrame:
 
 @query(
     "source_csv_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT c_mktsegment, COUNT(*) AS n,
-           CAST(CAST(SUM(CAST(c_acctbal AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_bal
+           {oracle_dsum('c_acctbal')} AS sum_bal
     FROM customer
     GROUP BY c_mktsegment
     """,
@@ -57,17 +63,15 @@ def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = read_csv(spark, out, schema)
     return back.groupBy("c_mktsegment").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("c_acctbal").cast("decimal(30,6)")).cast("double").alias(
-            "sum_bal"
-        ),
+        dsum("c_acctbal", "sum_bal"),
     )
 
 
 @query(
     "source_json_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT o_orderstatus, COUNT(*) AS n,
-           CAST(CAST(SUM(CAST(o_totalprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_price
+           {oracle_dsum('o_totalprice')} AS sum_price
     FROM orders
     GROUP BY o_orderstatus
     """,
@@ -84,9 +88,7 @@ def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = read_json(spark, out, schema)
     return back.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("o_totalprice").cast("decimal(30,6)")).cast("double").alias(
-            "sum_price"
-        ),
+        dsum("o_totalprice", "sum_price"),
     )
 
 
@@ -109,7 +111,7 @@ def source_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFram
     out = os.path.join(process_dir("src_part_"), "orders_part")
     o.write.partitionBy("o_orderpriority").parquet(out)
     # Schema pinned from the written frame — file inference fails on a
-    # 0-row write (round-10 empty-table parity axis).
+    # 0-row write.
     back = spark.read.schema(o.schema).parquet(out).filter(
         F.col("o_orderpriority") == "1-URGENT"
     )
@@ -121,10 +123,9 @@ def source_partitioned_write_prune(spark: SparkSession, sf_dir: str) -> DataFram
 
 @query(
     "source_orc_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT p_brand, COUNT(*) AS n,
-           CAST(CAST(SUM(CAST(p_retailprice AS DECIMAL(30,6))) AS STRING) AS DOUBLE)
-             AS sum_price
+           {oracle_dsum('p_retailprice')} AS sum_price
     FROM part
     GROUP BY p_brand
     """,
@@ -143,17 +144,15 @@ def source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     back = spark.read.orc(out)
     return back.groupBy("p_brand").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("p_retailprice").cast("decimal(30,6)")).cast("double").alias(
-            "sum_price"
-        ),
+        dsum("p_retailprice", "sum_price"),
     )
 
 
 @query(
     "source_xml_roundtrip",
-    oracle="""
+    oracle=f"""
     SELECT s_nationkey, COUNT(*) AS n,
-           CAST(CAST(SUM(CAST(s_acctbal AS DECIMAL(30,6))) AS STRING) AS DOUBLE) AS sum_bal
+           {oracle_dsum('s_acctbal')} AS sum_bal
     FROM supplier
     GROUP BY s_nationkey
     """,
@@ -189,9 +188,7 @@ def source_xml_roundtrip(spark: SparkSession, sf_dir: str, root: str) -> DataFra
     )
     return back.groupBy("s_nationkey").agg(
         F.count(F.lit(1)).alias("n"),
-        F.sum(F.col("s_acctbal").cast("decimal(30,6)"))
-        .cast("double")
-        .alias("sum_bal"),
+        dsum("s_acctbal", "sum_bal"),
     )
 
 
@@ -358,7 +355,7 @@ def source_text_lines(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
 
 @query(
     "source_csv_malformed_permissive",
-    oracle="""
+    oracle=f"""
     WITH src AS (
       SELECT o_orderkey, o_totalprice,
              CASE WHEN o_orderkey % 50 = 0 THEN 1 ELSE 0 END AS corrupt
@@ -372,8 +369,8 @@ def source_text_lines(spark: SparkSession, sf_dir: str, root: str) -> DataFrame:
       CAST(SUM(CASE WHEN corrupt = 0 THEN o_orderkey ELSE NULL END) AS BIGINT)
         AS clean_key_sum,
       CAST(SUM(CASE WHEN corrupt = 0
-               THEN CAST(round(CAST(o_totalprice AS DECIMAL(18,2)) * 100)
-                    AS BIGINT) ELSE NULL END) AS BIGINT) AS clean_cents_sum
+               THEN {oracle_cents('o_totalprice')} ELSE NULL END) AS BIGINT)
+        AS clean_cents_sum
     FROM src
     """,
     tags=("source", "csv", "data-quality"),
@@ -436,9 +433,7 @@ def source_csv_malformed_permissive(
         F.sum(
             F.when(
                 F.col("_corrupt_record").isNull(),
-                F.round(
-                    F.col("o_totalprice").cast("decimal(18,2)") * 100
-                ).cast("long"),
+                cents("o_totalprice"),
             )
         )
         .cast("long")

@@ -14,7 +14,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from biglake_iceberg_python_spark.functions.exprs import oracle_dsum, oracle_events
+from biglake_iceberg_python_spark.functions.exprs import (
+    cents,
+    dec,
+    dsum,
+    oracle_cents,
+    oracle_dsum,
+    oracle_epoch_s,
+    oracle_events,
+)
 from biglake_iceberg_python_spark.plans.registry import query, scratch
 from biglake_iceberg_python_spark.session import session_conf
 from biglake_iceberg_python_spark.sources.tables import load_table
@@ -68,7 +76,7 @@ def stream_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "10 minutes"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+            F.sum(dec("value")).alias("sum_dec"),
         )
     )
     sink = run_stream_to_memory(agg, "stream_tumbling_window", "append", input_dir)
@@ -119,7 +127,7 @@ def stream_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "20 minutes", "10 minutes"))
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+            F.sum(dec("value")).alias("sum_dec"),
         )
     )
     sink = run_stream_to_memory(agg, "stream_sliding_window", "append", input_dir)
@@ -182,7 +190,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+            F.sum(dec("value")).alias("sum_dec"),
         )
     )
     sink = run_stream_to_memory(agg, "stream_session_window", "append", input_dir)
@@ -245,7 +253,7 @@ def stream_tumbling_update(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 day"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+            F.sum(dec("value")).alias("sum_dec"),
         )
     )
     sink = run_stream_to_memory(agg, "stream_tumbling_update", "update", input_dir)
@@ -463,8 +471,7 @@ def stream_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink = run_stream_to_memory(agg, "stream_late_data_drop", "append", input_dir)
     # coalesce: zero surviving windows (empty stage) must report 0
-    # surviving events, the oracle's COUNT(*) (round-10 empty-table
-    # parity axis).
+    # surviving events, the oracle's COUNT(*).
     return sink.agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.coalesce(F.sum("n_events"), F.lit(0))
@@ -509,7 +516,7 @@ def _make_user_upsert(state):
         os.replace(tmp, marker)
         partial = bdf.groupBy("user_id").agg(
             F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+            F.sum(dec("value")).alias("sum_dec"),
         )
         if base == 0:
             state.write(partial, mode="overwrite")
@@ -519,7 +526,7 @@ def _make_user_upsert(state):
         # eqNullSafe: MERGE keys compare null-safely — with a bare `=`,
         # each micro-batch's NULL-user partial never matched the state
         # row and appended a NEW row per batch (state diverged from the
-        # oracle's single NULL group; round-10 events parity sweep).
+        # oracle's single NULL group).
         merged = prev.join(
             cur, F.col("p.user_id").eqNullSafe(F.col("c.user_id")), "full_outer"
         ).select(
@@ -528,10 +535,10 @@ def _make_user_upsert(state):
                 F.coalesce(F.col("p.n_events"), F.lit(0))
                 + F.coalesce(F.col("c.n_events"), F.lit(0))
             ).alias("n_events"),
-            (
-                F.coalesce(F.col("p.sum_dec"), F.lit(0).cast("decimal(30,6)"))
-                + F.coalesce(F.col("c.sum_dec"), F.lit(0).cast("decimal(30,6)"))
-            ).cast("decimal(30,6)").alias("sum_dec"),
+            dec(
+                F.coalesce(F.col("p.sum_dec"), dec(F.lit(0)))
+                + F.coalesce(F.col("c.sum_dec"), dec(F.lit(0)))
+            ).alias("sum_dec"),
         )
         state.write(merged, mode="overwrite", expected_version=base)
 
@@ -706,8 +713,7 @@ def stream_custom_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_stateful_timeout_session",
     oracle=f"""
     WITH e AS (
-      SELECT user_id,
-             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
+      SELECT user_id, {oracle_epoch_s()} AS sec
       FROM {oracle_events()} events
     ), x AS (
       SELECT user_id, sec,
@@ -762,7 +768,7 @@ def stream_stateful_timeout_session(
     # Timestamp-less events cannot be sessionized — drop them BEFORE the
     # stateful operator (a real pipeline dead-letters them): a NULL
     # event-time reaches the state function as NaT and kills the stream
-    # inside astype("int64") (round-9 degenerate-corpus sweep).
+    # inside astype("int64").
     s = (
         read_event_stream(spark, input_dir)
         .filter(F.col("ts").isNotNull())
@@ -837,7 +843,7 @@ def stream_stateful_timeout_session(
         out, "stream_stateful_timeout_session", "update", input_dir
     )
     return sink.filter(
-        # null-safe sentinel drop (round-10 events parity sweep):
+        # null-safe sentinel drop:
         # NULL >= 0 is NULL, which silently discarded the NULL-user
         # session the oracle keeps as its own group.
         (F.col("user_id") >= 0) | F.col("user_id").isNull()
@@ -878,7 +884,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = s.join(c, s.user_id == c.c_custkey)
     agg = joined.groupBy("c_mktsegment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
-        F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+        F.sum(dec("value")).alias("sum_dec"),
     )
     sink = run_stream_to_memory(agg, "stream_static_join", "complete", input_dir)
     return sink.select(
@@ -965,9 +971,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         sink.groupBy(F.col("p_user").alias("user_id"))
         .agg(
             F.count(F.lit(1)).alias("n_pairs"),
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_purchase_value"),
+            dsum("value", "sum_purchase_value"),
         )
     )
 
@@ -1054,9 +1058,7 @@ def stream_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
             F.count("e_user").alias("n_matched"),
             F.count(F.when(F.col("e_user").isNull(), 1)).alias("n_unmatched"),
-            F.sum(F.col("value").cast("decimal(30,6)"))
-            .cast("double")
-            .alias("sum_purchase_value"),
+            dsum("value", "sum_purchase_value"),
         )
     )
 
@@ -1130,7 +1132,7 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     agg = joined.groupBy(F.window("ts_p", "1 hour")).agg(
         F.count(F.lit(1)).alias("n_pairs"),
-        F.sum(F.col("value").cast("decimal(30,6)")).alias("sum_dec"),
+        F.sum(dec("value")).alias("sum_dec"),
     )
     sink = run_stream_to_memory(agg, "stream_join_then_window", "append", input_dir)
     return sink.select(
@@ -1146,8 +1148,7 @@ def stream_join_then_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT
       event_type,
       CAST(COUNT(*) AS BIGINT) AS n_events,
-      CAST(SUM(CAST(round(CAST(value AS DECIMAL(18,2)) * 100) AS BIGINT))
-        AS BIGINT) AS total_cents
+      CAST(SUM({oracle_cents('value')}) AS BIGINT) AS total_cents
     FROM {oracle_events()} events
     GROUP BY event_type
     """,
@@ -1180,9 +1181,7 @@ def stream_file_sink_manifest(spark: SparkSession, sf_dir: str, root: str) -> Da
     stream = read_event_stream(spark, input_dir).select(
         "event_id",
         "event_type",
-        F.round(F.col("value").cast("decimal(18,2)") * 100)
-        .cast("long")
-        .alias("cents"),
+        cents("value").alias("cents"),
     )
     sink = os.path.join(root, "out")
     q = (
@@ -1320,8 +1319,7 @@ def stream_topk_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_events").cast("long").alias("n_events"),
     )
     # asc_nulls_last: DuckDB sorts NULLs LAST by default, Spark FIRST —
-    # on a count tie the NULL-type group's rank flipped by engine
-    # (round-10 events parity sweep).
+    # on a count tie the NULL-type group's rank flipped by engine.
     rw = Window.partitionBy("window_start").orderBy(
         F.col("n_events").desc(), F.col("event_type").asc_nulls_last()
     )

@@ -11,10 +11,12 @@ claim 2 with real Spark jobs under adversarial partitionings.
 
 from __future__ import annotations
 
+import datetime
 import os
 import sys
 from decimal import Decimal
 
+import duckdb
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -522,3 +524,165 @@ def test_tokenizer_twins_agree(spark, text):
         f"SELECT {oracle_words()} FROM (SELECT $1::VARCHAR AS text)", [text]
     ).fetchone()[0]
     assert spark_tokens == duck_tokens
+
+
+@pytest.mark.parametrize(
+    "value",
+    [
+        None, 0.0, -0.0, 0.005, 0.015, 0.125, -0.125, 2.675, 1.005, -1.005,
+        123456.785, 9999.99,
+    ],
+)
+def test_cents_twins_agree(spark, value):
+    """cents() and oracle_cents() turn every money double, ties included,
+    into the same integer cents, for both target types."""
+    import duckdb
+
+    from biglake_iceberg_python_spark.functions.exprs import cents, oracle_cents
+
+    df = spark.createDataFrame([(value,)], "x double")
+    got = df.select(cents("x").alias("a"), cents("x", "decimal(38,0)").alias("b"))
+    row = got.first()
+    duck = duckdb.connect().execute(
+        f"SELECT {oracle_cents('x')}, {oracle_cents('x', 'DECIMAL(38,0)')}"
+        " FROM (SELECT $1::DOUBLE AS x)",
+        [value],
+    ).fetchone()
+    assert (row["a"], row["b"]) == duck
+
+
+@pytest.mark.parametrize(
+    "values",
+    [
+        [0.1, 0.2],
+        [1.5, -2.25, 0.75, -0.01],
+        [None, 1.1, None, 2.2],
+        [None, None],
+        # the scale-6 integer of the sum passes 2^53
+        [4503599627.37, 4503599627.38, 0.01, 12.34],
+    ],
+)
+def test_dsum_twins_agree(spark, values):
+    """dsum()/davg() and oracle_dsum()/oracle_davg() return the same
+    double, bit for bit."""
+    import duckdb
+
+    from biglake_iceberg_python_spark.functions.exprs import (
+        davg,
+        dsum,
+        oracle_davg,
+        oracle_dsum,
+    )
+
+    df = spark.createDataFrame([(v,) for v in values], "x double")
+    row = df.agg(dsum("x", "s"), davg("x", "a")).first()
+    duck = duckdb.connect().execute(
+        f"SELECT {oracle_dsum('x')}, {oracle_davg('x')}"
+        " FROM (SELECT unnest($1::DOUBLE[]) AS x)",
+        [values],
+    ).fetchone()
+    assert (row["s"], row["a"]) == duck
+
+
+@pytest.mark.parametrize(
+    "ts,expected",
+    [
+        (datetime.datetime(1969, 12, 31, 23, 59, 59, 500000), -1),
+        (datetime.datetime(1960, 3, 1, 12, 0, 0), -310392000),
+        (datetime.datetime(1970, 1, 1), 0),
+        (datetime.datetime(2024, 3, 10, 2, 30, 0), 1710037800),
+        (datetime.datetime(2024, 10, 27, 1, 59, 59), 1729994399),
+        (datetime.datetime(2038, 1, 19, 3, 14, 8, 1), 2147483648),
+    ],
+)
+def test_epoch_seconds_twins_agree(spark, ts, expected):
+    """spark_epoch_s() and oracle_epoch_s() give the same epoch second of
+    an NTZ timestamp — before 1970, at DST wall-clock edges and past
+    2^31 — whatever the session timezone."""
+    import duckdb
+
+    from biglake_iceberg_python_spark.functions.exprs import (
+        oracle_epoch_s,
+        spark_epoch_s,
+    )
+
+    old = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kathmandu")
+    try:
+        df = spark.createDataFrame([(ts,)], "ts timestamp_ntz")
+        got = df.select(F.expr(spark_epoch_s()).alias("es")).first()["es"]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", old)
+    duck = duckdb.connect().execute(
+        f"SELECT {oracle_epoch_s()} FROM (SELECT $1::TIMESTAMP AS ts)", [ts]
+    ).fetchone()[0]
+    assert got == duck == expected
+
+
+@pytest.mark.parametrize(
+    "nonzero",
+    [
+        pytest.param(
+            True,
+            marks=pytest.mark.xfail(
+                strict=True,
+                raises=duckdb.Error,
+                reason="the oracle's norm² conjunct raises on a NULL component",
+            ),
+        ),
+        False,
+    ],
+)
+def test_embedding_validity_twins_agree(spark, tmp_path, nonzero):
+    """valid_embedding() (plus the norm² > 0 filter of the cosine family)
+    and oracle_valid_embeddings() keep the same rows of a corpus of
+    degenerate vectors."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from biglake_iceberg_python_spark.functions.exprs import (
+        oracle_valid_embeddings,
+        valid_embedding,
+    )
+    from biglake_iceberg_python_spark.operators.similarity import (
+        _valid_embeddings,
+    )
+    from biglake_iceberg_python_spark.plans.check import duckdb_connect
+    from biglake_iceberg_python_spark.sources.tables import load_table
+
+    def vec(first):
+        return [first] + [0.0625] * 63
+
+    rows = [
+        None,  # NULL vector
+        [0.0625] * 63,  # wrong dim
+        vec(None),  # NULL component
+        vec(float("nan")),
+        vec(float("inf")),
+        vec(float("-inf")),
+        vec(8.0),  # on the bound: valid
+        vec(8.000001),  # past the bound
+        [0.0] * 64,  # zero vector: valid, but no cosine
+        vec(-0.5),  # ordinary
+    ]
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array(range(len(rows)), pa.int64()),
+                "embedding": pa.array(rows, pa.list_(pa.float32())),
+                "label": pa.array([0] * len(rows), pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+    if nonzero:
+        kept = _valid_embeddings(spark, str(tmp_path))
+    else:
+        kept = load_table(spark, str(tmp_path), "embeddings").filter(
+            valid_embedding()
+        )
+    got = sorted(r["vec_id"] for r in kept.select("vec_id").collect())
+    duck = duckdb_connect(str(tmp_path)).execute(
+        f"SELECT vec_id FROM {oracle_valid_embeddings(nonzero=nonzero)} ORDER BY 1"
+    ).fetchall()
+    assert got == [r[0] for r in duck] == ([6, 9] if nonzero else [6, 8, 9])

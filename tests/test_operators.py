@@ -1223,14 +1223,15 @@ def test_holt_forecast_state_is_bounded_by_series(spark, sf_dir):
     series range; n_days must equal the dense calendar span."""
     from pyspark.sql import functions as F
 
-    from biglake_iceberg_python_spark.operators.eventflow import _DAY_S, _ES
+    from biglake_iceberg_python_spark.functions.exprs import spark_epoch_s
+    from biglake_iceberg_python_spark.operators.eventflow import _DAY_S
     from biglake_iceberg_python_spark.sources.tables import load_table
 
     daily = (
         load_table(spark, sf_dir, "events")
         .select(
             "event_type",
-            (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
+            (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
         )
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("x"))
@@ -1596,7 +1597,8 @@ def test_holt_winters_state_invariants(spark, sf_dir):
     (recomputed from the emitted columns)."""
     from pyspark.sql import functions as F
 
-    from biglake_iceberg_python_spark.operators.eventflow import _DAY_S, _ES
+    from biglake_iceberg_python_spark.functions.exprs import spark_epoch_s
+    from biglake_iceberg_python_spark.operators.eventflow import _DAY_S
     from biglake_iceberg_python_spark.sources.tables import load_table
 
     env = {
@@ -1604,7 +1606,7 @@ def test_holt_winters_state_invariants(spark, sf_dir):
         for r in load_table(spark, sf_dir, "events")
         .select(
             "event_type",
-            (F.expr(_ES).cast("long") / _DAY_S).cast("long").alias("day"),
+            (F.expr(spark_epoch_s()).cast("long") / _DAY_S).cast("long").alias("day"),
         )
         .groupBy("event_type", "day")
         .agg(F.count(F.lit(1)).alias("x"))
@@ -1871,7 +1873,7 @@ def test_longest_streak_covers_all_users(spark, sf_dir):
     """Every user appears in exactly one histogram bucket, and no streak
     can exceed the user's distinct active-day count (checked via the
     corpus-wide max)."""
-    from biglake_iceberg_python_spark.operators.eventflow import _ES
+    from biglake_iceberg_python_spark.functions.exprs import spark_epoch_s
     from biglake_iceberg_python_spark.sources.tables import load_table
 
     rows = REGISTRY["events_longest_streak"].fn(spark, sf_dir).collect()
@@ -1879,7 +1881,7 @@ def test_longest_streak_covers_all_users(spark, sf_dir):
     n_users = e.select("user_id").distinct().count()
     assert sum(r["n_users"] for r in rows) == n_users
     max_days = (
-        e.select("user_id", F.expr(f"({_ES}) DIV 86400").alias("day"))
+        e.select("user_id", F.expr(f"({spark_epoch_s()}) DIV 86400").alias("day"))
         .distinct()
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("nd"))
@@ -1979,7 +1981,7 @@ def test_vector_family_tolerates_degenerate_embeddings(spark, sf_dir, tmp_path):
     """Failed-encoder rows (NULL / wrong-dimension / empty vectors) must be
     excluded, not abort the job: cosine is undefined at norm 0 (ANSI mode
     turns the bare division into a job-killer), the k-means/coreset folds
-    assume exactly _KM_DIM components, and a NULL seed row crashed the
+    assume exactly EMB_DIM components, and a NULL seed row crashed the
     driver-side center list (round-9 degenerate-corpus sweep)."""
     import os
 
@@ -2193,17 +2195,15 @@ def test_empty_table_parity_regressions(spark, sf_dir, tmp_path):
         assert result["ok"], (q, {k: v for k, v in result.items() if k != "ok"})
 
 
-def test_embedding_validity_sql_single_form():
-    """Drift guard (round-10 review finding): the oracle-side embedding
-    validity tier is interpolated into ~19 similarity/ml/multimodal
-    oracles as one canonical predicate string. A future edit to the
-    validity contract applied to SOME sites re-opens the asymmetric
-    crash-vs-drop divergence the tier closed — every occurrence of the
-    full tier must stay byte-identical (the dim-only variant used where
-    zero-norm is valid data, e.g. moment matrices, is exempt: it lacks
-    the list_dot_product norm guard by design)."""
-    import glob
-    import os
+def test_embedding_validity_sql_single_form(sf_dir):
+    """Drift guard: every oracle that filters embeddings by norm² > 0
+    scans the one full validity tier, byte-identical (the dim-only
+    variant used where zero-norm is valid data, e.g. moment matrices, is
+    exempt: it lacks the list_dot_product norm guard by design). A
+    contract edit applied to SOME oracles would re-open the asymmetric
+    crash-vs-drop divergence the tier closes. Reads the resolved oracle
+    text, so it sees what ``exprs.oracle_valid_embeddings`` emits."""
+    from biglake_iceberg_python_spark.plans.registry import load_all, resolve_oracle
 
     canonical = (
         "(SELECT * FROM embeddings WHERE len(embedding) = 64 AND "
@@ -2212,19 +2212,13 @@ def test_embedding_validity_sql_single_form():
         "list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0) "
         "embeddings"
     )
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "biglake_iceberg_python_spark",
-    )
+    guard = "list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[]) > 0"
     n_full = 0
-    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        src = open(path).read()
-        for line in src.splitlines():
-            if "list_dot_product(embedding" not in line:
-                continue
-            # full-tier lines must contain the canonical string verbatim
-            assert canonical in line, (path, line.strip()[:160])
-            n_full += line.count(canonical)
+    for name, spec in load_all().items():
+        sql = resolve_oracle(spec, sf_dir) or ""
+        # full-tier guards must sit inside the canonical string verbatim
+        assert sql.count(guard) == sql.count(canonical), name
+        n_full += sql.count(canonical)
     assert n_full >= 15, f"expected >=15 full-tier sites, found {n_full}"
 
 

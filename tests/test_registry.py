@@ -694,3 +694,90 @@ def test_degenerate_axis_selects_readers_of_its_tables():
     dims = selected(load_all(), "dims")
     assert "tpch_q2_min_cost_supplier" in dims
     assert "sql_parameterized" not in dims
+
+
+# Each value rule the two engines share has one twin pair in
+# functions/exprs.py; these are the spellings of its body. A copy anywhere
+# else is a second decision that can drift from the twin.
+_TWIN_RULE_FRAGMENTS = (
+    'DECIMAL(18,2)) * 100',  # oracle_cents
+    '"decimal(18,2)") * 100',  # cents
+    "DECIMAL(30,6)",  # oracle_dec
+    '"decimal(30,6)"',  # dec
+    "abs(x::DOUBLE) > 8.0",  # oracle_valid_embeddings
+    "F.abs(x) <= F.lit(8.0)",  # valid_embedding
+    "timestampdiff(SECOND, TIMESTAMP_NTZ '1970-01-01",  # spark_epoch_s
+    "date_diff('second', TIMESTAMP '1970-01-01",  # oracle_epoch_s
+)
+
+
+def _norm_chars(src: str, tree):
+    """``(char, line)`` of package code with comments, docstrings, string
+    delimiters and whitespace dropped, lowercased."""
+    import ast
+    import io
+    import tokenize
+
+    docs = set()
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Expr)
+            and isinstance(node.value, ast.Constant)
+            and isinstance(node.value.value, str)
+        ):
+            docs.add(node.lineno)
+    out = []
+    for tok in tokenize.generate_tokens(io.StringIO(src).readline):
+        text, line = tok.string, tok.start[0]
+        if tok.type == tokenize.COMMENT:
+            continue
+        if tok.type == tokenize.STRING:
+            if line in docs:
+                continue
+            body = text.lstrip("rRbBuUfF")
+            q = 3 if body[:3] in ('"""', "'''") else 1
+            text = body[q:-q]
+        for ch in text:
+            if ch == "\n":
+                line += 1
+            elif not ch.isspace():
+                out.append((ch.lower(), line))
+    return out
+
+
+def _twin_rule_copies() -> list[str]:
+    import ast
+    import glob
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "biglake_iceberg_python_spark",
+    )
+    # Delimiters are dropped, so each Spark spelling folds into its SQL one.
+    frags = {
+        "".join(f.replace('"', "").split()).lower() for f in _TWIN_RULE_FRAGMENTS
+    }
+    found = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+        if rel == "functions/exprs.py":
+            continue
+        src = open(path).read()
+        tree = ast.parse(src)
+        chars = _norm_chars(src, tree)
+        flat = "".join(c for c, _ in chars)
+        for frag in sorted(frags):
+            i = flat.find(frag)
+            while i >= 0:
+                found.append(f"{rel}:{chars[i][1]}: {frag}")
+                i = flat.find(frag, i + 1)
+    return found
+
+
+def test_value_rules_live_in_their_twins():
+    """Cents, the exact decimal, embedding validity and epoch seconds are
+    spelled only in functions/exprs.py; every operator and oracle calls the
+    twin."""
+    found = _twin_rule_copies()
+    assert not found, "call the exprs.py twin instead:\n" + "\n".join(found)
